@@ -58,8 +58,8 @@ def _codegen_conf(spark) -> str | None:
 def lineage_break(df: DataFrame) -> DataFrame:
     """``localCheckpoint`` with the engine-wide eagerness policy.
 
-    The returned frame is tagged ``_mz_leaf`` so the fresh-alias
-    ``_ckpt`` helpers can skip re-breaking a frame that IS already a
+    The returned frame is tagged ``_mz_leaf`` so ``fresh_break`` can
+    skip re-breaking a frame that IS already a
     checkpoint leaf (each ``localCheckpoint`` costs a full Catalyst
     planning pass — ~50 ms even for a literal frame). Skipping is
     sound: returning the SAME object means the same relation, which
@@ -100,37 +100,27 @@ def lineage_break(df: DataFrame) -> DataFrame:
     return out
 
 
-_FB_SEQ = __import__("itertools").count(1)  # thread-safe unique suffixes
-
-
 def fresh_break(df: DataFrame) -> DataFrame:
     """Lineage break with FRESH attribute ids, skipping frames that are
-    already checkpoint leaves — the shared body of the per-module
-    ``_ckpt`` helpers.
+    already checkpoint leaves — how every maintenance operator breaks
+    lineage per batch (otherwise plans grow with the commit count).
 
-    The alias-project is built from ONE SQL string over a short-lived
-    temp view (~4 py4j roundtrips) instead of ``toDF(*cols)``, whose
-    list conversion costs one roundtrip per column (~12 for a typical
-    maintenance frame; measured 1.2k sends/warm churn entry from this
-    one site). ``SELECT `c` AS `c` ...`` mints the same per-column
-    Alias nodes toDF does, so the fresh-exprId guarantee is identical;
-    the view is dropped immediately after ``spark.sql`` captures the
-    analyzed plan. Frames with duplicate or backtick-bearing column
-    names fall back to toDF (SQL projection would be ambiguous)."""
+    The fresh ids are load-bearing: ``localCheckpoint`` keeps the source
+    plan's exprIds, so parts built from the same state frames would all
+    expose IDENTICAL ids, and a later many-way self-union of such parts
+    trips Catalyst's relation dedup with 'key not found: <attr>'. An
+    alias projection mints new ids, so every checkpointed part is
+    id-disjoint.
+
+    The projection is ``Dataset.toDF`` fed the JVM's own column-name
+    array: two py4j roundtrips whatever the width (PySpark's
+    ``toDF(*cols)`` ships the names one roundtrip each). It aliases
+    the output attributes directly, so duplicate or backtick-bearing
+    names need no special case, and the checkpoint's captured
+    constraints are rewritten onto the fresh ids (an alias projection
+    over a temp view leaves them on the view-qualified old ids, which
+    a later union of such leaves cannot map — 'key not found')."""
     if getattr(df, "_mz_leaf", False):
         return df
-    cols = df.columns
-    if len(set(cols)) == len(cols) and not any("`" in c for c in cols):
-        v = f"__mz_fb_{os.getpid()}_{next(_FB_SEQ)}"
-        spark = df.sparkSession
-        try:
-            df.createOrReplaceTempView(v)
-            try:
-                sel = ", ".join(f"`{c}` AS `{c}`" for c in cols)
-                out = spark.sql(f"SELECT {sel} FROM `{v}`")
-            finally:
-                spark.catalog.dropTempView(v)
-            return lineage_break(out)
-        except Exception:
-            pass  # exotic names/session: the per-column path below
-    return lineage_break(df.toDF(*cols))
+    jdf = df._jdf
+    return lineage_break(type(df)(jdf.toDF(jdf.columns()), df.sparkSession))

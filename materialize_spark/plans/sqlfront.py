@@ -33,7 +33,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from materialize_spark.catalog import Catalog
-from materialize_spark.ckpt import lineage_break
+from materialize_spark.ckpt import fresh_break, lineage_break
 from materialize_spark.plans import parser as ast
 from materialize_spark.plans.dialect import rewrite, set_session_user
 from materialize_spark.plans.lexer import LexError, split_statements
@@ -53,11 +53,6 @@ _INTROSPECT = re.compile(
     r"|\b(?:obj|col)_description\b", re.I)
 
 # recursive view bodies (batch-only — see _create_view's gap note)
-# in-memory budget for SQL-created TopK delta-MV support state: past
-# this many rows the compacted support spills to hash-prefix-partitioned
-# parquet and probes are partition-pruned (streaming/retraction.py)
-_TOPK_SPILL_ROWS = 2_000_000
-
 _WMR_RE = re.compile(r"\s*WITH\s+MUTUALLY\s+RECURSIVE\b", re.I)
 
 # Credential redaction for statement surfaces the reference scrubs
@@ -947,8 +942,6 @@ class MzSession:
         changes, then rounds ride the frontiers only."""
         from pyspark.sql import functions as F  # noqa: F401
 
-        from materialize_spark.streaming.retraction import _ckpt
-
         bindings = node.bindings
         names = [b[0] for b in bindings]
         low = {n.lower() for n in names}
@@ -970,7 +963,7 @@ class MzSession:
                 v.createOrReplaceTempView(k)
             return self.spark.sql(rewrite(body))
 
-        cur = {n.lower(): _ckpt(seed[k]) for k in seed
+        cur = {n.lower(): fresh_break(seed[k]) for k in seed
                for n in [k]} if seed is not None else {
             name.lower(): self.spark.createDataFrame(
                 [], _pg_coldefs(coldefs))
@@ -981,8 +974,8 @@ class MzSession:
         for name, _c, body in bindings:
             nl = name.lower()
             full = ev(body, cur).distinct()
-            delta[nl] = _ckpt(full.exceptAll(cur[nl]))
-            cur[nl] = _ckpt(cur[nl].unionByName(delta[nl]))
+            delta[nl] = fresh_break(full.exceptAll(cur[nl]))
+            cur[nl] = fresh_break(cur[nl].unionByName(delta[nl]))
         rounds = 0
         max_iter = node.limit or 100
         while rounds < max_iter \
@@ -1009,11 +1002,11 @@ class MzSession:
                 cand = terms[0]
                 for t in terms[1:]:
                     cand = cand.unionByName(t)
-                delta[nl] = _ckpt(cand.distinct()
+                delta[nl] = fresh_break(cand.distinct()
                                   .exceptAll(cur[nl]))
             for nl in list(cur):
                 if not delta[nl].isEmpty():
-                    cur[nl] = _ckpt(cur[nl].unionByName(delta[nl]))
+                    cur[nl] = fresh_break(cur[nl].unionByName(delta[nl]))
         result = {name: cur[name.lower()]
                   for name, _c, _b in bindings}
         for k, v in result.items():
@@ -1056,17 +1049,15 @@ class MzSession:
                 "monotone": monotone, "seminaive": seminaive,
                 "bind_state": None, "table": None}
         self._delta_mvs[node.name] = spec
-        from materialize_spark.streaming.retraction import _ckpt
         binds, out = self._wmr_fixpoint_seminaive(wmr) if seminaive \
             else self._wmr_fixpoint(wmr)
         spec["bind_state"] = binds
-        self._publish_delta_mv(node.name, _ckpt(out), initial=True)
+        self._publish_delta_mv(node.name, fresh_break(out), initial=True)
 
     def _feed_delta_mv_wmr(self, name: str, table: str,
                            delta) -> None:
         from pyspark.sql import functions as F
 
-        from materialize_spark.streaming.retraction import _ckpt
         spec = self._delta_mvs[name]
         seed = None
         if spec["monotone"] and spec.get("bind_state") is not None \
@@ -1083,7 +1074,7 @@ class MzSession:
         else:
             binds, out = self._wmr_fixpoint(spec["wmr"], seed=seed)
         spec["bind_state"] = binds
-        self._publish_delta_mv(name, _ckpt(out))
+        self._publish_delta_mv(name, fresh_break(out))
 
     def _plan_delta_setop_mixed(self, node: ast.CreateView) -> None:
         """Mixed set-operator chains (``A UNION ALL B EXCEPT C``):
@@ -1807,8 +1798,7 @@ class MzSession:
                 return False
             dcols = [it.expr for it in q.items]
             spec.update({"distinct": RetractionAwareDistinct(
-                self.spark, cols=dcols,
-                spill_rows=_TOPK_SPILL_ROWS), "dcols": dcols})
+                self.spark, cols=dcols), "dcols": dcols})
         else:
             return False
         self._delta_mvs[node.name] = spec
@@ -1927,8 +1917,7 @@ class MzSession:
                 "tables": tuple({b["table"] for b in branches}),
                 "where": None,
                 "distinct": RetractionAwareDistinct(
-                    self.spark, cols=cols,
-                    spill_rows=_TOPK_SPILL_ROWS), "dcols": cols}
+                    self.spark, cols=cols), "dcols": cols}
         self._delta_mvs[node.name] = spec
         self._form_delta_mv_union(node.name)
 
@@ -1949,8 +1938,7 @@ class MzSession:
                 "tables": tuple({b["table"] for b in branches}),
                 "mv": RetractionAwareSetOp(
                     self.spark, cols=cols, op=op, all=is_all,
-                    nsides=len(branches),
-                    spill_rows=_TOPK_SPILL_ROWS)}
+                    nsides=len(branches))}
         self._delta_mvs[node.name] = spec
         self._form_delta_mv_setop(node.name)
 
@@ -2280,7 +2268,7 @@ class MzSession:
         from pyspark.sql import functions as F
 
         from materialize_spark.streaming.retraction import (
-            _ckpt, _ns_attach, _ns_probe,
+            _ns_attach, _ns_probe,
         )
         if spec["where"]:
             delta = delta.filter(
@@ -2299,13 +2287,13 @@ class MzSession:
             keyed = d.select(*(st["keys"] or ["__g"]),
                              *sorted(in_cols), "diff")
             st["res"] = st["agg"].on_batch(keyed)
-            # _ckpt the (tiny) touched-key frames: every per-set probe
+            # fresh_break the (tiny) touched-key frames: every per-set probe
             # on BOTH sides of the later result union references them,
             # and live same-source plans would share exprIds (Catalyst
             # relation-dedup 'key not found')
             touched_by_set.append(
                 None if not st["keys"]
-                else _ckpt(keyed.select(*st["keys"]).distinct()))
+                else fresh_break(keyed.select(*st["keys"]).distinct()))
         base = self._base_frame(spec["table"])
         if spec["where"]:
             base = base.filter(
@@ -2327,7 +2315,7 @@ class MzSession:
             # global set (or formation): every row's output may change
             result = attach(base.select(*spec["plains"]),
                             spec["sets"]).select(*spec["out_cols"])
-            self._publish_delta_mv(name, _ckpt(result), initial)
+            self._publish_delta_mv(name, fresh_break(result), initial)
             return
         # partition the base into per-set touched slices (disjoint by
         # sequential anti-probe) and re-derive only those rows
@@ -2335,7 +2323,7 @@ class MzSession:
         # earlier set's (disjoint without materializing remainders).
         # Every part probes the SAME checkpointed base/old leaf, so the
         # later unions would share exprIds and trip Catalyst's relation
-        # dedup ('key not found') — _ckpt each part; all of them are
+        # dedup ('key not found') — fresh_break each part; all of them are
         # touched-rows-sized, so the per-commit materialization stays
         # O(touched), never O(table). The untouched remainder stays ONE
         # live plan (used exactly once, in the result union).
@@ -2350,14 +2338,14 @@ class MzSession:
                 pj, tj = spec["sets"][j], touched_by_set[j]
                 hit = _ns_probe(hit, tj, pj["keys"], anti=True)
                 oh = _ns_probe(oh, tj, pj["keys"], anti=True)
-            hit_parts.append(_ckpt(hit))
-            old_hits.append(_ckpt(oh))
+            hit_parts.append(fresh_break(hit))
+            old_hits.append(fresh_break(oh))
             remaining_old = _ns_probe(remaining_old, touched,
                                       st["keys"], anti=True)
         new_touched = hit_parts[0]
         for p in hit_parts[1:]:
             new_touched = new_touched.unionByName(p)
-        # deliberately LIVE (not _ckpt'd): a bare checkpoint leaf under
+        # deliberately LIVE (not fresh_break'd): a bare checkpoint leaf under
         # a later checkpointed union trips Spark's LogicalRDD
         # constraint rewrite ('key not found' on an interior exprId);
         # the plan stays small — hit parts are checkpoint leaves
@@ -2377,7 +2365,7 @@ class MzSession:
                      .groupBy(*spec["out_cols"])
                      .agg(F.sum("diff").alias("diff"))
                      .filter(F.col("diff") != 0))
-        result = _ckpt(remaining_old.unionByName(new_rows))
+        result = fresh_break(remaining_old.unionByName(new_rows))
         self._publish_delta_mv(name, result, initial,
                                out_delta=out_delta)
 
@@ -2528,7 +2516,6 @@ class MzSession:
 
         from pyspark.sql import functions as F
 
-        from materialize_spark.streaming.retraction import _ckpt
         T0 = spec["last_tick"]
         T1 = now if now is not None else max(datetime.now(), T0)
         spec["last_tick"] = T1
@@ -2549,7 +2536,7 @@ class MzSession:
                     result = result.filter(rewrite(spec["having"]))
                 self._publish_delta_mv(name, result, initial=True)
             else:
-                self._publish_delta_mv(name, _ckpt(first),
+                self._publish_delta_mv(name, fresh_break(first),
                                        initial=True)
             return
         terms = []
@@ -2571,7 +2558,7 @@ class MzSession:
         if spec.get("agg") is not None:
             # sliding-window reduce: the temporal stage's ± diffs fold
             # into the maintained aggregate, touched groups only
-            out = _ckpt(out.select(*spec["out_cols"], "diff"))
+            out = fresh_break(out.select(*spec["out_cols"], "diff"))
             touched = out.select(*spec["keys"]).distinct()
             result = spec["agg"].on_batch(out)
             if spec.get("having"):
@@ -2583,7 +2570,7 @@ class MzSession:
         out_delta = (out.groupBy(*spec["out_cols"])
                      .agg(F.sum("diff").alias("diff"))
                      .filter(F.col("diff") != 0))
-        result = _ckpt(base.filter(vis1)
+        result = fresh_break(base.filter(vis1)
                        .selectExpr(*spec["out_exprs"]))
         self._publish_delta_mv(name, result, False,
                                out_delta=out_delta)
@@ -2686,9 +2673,7 @@ class MzSession:
         touched slice's consolidated old-vs-new diff."""
         from pyspark.sql import functions as F
 
-        from materialize_spark.streaming.retraction import (
-            _ckpt, _ns_probe,
-        )
+        from materialize_spark.streaming.retraction import _ns_probe
         if spec["where"]:
             delta = delta.filter(
                 f"coalesce(({rewrite(spec['where'])}), false)")
@@ -2698,14 +2683,14 @@ class MzSession:
                 f"coalesce(({rewrite(spec['where'])}), false)")
         old = self._matviews.get(name)
         if initial or old is None:
-            result = _ckpt(base.selectExpr(*spec["out_exprs"]))
+            result = fresh_break(base.selectExpr(*spec["out_exprs"]))
             self._publish_delta_mv(name, result, initial)
             return
         keys = spec["keys"]
-        touched = _ckpt(delta.select(*keys).distinct())
-        hit = _ckpt(_ns_probe(base, touched, keys))
-        new_rows = _ckpt(hit.selectExpr(*spec["out_exprs"]))
-        old_hits = _ckpt(_ns_probe(old, touched, keys))
+        touched = fresh_break(delta.select(*keys).distinct())
+        hit = fresh_break(_ns_probe(base, touched, keys))
+        new_rows = fresh_break(hit.selectExpr(*spec["out_exprs"]))
+        old_hits = fresh_break(_ns_probe(old, touched, keys))
         remaining_old = _ns_probe(old, touched, keys, anti=True)
         out_delta = (new_rows.withColumn("diff", F.lit(1))
                      .unionByName(old_hits.withColumn("diff",
@@ -2713,7 +2698,7 @@ class MzSession:
                      .groupBy(*spec["out_cols"])
                      .agg(F.sum("diff").alias("diff"))
                      .filter(F.col("diff") != 0))
-        result = _ckpt(remaining_old.unionByName(new_rows))
+        result = fresh_break(remaining_old.unionByName(new_rows))
         self._publish_delta_mv(name, result, initial,
                                out_delta=out_delta)
 
@@ -2880,8 +2865,7 @@ class MzSession:
             return False
         cols = [it.expr for it in q.items]
         self._delta_check_table(q.table)
-        mv = RetractionAwareDistinct(self.spark, cols=cols,
-                                     spill_rows=_TOPK_SPILL_ROWS)
+        mv = RetractionAwareDistinct(self.spark, cols=cols)
         spec = {"mv": mv, "table": q.table, "cols": cols,
                 "where": q.where, "kind": "distinct", "pre": pre,
                 "pre_where": pre_where, "pre_layers": pre_layers or ()}
@@ -2951,7 +2935,7 @@ class MzSession:
         cols, icols, keys, ord_col, desc, k, inner, mode = shape
         mv = RetractionAwareTopK(
             self.spark, keys=keys, order_col=ord_col, limit=k,
-            descending=desc, spill_rows=_TOPK_SPILL_ROWS, mode=mode)
+            descending=desc, mode=mode)
         if inner.joins:
             parsed = self._normalize_join_chain(inner)
             if parsed is None:
@@ -3007,8 +2991,7 @@ class MzSession:
         icols.append("__g")
         mv = RetractionAwareTopK(
             self.spark, keys=["__g"], order_col=ord_col, limit=q.limit,
-            descending=desc, order_by=list(q.order),
-            spill_rows=_TOPK_SPILL_ROWS)
+            descending=desc, order_by=list(q.order))
         spec = {"mv": mv, "table": q.table, "keys": ["__g"],
                 "icols": icols, "cols": cols, "where": q.where,
                 "kind": "topk", "pre": ["*", "1 AS __g"]}
@@ -3255,8 +3238,7 @@ class MzSession:
             if norm_links else []
         agg = RetractionAwareAgg(self.spark, keys=keys, aggs=aggs) \
             if aggs else None
-        dmv = RetractionAwareDistinct(
-            self.spark, cols=cols, spill_rows=_TOPK_SPILL_ROWS) \
+        dmv = RetractionAwareDistinct(self.spark, cols=cols) \
             if q.distinct else None
         src_where = _sub_ident_tokens(q.where, renmap) if q.where \
             else None
@@ -3455,7 +3437,7 @@ class MzSession:
                     f"({tmpl.replace('__AGGVAL__', vexpr)}), false)")
             op = CmpAggFilterMV(
                 self.spark, keys=okeys, qual_tmpl=qual,
-                agg_kind=sf.agg_kind, spill_rows=_TOPK_SPILL_ROWS)
+                agg_kind=sf.agg_kind)
             arg = sf.agg_arg.strip()
             if arg == "*":
                 if sf.agg_kind != "count":
@@ -3498,7 +3480,7 @@ class MzSession:
                     f"({rewrite(strip.sub('', sf.template))}), false)")
             opx = CmpAggFilterMV(
                 self.spark, keys=okeys, qual_tmpl=base,
-                agg_kind=sf.agg_kind, spill_rows=_TOPK_SPILL_ROWS)
+                agg_kind=sf.agg_kind)
             return {"op": opx, "table": sf.table, "kind": "cmpagg",
                     "prep_where": prep_where,
                     "prep_select": list(pairs),
@@ -3523,7 +3505,7 @@ class MzSession:
                 qual = f"(NOT {qual})"
             opx = CmpAggFilterMV(
                 self.spark, keys=okeys, qual_tmpl=qual,
-                agg_kind=agg_kind, spill_rows=_TOPK_SPILL_ROWS)
+                agg_kind=agg_kind)
             return {"op": opx, "table": sf.table, "kind": "cmpagg",
                     "prep_where": prep_where,
                     "prep_select": list(pairs), "prep_arg": ic,
@@ -3536,8 +3518,7 @@ class MzSession:
             kind = "not_in" if sf.negated else "in"
             op = SemiAntiFilterMV(
                 self.spark, keys=[oc for _ic, oc in pairs[:-1]],
-                kind=kind, in_col=pairs[-1][1],
-                spill_rows=_TOPK_SPILL_ROWS)
+                kind=kind, in_col=pairs[-1][1])
             return {"op": op, "table": sf.table, "kind": kind,
                     "prep_where": prep_where,
                     "prep_select": list(pairs)}
@@ -3548,8 +3529,7 @@ class MzSession:
             prep_select.append(member)
             omember = member[1]
         op = SemiAntiFilterMV(
-            self.spark, keys=okeys, kind=kind, member=omember,
-            spill_rows=_TOPK_SPILL_ROWS)
+            self.spark, keys=okeys, kind=kind, member=omember)
         return {"op": op, "table": sf.table, "kind": kind,
                 "prep_where": prep_where,
                 "prep_select": prep_select}
@@ -3912,8 +3892,7 @@ class MzSession:
         qual = f"coalesce(({lhs}) {sf.cmp_op} ({{V}}), false)"
         if sf.negated:
             qual = f"(NOT {qual})"
-        op = GlobalCmpFilterMV(self.spark, qual_tmpl=qual,
-                               spill_rows=_TOPK_SPILL_ROWS)
+        op = GlobalCmpFilterMV(self.spark, qual_tmpl=qual)
         return {"op": op, "table": internal, "kind": "cmpscalar",
                 "internal": True, "prep_where": None,
                 "prep_select": [], "cmp": (sf.cmp_op, "scalar")}
@@ -3983,7 +3962,7 @@ class MzSession:
                 "column of the outer relation")
         kind = "not_in" if sf.negated else "in"
         op = SemiAntiFilterMV(self.spark, keys=[], kind=kind,
-                              in_col=oc, spill_rows=_TOPK_SPILL_ROWS)
+                              in_col=oc)
         return {"op": op, "table": internal, "kind": kind,
                 "internal": True, "prep_where": None,
                 "prep_select": [(in_col, oc)]}
@@ -4183,8 +4162,7 @@ class MzSession:
             if kind == "inner":
                 extra = extras[i] if extras else None
                 chain.append(IncrementalJoinView(
-                    on=on, spill_rows=_TOPK_SPILL_ROWS,
-                    extra=rewrite(extra) if extra else None))
+                    on=on, extra=rewrite(extra) if extra else None))
             else:
                 # same-name keys (USING-style) coalesce: the key column
                 # keeps the right side's value on unmatched-right rows
@@ -4195,8 +4173,7 @@ class MzSession:
                     pad_right=[(c, types[c]) for c in rcols],
                     how=kind,
                     pad_left=[(c, types[c]) for c in acc
-                              if c not in same],
-                    spill_rows=_TOPK_SPILL_ROWS))
+                              if c not in same]))
             acc += rcols
         return chain
 
@@ -4279,8 +4256,7 @@ class MzSession:
                 RetractionAwareDistinct,
             )
             dmv = RetractionAwareDistinct(
-                self.spark, cols=out_names or cols,
-                spill_rows=_TOPK_SPILL_ROWS)
+                self.spark, cols=out_names or cols)
         spec = {"kind": "join", "tables": tuple(tables), "chain": chain,
                 "links": norm_links, "kinds": kinds, "agg": agg,
                 "rextras": extras, "jrenames": jrenames,
@@ -4615,8 +4591,8 @@ class MzSession:
                        initial: bool = False) -> None:
         """Publish one batch of a spine-maintained MV (projection-shaped
         join MVs, UNION ALL MVs): the operator's signed output delta is
-        consolidated within the batch, appended to the MV's parts spine
-        (folded every 16 batches), and published AS the diff — per
+        consolidated within the batch, appended to the MV's parts-spine
+        (streaming/state_spill.py), and published AS the diff — per
         commit the work is O(delta), never a re-consolidation or
         snapshot diff of the full result (reference: the MV sink reads
         its input arrangement's deltas, src/compute/src/sink/
@@ -4625,38 +4601,27 @@ class MzSession:
         commit guarantees."""
         from pyspark.sql import functions as F
 
-        from materialize_spark.streaming.ivm_join import (
-            _concat as _concat_parts, _consolidate,
+        from materialize_spark.streaming.state_spill import (
+            SpilledPartsState,
         )
-        ocols = spec.get("out_names") or spec["cols"]
         out_delta = None
-        if out is not None:
-            out_delta = (out.groupBy(*ocols)
-                         .agg(F.sum("diff").alias("diff"))
-                         .filter(F.col("diff") != 0))
-            parts = spec.setdefault("proj_parts", [])
-            parts.append(out_delta)
-            if len(parts) >= 16:  # amortized fold
-                folded = _consolidate(None, _concat_parts(parts))
-                empty = parts[0].limit(0)
-                parts.clear()
-                parts.append(folded if folded is not None else empty)
+        if out is not None:  # columns: the MV's output names + diff
+            spine = spec.setdefault("proj_spine", SpilledPartsState(
+                [], measures=("diff",)))
+            out_delta = spine.consolidate(out)
+            spine.append(out_delta)
         elif not initial:
             return  # nothing changed: no republish, no frames
-        parts = spec.get("proj_parts")
-        if parts is None:
-            result = None
+        spine = spec.get("proj_spine")
+        if spine is None:
+            result = self.spark.sql(
+                rewrite(self._matview_sql[name])).limit(0)
         else:
-            allp = _concat_parts(parts)
-            result = (allp.groupBy(*ocols)
-                      .agg(F.sum("diff").alias("diff"))
+            result = (spine.consolidate(spine.probe_frame(None))
                       .filter(F.col("diff") > 0)
                       .withColumn("__i", F.explode(
                           F.sequence(F.lit(1), F.col("diff"))))
                       .drop("diff", "__i"))
-        if result is None:
-            result = self.spark.sql(
-                rewrite(self._matview_sql[name])).limit(0)
         self._publish_delta_mv(name, result, initial,
                                out_delta=out_delta)
 

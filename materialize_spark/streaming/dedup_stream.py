@@ -20,13 +20,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from materialize_spark.ckpt import fresh_break
 from materialize_spark.pipeline.dedup import normalize_text
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    # alias first: fresh attribute ids per part (see ivm_join._ckpt)
-    from materialize_spark.ckpt import fresh_break
-    return fresh_break(df)
+from materialize_spark.streaming.state_spill import SpilledPartsState
 
 
 @dataclass
@@ -78,7 +74,7 @@ class IncrementalDeduper:
                      F.sum("n_seen").alias("n_seen"))
             )
             new_state = merged
-        self._state = _ckpt(new_state)
+        self._state = fresh_break(new_state)
         first_ids = fresh.select(F.col("__first_id").alias(self.id_col))
         return docs.join(first_ids, on=self.id_col, how="left_semi")
 
@@ -101,11 +97,11 @@ class IncrementalLSHDedup:
     dups"; a training-data ingest instead asks, per arriving batch,
     "which of these are near dups of ANYTHING seen so far". Recomputing
     LSH over history is O(history^ish) per batch; this operator keeps
-    every seen doc's band buckets and signature as append-only
-    checkpointed parts (the delta_ivm arrangement-spine discipline:
-    per-batch writes are O(batch), probes are broadcast semi-joins over
-    the concatenated parts — shuffle-free scans — and parts fold every
-    ``compact_every`` batches).
+    every seen doc's band buckets and signature on two parts-spines
+    (streaming/state_spill.py: per-batch writes are O(batch), probes
+    are broadcast semi-joins over the parts — shuffle-free scans — and
+    past the spill budget they read only the partitions the batch's
+    bucket keys, resp. candidate doc ids, hash into).
 
     Drop rule (deterministic, non-recursive): a doc is a duplicate iff a
     VERIFIED candidate (signature agreement >= ``min_agree`` of
@@ -123,54 +119,12 @@ class IncrementalLSHDedup:
     k: int = 3
     min_agree: int = 4
     id_col: str = "doc_id"
-    compact_every: int = 16
-    # state-spill budget (the 100 TB path): past this many rows the
-    # compacted seen-corpus state moves to hash-prefix-partitioned
-    # parquet; probes read ONLY the partitions the batch's bucket keys
-    # (resp. candidate doc ids) hash into — directory pruning instead
-    # of a full-corpus scan per batch. None = in-memory (small states).
-    spill_rows: int | None = None
-    spill_dir: str | None = None
-    spill_prefixes: int = 64
-    _bucket_parts: list = field(default_factory=list, init=False)
-    _sig_parts: list = field(default_factory=list, init=False)
-    _disk: dict = field(default_factory=dict, init=False)
+    _buckets: SpilledPartsState = field(init=False)
+    _sigs: SpilledPartsState = field(init=False)
 
-    def _spill_tier(self, name: str, df: DataFrame,
-                    key_cols: list[str]) -> None:
-        import os
-        import tempfile
-        if self.spill_dir is None:
-            self.spill_dir = tempfile.mkdtemp(prefix="mz_dedup_state_")
-        gen = sum(1 for d in os.listdir(self.spill_dir)
-                  if d.startswith(name))
-        path = os.path.join(self.spill_dir, f"{name}{gen}")
-        kp = F.pmod(F.xxhash64(*key_cols), F.lit(self.spill_prefixes))
-        (df.withColumn("__kp", kp)
-         .write.mode("overwrite").partitionBy("__kp").parquet(path))
-        self._disk[name] = path
-
-    def _disk_read(self, name: str, probe_keys: DataFrame | None,
-                   key_cols: list[str]) -> DataFrame | None:
-        """Spilled-tier read, partition-pruned to the probe keys'
-        hash prefixes (a <=spill_prefixes literal IN filter)."""
-        path = self._disk.get(name)
-        if path is None:
-            return None
-        out = self.spark.read.parquet(path)
-        if probe_keys is not None:
-            kp = F.pmod(F.xxhash64(*key_cols),
-                        F.lit(self.spill_prefixes))
-            pfx = [r.p for r in probe_keys.select(kp.alias("p"))
-                   .distinct().collect()]
-            out = out.filter(F.col("__kp").isin(pfx))
-        return out.drop("__kp")
-
-    def _concat(self, parts):
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    def __post_init__(self) -> None:
+        self._buckets = SpilledPartsState(["band", "bucket"])
+        self._sigs = SpilledPartsState([self.id_col])
 
     def _agree(self, a: str, b: str) -> Column:
         n = sum((F.col(f"{a}.sig{i}") == F.col(f"{b}.sig{i}")).cast("int")
@@ -185,7 +139,7 @@ class IncrementalLSHDedup:
             lsh_candidate_pairs, minhash_signatures,
         )
         idc = self.id_col
-        sigs_b = _ckpt(minhash_signatures(
+        sigs_b = fresh_break(minhash_signatures(
             docs, tokens, num_hashes=self.num_hashes, k=self.k,
             id_col=idc))
         n_bands = self.num_hashes // self.band_size
@@ -196,23 +150,18 @@ class IncrementalLSHDedup:
                     F.col(f"sig{b * self.band_size + j}")
                     for j in range(self.band_size)])).alias("bucket"))
             for b in range(n_bands)])
-        buckets_b = _ckpt(
+        buckets_b = fresh_break(
             sigs_b.select(F.col(idc), F.explode(bands).alias("bb"))
             .select(idc, "bb.band", "bb.bucket"))
 
         dup_ids = None
-        if self._bucket_parts:
+        if self._buckets.n_parts():
             touched_keys = buckets_b.select("band", "bucket").distinct()
             touched = F.broadcast(touched_keys)
             # probe: only state rows in buckets the batch touches —
             # the spilled tier is additionally partition-pruned to the
             # touched buckets' hash prefixes before any file I/O
-            state_buckets = self._concat(self._bucket_parts)
-            disk_b = self._disk_read("buckets", touched_keys,
-                                     ["band", "bucket"])
-            if disk_b is not None:
-                state_buckets = state_buckets.unionByName(disk_b)
-            hits = (state_buckets
+            hits = (self._buckets.probe_frame(touched_keys)
                     .join(touched, on=["band", "bucket"], how="left_semi")
                     .withColumnRenamed(idc, "__old"))
             cand = (hits.join(F.broadcast(buckets_b),
@@ -221,11 +170,7 @@ class IncrementalLSHDedup:
                     .select("__old", idc).distinct())
             cand_ids = (cand.select("__old").distinct()
                         .withColumnRenamed("__old", idc))
-            state_sigs = self._concat(self._sig_parts)
-            disk_s = self._disk_read("sigs", cand_ids, [idc])
-            if disk_s is not None:
-                state_sigs = state_sigs.unionByName(disk_s)
-            old_sigs = (state_sigs
+            old_sigs = (self._sigs.probe_frame(cand_ids)
                         .join(F.broadcast(cand_ids),
                               on=idc, how="left_semi"))
             dup_ids = (cand.alias("c")
@@ -254,30 +199,6 @@ class IncrementalLSHDedup:
                               how="left_anti")
 
         # every batch doc (dropped ones too) joins the seen corpus
-        self._bucket_parts.append(buckets_b)
-        self._sig_parts.append(sigs_b)
-        if len(self._bucket_parts) >= self.compact_every:
-            bfull = self._concat(self._bucket_parts)
-            sfull = self._concat(self._sig_parts)
-            disk_b = self._disk_read("buckets", None,
-                                     ["band", "bucket"])
-            disk_s = self._disk_read("sigs", None, [idc])
-            if disk_b is not None:
-                bfull = bfull.unionByName(disk_b)
-            if disk_s is not None:
-                sfull = sfull.unionByName(disk_s)
-            folded_b, folded_s = _ckpt(bfull), _ckpt(sfull)
-            if self.spill_rows is not None \
-                    and folded_b.count() > self.spill_rows:
-                # past the in-memory budget: the folded state becomes
-                # the partitioned on-disk tier; memory keeps only the
-                # post-fold tail parts
-                self._spill_tier("buckets", folded_b, ["band", "bucket"])
-                self._spill_tier("sigs", folded_s, [idc])
-                self._bucket_parts = [folded_b.limit(0)]
-                self._sig_parts = [folded_s.limit(0)]
-            else:
-                self._disk.clear()
-                self._bucket_parts = [folded_b]
-                self._sig_parts = [folded_s]
+        self._buckets.append(buckets_b)
+        self._sigs.append(sigs_b)
         return survivors

@@ -11,12 +11,10 @@ down to O(batch + touched keys).
 
 Spark-first translation — no per-row Python, every join keyed:
 
-- **Support state is an append-only list of checkpointed parts** (the
+- **Support state is a parts-spine** (streaming/state_spill.py, the
   arrangement's "unmerged batches"): each on_batch checkpoints only its own
   small partial and APPENDS it — the big consolidated base part is never
-  rewritten per batch. Every ``compact_every`` batches the parts fold into
-  one (amortized O(state)/compact_every per batch) — the same merge/compact
-  discipline differential dataflow's arrangement spines use.
+  rewritten per batch; the spine decides when parts fold and spill.
 - Point lookups ("previous sums of the touched keys") are a broadcast
   semi-join of the tiny touched-key set against the concatenated parts: a
   shuffle-free in-memory scan (the Spark analog of an arrangement probe —
@@ -41,22 +39,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from materialize_spark.ckpt import fresh_break
 from materialize_spark.operators.setops import DIFF_COL
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Break lineage so per-batch plans stay O(parts), not O(history).
-    Alias first: fresh attribute ids per part (see ivm_join._ckpt —
-    shared exprIds across checkpointed parts break many-way unions)."""
-    from materialize_spark.ckpt import fresh_break
-    return fresh_break(df)
-
-
-def _concat(parts: list[DataFrame]) -> DataFrame:
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+from materialize_spark.streaming.state_spill import SpilledPartsState, concat
 
 
 @dataclass
@@ -81,24 +66,13 @@ class ThresholdSemijoinMV:
     having: Callable[[Column], Column]  # sum column -> boolean Column
     enrich: Callable[[DataFrame], DataFrame]
     sum_col: str = "__sum"
-    compact_every: int = 16
-    # past this many folded rows, state spills to hash-prefix-
-    # partitioned parquet and probes prune to touched-key prefixes
-    # (streaming/state_spill.py — the 100 TB growth path)
-    spill_rows: int | None = None
-    spill_dir: str | None = None
-    _state: object = field(default=None, init=False)
+    _state: SpilledPartsState = field(init=False)
     _result: DataFrame | None = field(default=None, init=False)
 
-    def _ensure_state(self):
-        if self._state is None:
-            from materialize_spark.streaming.state_spill import (
-                SpilledPartsState,
-            )
-            self._state = SpilledPartsState(
-                self.spark, key_cols=self.keys, name="q18sum",
-                spill_rows=self.spill_rows, spill_dir=self.spill_dir)
-        return self._state
+    def __post_init__(self) -> None:
+        # a key whose rows all retracted (``__net`` = 0) leaves a fold
+        self._state = SpilledPartsState(
+            self.keys, measures=(self.sum_col, "__net"), live=("__net",))
 
     def _partial(self, delta: DataFrame) -> DataFrame:
         d = F.col(DIFF_COL)
@@ -107,17 +81,11 @@ class ThresholdSemijoinMV:
                   .otherwise(F.lit(0))).alias(self.sum_col),
             F.sum(d).alias("__net"))
 
-    def _sums(self) -> DataFrame:
-        return (self._ensure_state().full_frame()
-                .groupBy(*self.keys)
-                .agg(F.sum(self.sum_col).alias(self.sum_col),
-                     F.sum("__net").alias("__net")))
-
     def on_batch(self, delta: DataFrame) -> DataFrame:
         """Fold one explicit-diff update frame (fact rows + ``diff``);
         return the maintained view."""
-        state = self._ensure_state()
-        partial = _ckpt(self._partial(delta))          # O(batch) write
+        state = self._state
+        partial = fresh_break(self._partial(delta))    # O(batch) write
         touched_keys = partial.select(*self.keys)
         touched = F.broadcast(touched_keys)
         state.append(partial)
@@ -136,15 +104,11 @@ class ThresholdSemijoinMV:
                      .select(*self.keys, self.sum_col))
         new_rows = self.enrich(F.broadcast(qualified))
         if self._result is None:
-            self._result = _ckpt(new_rows)             # O(result) write
+            self._result = fresh_break(new_rows)       # O(result) write
         else:
             kept = self._result.join(touched, on=self.keys,
                                      how="left_anti")
-            self._result = _ckpt(kept.unionByName(new_rows))
-
-        if state.n_parts() >= self.compact_every:      # amortized fold
-            state.replace(_ckpt(self._sums()
-                                .filter(F.col("__net") != 0)))
+            self._result = fresh_break(kept.unionByName(new_rows))
         return self._result
 
     def result(self) -> DataFrame:
@@ -181,21 +145,12 @@ class ExclusiveAntiJoinMV:
     spark: SparkSession
     group_key: str
     member_key: str
-    compact_every: int = 16
-    spill_rows: int | None = None
-    spill_dir: str | None = None
-    _state: object = field(default=None, init=False)
+    _state: SpilledPartsState = field(init=False)
     _wait: DataFrame | None = field(default=None, init=False)
 
-    def _ensure_state(self):
-        if self._state is None:
-            from materialize_spark.streaming.state_spill import (
-                SpilledPartsState,
-            )
-            self._state = SpilledPartsState(
-                self.spark, key_cols=[self.group_key], name="q21supp",
-                spill_rows=self.spill_rows, spill_dir=self.spill_dir)
-        return self._state
+    def __post_init__(self) -> None:
+        self._state = SpilledPartsState(
+            [self.group_key], measures=("n_all", "n_flag"))
 
     def _batch_supp(self, all_delta: DataFrame | None,
                     flag_delta: DataFrame | None) -> DataFrame:
@@ -209,21 +164,15 @@ class ExclusiveAntiJoinMV:
         if flag_delta is not None:
             parts.append(flag_delta.select(
                 g, m, F.lit(0).alias("__d_all"), d.alias("__d_flag")))
-        return _concat(parts).groupBy(g, m).agg(
+        return concat(parts).groupBy(g, m).agg(
             F.sum("__d_all").alias("n_all"),
             F.sum("__d_flag").alias("n_flag"))
-
-    def _consolidated(self) -> DataFrame:
-        g, m = self.group_key, self.member_key
-        return (self._ensure_state().full_frame().groupBy(g, m)
-                .agg(F.sum("n_all").alias("n_all"),
-                     F.sum("n_flag").alias("n_flag")))
 
     def on_batch(self, all_delta: DataFrame | None = None,
                  flag_delta: DataFrame | None = None) -> DataFrame:
         g, m = self.group_key, self.member_key
-        state = self._ensure_state()
-        batch = _ckpt(self._batch_supp(all_delta, flag_delta))
+        state = self._state
+        batch = fresh_break(self._batch_supp(all_delta, flag_delta))
         touched_keys = batch.select(g).distinct()
         touched = F.broadcast(touched_keys)
         state.append(batch)
@@ -232,7 +181,7 @@ class ExclusiveAntiJoinMV:
         # scan + prefix-pruned spilled tier), materialized so the state
         # scan runs exactly once per batch and the downstream
         # window/anti-join work on the tiny probe output
-        merged = _ckpt(
+        merged = fresh_break(
             state.probe_frame(touched_keys)
             .join(touched, on=[g], how="left_semi")
             .groupBy(g, m)
@@ -253,15 +202,10 @@ class ExclusiveAntiJoinMV:
                           & (F.col("__tot_flag") - F.col("n_flag") == 0))
                   .select(g, m, "n_flag"))
         if self._wait is None:
-            self._wait = _ckpt(wait_t)                 # O(result) write
+            self._wait = fresh_break(wait_t)           # O(result) write
         else:
             kept = self._wait.join(touched, on=[g], how="left_anti")
-            self._wait = _ckpt(kept.unionByName(wait_t))
-
-        if state.n_parts() >= self.compact_every:      # amortized fold
-            state.replace(_ckpt(self._consolidated()
-                                .filter((F.col("n_all") != 0)
-                                        | (F.col("n_flag") != 0))))
+            self._wait = fresh_break(kept.unionByName(wait_t))
         return self._wait
 
     def result(self) -> DataFrame:

@@ -18,15 +18,13 @@ join. Binary views compose left-deep for multi-way joins (each output
 delta feeds the next view's input), the same shape as the reference's
 linear join plans.
 
-State sizing at 100 TB: history frames are the join-key-partitioned net
-collections (localCheckpoint here; a real deployment would persist them as
-bucketed tables on the join key — sources/bucketing.py — making every
-maintenance join shuffle-free). Past ``spill_rows`` each side's folded
-history moves to the hash-prefix-partitioned parquet tier
-(streaming/state_spill.SpilledPartsState) and every probe prunes to the
-delta's touched key prefixes BEFORE any I/O — the same treatment the
-TopK/dedup/q18 delta operators have, so a delta-maintained join over a
-growing fact table no longer holds both histories in executor memory.
+State sizing at 100 TB: each side's history and the maintained result
+live on the parts-spine (streaming/state_spill.SpilledPartsState), which
+folds and spills them; every probe prunes to the delta's touched key
+prefixes BEFORE any I/O, so a delta-maintained join over a growing fact
+table never holds both histories in executor memory. (A real deployment
+would persist the histories as bucketed tables on the join key —
+sources/bucketing.py — making every maintenance join shuffle-free.)
 """
 
 from __future__ import annotations
@@ -36,77 +34,22 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from materialize_spark.ckpt import fresh_break
 from materialize_spark.operators.setops import DIFF_COL
-from materialize_spark.streaming.state_spill import SpilledPartsState
+from materialize_spark.streaming.state_spill import SpilledPartsState, concat
 
 
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Checkpoint with FRESH attribute ids: localCheckpoint keeps the
-    source plan's exprIds, so parts derived from the same state frames
-    all expose identical ids — a later many-way self-union of such
-    parts trips Catalyst's relation dedup with 'key not found: <attr>'.
-    The alias projection mints new ids per part."""
-    from materialize_spark.ckpt import fresh_break
-    return fresh_break(df)
+def _side(on: list[str]) -> SpilledPartsState:
+    """A join side's history or a view's output deltas: signed rows
+    keyed (probed, spill-partitioned) by ``on`` whose ``diff`` nets on
+    every fold."""
+    return SpilledPartsState(list(on), measures=(DIFF_COL,))
 
 
-def _consolidate(hist: DataFrame | None, delta: DataFrame | None) -> DataFrame | None:
-    if delta is None:
-        return hist
-    both = delta if hist is None else hist.unionByName(delta)
-    cols = [c for c in both.columns if c != DIFF_COL]
-    return _ckpt(
-        both.groupBy(*cols).agg(F.sum(DIFF_COL).alias(DIFF_COL))
-        .filter(F.col(DIFF_COL) != 0)
-    )
-
-
-def _concat(parts: list[DataFrame]) -> DataFrame | None:
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-@dataclass
-class _JoinSideState:
-    """One join side's history: append-only checkpointed parts with the
-    optional hash-prefix-partitioned spill tier past ``spill_rows``
-    (streaming/state_spill.SpilledPartsState — the same layout the
-    TopK/dedup/q18 delta state uses). ``frame(touched)`` is the probe
-    input: memory parts ∪ the spilled tier pruned to the touched keys'
-    prefixes BEFORE any I/O, so per-batch reads stay
-    O(state/prefixes × touched-prefixes), never O(state)."""
-
-    on: list[str]
-    name: str = "join_side"
-    spill_rows: int | None = None
-    compact_every: int = 16
-    _st: SpilledPartsState | None = field(default=None, init=False)
-    _appends: int = field(default=0, init=False)
-
-    def append(self, delta: DataFrame) -> None:
-        if self._st is None:
-            self._st = SpilledPartsState(
-                delta.sparkSession, key_cols=list(self.on),
-                name=self.name, spill_rows=self.spill_rows)
-        self._st.append(_ckpt(delta))
-        self._appends += 1
-        if self._appends >= self.compact_every:  # amortized fold
-            self._appends = 0
-            full = self._st.full_frame()
-            folded = _consolidate(None, full)
-            self._st.replace(folded if folded is not None
-                             else full.limit(0))
-
-    def frame(self, touched: DataFrame | None = None) -> DataFrame | None:
-        """The state visible to one probe, pruned to ``touched``'s key
-        prefixes when the spilled tier is engaged."""
-        if self._st is None:
-            return None
-        return self._st.probe_frame(touched)
+def _consolidated(state: SpilledPartsState) -> DataFrame:
+    """The current net rows of ``state`` (positive multiplicities)."""
+    merged = fresh_break(state.consolidate(state.probe_frame(None)))
+    return merged.filter(F.col(DIFF_COL) > 0)
 
 
 @dataclass
@@ -118,35 +61,28 @@ class IncrementalJoinView:
     (or both) and returns the *output delta* — itself an explicit-diff
     frame, so views chain into multi-way join pipelines.
 
-    State discipline (arrangement-spine, like delta_ivm.py): each side
-    is a list of append-only checkpointed PARTS — per batch only the
-    delta is written (O(delta)), and every ``compact_every`` batches the
-    parts fold into one consolidated frame (amortized O(state)/
-    compact_every). Probing an unconsolidated union is multiset-correct:
-    a (+1, -1) pair for the same row contributes cancelling output
-    deltas. The maintained result is likewise part-accumulated and only
-    consolidated on ``result()``.
+    State discipline: each side is a parts-spine
+    (streaming/state_spill.py) of append-only checkpointed deltas — per
+    batch only the delta is written (O(delta)). Probing an
+    unconsolidated union is multiset-correct: a (+1, -1) pair for the
+    same row contributes cancelling output deltas. The maintained
+    result is likewise a spine of output deltas, consolidated on
+    ``result()``.
     """
 
     on: list[str]
-    compact_every: int = 16
-    spill_rows: int | None = None
     # non-equi residual ON conjuncts (e.g. ``a.x < b.y``), filtered
     # over each joined term: join-then-filter is still linear, so the
     # bilinear delta rule holds unchanged (the reference plans such
     # predicates as an MFP on the join closure, join.rs)
     extra: str | None = None
-    _left: _JoinSideState = field(init=False)
-    _right: _JoinSideState = field(init=False)
-    _result: list[DataFrame] = field(default_factory=list, init=False)
+    _left: SpilledPartsState = field(init=False)
+    _right: SpilledPartsState = field(init=False)
+    _result: SpilledPartsState = field(init=False)
 
     def __post_init__(self) -> None:
-        self._left = _JoinSideState(
-            on=list(self.on), name="join_left",
-            spill_rows=self.spill_rows, compact_every=self.compact_every)
-        self._right = _JoinSideState(
-            on=list(self.on), name="join_right",
-            spill_rows=self.spill_rows, compact_every=self.compact_every)
+        self._left, self._right = _side(self.on), _side(self.on)
+        self._result = _side(self.on)
 
     def _term(self, a: DataFrame | None, b: DataFrame | None) -> DataFrame | None:
         if a is None or b is None:
@@ -171,44 +107,31 @@ class IncrementalJoinView:
         side's state pruned to the delta's touched key prefixes."""
         terms = [
             self._term(left_delta,
-                       self._right.frame(left_delta)),   # ΔA ⋈ B_old
-            self._term(self._left.frame(right_delta),
-                       right_delta),                     # A_old ⋈ ΔB
-            self._term(left_delta, right_delta),         # ΔA ⋈ ΔB
+                       self._right.probe_frame(left_delta)),  # ΔA ⋈ B_old
+            self._term(self._left.probe_frame(right_delta),
+                       right_delta),                          # A_old ⋈ ΔB
+            self._term(left_delta, right_delta),              # ΔA ⋈ ΔB
         ]
         terms = [t for t in terms if t is not None]
         if left_delta is not None:
-            self._left.append(left_delta)
+            self._left.append(fresh_break(left_delta))
         if right_delta is not None:
-            self._right.append(right_delta)
+            self._right.append(fresh_break(right_delta))
         if not terms:
             return None
-        out = terms[0]
-        for t in terms[1:]:
-            out = out.unionByName(t)
-        out = _ckpt(out)
+        out = fresh_break(concat(terms))
         # append the output delta part — result() consolidates lazily,
         # so the per-batch write stays O(delta)
         self._result.append(out)
-        if len(self._result) >= self.compact_every:
-            folded = _consolidate(None, _concat(self._result))
-            empty = self._result[0].limit(0)
-            self._result.clear()
-            # an all-cancelled fold keeps an empty frame so result()
-            # still knows the schema
-            self._result.append(folded if folded is not None else empty)
         return out
 
     def result(self) -> DataFrame:
         """Current maintained join (consolidated, positive multiplicities,
         with the ``diff`` multiplicity column) — accumulated purely from
         output deltas, no re-join of the histories."""
-        if not self._result:
+        if not self._result.n_parts():
             raise RuntimeError("no batches folded yet")
-        merged = _consolidate(None, _concat(self._result))
-        if merged is None:
-            merged = self._result[0].limit(0)
-        return merged.filter(F.col(DIFF_COL) > 0)
+        return _consolidated(self._result)
 
     def result_expanded(self) -> DataFrame:
         """Maintained join as plain rows (multiplicities expanded)."""
@@ -250,11 +173,9 @@ class IncrementalOuterJoinView:
     pad_right: list[tuple[str, str]]
     how: str = "left"                      # "left" | "full"
     pad_left: list[tuple[str, str]] = field(default_factory=list)
-    compact_every: int = 16
-    spill_rows: int | None = None
-    _left: _JoinSideState = field(init=False)
-    _right: _JoinSideState = field(init=False)
-    _result: list[DataFrame] = field(default_factory=list, init=False)
+    _left: SpilledPartsState = field(init=False)
+    _right: SpilledPartsState = field(init=False)
+    _result: SpilledPartsState = field(init=False)
 
     def __post_init__(self) -> None:
         if self.how not in ("left", "right", "full"):
@@ -262,12 +183,8 @@ class IncrementalOuterJoinView:
         if self.how in ("right", "full") and not self.pad_left:
             raise ValueError(
                 f"{self.how.upper()} join needs pad_left column types")
-        self._left = _JoinSideState(
-            on=list(self.on), name="ojoin_left",
-            spill_rows=self.spill_rows, compact_every=self.compact_every)
-        self._right = _JoinSideState(
-            on=list(self.on), name="ojoin_right",
-            spill_rows=self.spill_rows, compact_every=self.compact_every)
+        self._left, self._right = _side(self.on), _side(self.on)
+        self._result = _side(self.on)
 
     # -- helpers --------------------------------------------------------------
     def _inner_term(self, a, b):
@@ -318,8 +235,8 @@ class IncrementalOuterJoinView:
                                  & (F.col("__nn") > 0)).select(*on)
         return to_absent, to_present
 
-    def _anti_terms(self, side_state: _JoinSideState, side_delta,
-                    other_state: _JoinSideState, other_delta,
+    def _anti_terms(self, side_state: SpilledPartsState, side_delta,
+                    other_state: SpilledPartsState, other_delta,
                     pads: list[tuple[str, str]]) -> list[DataFrame]:
         """Anti-part delta for one side (the side that survives
         unmatched, null-padded on ``pads`` = the other side's columns).
@@ -329,19 +246,20 @@ class IncrementalOuterJoinView:
         keys."""
         terms: list[DataFrame] = []
         if side_delta is not None:
-            other_new = _concat(
-                [p for p in (other_state.frame(side_delta), other_delta)
-                 if p is not None])
+            other_new = concat(
+                [p for p in (other_state.probe_frame(side_delta),
+                             other_delta) if p is not None])
             present = self._present_keys(other_new, self.on)
             unmatched = (side_delta if present is None else
                          side_delta.join(present, on=self.on,
                                          how="left_anti"))
             terms.append(self._pad(unmatched, pads))
         if other_delta is not None:
-            side_old = side_state.frame(other_delta)
+            side_old = side_state.probe_frame(other_delta)
             if side_old is not None:
                 to_absent, to_present = self._flips(
-                    other_state.frame(other_delta), other_delta, self.on)
+                    other_state.probe_frame(other_delta), other_delta,
+                    self.on)
                 terms.append(self._pad(
                     side_old.join(to_absent, on=self.on, how="inner"),
                     pads))
@@ -356,8 +274,10 @@ class IncrementalOuterJoinView:
         """Fold one batch; returns the outer join's output delta with the
         padded side's columns NULL on unmatched rows."""
         terms = [t for t in (
-            self._inner_term(left_delta, self._right.frame(left_delta)),
-            self._inner_term(self._left.frame(right_delta), right_delta),
+            self._inner_term(left_delta,
+                             self._right.probe_frame(left_delta)),
+            self._inner_term(self._left.probe_frame(right_delta),
+                             right_delta),
             self._inner_term(left_delta, right_delta)) if t is not None]
         if self.how in ("left", "full"):
             terms += self._anti_terms(self._left, left_delta,
@@ -373,32 +293,23 @@ class IncrementalOuterJoinView:
             # realign to the output column order (unionByName below)
             terms += mirrored
         if left_delta is not None:
-            self._left.append(left_delta)
+            self._left.append(fresh_break(left_delta))
         if right_delta is not None:
-            self._right.append(right_delta)
+            self._right.append(fresh_break(right_delta))
         if not terms:
             return None
-        out = terms[0]
-        for t in terms[1:]:
-            out = out.unionByName(t)
-        out = _ckpt(out)
+        out = fresh_break(concat(terms))
+        # append the output delta part — result() consolidates lazily,
+        # so the per-batch write stays O(delta)
         self._result.append(out)
-        if len(self._result) >= self.compact_every:
-            folded = _consolidate(None, _concat(self._result))
-            empty = self._result[0].limit(0)
-            self._result.clear()
-            self._result.append(folded if folded is not None else empty)
         return out
 
     def result(self) -> DataFrame:
         """Current maintained outer join (consolidated, positive
         multiplicities, ``diff`` column)."""
-        if not self._result:
+        if not self._result.n_parts():
             raise RuntimeError("no batches folded yet")
-        merged = _consolidate(None, _concat(self._result))
-        if merged is None:
-            merged = self._result[0].limit(0)
-        return merged.filter(F.col(DIFF_COL) > 0)
+        return _consolidated(self._result)
 
     def result_expanded(self) -> DataFrame:
         r = self.result()

@@ -23,6 +23,8 @@ Spark-first translation (no per-row Python anywhere):
   O(history) — the property that makes IVM worth having at 100 TB.
 - TopK under retraction uses the same support table; touched groups replay
   ``row_number() <= k`` over their (mult-expanded) support.
+- DISTINCT, set-op and TopK supports are appended per batch to a
+  parts-spine (streaming/state_spill.py), which decides folds and spills.
 
 Input convention: update frames carry a ``diff`` LongType column
 (operators/setops.DIFF_COL), as produced by the Debezium envelope decoder
@@ -37,7 +39,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from materialize_spark.ckpt import fresh_break
 from materialize_spark.operators.setops import DIFF_COL
+from materialize_spark.streaming.state_spill import SpilledPartsState
 
 # aggregate kinds and their maintenance strategy
 _ACCUMULABLE = ("sum", "count", "avg")
@@ -61,20 +65,6 @@ def _consolidate(support: DataFrame, keys: list[str], val: str) -> DataFrame:
         .agg(F.sum("mult").alias("mult"))
         .filter(F.col("mult") != 0)
     )
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Break lineage each batch — without this the plan grows per batch and
-    the job eventually spends its time in Catalyst, not execution.
-
-    The alias projection first is load-bearing: localCheckpoint keeps
-    the source plan's attribute exprIds, so parts built from the same
-    state frames all expose IDENTICAL ids — a later many-way self-union
-    of such parts trips Catalyst's relation dedup with
-    'key not found: <attr>'. Alias(col) mints fresh exprIds, so every
-    checkpointed part is id-disjoint."""
-    from materialize_spark.ckpt import fresh_break
-    return fresh_break(df)
 
 
 def _ns_cond(keys: list[str]):
@@ -175,7 +165,8 @@ class RetractionAwareAgg:
         result DataFrame (keys + output aggregate columns)."""
         touched = delta.select(*self.keys).distinct()
 
-        self._acc = _ckpt(self._merge_acc(self._acc, self._acc_partial(delta)))
+        self._acc = fresh_break(
+            self._merge_acc(self._acc, self._acc_partial(delta)))
 
         # one support per distinct INPUT column — min/max/DISTINCT aggs
         # over the same column share state (halves the per-batch state
@@ -197,7 +188,7 @@ class RetractionAwareAgg:
                 new_supp = untouched.unionByName(
                     _consolidate(touched_prev.unionByName(batch_supp),
                                  self.keys, "__val"))
-            self._support[col] = _ckpt(new_supp)
+            self._support[col] = fresh_break(new_supp)
 
         return self.result()
 
@@ -247,47 +238,32 @@ class RetractionAwareDistinct:
     the net multiplicity per distinct row; a row is visible while its
     net is positive. Same arrangement-spine discipline as the other
     retraction operators — per batch only the batch's rows re-derive
-    their visibility; untouched rows pass through."""
+    their visibility; untouched rows pass through. The support is
+    INPUT-sized (every distinct live row), so it lives on the spillable
+    parts-spine (streaming/state_spill.py)."""
 
     spark: SparkSession
     cols: list[str]
-    compact_every: int = 16
-    # distinct-support state is INPUT-sized (every distinct live row);
-    # past this row budget it moves to the hash-prefix-partitioned
-    # parquet tier (streaming/state_spill.py) and probes prune to the
-    # touched rows' prefixes before any I/O — the 100 TB growth path
-    spill_rows: int | None = None
-    _state: object = field(default=None, init=False)
+    _state: SpilledPartsState = field(init=False)
     _result: DataFrame | None = field(default=None, init=False)
 
     def __post_init__(self) -> None:
-        from materialize_spark.streaming.state_spill import (
-            SpilledPartsState,
-        )
-        self._state = SpilledPartsState(
-            self.spark, key_cols=self.cols, name="distinct",
-            spill_rows=self.spill_rows)
+        self._state = SpilledPartsState(self.cols, measures=("mult",))
 
     def on_batch(self, delta: DataFrame) -> DataFrame:
-        batch_supp = _ckpt(delta.groupBy(*self.cols)
-                           .agg(F.sum(DIFF_COL).alias("mult"))
-                           .filter(F.col("mult") != 0))
+        batch_supp = fresh_break(delta.groupBy(*self.cols)
+                                 .agg(F.sum(DIFF_COL).alias("mult"))
+                                 .filter(F.col("mult") != 0))
         touched = batch_supp.select(*self.cols).distinct()
         self._state.append(batch_supp)
-        if self._state.n_parts() >= self.compact_every:
-            folded = _ckpt(self._state.full_frame()
-                           .groupBy(*self.cols)
-                           .agg(F.sum("mult").alias("mult"))
-                           .filter(F.col("mult") != 0))
-            self._state.replace(folded)
         all_supp = self._state.probe_frame(touched)
         visible = (_ns_probe(all_supp, touched, self.cols)
                    .groupBy(*self.cols).agg(F.sum("mult").alias("mult"))
                    .filter(F.col("mult") > 0).drop("mult"))
         if self._result is None:
-            self._result = _ckpt(visible)
+            self._result = fresh_break(visible)
         else:
-            self._result = _ckpt(
+            self._result = fresh_break(
                 _ns_probe(self._result, touched, self.cols, anti=True)
                 .unionByName(visible))
         return self._result
@@ -330,24 +306,13 @@ class RetractionAwareSetOp:
     op: str                 # except | intersect
     all: bool
     nsides: int = 2
-    compact_every: int = 16
-    # set-op support is INPUT-sized ((row, side) -> net); the same
-    # spill tier as the join/TopK states bounds executor memory and
-    # prefix-prunes probes — without it a 100 TB EXCEPT would hold
-    # both inputs in memory
-    spill_rows: int | None = None
-    _state: object = field(default=None, init=False)
+    _state: SpilledPartsState = field(init=False)
     _result: DataFrame | None = field(default=None, init=False)
 
     def __post_init__(self) -> None:
         if self.op not in ("except", "intersect"):
             raise ValueError(f"unsupported set op {self.op!r}")
-        from materialize_spark.streaming.state_spill import (
-            SpilledPartsState,
-        )
-        self._state = SpilledPartsState(
-            self.spark, key_cols=self.cols, name="setop",
-            spill_rows=self.spill_rows)
+        self._state = SpilledPartsState(self.cols, measures=("mult",))
 
     def _vis(self) -> "F.Column":
         """Visible multiplicity from per-side clamped nets __m0..__mN."""
@@ -377,17 +342,11 @@ class RetractionAwareSetOp:
         """Fold one explicit-diff frame carrying a ``__side`` column
         (which input the update belongs to) and return the maintained
         result (rows expanded to their visible multiplicity)."""
-        batch_supp = _ckpt(delta.groupBy(*self.cols, "__side")
-                           .agg(F.sum(DIFF_COL).alias("mult"))
-                           .filter(F.col("mult") != 0))
+        batch_supp = fresh_break(delta.groupBy(*self.cols, "__side")
+                                 .agg(F.sum(DIFF_COL).alias("mult"))
+                                 .filter(F.col("mult") != 0))
         touched = delta.select(*self.cols).distinct()
         self._state.append(batch_supp)
-        if self._state.n_parts() >= self.compact_every:
-            folded = _ckpt(self._state.full_frame()
-                           .groupBy(*self.cols, "__side")
-                           .agg(F.sum("mult").alias("mult"))
-                           .filter(F.col("mult") != 0))
-            self._state.replace(folded)
         all_supp = self._state.probe_frame(touched)
         pivoted = (
             _ns_probe(all_supp, touched, self.cols)
@@ -401,9 +360,9 @@ class RetractionAwareSetOp:
                 F.sequence(F.lit(1), F.col("__vis"))))
             .select(*self.cols))
         if self._result is None:
-            self._result = _ckpt(visible)
+            self._result = fresh_break(visible)
         else:
-            self._result = _ckpt(
+            self._result = fresh_break(
                 _ns_probe(self._result, touched, self.cols, anti=True)
                 .unionByName(visible))
         return self._result
@@ -440,45 +399,14 @@ class RetractionAwareTopK:
     # reference's TopK covers the same family
     # (src/compute-types/src/plan/top_k.rs)
     mode: str = "row_number"
-    compact_every: int = 16
-    # state-spill budget: when the compacted support exceeds this many
-    # rows it moves to key-hash-prefix-partitioned parquet — probes then
-    # read ONLY the partitions the batch's keys hash into (directory
-    # pruning), never the whole corpus. None = stay in memory (test/
-    # small-state mode). This is the 100 TB path: in-memory state would
-    # otherwise grow without bound and every probe would scan all of it.
-    spill_rows: int | None = None
-    spill_dir: str | None = None
-    spill_prefixes: int = 64
-    _parts: list[DataFrame] = field(default_factory=list, init=False)
+    # the compacted support (payload -> multiplicity) is input-sized:
+    # the spillable parts-spine bounds executor memory and prunes
+    # probes to the batch's key prefixes (streaming/state_spill.py)
+    _state: SpilledPartsState = field(init=False)
     _result: DataFrame | None = field(default=None, init=False)
-    _data_cols: list[str] | None = field(default=None, init=False)
-    _disk: str | None = field(default=None, init=False)
 
-    def _kp(self) -> "F.Column":
-        return F.pmod(F.xxhash64(*self.keys), F.lit(self.spill_prefixes))
-
-    def _disk_probe(self, touched: DataFrame) -> DataFrame | None:
-        """Read only the spilled partitions the batch's keys hash into:
-        the prefix set is O(min(batch, spill_prefixes)) driver-side ints,
-        and the literal IN filter prunes directories before any I/O."""
-        if self._disk is None:
-            return None
-        pfx = [r.p for r in touched.select(
-            self._kp().alias("p")).distinct().collect()]
-        return (self.spark.read.parquet(self._disk)
-                .filter(F.col("__kp").isin(pfx)).drop("__kp"))
-
-    def _spill(self, folded: DataFrame) -> None:
-        import os
-        import tempfile
-        if self.spill_dir is None:
-            self.spill_dir = tempfile.mkdtemp(prefix="mz_topk_state_")
-        path = os.path.join(self.spill_dir,
-                            f"gen{len(os.listdir(self.spill_dir))}")
-        (folded.withColumn("__kp", self._kp())
-         .write.mode("overwrite").partitionBy("__kp").parquet(path))
-        self._disk = path
+    def __post_init__(self) -> None:
+        self._state = SpilledPartsState(self.keys, measures=("mult",))
 
     def _topk_of(self, supp: DataFrame) -> DataFrame:
         """Top ``limit`` rows per group of a net-multiplicity support
@@ -510,48 +438,24 @@ class RetractionAwareTopK:
     def on_batch(self, delta: DataFrame) -> DataFrame:
         """Arrangement-spine discipline: the batch's consolidated rows
         append as a PART (an O(delta) write); the touched groups' net
-        support comes from a semi-join probe over the part union (a
-        scan, never a full-state rewrite), and only those groups'
-        windows replay into the small RESULT table. Parts fold into one
-        every ``compact_every`` batches."""
+        support comes from a semi-join probe over the spine (a scan,
+        never a full-state rewrite), and only those groups' windows
+        replay into the small RESULT table."""
         data_cols = [c for c in delta.columns if c != DIFF_COL]
-        self._data_cols = data_cols
-        batch_supp = _ckpt(delta.groupBy(*data_cols)
-                           .agg(F.sum(DIFF_COL).alias("mult"))
-                           .filter(F.col("mult") != 0))
+        batch_supp = fresh_break(delta.groupBy(*data_cols)
+                                 .agg(F.sum(DIFF_COL).alias("mult"))
+                                 .filter(F.col("mult") != 0))
         touched = delta.select(*self.keys).distinct()
-        self._parts.append(batch_supp)
-        all_supp = self._parts[0]
-        for p in self._parts[1:]:
-            all_supp = all_supp.unionByName(p)
-        if len(self._parts) >= self.compact_every:  # amortized fold
-            full = all_supp
-            if self._disk is not None:  # fold the spilled tier in too
-                full = full.unionByName(
-                    self.spark.read.parquet(self._disk).drop("__kp"))
-            folded = _ckpt(full.groupBy(*data_cols)
-                           .agg(F.sum("mult").alias("mult"))
-                           .filter(F.col("mult") != 0))
-            self._parts.clear()
-            if self.spill_rows is not None \
-                    and folded.count() > self.spill_rows:
-                self._spill(folded)
-                self._parts.append(folded.limit(0))
-            else:
-                self._disk = None
-                self._parts.append(folded)
-            all_supp = self._parts[0]
-        disk_hits = self._disk_probe(touched)
-        if disk_hits is not None:
-            all_supp = all_supp.unionByName(disk_hits)
+        self._state.append(batch_supp)
+        all_supp = self._state.probe_frame(touched)
         touched_net = (_ns_probe(all_supp, touched, self.keys)
                        .groupBy(*data_cols)
                        .agg(F.sum("mult").alias("mult")))
         topk_touched = self._topk_of(touched_net)
         if self._result is None:
-            self._result = _ckpt(topk_touched)
+            self._result = fresh_break(topk_touched)
         else:
-            self._result = _ckpt(
+            self._result = fresh_break(
                 _ns_probe(self._result, touched, self.keys, anti=True)
                 .unionByName(topk_touched))
         return self._result

@@ -53,16 +53,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from materialize_spark.ckpt import fresh_break
 from materialize_spark.operators.setops import DIFF_COL
-from materialize_spark.streaming.state_spill import SpilledPartsState
+from materialize_spark.streaming.state_spill import SpilledPartsState, concat
 
 _KINDS = ("exists", "not_exists", "in", "not_in")
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Lineage break with fresh attribute ids (see retraction._ckpt)."""
-    from materialize_spark.ckpt import fresh_break
-    return fresh_break(df)
 
 
 def _q(name: str) -> str:
@@ -101,14 +96,10 @@ class SemiAntiFilterMV:
     kind: str                      # exists | not_exists | in | not_in
     member: str | None = None
     in_col: str | None = None
-    compact_every: int = 16
-    spill_rows: int | None = None
-    _outer: SpilledPartsState | None = field(default=None, init=False)
-    _inner: SpilledPartsState | None = field(default=None, init=False)
+    _outer: SpilledPartsState = field(init=False)
+    _inner: SpilledPartsState = field(init=False)
     _null_cnt: int = field(default=0, init=False)
     _total: int = field(default=0, init=False)
-    _o_appends: int = field(default=0, init=False)
-    _i_appends: int = field(default=0, init=False)
 
     def __post_init__(self) -> None:
         if self.kind not in _KINDS:
@@ -121,6 +112,10 @@ class SemiAntiFilterMV:
                 raise ValueError("in kinds need an in_col")
         elif self.in_col is not None:
             raise ValueError("in_col applies to IN kinds only")
+        self._inner = SpilledPartsState(self._probe_keys(),
+                                        measures=("__cnt",))
+        self._outer = SpilledPartsState(self._probe_keys(),
+                                        measures=(DIFF_COL,))
 
     # -- state plumbing -----------------------------------------------------
     @property
@@ -139,16 +134,6 @@ class SemiAntiFilterMV:
         are the re-qualification unit there)."""
         return self.keys if self.keys else [self.in_col]
 
-    def _ensure(self) -> None:
-        if self._inner is None:
-            self._inner = SpilledPartsState(
-                self.spark, key_cols=self._probe_keys(),
-                name="semi_inner", spill_rows=self.spill_rows)
-        if self._outer is None:
-            self._outer = SpilledPartsState(
-                self.spark, key_cols=self._probe_keys(),
-                name="semi_outer", spill_rows=self.spill_rows)
-
     def _counts(self, touched: DataFrame | None) -> DataFrame | None:
         """Current inner support (keys[, member] -> __cnt), confined to
         ``touched`` keys when given (probe prefixes prune first, then a
@@ -158,9 +143,7 @@ class SemiAntiFilterMV:
             return None
         if touched is not None:
             probe = _ns_semi(probe, touched, self._probe_keys())
-        return (probe.groupBy(*self._ikey())
-                .agg(F.sum("__cnt").alias("__cnt"))
-                .filter("__cnt != 0"))
+        return self._inner.consolidate(probe)
 
     def _outer_rows(self, touched: DataFrame | None) -> DataFrame | None:
         """Consolidated current outer rows (confined to touched keys
@@ -170,10 +153,7 @@ class SemiAntiFilterMV:
             return None
         if touched is not None:
             probe = _ns_semi(probe, touched, self._probe_keys())
-        cols = [c for c in probe.columns if c != DIFF_COL]
-        return (probe.groupBy(*cols)
-                .agg(F.sum(DIFF_COL).alias(DIFF_COL))
-                .filter(f"{_q(DIFF_COL)} != 0"))
+        return self._outer.consolidate(probe)
 
     # -- qualification ------------------------------------------------------
     # The _qual* helpers return SQL STRINGS (not Columns): one parsed
@@ -238,8 +218,8 @@ class SemiAntiFilterMV:
         in ONE join pass per attachment level — the inner-fold fast
         path. ``both`` is keyed by ``_ikey()``; the member/corr
         variants read it twice (per-key totals + per-pair counts — the
-        relation-dedup hazard) so the caller _ckpt's it for those
-        kinds only."""
+        relation-dedup hazard) so the caller breaks its lineage for
+        those kinds only."""
         if self.member or self._corr_in:
             vcol = self.member or self.in_col
             tot_aggs = [F.sum("__cnt_o").alias("__tot_o"),
@@ -270,7 +250,7 @@ class SemiAntiFilterMV:
         member variant; ``__tot{sfx}``/``__nul{sfx}`` for correlated
         IN) to outer rows. Plain `=` joins throughout: NULL outer keys
         must NOT match any inner group (SQL equality), and the support
-        holds no NULL correlation keys. ``counts`` is _ckpt'd only for
+        holds no NULL correlation keys. ``counts`` is broken only for
         the member/corr-in variants, which read it twice (per-key
         totals + per-pair counts) — shared LIVE subplans under one
         plan are the relation-dedup hazard; a single read stays
@@ -285,11 +265,11 @@ class SemiAntiFilterMV:
                 extra.append(f"CAST(NULL AS BIGINT) AS {nul_c}")
             return rows.selectExpr("*", *extra)
         if self.member or self._corr_in:
-            # _ckpt ONLY for the double-read variants (per-key totals
+            # break ONLY for the double-read variants (per-key totals
             # + per-pair counts below read ``counts`` twice in one
             # plan — the relation-dedup hazard); the plain variants'
             # single left join reads it once, live
-            counts = _ckpt(counts)
+            counts = fresh_break(counts)
             vcol = self.member or self.in_col
             tot_aggs = [F.sum("__cnt").alias(tot_c)]
             if self._corr_in:
@@ -322,13 +302,13 @@ class SemiAntiFilterMV:
     def _qualify(self, rows: DataFrame,
                  counts: DataFrame | None) -> DataFrame:
         """Filter outer rows to the qualifying ones under ``counts``.
-        The filtered frame is _ckpt'd WITH its attached count columns
+        The filtered frame is broken WITH its attached count columns
         and projected afterwards: checkpointing a plan that filters on
         subsequently-dropped columns leaves the captured LogicalRDD
         constraints referencing out-of-scope attributes ('key not
         found' on any later re-plan)."""
         att = self._attach(rows, counts, "")
-        kept = _ckpt(att.filter(self._qual("")))
+        kept = fresh_break(att.filter(self._qual("")))
         return kept.select(*rows.columns)
 
     # -- batch fold ----------------------------------------------------------
@@ -340,27 +320,19 @@ class SemiAntiFilterMV:
         to (keys..[, member], diff). The inner side folds FIRST against
         the pre-batch outer state, then the outer delta qualifies
         against the post-batch inner support — the bilinear order."""
-        self._ensure()
         terms: list[DataFrame] = []
         if inner_delta is not None:
             terms += self._fold_inner(inner_delta)
         if outer_delta is not None:
-            od = _ckpt(outer_delta)
+            od = fresh_break(outer_delta)
             new_counts = self._counts(
                 od.select(*self._probe_keys()).distinct())
             terms.append(self._qualify(od, new_counts))
             self._outer.append(od)
-            self._o_appends += 1
-        self._maybe_compact()
-        if not terms:
-            return None
         # each term is a live projection over its OWN fresh checkpoint
         # leaf (see _qualify/_fold_inner), so the union's branches are
         # attribute-disjoint — no relation-dedup hazard, no extra ckpt
-        out = terms[0]
-        for t in terms[1:]:
-            out = out.unionByName(t)
-        return out
+        return concat(terms)
 
     def _fold_inner(self, inner_delta: DataFrame) -> list[DataFrame]:
         batch_t = batch_n = 0
@@ -390,9 +362,9 @@ class SemiAntiFilterMV:
         if nn_cols:
             clean = clean.filter(" AND ".join(
                 f"{_q(k)} IS NOT NULL" for k in nn_cols))
-        partial = _ckpt(clean.groupBy(*self._ikey())
-                        .agg(F.sum(DIFF_COL).alias("__cnt"))
-                        .filter("__cnt != 0"))
+        partial = fresh_break(clean.groupBy(*self._ikey())
+                              .agg(F.sum(DIFF_COL).alias("__cnt"))
+                              .filter("__cnt != 0"))
         # live over the partial LEAF (no own checkpoint): every reuse
         # below re-plans a tiny distinct-over-leaf; repeated occurrences
         # of one checkpointed leaf in a plan are ordinary self-reference
@@ -401,11 +373,10 @@ class SemiAntiFilterMV:
         scope = None if global_flip else touched
         old_counts = self._counts(scope)
         self._inner.append(partial)
-        self._i_appends += 1
         old_rows = self._outer_rows(scope)
         if old_rows is None:
             return []
-        old_rows = _ckpt(old_rows)
+        old_rows = fresh_break(old_rows)
         # fused old/new support: NEW = OLD + the batch's own partial
         # counts, so one state probe serves both sides — the second
         # probe+aggregate (and its checkpoint) the unfused form paid
@@ -432,7 +403,7 @@ class SemiAntiFilterMV:
             # double-read (per-key totals + per-pair counts) — the
             # live-subplan relation-dedup hazard; plain variants read
             # it once and skip the checkpoint's fixed planning cost
-            both = _ckpt(both)
+            both = fresh_break(both)
         # single-plan flip: attach OLD and NEW support side by side and
         # emit ±rows where the qualification changed — no self-union,
         # no exceptAll (unions whose branches share leaves evaluate
@@ -445,31 +416,12 @@ class SemiAntiFilterMV:
         # else-branch preserved by the bare END)
         sign = (f"CASE WHEN {new_q} AND NOT {old_q} THEN 1 "
                 f"WHEN {old_q} AND NOT {new_q} THEN -1 END")
-        flip = _ckpt(att.selectExpr("*", f"{sign} AS __s")
-                     .filter("__s IS NOT NULL"))
+        flip = fresh_break(att.selectExpr("*", f"{sign} AS __s")
+                           .filter("__s IS NOT NULL"))
         cols = [c for c in old_rows.columns if c != DIFF_COL]
         return [flip.selectExpr(
             *[_q(c) for c in cols],
             f"{_q(DIFF_COL)} * __s AS {_q(DIFF_COL)}")]
-
-    def _maybe_compact(self) -> None:
-        if self._i_appends >= self.compact_every:
-            full = self._inner.full_frame()
-            if full is not None:
-                self._inner.replace(_ckpt(
-                    full.groupBy(*self._ikey())
-                    .agg(F.sum("__cnt").alias("__cnt"))
-                    .filter(F.col("__cnt") != 0)))
-            self._i_appends = 0
-        if self._o_appends >= self.compact_every:
-            full = self._outer.full_frame()
-            if full is not None:
-                cols = [c for c in full.columns if c != DIFF_COL]
-                self._outer.replace(_ckpt(
-                    full.groupBy(*cols)
-                    .agg(F.sum(DIFF_COL).alias(DIFF_COL))
-                    .filter(F.col(DIFF_COL) != 0)))
-            self._o_appends = 0
 
 
 @dataclass
@@ -496,24 +448,18 @@ class CmpAggFilterMV:
     keys: list[str]
     qual_tmpl: str
     agg_kind: str
-    compact_every: int = 16
-    spill_rows: int | None = None
-    _agg: object = field(default=None, init=False)
-    _outer: SpilledPartsState | None = field(default=None, init=False)
-    _o_appends: int = field(default=0, init=False)
+    _agg: object = field(init=False)
+    _outer: SpilledPartsState = field(init=False)
 
-    def _ensure(self) -> None:
-        if self._agg is None:
-            from materialize_spark.streaming.retraction import (
-                RetractionAwareAgg,
-            )
-            self._agg = RetractionAwareAgg(
-                self.spark, keys=list(self.keys),
-                aggs={"__aggval": (self.agg_kind, "__arg")})
-        if self._outer is None:
-            self._outer = SpilledPartsState(
-                self.spark, key_cols=list(self.keys), name="cmp_outer",
-                spill_rows=self.spill_rows)
+    def __post_init__(self) -> None:
+        from materialize_spark.streaming.retraction import (
+            RetractionAwareAgg,
+        )
+        self._agg = RetractionAwareAgg(
+            self.spark, keys=list(self.keys),
+            aggs={"__aggval": (self.agg_kind, "__arg")})
+        self._outer = SpilledPartsState(list(self.keys),
+                                        measures=(DIFF_COL,))
 
     def _vals(self, touched: DataFrame | None) -> DataFrame | None:
         """Current per-key aggregate values (keys + __aggval),
@@ -535,10 +481,7 @@ class CmpAggFilterMV:
             return None
         if touched is not None:
             probe = _ns_semi(probe, touched, self.keys)
-        cols = [c for c in probe.columns if c != DIFF_COL]
-        return (probe.groupBy(*cols)
-                .agg(F.sum(DIFF_COL).alias(DIFF_COL))
-                .filter(F.col(DIFF_COL) != 0))
+        return self._outer.consolidate(probe)
 
     def _attach(self, rows: DataFrame, vals: DataFrame | None,
                 col: str) -> DataFrame:
@@ -555,13 +498,12 @@ class CmpAggFilterMV:
                  ) -> DataFrame | None:
         """Inner deltas arrive pre-projected to (keys.., __arg, diff);
         the bilinear order matches SemiAntiFilterMV."""
-        self._ensure()
         terms: list[DataFrame] = []
         if inner_delta is not None:
             clean = inner_delta
             for k in self.keys:
                 clean = clean.filter(F.col(k).isNotNull())
-            clean = _ckpt(clean)
+            clean = fresh_break(clean)
             # live over the clean LEAF (see SemiAntiFilterMV's touched)
             touched = clean.select(*self.keys).distinct()
             old_vals = self._vals(touched)
@@ -570,7 +512,7 @@ class CmpAggFilterMV:
             new_vals = self._vals(touched)
             old_rows = self._outer_rows(touched)
             if old_rows is not None:
-                old_rows = _ckpt(old_rows)
+                old_rows = fresh_break(old_rows)
                 att = self._attach(
                     self._attach(old_rows, old_vals, "__av_o"),
                     new_vals, "__av_n")
@@ -578,36 +520,21 @@ class CmpAggFilterMV:
                 new_q = F.expr(self.qual_tmpl.format(V="__av_n"))
                 sign = (F.when(new_q & ~old_q, F.lit(1))
                         .when(old_q & ~new_q, F.lit(-1)))
-                flip = _ckpt(att.withColumn("__s", sign)
-                             .filter(F.col("__s").isNotNull()))
+                flip = fresh_break(att.withColumn("__s", sign)
+                                   .filter(F.col("__s").isNotNull()))
                 cols = [c for c in old_rows.columns if c != DIFF_COL]
                 terms.append(flip.select(
                     *cols,
                     (F.col(DIFF_COL) * F.col("__s")).alias(DIFF_COL)))
         if outer_delta is not None:
-            od = _ckpt(outer_delta)
+            od = fresh_break(outer_delta)
             vals = self._vals(od.select(*self.keys).distinct())
             att = self._attach(od, vals, "__av")
-            kept = _ckpt(att.filter(
+            kept = fresh_break(att.filter(
                 F.expr(self.qual_tmpl.format(V="__av"))))
             terms.append(kept.select(*od.columns))
             self._outer.append(od)
-            self._o_appends += 1
-        if self._o_appends >= self.compact_every:
-            full = self._outer.full_frame()
-            if full is not None:
-                cols = [c for c in full.columns if c != DIFF_COL]
-                self._outer.replace(_ckpt(
-                    full.groupBy(*cols)
-                    .agg(F.sum(DIFF_COL).alias(DIFF_COL))
-                    .filter(F.col(DIFF_COL) != 0)))
-            self._o_appends = 0
-        if not terms:
-            return None
-        out = terms[0]
-        for t in terms[1:]:
-            out = out.unionByName(t)
-        return out
+        return concat(terms)
 
 
 @dataclass
@@ -637,30 +564,21 @@ class GlobalCmpFilterMV:
 
     spark: SparkSession
     qual_tmpl: str
-    compact_every: int = 16
-    spill_rows: int | None = None
-    _outer: SpilledPartsState | None = field(default=None, init=False)
+    _outer: SpilledPartsState = field(init=False)
     _val: DataFrame | None = field(default=None, init=False)
     # Python-side cache of _val's one value: the old side of a change
     # check needs no re-collect (one fewer job per inner commit)
     _scalar: object = field(default=None, init=False)
-    _o_appends: int = field(default=0, init=False)
 
-    def _ensure_outer(self, like: DataFrame) -> None:
-        if self._outer is None:
-            key = [c for c in like.columns if c != DIFF_COL][0]
-            self._outer = SpilledPartsState(
-                self.spark, key_cols=[key], name="gcmp_outer",
-                spill_rows=self.spill_rows)
+    def __post_init__(self) -> None:
+        # outer rows are only ever read whole: keyed on every column
+        self._outer = SpilledPartsState([], measures=(DIFF_COL,))
 
     def _outer_rows(self) -> DataFrame | None:
-        probe = self._outer.probe_frame(None) if self._outer else None
+        probe = self._outer.probe_frame(None)
         if probe is None:
             return None
-        cols = [c for c in probe.columns if c != DIFF_COL]
-        return (probe.groupBy(*cols)
-                .agg(F.sum(DIFF_COL).alias(DIFF_COL))
-                .filter(F.col(DIFF_COL) != 0))
+        return self._outer.consolidate(probe)
 
     def _attach(self, rows: DataFrame, val: DataFrame | None,
                 col: str) -> DataFrame:
@@ -678,7 +596,7 @@ class GlobalCmpFilterMV:
         order)."""
         terms: list[DataFrame] = []
         if inner_delta is not None:
-            new_val = _ckpt(inner_delta.limit(1))
+            new_val = fresh_break(inner_delta.limit(1))
             old_scalar = self._scalar
             rows_ = new_val.collect()
             new_scalar = rows_[0][0] if rows_ else None
@@ -690,7 +608,7 @@ class GlobalCmpFilterMV:
             if changed:
                 old_rows = self._outer_rows()
                 if old_rows is not None:
-                    old_rows = _ckpt(old_rows)
+                    old_rows = fresh_break(old_rows)
                     att = self._attach(
                         self._attach(old_rows, old_val, "__v_o"),
                         new_val, "__v_n")
@@ -698,34 +616,18 @@ class GlobalCmpFilterMV:
                     new_q = F.expr(self.qual_tmpl.format(V="__v_n"))
                     sign = (F.when(new_q & ~old_q, F.lit(1))
                             .when(old_q & ~new_q, F.lit(-1)))
-                    flip = _ckpt(att.withColumn("__s", sign)
-                                 .filter(F.col("__s").isNotNull()))
+                    flip = fresh_break(att.withColumn("__s", sign)
+                                       .filter(F.col("__s").isNotNull()))
                     cols = [c for c in old_rows.columns
                             if c != DIFF_COL]
                     terms.append(flip.select(
                         *cols, (F.col(DIFF_COL) * F.col("__s"))
                         .alias(DIFF_COL)))
         if outer_delta is not None:
-            od = _ckpt(outer_delta)
-            self._ensure_outer(od)
+            od = fresh_break(outer_delta)
             att = self._attach(od, self._val, "__v")
-            kept = _ckpt(att.filter(
+            kept = fresh_break(att.filter(
                 F.expr(self.qual_tmpl.format(V="__v"))))
             terms.append(kept.select(*od.columns))
             self._outer.append(od)
-            self._o_appends += 1
-        if self._o_appends >= self.compact_every and self._outer:
-            full = self._outer.full_frame()
-            if full is not None:
-                cols = [c for c in full.columns if c != DIFF_COL]
-                self._outer.replace(_ckpt(
-                    full.groupBy(*cols)
-                    .agg(F.sum(DIFF_COL).alias(DIFF_COL))
-                    .filter(F.col(DIFF_COL) != 0)))
-            self._o_appends = 0
-        if not terms:
-            return None
-        out = terms[0]
-        for t in terms[1:]:
-            out = out.unionByName(t)
-        return out
+        return concat(terms)

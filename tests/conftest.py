@@ -13,3 +13,18 @@ def spark():
     s = get_spark("tests", shuffle_partitions=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture
+def spine(monkeypatch):
+    """Set the parts-spine constants for one test:
+    ``spine(fold_every=2, spill_rows=1)`` folds on every 2nd part and
+    spills every fold of more than one row."""
+    from materialize_spark.streaming import state_spill
+
+    def set_(fold_every=None, spill_rows=None):
+        if fold_every is not None:
+            monkeypatch.setattr(state_spill, "FOLD_EVERY", fold_every)
+        if spill_rows is not None:
+            monkeypatch.setattr(state_spill, "SPILL_ROWS", spill_rows)
+    return set_

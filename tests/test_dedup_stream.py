@@ -60,7 +60,7 @@ def test_incremental_lsh_short_docs_always_survive(spark):
     assert s.count() == 2  # < k tokens: no signature, never candidates
 
 
-def test_incremental_lsh_spilled_state_still_exact(spark, tmp_path):
+def test_incremental_lsh_spilled_state_still_exact(spark, spine):
     """State forced past the spill budget: the compacted seen-corpus
     moves to hash-prefix-partitioned parquet and probes stay correct —
     a near-dup of a doc seen BEFORE the spill still drops, and the
@@ -68,16 +68,16 @@ def test_incremental_lsh_spilled_state_still_exact(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from materialize_spark.streaming.dedup_stream import IncrementalLSHDedup
+    spine(fold_every=2, spill_rows=1)
     dd = IncrementalLSHDedup(spark, num_hashes=8, band_size=2, k=3,
-                             min_agree=4, compact_every=2,
-                             spill_rows=1, spill_dir=str(tmp_path))
+                             min_agree=4)
     tokens = F.split(F.col("text"), " ")
     base = "one two three four five six seven eight nine ten eleven"
     other = "red orange yellow green blue indigo violet ultra infra deep"
     dd.on_batch(_lsh_docs(spark, [(1, base)]), tokens)
     dd.on_batch(_lsh_docs(spark, [(2, other)]), tokens)  # -> compact+spill
-    assert dd._disk, "state should have spilled"
-    assert not any(p.count() for p in dd._bucket_parts if p is not None)
+    assert dd._buckets._disk, "state should have spilled"
+    assert not any(p.count() for p in dd._buckets._parts if p is not None)
     # near-dup of pre-spill doc 1: must still drop via the disk tier
     s = dd.on_batch(_lsh_docs(spark, [
         (3, base.replace("ten", "TEN")),

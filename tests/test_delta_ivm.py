@@ -196,14 +196,14 @@ def test_antijoin_empty_call_rejected(spark):
         mv.on_batch()
 
 
-def test_threshold_compaction_preserves_state(spark):
-    """compact_every folds the part list; results must be identical
+def test_threshold_compaction_preserves_state(spark, spine):
+    """The spine folds the part list; results must be identical
     across the fold boundary (the arrangement-merge invariant)."""
     def enrich(q):
         return q.select("k", F.col("__sum").alias("total"))
+    spine(fold_every=2)
     mv = ThresholdSemijoinMV(spark, keys=["k"], val="v",
-                             having=lambda s: s > 10, enrich=enrich,
-                             compact_every=2)
+                             having=lambda s: s > 10, enrich=enrich)
     history = []
     for wave in range(5):  # compaction fires twice
         batch = [(k, 3, 1) for k in range(3)]
@@ -221,9 +221,9 @@ def test_threshold_compaction_preserves_state(spark):
     assert mv._state.n_parts() <= 2  # folded, not accumulated
 
 
-def test_antijoin_compaction_preserves_state(spark):
-    mv = ExclusiveAntiJoinMV(spark, group_key="g", member_key="m",
-                             compact_every=2)
+def test_antijoin_compaction_preserves_state(spark, spine):
+    spine(fold_every=2)
+    mv = ExclusiveAntiJoinMV(spark, group_key="g", member_key="m")
     all_hist, flag_hist = [], []
     for wave in range(5):
         ab = [(1, 10, 1), (1, 11, 1), (2, 20, 1), (2, 21, 1)]
@@ -244,15 +244,16 @@ def test_probe_plan_never_shuffles_state(spark):
     state probe must be a BROADCAST semi-join — touched keys broadcast,
     state scanned in place; a SortMerge/ShuffledHash probe would shuffle
     the whole support state every batch."""
-    from materialize_spark.streaming.delta_ivm import _ckpt, _concat
+    from materialize_spark.ckpt import fresh_break
+    from materialize_spark.streaming.state_spill import concat
 
     mv = _mk_threshold_mv(spark)
     mv.on_batch(spark.createDataFrame(
         [(k, k, 1) for k in range(50)], FACT_SCHEMA))
     batch = spark.createDataFrame([(1, 5, 1)], FACT_SCHEMA)
-    partial = _ckpt(mv._partial(batch))
+    partial = fresh_break(mv._partial(batch))
     touched = F.broadcast(partial.select("k"))
-    probe = (_concat(mv._state._parts + [partial])
+    probe = (concat(mv._state._parts + [partial])
              .join(touched, on=["k"], how="left_semi"))
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
@@ -260,14 +261,12 @@ def test_probe_plan_never_shuffles_state(spark):
     assert "ShuffledHashJoin" not in plan
 
 
-def test_threshold_mv_spilled_state_still_exact(spark, tmp_path):
+def test_threshold_mv_spilled_state_still_exact(spark, spine):
     """q18-shape state forced past the spill budget: the folded sums
     move to the hash-prefix-partitioned tier and threshold flips keep
     working against pre-spill keys (streaming/state_spill.py)."""
+    spine(fold_every=2, spill_rows=1)
     mv = _mk_threshold_mv(spark)
-    mv.compact_every = 2
-    mv.spill_rows = 1
-    mv.spill_dir = str(tmp_path)
     mv.on_batch(spark.createDataFrame(
         [(1, 6, 1), (1, 6, 1), (2, 4, 1)], FACT_SCHEMA))
     mv.on_batch(spark.createDataFrame([(3, 2, 1)], FACT_SCHEMA))

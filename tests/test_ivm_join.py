@@ -88,11 +88,12 @@ def _outer_oracle(spark, lh, rh, how):
 
 
 @pytest.mark.soak
-def test_outer_join_left_random_workload(spark):
+def test_outer_join_left_random_workload(spark, spine):
     from materialize_spark.streaming.ivm_join import IncrementalOuterJoinView
     rng = random.Random(11)
+    spine(fold_every=3)
     jv = IncrementalOuterJoinView(on=["k"], pad_right=[("rv", "bigint")],
-                                  how="left", compact_every=3)
+                                  how="left")
     lh, rh, l_live, r_live = [], [], [], []
     for step in range(6):
         lb, rb = [], []
@@ -118,12 +119,13 @@ def test_outer_join_left_random_workload(spark):
 
 
 @pytest.mark.soak
-def test_outer_join_full_random_workload(spark):
+def test_outer_join_full_random_workload(spark, spine):
     from materialize_spark.streaming.ivm_join import IncrementalOuterJoinView
     rng = random.Random(7)
+    spine(fold_every=4)
     jv = IncrementalOuterJoinView(on=["k"], pad_right=[("rv", "bigint")],
                                   pad_left=[("lv", "bigint")],
-                                  how="full", compact_every=4)
+                                  how="full")
     lh, rh = [], []
     for step in range(6):
         lb = [(rng.randrange(4), rng.randrange(9), 1) for _ in range(4)]
@@ -170,13 +172,14 @@ def test_outer_join_one_sided_batches(spark):
 
 
 @pytest.mark.soak
-def test_incremental_join_forced_spill_still_exact(spark, tmp_path):
-    """spill_rows=1 forces every compaction onto the hash-prefix
+def test_incremental_join_forced_spill_still_exact(spark, spine):
+    """SPILL_ROWS=1 forces every compaction onto the hash-prefix
     parquet tier: the maintained join stays exactly equal to the full
     re-join through a multi-batch insert/delete churn, with probes
     reading only touched prefixes."""
     rng = random.Random(7)
-    jv = IncrementalJoinView(on=["k"], compact_every=2, spill_rows=1)
+    spine(fold_every=2, spill_rows=1)
+    jv = IncrementalJoinView(on=["k"])
     lh, rh, l_live, r_live = [], [], [], []
     for _ in range(6):
         lb, rb = [], []
@@ -203,12 +206,12 @@ def test_incremental_join_forced_spill_still_exact(spark, tmp_path):
                 on="k"))
         assert got == want
     # the spilled tier actually engaged on both sides
-    assert jv._left._st is not None and jv._left._st._disk is not None
-    assert jv._right._st is not None and jv._right._st._disk is not None
+    assert jv._left is not None and jv._left._disk is not None
+    assert jv._right is not None and jv._right._disk is not None
 
 
 @pytest.mark.soak
-def test_incremental_outer_join_forced_spill_still_exact(spark):
+def test_incremental_outer_join_forced_spill_still_exact(spark, spine):
     """The outer-join view under a forced spill tier: null-padding
     transitions (first match appears / last match vanishes) stay exact
     against a full LEFT JOIN recompute with spilled, prefix-pruned
@@ -216,9 +219,9 @@ def test_incremental_outer_join_forced_spill_still_exact(spark):
     from materialize_spark.streaming.ivm_join import (
         IncrementalOuterJoinView,
     )
+    spine(fold_every=2, spill_rows=1)
     jv = IncrementalOuterJoinView(
-        on=["k"], pad_right=[("rv", "bigint")], how="left",
-        compact_every=2, spill_rows=1)
+        on=["k"], pad_right=[("rv", "bigint")], how="left")
     steps = [
         ([(1, 10, 1), (2, 20, 1)], []),            # unmatched lefts
         ([], [(1, 100, 1)]),                       # first match for k=1
@@ -239,4 +242,4 @@ def test_incremental_outer_join_forced_spill_still_exact(spark):
                 _expand(threshold(spark.createDataFrame(rh, R))),
                 on="k", how="left"))
         assert got == want
-    assert jv._left._st is not None and jv._left._st._disk is not None
+    assert jv._left is not None and jv._left._disk is not None

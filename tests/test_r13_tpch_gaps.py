@@ -655,11 +655,10 @@ def test_global_threshold_null_scalar_cycles(spark):
     s.run_script("DROP MATERIALIZED VIEW gt;"
                  "DROP TABLE gt_t; DROP TABLE gt_u;")
 
-def test_corr_in_spilled_state(spark, monkeypatch):
+def test_corr_in_spilled_state(spark, spine):
     """Correlated NOT IN with the support forced onto the spill tier:
     per-key NULL/emptiness terms survive spilling."""
-    import materialize_spark.plans.sqlfront as sf
-    monkeypatch.setattr(sf, "_TOPK_SPILL_ROWS", 2)
+    spine(spill_rows=2)
     s = _mz(spark)
     s.run_script("""
         CREATE TABLE sp_t (g BIGINT, x BIGINT);

@@ -165,7 +165,7 @@ def test_debezium_envelope_feeds_retraction_view(spark):
     assert rows == {"a": (9, 5)}  # 5+4, max back down to 5; b gone
 
 
-def test_topk_spilled_state_still_exact(spark, tmp_path):
+def test_topk_spilled_state_still_exact(spark, spine):
     """TopK support past the spill budget: probes read the partitioned
     on-disk tier (pruned to touched key prefixes) and a delete that
     evicts a current top-k row still restores the right runner-up."""
@@ -173,15 +173,15 @@ def test_topk_spilled_state_still_exact(spark, tmp_path):
 
     from materialize_spark.streaming.retraction import RetractionAwareTopK
 
+    spine(fold_every=2, spill_rows=1)
     tk = RetractionAwareTopK(spark, keys=["k"], order_col="v", limit=2,
-                             descending=True, compact_every=2,
-                             spill_rows=1, spill_dir=str(tmp_path))
+                             descending=True)
     S = "k string, v long, diff long"
     tk.on_batch(spark.createDataFrame(
         [("a", 5, 1), ("a", 9, 1), ("a", 2, 1)], S))
     tk.on_batch(spark.createDataFrame(
         [("b", 30, 1), ("b", 8, 1)], S))  # -> compact + spill
-    assert tk._disk is not None, "support should have spilled"
+    assert tk._state._disk is not None, "support should have spilled"
     # delete a's current #1: the evicted 2 must come back from DISK
     out = tk.on_batch(spark.createDataFrame([("a", 9, -1)], S))
     got = sorted((r.k, r.v) for r in out.collect())
@@ -193,7 +193,7 @@ def test_topk_spilled_state_still_exact(spark, tmp_path):
     assert got == [("a", 2), ("a", 5), ("b", 8), ("c", 1)]
 
 
-def test_setop_spilled_state_still_exact(spark):
+def test_setop_spilled_state_still_exact(spark, spine):
     """Set-op support past the spill budget: the (row, side) nets live
     on the partitioned parquet tier and a delete on one side still
     re-derives the visible multiplicity from disk."""
@@ -201,8 +201,9 @@ def test_setop_spilled_state_still_exact(spark):
         RetractionAwareSetOp,
     )
 
+    spine(fold_every=2, spill_rows=1)
     so = RetractionAwareSetOp(spark, cols=["k", "v"], op="except",
-                              all=True, compact_every=2, spill_rows=1)
+                              all=True)
     S = "k string, v long, __side int, diff long"
     so.on_batch(spark.createDataFrame(
         [("a", 1, 0, 1), ("a", 1, 0, 1), ("b", 2, 0, 1)], S))
@@ -222,7 +223,7 @@ def test_setop_spilled_state_still_exact(spark):
     assert got == [("b", 2)]
 
 
-def test_distinct_spilled_state_still_exact(spark):
+def test_distinct_spilled_state_still_exact(spark, spine):
     """DISTINCT support past the spill budget: net multiplicities read
     back from the partitioned tier keep visibility exact when a row's
     last copy is retracted."""
@@ -230,8 +231,8 @@ def test_distinct_spilled_state_still_exact(spark):
         RetractionAwareDistinct,
     )
 
-    d = RetractionAwareDistinct(spark, cols=["k"], compact_every=2,
-                                spill_rows=1)
+    spine(fold_every=2, spill_rows=1)
+    d = RetractionAwareDistinct(spark, cols=["k"])
     S = "k string, diff long"
     d.on_batch(spark.createDataFrame([("a", 1), ("a", 1), ("b", 1)], S))
     d.on_batch(spark.createDataFrame([("c", 1)], S))  # -> spill

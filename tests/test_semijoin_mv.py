@@ -148,9 +148,8 @@ def test_q21_member_exclusion_self_correlation(spark):
 
 
 @pytest.mark.soak
-def test_spilled_state_soak(spark, monkeypatch):
-    import materialize_spark.plans.sqlfront as sf
-    monkeypatch.setattr(sf, "_TOPK_SPILL_ROWS", 5)
+def test_spilled_state_soak(spark, spine):
+    spine(spill_rows=5)
     s = _mz(spark)
     s.run_script("""
         CREATE TABLE sp_t (k BIGINT, v BIGINT);
@@ -165,7 +164,7 @@ def test_spilled_state_soak(spark, monkeypatch):
           SELECT k, v FROM sp_t
           WHERE EXISTS (SELECT 1 FROM sp_u WHERE sp_u.k2 = sp_t.k);
     """)
-    # churn enough commits to force compaction folds (compact_every=16)
+    # churn enough commits to force compaction folds (FOLD_EVERY=16)
     for i in range(18):
         s.execute(f"DELETE FROM sp_u WHERE k2 = {2 * (i % 5)}")
         s.execute(f"INSERT INTO sp_u VALUES ({2 * (i % 5)})")
