@@ -372,7 +372,8 @@ _DELTA_SUPPORTED = (
     "scalar expressions, plain or EXPRESSION group keys [+ HAVING]), "
     "keyless (global) aggregates, over one table or stateless "
     "subqueries; SELECT DISTINCT; grouped TopK (the "
-    "ROW_NUMBER/RANK/DENSE_RANK <= k idiom) and global ORDER BY ... "
+    "ROW_NUMBER/RANK/DENSE_RANK <= k idiom, the rank column may be "
+    "projected) and global ORDER BY ... "
     "LIMIT; frameless window aggregates (AGG OVER (PARTITION BY ...) "
     "/ OVER ()); INNER/LEFT/FULL equi-join chains — plain, filtered, "
     "GROUP BY aggregated, DISTINCT, or TopK'd; [NOT] EXISTS / [NOT] "
@@ -2876,9 +2877,11 @@ class MzSession:
     def _topk_shape(q):
         """Recognize the grouped-TopK idiom on a parsed tree: outer
         ``SELECT cols FROM (inner) WHERE rn <= k`` where the inner
-        select list is plain columns + one ROW_NUMBER() OVER (PARTITION
-        BY keys ORDER BY col) AS rn. Returns (cols, icols, keys, ord,
-        desc, k, inner) or None."""
+        select list is plain columns + one ROW_NUMBER/RANK/DENSE_RANK()
+        OVER (PARTITION BY keys ORDER BY col) AS rn. ``cols`` may
+        project ``rn`` itself (any case). Returns (cols, icols, keys,
+        ord, desc, k, inner, mode, rank_col) — ``rank_col`` is the
+        inner alias when projected, else None — or None."""
         inner = q.sub
         if (q.distinct or q.group_by or q.having or q.joins
                 or q.where is None or q.subfilters or inner.distinct
@@ -2908,18 +2911,23 @@ class MzSession:
         cols = [it.expr for it in q.items]
         mode, keys, ord_col, desc = rn_item.row_number
         low = {c.lower() for c in icols}
-        if not all(c.lower() in low for c in cols) \
+        rank = rn_item.alias.lower()
+        if not all(c.lower() in low or c.lower() == rank for c in cols) \
                 or not all(re.fullmatch(r"\w+", k) and k.lower() in low
                            for k in keys) \
                 or ord_col.lower() not in low:
             return None
+        rank_col = (rn_item.alias if any(c.lower() == rank for c in cols)
+                    else None)
         return (cols, icols, keys, ord_col, desc, int(m.group("k")),
-                inner, mode)
+                inner, mode, rank_col)
 
     def _plan_delta_topk(self, node: ast.CreateView, q) -> bool:
-        """Grouped TopK delta MV via the ROW_NUMBER idiom (the shape
-        the reference plans as TopK, src/compute-types/src/plan/
-        top_k.rs), over one table or a join chain. Maintained by
+        """Grouped TopK delta MV via the ROW_NUMBER/RANK/DENSE_RANK
+        idiom (the shape the reference plans as TopK, src/compute-types/
+        src/plan/top_k.rs), over one table or a join chain; the outer
+        SELECT may project the rank column, which the operator then
+        emits under that name. Maintained by
         RetractionAwareTopK: the full compacted support survives
         deletes that evict a current top-k row (the non-monotonic
         'Basic' plan's guarantee); over joins, the bilinear chain's
@@ -2932,10 +2940,10 @@ class MzSession:
         shape = self._topk_shape(q)
         if shape is None:
             return False
-        cols, icols, keys, ord_col, desc, k, inner, mode = shape
+        cols, icols, keys, ord_col, desc, k, inner, mode, rank_col = shape
         mv = RetractionAwareTopK(
             self.spark, keys=keys, order_col=ord_col, limit=k,
-            descending=desc, mode=mode)
+            descending=desc, mode=mode, rank_col=rank_col)
         if inner.joins:
             parsed = self._normalize_join_chain(inner)
             if parsed is None:

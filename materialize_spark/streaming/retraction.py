@@ -383,6 +383,10 @@ class RetractionAwareTopK:
     back in. Keeping the full compacted support (payload -> multiplicity)
     per group gives the same guarantee; per batch only touched groups replay
     the window.
+
+    ``rank_col`` names the rank column when the view projects it (``SELECT
+    k, v, rn FROM (... ROW_NUMBER() ... AS rn) WHERE rn <= 3``): each result
+    row then carries its ROW_NUMBER/RANK/DENSE_RANK value under that name.
     """
 
     spark: SparkSession
@@ -399,6 +403,8 @@ class RetractionAwareTopK:
     # reference's TopK covers the same family
     # (src/compute-types/src/plan/top_k.rs)
     mode: str = "row_number"
+    # output name of the rank value; None drops it
+    rank_col: str | None = None
     # the compacted support (payload -> multiplicity) is input-sized:
     # the spillable parts-spine bounds executor memory and prunes
     # probes to the batch's key prefixes (streaming/state_spill.py)
@@ -429,35 +435,37 @@ class RetractionAwareTopK:
             # keeps whole tie groups
             w = Window.partitionBy(*self.keys).orderBy(*orders)
             rn = F.rank() if self.mode == "rank" else F.dense_rank()
-        return (
-            expanded.withColumn("__rn", rn.over(w))
-            .filter(F.col("__rn") <= self.limit)
-            .drop("mult", "__i", "__rn")
-        )
+        out = (expanded.withColumn("__rn", rn.over(w))
+               .filter(F.col("__rn") <= self.limit)
+               .drop("mult", "__i"))
+        if self.rank_col is None:
+            return out.drop("__rn")
+        return out.withColumnRenamed("__rn", self.rank_col)
 
     def on_batch(self, delta: DataFrame) -> DataFrame:
         """Arrangement-spine discipline: the batch's consolidated rows
         append as a PART (an O(delta) write); the touched groups' net
         support comes from a semi-join probe over the spine (a scan,
         never a full-state rewrite), and only those groups' windows
-        replay into the small RESULT table."""
+        replay into the small RESULT table. The first batch (no result
+        yet, so an empty spine) IS the whole support: it forms the
+        result directly, with no probe and no regroup."""
         data_cols = [c for c in delta.columns if c != DIFF_COL]
         batch_supp = fresh_break(delta.groupBy(*data_cols)
                                  .agg(F.sum(DIFF_COL).alias("mult"))
                                  .filter(F.col("mult") != 0))
-        touched = delta.select(*self.keys).distinct()
         self._state.append(batch_supp)
+        if self._result is None:
+            self._result = fresh_break(self._topk_of(batch_supp))
+            return self._result
+        touched = delta.select(*self.keys).distinct()
         all_supp = self._state.probe_frame(touched)
         touched_net = (_ns_probe(all_supp, touched, self.keys)
                        .groupBy(*data_cols)
                        .agg(F.sum("mult").alias("mult")))
-        topk_touched = self._topk_of(touched_net)
-        if self._result is None:
-            self._result = fresh_break(topk_touched)
-        else:
-            self._result = fresh_break(
-                _ns_probe(self._result, touched, self.keys, anti=True)
-                .unionByName(topk_touched))
+        self._result = fresh_break(
+            _ns_probe(self._result, touched, self.keys, anti=True)
+            .unionByName(self._topk_of(touched_net)))
         return self._result
 
     def result(self) -> DataFrame:

@@ -162,7 +162,8 @@ def test_fresh_break_parts_union_cleanly(spark, spine):
 # -- fold coverage through the SQL front door ---------------------------------
 
 _VIEWS = {
-    # the three perfbench mv_churn shapes plus an EXISTS filter
+    # the three perfbench mv_churn shapes, an EXISTS filter and a
+    # projection-shaped join
     "fv_big": ("SELECT l_orderkey, sum(l_quantity) AS qty FROM fl "
                "GROUP BY l_orderkey HAVING sum(l_quantity) > 20"),
     "fv_rev": ("SELECT o_orderpriority, "
@@ -176,6 +177,9 @@ _VIEWS = {
                 "AS rn FROM fl) t WHERE rn <= 3"),
     "fv_exists": ("SELECT o_orderkey, o_orderpriority FROM fo WHERE EXISTS "
                   "(SELECT 1 FROM fl WHERE fl.l_orderkey = fo.o_orderkey)"),
+    # projection-shaped join: published through _publish_spine
+    "fv_proj": ("SELECT o_orderkey, l_suppkey, l_quantity "
+                "FROM fo JOIN fl ON o_orderkey = l_orderkey"),
 }
 
 _COMMITS = [
@@ -260,7 +264,9 @@ def test_sql_views_stay_exact_across_folds(spark, spine, monkeypatch):
             for st in spines:
                 if appends.get(id(st), 0) >= 2:
                     assert id(st) in folded, name
-        assert id(s._delta_mvs["fv_top3"]["proj_spine"]) in folded
+        top3 = s._delta_mvs["fv_top3"]
+        assert top3["kind"] == "topk" and id(top3["mv"]._state) in folded
+        assert id(s._delta_mvs["fv_proj"]["proj_spine"]) in folded
     finally:
         s.run_script("".join(f"DROP MATERIALIZED VIEW {n};"
                              for n in _VIEWS)
