@@ -28,7 +28,9 @@ reads of a materialized view serve the maintained table — the fast path
 
 from __future__ import annotations
 
+import contextlib
 import re
+from dataclasses import replace as _dc_replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -489,7 +491,10 @@ class MzSession:
         self._matviews: dict[str, DataFrame] = {}
         self._matview_sql: dict[str, str] = {}
         # WITH (MAINTENANCE 'delta') views: updated on WRITE, never
-        # refreshed (name -> {mv, table, keys, val, where})
+        # refreshed. name -> spec; a spec's inputs are its "table",
+        # "tables" and "inner_tables" (read only by _dependents), and
+        # "internal_deps" lists the planner-owned internal views it owns
+        # (made by _internal_views, removed with it by _forget)
         self._delta_mvs: dict[str, dict] = {}
         # execute-path SUBSCRIBE: one lazily-opened internal PUSH cursor
         # per object (name -> sub_id in _subscriptions). Concurrent
@@ -622,6 +627,13 @@ class MzSession:
         # persist_catalog writes the journal, restore_catalog replays it
         # into a fresh session against the same base data.
         self._journal: list[str] = []
+        # every session store keyed by object name: _forget pops an
+        # object from each, _alter_rename moves it across them
+        self._object_stores = (
+            self._matviews, self._matview_sql, self._view_sql,
+            self._histories, self._retain, self._refresh_every,
+            self._delta_mvs, self._query_subs, self._exec_subs,
+            self._owners)
 
     def webhook(self, name: str):
         """The WebhookSource behind ``CREATE SOURCE name FROM WEBHOOK`` —
@@ -796,52 +808,17 @@ class MzSession:
         from materialize_spark.plans.select_ast import _split_setops
 
         spans, _ops = _split_setops(node.body)
-        created: list[str] = []
-
-        def rollback():
-            for dep in created:
-                self.catalog.drop(dep, if_exists=True)
-                for store in (self._matviews, self._matview_sql,
-                              self._histories, self._delta_mvs,
-                              self._owners):
-                    store.pop(dep, None)
-
         parts: list[str] = []
-        for i, (span, q) in enumerate(zip(spans, qs)):
-            if not self._branch_stateful(q):
-                parts.append(span)
-                continue
-            internal = f"__sbr_{node.name}_{i}"
-            fake = ast.CreateView(name=internal, body=span,
-                                  materialized=True,
-                                  maintenance="delta")
-            self._matview_sql[internal] = span
-            try:
-                self._create_delta_mv(fake)
-            except Exception:
-                self._matview_sql.pop(internal, None)
-                rollback()
-                raise
-            created.append(internal)
-            self._owners.setdefault(
-                internal, self._owners.get(node.name, self._role))
-            cols = list(self._matviews[internal].columns)
-            parts.append(f"SELECT {', '.join(cols)} FROM {internal}")
-        glue = f" {op.upper()}{' ALL' if is_all else ''} "
-        fake = ast.CreateView(name=node.name, body=glue.join(parts),
-                              materialized=True, maintenance="delta")
-        try:
-            self._create_delta_mv(fake)
-        except Exception:
-            rollback()
-            raise
-        spec = self._delta_mvs[node.name]
-        nested: list[str] = []
-        for dep in created:
-            nested.extend((self._delta_mvs.get(dep) or {})
-                          .get("internal_deps", ()))
-        spec["internal_deps"] = (tuple(spec.get("internal_deps", ()))
-                                 + tuple(created) + tuple(nested))
+        with self._internal_views(node.name) as internal_view:
+            for i, (span, q) in enumerate(zip(spans, qs)):
+                if not self._branch_stateful(q):
+                    parts.append(span)
+                    continue
+                internal = internal_view(f"__sbr_{node.name}_{i}", span)
+                cols = list(self._matviews[internal].columns)
+                parts.append(f"SELECT {', '.join(cols)} FROM {internal}")
+            glue = f" {op.upper()}{' ALL' if is_all else ''} "
+            self._create_delta_mv(_dc_replace(node, body=glue.join(parts)))
 
     @staticmethod
     def _binding_monotone(body: str) -> bool:
@@ -1092,7 +1069,6 @@ class MzSession:
         work_items: list[tuple[str, object]] = [("span", sp)
                                                for sp in spans]
         work_ops = list(ops)
-        created: list[str] = []
 
         def branch_text(item):
             kind, val = item
@@ -1101,64 +1077,34 @@ class MzSession:
             name, cols = val
             return f"SELECT {', '.join(cols)} FROM {name}"
 
-        def rollback():
-            for dep in created:
-                self.catalog.drop(dep, if_exists=True)
-                for store in (self._matviews, self._matview_sql,
-                              self._histories, self._delta_mvs,
-                              self._owners):
-                    store.pop(dep, None)
-
         def reduce_pair(a, b, kind, is_all, name):
             body = (f"{branch_text(a)} {kind.upper()}"
                     f"{' ALL' if is_all else ''} {branch_text(b)}")
-            fake = ast.CreateView(name=name, body=body,
-                                  materialized=True,
-                                  maintenance="delta")
-            internal = name != node.name
-            if internal:
-                self._matview_sql[name] = body
-            try:
-                self._create_delta_mv(fake)
-            except Exception:
-                if internal:
-                    self._matview_sql.pop(name, None)
-                rollback()
-                raise
-            if internal:
-                created.append(name)
-                self._owners.setdefault(
-                    name, self._owners.get(node.name, self._role))
+            if name == node.name:
+                self._create_delta_mv(_dc_replace(node, body=body))
+            else:
+                internal_view(name, body)
             return ("internal",
                     (name, list(self._matviews[name].columns)))
 
         idx = 0
-        for precedence in (("intersect",), ("union", "except")):
-            i = 0
-            while i < len(work_ops):
-                kind, is_all = work_ops[i]
-                if kind not in precedence:
-                    i += 1
-                    continue
-                last = len(work_ops) == 1
-                name = node.name if last \
-                    else f"__setop_{node.name}_{idx}"
-                idx += 1
-                merged = reduce_pair(work_items[i], work_items[i + 1],
-                                     kind, is_all, name)
-                work_items[i:i + 2] = [merged]
-                work_ops.pop(i)
-        # flatten: the pairwise internals PLUS any internals THEY (or
-        # the final node) created (stateful-branch __sbr_ desugars) —
-        # the owner-drop cascade pops one level
-        deps = list(self._delta_mvs[node.name].get("internal_deps",
-                                                   ()))
-        for dep in created:
-            deps.append(dep)
-            deps.extend((self._delta_mvs.get(dep) or {})
-                        .get("internal_deps", ()))
-        self._delta_mvs[node.name]["internal_deps"] = \
-            tuple(dict.fromkeys(deps))
+        with self._internal_views(node.name) as internal_view:
+            for precedence in (("intersect",), ("union", "except")):
+                i = 0
+                while i < len(work_ops):
+                    kind, is_all = work_ops[i]
+                    if kind not in precedence:
+                        i += 1
+                        continue
+                    last = len(work_ops) == 1
+                    name = node.name if last \
+                        else f"__setop_{node.name}_{idx}"
+                    idx += 1
+                    merged = reduce_pair(work_items[i],
+                                         work_items[i + 1],
+                                         kind, is_all, name)
+                    work_items[i:i + 2] = [merged]
+                    work_ops.pop(i)
 
     @staticmethod
     def _strip_quals(text: str | None, quals: set[str]) -> str | None:
@@ -1198,8 +1144,6 @@ class MzSession:
         every other conjunct stays a residual filter. Qualified
         references then drop their qualifiers (chain columns are
         bare)."""
-        from dataclasses import replace as _dc_replace
-
         from materialize_spark.plans.select_ast import (
             JoinSeg, SelectItem, split_conjuncts,
         )
@@ -1510,8 +1454,6 @@ class MzSession:
                                       or q.joins):
             # aliased/qualified references over explicit relations:
             # qualifiers drop (chain output columns are bare)
-            from dataclasses import replace as _dc_replace
-
             from materialize_spark.plans.select_ast import SelectItem
             quals = (set(q.aliases) | {q.table}
                      | {seg.table for seg in q.joins})
@@ -1530,7 +1472,6 @@ class MzSession:
             # unordered, so the clause is content-irrelevant — the
             # reference accepts and ignores it (the verbatim TPC-H q13
             # text carries one, tpch_create_materialized_view.slt)
-            from dataclasses import replace as _dc_replace
             q = _dc_replace(q, order=[])
         if q.group_by and not q.having and not q.distinct \
                 and len(q.items) == len(q.group_by) \
@@ -1542,7 +1483,6 @@ class MzSession:
             # GROUP BY with no aggregates over exactly its keys IS
             # SELECT DISTINCT (the reference plans both as
             # Reduce distinct, plan_query.rs)
-            from dataclasses import replace as _dc_replace
             q = _dc_replace(q, group_by=[], distinct=True)
         if q.order and q.limit is not None \
                 and (q.group_by or q.sub is not None or q.joins
@@ -2010,9 +1950,6 @@ class MzSession:
                 or getattr(sub, "sub_branches", None) or sub.order
                 or sub.limit is not None or sub.table is None):
             return False
-        internal = f"__jsub_{node.name}"
-        if internal in self._delta_mvs:
-            return False
         sel = []
         for it in sub.items:
             if it.alias is not None:
@@ -2024,44 +1961,72 @@ class MzSession:
         body = f"SELECT {', '.join(sel)} FROM {sub.table}"
         if sub.where:
             body += f" WHERE {sub.where}"
-        fake = ast.CreateView(name=internal, body=body,
-                              materialized=True, maintenance="delta")
-        self._matview_sql[internal] = body
-        try:
-            self._plan_delta_union(fake, [sub])
-        except (ValueError, KeyError):
-            self._matview_sql.pop(internal, None)
-            self._delta_mvs.pop(internal, None)
-            return False
-        from dataclasses import replace as _dc_replace
+        internal = f"__jsub_{node.name}"
         q2 = _dc_replace(q, sub=None, sub_alias=None, table=internal)
+        return self._stacked(
+            node, internal, body,
+            lambda view: self._plan_delta_union(view, [sub]),
+            lambda: self._plan_delta_join(node, q2))
+
+    def _stacked(self, node: ast.CreateView, internal: str, body: str,
+                 plan_internal, plan_outer) -> bool:
+        """Plan ``body`` as the internal view ``internal`` with
+        ``plan_internal``, then ``node`` over it with ``plan_outer``
+        (returning False rejects). Any failure forgets the internal
+        and returns False, so the dispatcher tries its next shape."""
         try:
-            ok = self._plan_delta_join(node, q2)
+            with self._internal_views(node.name) as internal_view:
+                internal_view(internal, body, plan_internal)
+                if plan_outer() is False:
+                    raise ValueError(f"{node.name!r}: outer plan rejected")
         except Exception:
-            ok = False
-        if not ok:
-            # roll the internal view back out
-            for store in (self._matviews, self._matview_sql,
-                          self._histories, self._delta_mvs):
-                store.pop(internal, None)
-            self.catalog.drop(internal, if_exists=True)
             return False
-        self._delta_mvs[node.name]["internal_deps"] = (internal,)
-        self._owners.setdefault(internal,
-                                self._owners.get(node.name, self._role))
         return True
 
-    def _rollback_internal(self, internal: str) -> None:
-        """Remove a failed planner-owned internal view (and any
-        internals it created itself) from every store."""
-        nested = tuple((self._delta_mvs.get(internal) or {})
-                       .get("internal_deps", ()))
-        for n in (internal,) + nested:
-            for store in (self._matviews, self._matview_sql,
-                          self._histories, self._delta_mvs,
-                          self._owners):
-                store.pop(n, None)
-            self.catalog.drop(n, if_exists=True)
+    @contextlib.contextmanager
+    def _internal_views(self, owner: str):
+        """Make planner-owned internal delta views for ``owner`` (the
+        stacking desugars: FROM-subqueries, stateful set-op branches,
+        scalar and IN subfilters, ...). Yields ``internal_view(name,
+        body, plan=None)``, which refuses a name already in use,
+        records the body, plans it with ``plan(view)`` (default: the
+        full dispatcher), forgets it again if planning fails, and gives
+        it ``owner``'s role. The block plans ``owner`` or raises: if it
+        raises, every internal made in it is forgotten; otherwise they
+        and the internals they own join ``owner``'s ``internal_deps``,
+        so ``_forget(owner)`` takes them all."""
+        made: list[str] = []
+
+        def internal_view(name: str, body: str, plan=None) -> str:
+            if name in self._delta_mvs:
+                raise ValueError(f"MAINTENANCE 'delta': internal view "
+                                 f"{name!r} already exists")
+            self._matview_sql[name] = body
+            try:
+                (plan or self._create_delta_mv)(ast.CreateView(
+                    name=name, body=body, materialized=True,
+                    maintenance="delta"))
+            except Exception:
+                self._forget(name)
+                raise
+            made.append(name)
+            self._owners.setdefault(name,
+                                    self._owners.get(owner, self._role))
+            return name
+
+        try:
+            yield internal_view
+        except BaseException:
+            for name in made:
+                self._forget(name)
+            raise
+        if made:
+            spec = self._delta_mvs[owner]
+            deps = list(spec.get("internal_deps", ()))
+            for name in made:
+                deps += [name, *self._delta_mvs[name].get("internal_deps",
+                                                          ())]
+            spec["internal_deps"] = tuple(dict.fromkeys(deps))
 
     def _plan_delta_stacked_subquery(self, node: ast.CreateView,
                                      q) -> bool:
@@ -2081,36 +2046,16 @@ class MzSession:
         if sub is None or raw is None:
             return False
         internal = f"__jsub_{node.name}"
-        if internal in self._delta_mvs:
-            return False
-        fake = ast.CreateView(name=internal, body=raw,
-                              materialized=True, maintenance="delta")
-        self._matview_sql[internal] = raw
-        try:
-            self._plan_delta_mv(fake, sub)
-        except Exception:
-            self._rollback_internal(internal)
-            return False
-        from dataclasses import replace as _dc_replace
         aliases = dict(getattr(q, "aliases", {}) or {})
         if q.sub_alias:
             aliases[q.sub_alias] = internal
         q2 = _dc_replace(q, sub=None, sub_raw=None, sub_alias=None,
                          table=internal, aliases=aliases,
                          from_items=[(internal, None)])
-        try:
-            self._plan_delta_mv(node, q2)
-        except Exception:
-            self._rollback_internal(internal)
-            return False
-        spec = self._delta_mvs[node.name]
-        nested = tuple((self._delta_mvs.get(internal) or {})
-                       .get("internal_deps", ()))
-        spec["internal_deps"] = (tuple(spec.get("internal_deps", ()))
-                                 + (internal,) + nested)
-        self._owners.setdefault(internal,
-                                self._owners.get(node.name, self._role))
-        return True
+        return self._stacked(
+            node, internal, raw,
+            lambda view: self._plan_delta_mv(view, sub),
+            lambda: self._plan_delta_mv(node, q2))
 
     def _plan_delta_window_over_join(self, node: ast.CreateView,
                                      q) -> bool:
@@ -2164,32 +2109,10 @@ class MzSession:
             return False
         inner = f"SELECT {', '.join(cols)} {node.body[from_at:]}"
         internal = f"__jsub_{node.name}"
-        if internal in self._delta_mvs:
-            return False
-        fake = ast.CreateView(name=internal, body=inner,
-                              materialized=True, maintenance="delta")
-        self._matview_sql[internal] = inner
-        try:
-            self._create_delta_mv(fake)
-        except Exception:
-            self._rollback_internal(internal)
-            return False
-        from dataclasses import replace as _dc_replace
         q2 = _dc_replace(q, table=internal, joins=[], where=None,
                          aliases={}, from_items=[(internal, None)])
-        try:
-            self._plan_delta_mv(node, q2)
-        except Exception:
-            self._rollback_internal(internal)
-            return False
-        spec = self._delta_mvs[node.name]
-        nested = tuple((self._delta_mvs.get(internal) or {})
-                       .get("internal_deps", ()))
-        spec["internal_deps"] = (tuple(spec.get("internal_deps", ()))
-                                 + (internal,) + nested)
-        self._owners.setdefault(internal,
-                                self._owners.get(node.name, self._role))
-        return True
+        return self._stacked(node, internal, inner, None,
+                             lambda: self._plan_delta_mv(node, q2))
 
     def _plan_delta_window_agg(self, node: ast.CreateView, q) -> bool:
         """Frameless window aggregate over one table:
@@ -3083,8 +3006,6 @@ class MzSession:
             return False
         if inner.aliases:
             # aliased inner chains: strip qualifiers before flattening
-            from dataclasses import replace as _dc_replace
-
             from materialize_spark.plans.select_ast import SelectItem
             quals = (set(inner.aliases) | {inner.table}
                      | {seg.table for seg in inner.joins})
@@ -3230,17 +3151,6 @@ class MzSession:
             if having is None:
                 return False
         aliases = set(getattr(q, "aliases", {}) or ())
-        stages = [self._build_subfilter_stage(sf, tables, acc_cols,
-                                              renmap, aliases,
-                                              owner=node.name, idx=i)
-                  for i, sf in enumerate(q.subfilters)]
-        internals = []
-        for st in stages:
-            if st.get("internal"):
-                internals.append(st["table"])
-                internals.extend(
-                    (self._delta_mvs.get(st["table"]) or {})
-                    .get("internal_deps", ()))
         chain = self._build_delta_join_chain(tables, norm_links, kinds,
                                              extras, jrenames) \
             if norm_links else []
@@ -3250,7 +3160,13 @@ class MzSession:
             if q.distinct else None
         src_where = _sub_ident_tokens(q.where, renmap) if q.where \
             else None
-        spec = {"kind": "semijoin", "tables": tuple(tables),
+        with self._internal_views(node.name) as internal_view:
+            stages = [self._build_subfilter_stage(
+                sf, tables, acc_cols, renmap, aliases, owner=node.name,
+                idx=i, internal_view=internal_view)
+                for i, sf in enumerate(q.subfilters)]
+            self._delta_mvs[node.name] = {
+                "kind": "semijoin", "tables": tuple(tables),
                 "chain": chain, "links": norm_links, "kinds": kinds,
                 "rextras": extras, "jrenames": jrenames,
                 "agg": agg, "keys": keys, "aggs": aggs, "cols": cols,
@@ -3260,16 +3176,15 @@ class MzSession:
                 "global_agg": global_agg, "post": post,
                 "out_order": None if global_agg else out_order,
                 "stages": stages,
-                "internal_deps": tuple(internals),
                 "inner_tables": tuple({st["table"] for st in stages})}
-        self._delta_mvs[node.name] = spec
-        self._form_delta_mv_semijoin(node.name)
+            self._form_delta_mv_semijoin(node.name)
         return True
 
     def _build_subfilter_stage(self, sf, tables: list[str],
                                acc_cols: set, renmap: dict,
                                aliases: set | None = None,
-                               owner: str = "", idx: int = 0) -> dict:
+                               owner: str = "", idx: int = 0,
+                               internal_view=None) -> dict:
         """Classify one SubFilter's inner conjuncts against the outer
         chain's columns into (correlation pairs, <> exclusion, local
         predicate) and instantiate the maintained stage. The
@@ -3281,11 +3196,12 @@ class MzSession:
 
         outer_strip0 = ({t for t in tables} | set(aliases or ()))
         if sf.kind == "cmpscalar":
-            return self._build_scalar_stage(sf, owner, idx,
-                                            outer_strip0)
+            return self._build_scalar_stage(
+                sf, f"__ssub_{owner}_{idx}", internal_view, outer_strip0)
         if sf.kind == "in" and not sf.table and sf.raw is not None:
             return self._build_setmember_stage(
-                sf, owner, idx, outer_strip0, acc_cols, renmap)
+                sf, f"__msub_{owner}_{idx}", internal_view, outer_strip0,
+                acc_cols, renmap)
         if any(re.search(r"(?i)\(\s*SELECT\b", c)
                for c in sf.conjuncts):
             # a nested subquery inside this subfilter's WHERE must NOT
@@ -3297,7 +3213,8 @@ class MzSession:
             # stages; anything else rejects loudly.
             if sf.kind == "in" and sf.raw:
                 return self._build_setmember_stage(
-                    sf, owner, idx, outer_strip0, acc_cols, renmap)
+                    sf, f"__msub_{owner}_{idx}", internal_view,
+                    outer_strip0, acc_cols, renmap)
             raise ValueError(
                 "MAINTENANCE 'delta': nested subqueries are "
                 "maintainable inside [NOT] IN membership bodies only "
@@ -3418,8 +3335,9 @@ class MzSession:
             if sf.kind == "cmpagg" and ineq is None and sf.raw:
                 # no correlation at all: the subquery is a GLOBAL
                 # scalar (the q11/q22 threshold family)
-                return self._build_scalar_stage(sf, owner, idx,
-                                                outer_strip0)
+                return self._build_scalar_stage(
+                    sf, f"__ssub_{owner}_{idx}", internal_view,
+                    outer_strip0)
             raise ValueError(
                 "MAINTENANCE 'delta': the subquery needs at least one "
                 "equality correlation with the outer relation")
@@ -3586,47 +3504,26 @@ class MzSession:
         TopK above the Reduce, src/compute-types/src/plan/top_k.rs).
         Multi-column ORDER BY (q18's o_totalprice DESC, o_orderdate)
         rides the maintained TopK's lexicographic window order."""
-        from dataclasses import replace as _dc_replace
-
         from materialize_spark.plans.select_ast import (
             SelectItem, SelectQ,
         )
 
         internal = f"__jsub_{node.name}"
-        if internal in self._delta_mvs:
-            return False
         inner_sql = self._cut_clauses(node.body, kws=("ORDER",
                                                       "LIMIT"))
         inner_q = _dc_replace(q, order=[], limit=None)
-        fake = ast.CreateView(name=internal, body=inner_sql,
-                              materialized=True, maintenance="delta")
-        self._matview_sql[internal] = inner_sql
-        try:
-            self._plan_delta_mv(fake, inner_q)
-        except Exception:
-            self._rollback_internal(internal)
-            return False
-        icols = list(self._matviews[internal].columns)
-        if not all(oc in icols for oc, _d in q.order):
-            self._rollback_internal(internal)
-            return False
-        outer_q = SelectQ(
-            items=[SelectItem(expr=c) for c in icols],
-            table=internal, order=list(q.order), limit=q.limit)
-        try:
-            if not self._plan_delta_global_topk(node, outer_q):
-                raise ValueError("global TopK rejected the tail")
-        except Exception:
-            self._rollback_internal(internal)
-            return False
-        spec = self._delta_mvs[node.name]
-        nested = tuple((self._delta_mvs.get(internal) or {})
-                       .get("internal_deps", ()))
-        spec["internal_deps"] = (tuple(spec.get("internal_deps", ()))
-                                 + (internal,) + nested)
-        self._owners.setdefault(internal,
-                                self._owners.get(node.name, self._role))
-        return True
+
+        def plan_tail():
+            icols = list(self._matviews[internal].columns)
+            if not all(oc in icols for oc, _d in q.order):
+                return False
+            return self._plan_delta_global_topk(node, SelectQ(
+                items=[SelectItem(expr=c) for c in icols],
+                table=internal, order=list(q.order), limit=q.limit))
+
+        return self._stacked(
+            node, internal, inner_sql,
+            lambda view: self._plan_delta_mv(view, inner_q), plan_tail)
 
     def _plan_delta_having_scalar(self, node: ast.CreateView,
                                   q) -> bool:
@@ -3638,8 +3535,6 @@ class MzSession:
         whose cmpscalar subfilter maintains the global threshold
         (reference: the q11 plan is Reduce → Filter-against-Let,
         tpch_create_materialized_view.slt:820-860)."""
-        from dataclasses import replace as _dc_replace
-
         from materialize_spark.plans.select_ast import (
             SelectItem, SelectQ, extract_subfilters,
         )
@@ -3666,33 +3561,18 @@ class MzSession:
             if residual is None:
                 return False
         internal = f"__jsub_{node.name}"
-        if internal in self._delta_mvs:
-            return False
         inner_sql = self._cut_clauses(node.body)
         inner_q = _dc_replace(q, having=None, order=[])
-        fake = ast.CreateView(name=internal, body=inner_sql,
-                              materialized=True, maintenance="delta")
-        self._matview_sql[internal] = inner_sql
-        try:
-            self._plan_delta_mv(fake, inner_q)
-        except Exception:
-            self._rollback_internal(internal)
-            return False
-        outer_q = SelectQ(
-            items=[SelectItem(expr=c) for c in out_order],
-            table=internal, where=residual, subfilters=subs)
-        try:
-            self._plan_delta_mv(node, outer_q)
-        except Exception:
-            self._rollback_internal(internal)
-            raise
-        spec = self._delta_mvs[node.name]
-        nested = tuple((self._delta_mvs.get(internal) or {})
-                       .get("internal_deps", ()))
-        spec["internal_deps"] = (tuple(spec.get("internal_deps", ()))
-                                 + (internal,) + nested)
-        self._owners.setdefault(internal,
-                                self._owners.get(node.name, self._role))
+        with self._internal_views(node.name) as internal_view:
+            try:
+                internal_view(internal, inner_sql,
+                              lambda v: self._plan_delta_mv(v, inner_q))
+            except Exception:
+                return False
+            # the outer plan's errors are the statement's errors
+            self._plan_delta_mv(node, SelectQ(
+                items=[SelectItem(expr=c) for c in out_order],
+                table=internal, where=residual, subfilters=subs))
         return True
 
     def _plan_delta_select_scalar_sub(self, node: ast.CreateView,
@@ -3708,10 +3588,8 @@ class MzSession:
         link on the correlation keys (empty group → NULL, exactly the
         scalar-subquery semantics for sum/min/max/avg; COUNT — whose
         empty-group value is 0, not NULL — rejects)."""
-        from dataclasses import replace as _dc_replace
-
         from materialize_spark.plans.select_ast import (
-            JoinSeg, SelectItem, _parse_sub_body,
+            JoinSeg, SelectItem, _parse_sub_body, parse_select,
         )
 
         subs = [(i, it) for i, it in enumerate(q.items)
@@ -3730,11 +3608,9 @@ class MzSession:
             return False
         items = list(q.items)
         joins = list(q.joins)
-        internals: list[str] = []
+        bodies: dict[str, str] = {}
 
         def fail(msg):
-            for n in internals:
-                self._rollback_internal(n)
             raise ValueError(f"MAINTENANCE 'delta': {msg}")
 
         for idx, it in subs:
@@ -3788,8 +3664,6 @@ class MzSession:
                      "one equality correlation (uncorrelated scalars "
                      "belong in WHERE/HAVING)")
             internal = f"__psub_{node.name}_{idx}"
-            if internal in self._delta_mvs:
-                fail(f"internal view {internal!r} already exists")
             if sf.template.strip() != "__AGGVAL__":
                 fail("a SELECT-list scalar subquery supports a bare "
                      "aggregate only (move the surrounding expression "
@@ -3803,44 +3677,26 @@ class MzSession:
                 body2 += " WHERE " + " AND ".join(f"({c})"
                                                   for c in local)
             body2 += f" GROUP BY {', '.join(ikeys)}"
-            fake = ast.CreateView(name=internal, body=body2,
-                                  materialized=True,
-                                  maintenance="delta")
-            self._matview_sql[internal] = body2
-            internals.append(internal)
-            try:
-                from materialize_spark.plans.select_ast import (
-                    parse_select,
-                )
-                self._plan_delta_mv(fake, parse_select(body2))
-            except ValueError as e:
-                fail(f"the SELECT-list subquery is not maintainable "
-                     f"({e})")
-            self._owners.setdefault(
-                internal, self._owners.get(node.name, self._role))
+            bodies[internal] = body2
             joins.append(JoinSeg(kind="left", table=internal,
                                  pairs=[(oc, ic)
                                         for ic, oc in pairs],
                                  raw_on=""))
             items[idx] = SelectItem(expr=it.alias, alias=None)
-        q2 = _dc_replace(q, items=items, joins=joins)
-        try:
-            self._plan_delta_mv(node, q2)
-        except Exception:
-            for n in internals:
-                self._rollback_internal(n)
-            raise
-        spec = self._delta_mvs[node.name]
-        nested: list[str] = []
-        for n in internals:
-            nested.append(n)
-            nested.extend((self._delta_mvs.get(n) or {})
-                          .get("internal_deps", ()))
-        spec["internal_deps"] = (tuple(spec.get("internal_deps", ()))
-                                 + tuple(nested))
+        with self._internal_views(node.name) as internal_view:
+            for internal, body2 in bodies.items():
+                try:
+                    internal_view(internal, body2,
+                                  lambda v: self._plan_delta_mv(
+                                      v, parse_select(v.body)))
+                except ValueError as e:
+                    fail("the SELECT-list subquery is not maintainable "
+                         f"({e})")
+            self._plan_delta_mv(node, _dc_replace(q, items=items,
+                                                  joins=joins))
         return True
 
-    def _build_scalar_stage(self, sf, owner: str, idx: int,
+    def _build_scalar_stage(self, sf, internal: str, internal_view,
                             outer_strip: set) -> dict:
         """Uncorrelated scalar-subquery comparison (the q11/q22
         threshold family): the subquery body — ANY dispatcher-supported
@@ -3850,8 +3706,6 @@ class MzSession:
         re-qualifies the outer rows when the scalar moves (the
         reference decorrelates uncorrelated scalar subqueries to a Let
         binding cross-joined to the outer relation, lowering.rs)."""
-        from dataclasses import replace as _dc_replace
-
         from materialize_spark.plans.select_ast import (
             SelectItem, parse_select,
         )
@@ -3859,11 +3713,6 @@ class MzSession:
             GlobalCmpFilterMV,
         )
 
-        internal = f"__ssub_{owner}_{idx}"
-        if internal in self._delta_mvs:
-            raise ValueError(
-                f"MAINTENANCE 'delta': internal view {internal!r} "
-                "already exists")
         body = sf.raw
         try:
             iq = parse_select(body)
@@ -3878,34 +3727,27 @@ class MzSession:
         if iq.items[0].alias is None:
             iq = _dc_replace(iq, items=[SelectItem(
                 expr=iq.items[0].expr, alias="__v")])
-        fake = ast.CreateView(name=internal, body=body,
-                              materialized=True, maintenance="delta")
-        self._matview_sql[internal] = body
         try:
-            self._plan_delta_mv(fake, iq)
+            internal_view(internal, body,
+                          lambda v: self._plan_delta_mv(v, iq))
         except Exception as e:
-            self._rollback_internal(internal)
             raise ValueError(
                 "MAINTENANCE 'delta': the uncorrelated comparison "
                 f"subquery is not maintainable as a scalar ({e})")
-        ispec = self._delta_mvs.get(internal) or {}
-        if not ispec.get("global_agg"):
-            self._rollback_internal(internal)
+        if not self._delta_mvs[internal].get("global_agg"):
             raise ValueError(
                 "MAINTENANCE 'delta': an uncorrelated comparison "
                 "subquery must be a keyless (scalar) aggregate")
-        self._owners.setdefault(internal,
-                                self._owners.get(owner, self._role))
         lhs = rewrite(self._strip_quals(sf.in_expr, outer_strip))
         qual = f"coalesce(({lhs}) {sf.cmp_op} ({{V}}), false)"
         if sf.negated:
             qual = f"(NOT {qual})"
         op = GlobalCmpFilterMV(self.spark, qual_tmpl=qual)
         return {"op": op, "table": internal, "kind": "cmpscalar",
-                "internal": True, "prep_where": None,
+                "prep_where": None,
                 "prep_select": [], "cmp": (sf.cmp_op, "scalar")}
 
-    def _build_setmember_stage(self, sf, owner: str, idx: int,
+    def _build_setmember_stage(self, sf, internal: str, internal_view,
                                outer_strip: set, acc_cols: set,
                                renmap: dict) -> dict:
         """Uncorrelated ``expr [NOT] IN (SELECT c FROM <complex
@@ -3921,11 +3763,6 @@ class MzSession:
             SemiAntiFilterMV,
         )
 
-        internal = f"__msub_{owner}_{idx}"
-        if internal in self._delta_mvs:
-            raise ValueError(
-                f"MAINTENANCE 'delta': internal view {internal!r} "
-                "already exists")
         body = sf.raw
         try:
             iq = parse_select(body)
@@ -3944,27 +3781,20 @@ class MzSession:
             raise ValueError(
                 "MAINTENANCE 'delta': the IN subquery's output "
                 "expression needs a name (alias it)")
-        fake = ast.CreateView(name=internal, body=body,
-                              materialized=True, maintenance="delta")
-        self._matview_sql[internal] = body
         try:
-            self._plan_delta_mv(fake, iq)
+            internal_view(internal, body,
+                          lambda v: self._plan_delta_mv(v, iq))
         except Exception as e:
-            self._rollback_internal(internal)
             raise ValueError(
                 "MAINTENANCE 'delta': the IN subquery body is not "
                 f"maintainable ({e})")
-        self._owners.setdefault(internal,
-                                self._owners.get(owner, self._role))
         strip_outer = self._strip_quals(sf.in_expr, outer_strip)
         if not re.fullmatch(r"\w+", strip_outer.strip()):
-            self._rollback_internal(internal)
             raise ValueError(
                 "MAINTENANCE 'delta': the IN expression must be a "
                 f"plain outer column (got {sf.in_expr!r})")
         oc = renmap.get(strip_outer.strip(), strip_outer.strip())
         if oc not in acc_cols:
-            self._rollback_internal(internal)
             raise ValueError(
                 f"MAINTENANCE 'delta': IN expression {oc!r} is not a "
                 "column of the outer relation")
@@ -3972,7 +3802,7 @@ class MzSession:
         op = SemiAntiFilterMV(self.spark, keys=[], kind=kind,
                               in_col=oc)
         return {"op": op, "table": internal, "kind": kind,
-                "internal": True, "prep_where": None,
+                "prep_where": None,
                 "prep_select": [(in_col, oc)]}
 
     def _subfilter_inner_delta(self, stage: dict, delta):
@@ -4721,11 +4551,7 @@ class MzSession:
         this MV."""
         from pyspark.sql import functions as F
 
-        if not any(n != name and (sp.get("table") == name
-                                  or name in sp.get("tables", ())
-                                  or name in sp.get("inner_tables",
-                                                    ()))
-                   for n, sp in self._delta_mvs.items()):
+        if not self._dependents(name):
             return
         frames = []
         if adds is not None:
@@ -4739,26 +4565,28 @@ class MzSession:
             delta = delta.unionByName(f)
         self._feed_delta_mvs_for_table(name, delta)
 
+    def _dependents(self, rel: str) -> list[str]:
+        """The delta views that read ``rel`` (a spec's ``table``,
+        ``tables`` or ``inner_tables``), in creation order — so a
+        planner-owned internal comes before its owner. The one commit
+        fan-out, and the dependency check of DROP and RENAME."""
+        return [n for n, sp in self._delta_mvs.items()
+                if n != rel and (sp.get("table") == rel
+                                 or rel in sp.get("tables", ())
+                                 or rel in sp.get("inner_tables", ()))]
+
     def _feed_delta_mvs_for_table(self, table: str, delta) -> None:
-        for name, spec in list(self._delta_mvs.items()):
-            if spec.get("kind") == "union":
-                if table in spec["tables"]:
-                    self._feed_delta_mv_union(name, table, delta)
-            elif spec.get("kind") == "setop":
-                if table in spec["tables"]:
-                    self._feed_delta_mv_setop(name, table, delta)
-            elif spec.get("kind") == "semijoin":
-                if table in spec.get("tables", ()) \
-                        or table in spec.get("inner_tables", ()):
-                    self._feed_delta_mv_semijoin(name, table, delta)
-            elif spec.get("kind") == "wmr":
-                if table in spec.get("tables", ()):
-                    self._feed_delta_mv_wmr(name, table, delta)
-            elif spec["table"] == table:
+        feeds = {"union": self._feed_delta_mv_union,
+                 "setop": self._feed_delta_mv_setop,
+                 "semijoin": self._feed_delta_mv_semijoin,
+                 "wmr": self._feed_delta_mv_wmr,
+                 "join": self._feed_delta_mv_join}
+        for name in self._dependents(table):
+            feed = feeds.get(self._delta_mvs[name].get("kind"))
+            if feed is None:
                 self._feed_delta_mv(name, delta)
-            elif spec.get("kind") == "join" \
-                    and table in spec.get("tables", ()):
-                self._feed_delta_mv_join(name, table, delta)
+            else:
+                feed(name, table, delta)
 
     def _create_view(self, node: ast.CreateView, sql: str):
         # PG requires SELECT on every base relation the body references —
@@ -6135,50 +5963,46 @@ class MzSession:
             self._connections.pop(node.name, None)
             self._owners.pop(node.name, None)
             return None
-        deps = [n for n, sp in self._delta_mvs.items()
-                if n != node.name and (sp.get("table") == node.name
-                                       or node.name in sp.get("tables",
-                                                              ())
-                                       or node.name in sp.get(
-                                           "inner_tables", ()))]
-        if deps:
-            # PG/reference dependency semantics: a relation that an
-            # always-fresh view reads cannot be dropped out from under
-            # it (the downstream would silently stop updating); CASCADE
-            # takes the dependents with it.
-            if not node.cascade:
-                raise ValueError(
-                    f"cannot drop {node.name!r}: delta-maintained view "
-                    f"{deps[0]!r} depends on it (use DROP ... CASCADE)")
-            from dataclasses import replace as _dc_replace
-            for d in deps:
-                if d in self._delta_mvs:  # not already cascaded away
-                    self._drop(_dc_replace(node, kind="view", name=d),
-                               sql)
-        internals = tuple((self._delta_mvs.get(node.name) or {})
-                          .get("internal_deps", ()))
+        # PG/reference dependency semantics: a relation that an
+        # always-fresh view reads cannot be dropped out from under it
+        # (the downstream would silently stop updating); CASCADE takes
+        # the dependents with it.
+        if not node.cascade:
+            self._refuse_dependents(node.name, "drop",
+                                    " (use DROP ... CASCADE)")
         self.catalog.drop(node.name, if_exists=node.if_exists)
-        self._source_tables.discard(node.name)
-        for store in (self._matviews, self._matview_sql, self._view_sql,
-                      self._histories, self._retain, self._refresh_every,
-                      self._delta_mvs, self._owners):
-            store.pop(node.name, None)
-        for dep in internals:
-            # planner-generated upstream views (FROM-subquery desugar)
-            # die with their owner
-            self.catalog.drop(dep, if_exists=True)
-            for store in (self._matviews, self._matview_sql,
-                          self._histories, self._delta_mvs,
-                          self._owners):
-                store.pop(dep, None)
-        self._close_exec_sub(node.name)
-        # comments die with the object (reference: mz_comments rows are
-        # keyed by object id; a dropped id takes its comments — and its
-        # columns' comments, keyed "obj.col" — with it)
-        for key in [k for k in self._comments
-                    if k[1] == node.name
-                    or k[1].startswith(node.name + ".")]:
-            del self._comments[key]
+        self._forget(node.name, cascade=True)
+
+    def _refuse_dependents(self, rel: str, verb: str,
+                           hint: str = "") -> None:
+        """Raise when a delta view reads ``rel``: DROP, RENAME and SWAP
+        of it would leave that view stale."""
+        deps = self._dependents(rel)
+        if deps:
+            raise ValueError(f"cannot {verb} {rel!r}: delta-maintained "
+                             f"view {deps[0]!r} depends on it{hint}")
+
+    def _forget(self, name: str, cascade: bool = False) -> None:
+        """Remove ``name`` and the planner-owned internal views it owns
+        (``internal_deps``) from the catalog and every per-object
+        store. ``cascade`` first drops the delta views that read it."""
+        for dep in self._dependents(name) if cascade else ():
+            if dep in self._delta_mvs:  # not already cascaded away
+                self._forget(dep, cascade=True)
+        internals = (self._delta_mvs.get(name) or {}).get(
+            "internal_deps", ())
+        for n in (name, *internals):
+            self._close_exec_sub(n)
+            self.catalog.drop(n, if_exists=True)
+            self._source_tables.discard(n)
+            for store in self._object_stores:
+                store.pop(n, None)
+            # comments die with the object (reference: mz_comments rows
+            # are keyed by object id; a dropped id takes its comments —
+            # and its columns' comments, keyed "obj.col" — with it)
+            for key in [k for k in self._comments
+                        if k[1] == n or k[1].startswith(n + ".")]:
+                del self._comments[key]
 
     def append_rows(self, table: str, rows) -> None:
         """Append ``rows`` (schema-aligned to ``table``) to a base table
@@ -6370,6 +6194,9 @@ class MzSession:
 
     def _alter_rename(self, node: ast.AlterRename, sql: str):
         old, new = node.name, node.new_name
+        # a dependent view's plan names ``old``: refuse rather than
+        # leave it reading a relation that no longer exists
+        self._refuse_dependents(old, "rename")
         for store in (self.catalog._views, self.catalog._indexes,
                       getattr(self.catalog._tables, "_loaded",
                               self.catalog._tables)):
@@ -6379,10 +6206,7 @@ class MzSession:
                 self.spark.catalog.dropTempView(old)
                 df.createOrReplaceTempView(new)
                 # session-side state follows the object across the rename
-                for st in (self._matviews, self._matview_sql,
-                           self._view_sql, self._histories, self._retain,
-                           self._refresh_every, self._exec_subs,
-                           self._owners):
+                for st in self._object_stores:
                     if old in st:
                         st[new] = st.pop(old)
                 # push cursors follow the object too: commits publish
@@ -6619,7 +6443,8 @@ class MzSession:
         eph = ((sub or {}).get("ephemeral")
                or self._eph_bounded.pop(sub_id, None))
         if eph is not None:
-            self._drop_query_sub(eph)
+            # the ephemeral backing view and its internal views
+            self._forget(eph)
 
     # -- SUBSCRIBE (SELECT ...): ephemeral query subscriptions ---------------
     def _open_query_sub(self, body: str) -> str:
@@ -6715,14 +6540,6 @@ class MzSession:
                 hist.upper)
         self._publish_commit(name, adds, rets)
 
-    def _drop_query_sub(self, name: str) -> None:
-        """Tear down an ephemeral query subscription's backing view."""
-        self.catalog.drop(name, if_exists=True)
-        for store in (self._delta_mvs, self._matviews,
-                      self._matview_sql, self._histories,
-                      self._query_subs):
-            store.pop(name, None)
-
     def _close_exec_sub(self, name: str) -> None:
         """Tear down an object's internal execute-path push cursor
         (dropped/renamed-away objects must not keep queueing frames)."""
@@ -6756,10 +6573,7 @@ class MzSession:
     def _wants_diffs(self, obj: str) -> bool:
         """True when some consumer (delta MV, Kafka sink, open
         subscription) needs this commit's explicit diff frames."""
-        return (any(sp.get("table") == obj
-                    or obj in sp.get("tables", ())
-                    or obj in sp.get("inner_tables", ())
-                    for sp in self._delta_mvs.values())
+        return (bool(self._dependents(obj))
                 or any(sp.get("kafka") and sp["from"] == obj
                        for sp in self._sinks.values())
                 or any(s["node"].name == obj
@@ -6865,15 +6679,10 @@ class MzSession:
 
     def _drop_mangled(self, prefix: str) -> None:
         """Drop every catalog object under a mangled-namespace prefix
-        (DROP ... CASCADE takes contained objects with it)."""
-        doomed = self._mangled_objects(prefix)
-        for n in set(doomed):
-            self.catalog.drop(n, if_exists=True)
-            for store in (self._matviews, self._matview_sql,
-                          self._view_sql, self._histories, self._retain,
-                          self._refresh_every, self._owners):
-                store.pop(n, None)
-            self._close_exec_sub(n)
+        (DROP ... CASCADE takes contained objects with it, and the
+        delta views that read them)."""
+        for n in set(self._mangled_objects(prefix)):
+            self._forget(n, cascade=True)
 
     def _create_cluster(self, node: ast.CreateCluster, sql: str):
         if node.name in self._clusters:
@@ -7784,6 +7593,7 @@ class MzSession:
             if not self._superuser() and not self._is_owner(n):
                 raise PermissionError(
                     f"must be owner of {n} to swap it")
+            self._refuse_dependents(n, "swap")
         tmp = f"__swap_tmp_{node.name}"
         for old, new in ((node.name, tmp), (node.other, node.name),
                          (tmp, node.other)):

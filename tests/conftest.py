@@ -28,3 +28,43 @@ def spine(monkeypatch):
         if spill_rows is not None:
             monkeypatch.setattr(state_spill, "SPILL_ROWS", spill_rows)
     return set_
+
+
+def held(s, name):
+    """Every place the session ``s`` still holds the object ``name``:
+    its per-object stores, plus the catalog when it is a view there."""
+    return ([st for st in s._object_stores if name in st]
+            + [name] * (name in s.catalog._views))
+
+
+_FEEDS = ("_feed_delta_mv", "_feed_delta_mv_union", "_feed_delta_mv_setop",
+          "_feed_delta_mv_semijoin", "_feed_delta_mv_wmr",
+          "_feed_delta_mv_join")
+
+
+@pytest.fixture
+def drop_forgets(monkeypatch):
+    """``drop_forgets(s, views, tables)`` drops the delta views
+    ``views`` (a name or a list) and asserts they are wholly gone: no
+    catalog view and no per-object session store holds one of them or
+    an internal view they owned, and an empty commit to each of
+    ``tables`` (their base tables) feeds no delta view and re-creates
+    none of those names. Returns the forgotten names."""
+    def check(s, views, tables):
+        names = []
+        for view in [views] if isinstance(views, str) else views:
+            names += [view, *s._delta_mvs[view].get("internal_deps", ())]
+            s.execute(f"DROP MATERIALIZED VIEW {view}")
+        fed = []
+        for attr in _FEEDS:
+            def spy(name, *args, _orig=getattr(s, attr)):
+                fed.append(name)
+                return _orig(name, *args)
+            monkeypatch.setattr(s, attr, spy)
+        for t in tables:
+            s.execute(f"INSERT INTO {t} SELECT * FROM {t} WHERE false")
+        assert fed == []
+        for n in names:
+            assert held(s, n) == [], n
+        return names
+    return check

@@ -166,7 +166,7 @@ def test_setop_mv_three_branch_chain(spark):
         s.execute(f"DROP TABLE {t}")
 
 
-def test_setop_mv_mixed_chain_maintains(spark):
+def test_setop_mv_mixed_chain_maintains(spark, drop_forgets):
     """Mixed-operator chains maintain via pairwise stacked internal
     MVs with SQL precedence (INTERSECT binds tighter; UNION/EXCEPT
     left-assoc) — the reference plans such chains as nested
@@ -195,9 +195,8 @@ def test_setop_mv_mixed_chain_maintains(spark):
     assert _rows(s, "so_mix") == _recompute(s, body)
     assert _rows(s, "so_mix2") == _recompute(s, body2)
     # DROP takes the planner-internal pair nodes with it
-    s.execute("DROP VIEW so_mix")
-    s.execute("DROP VIEW so_mix2")
-    assert not [n for n in s._delta_mvs if n.startswith("__setop_")]
+    names = drop_forgets(s, ["so_mix", "so_mix2"], ["so_l", "so_r"])
+    assert [n for n in names if n.startswith("__setop_")]
     for t in ("so_l", "so_r"):
         s.execute(f"DROP TABLE {t}")
 
@@ -226,7 +225,7 @@ def test_setop_subscribe_query(spark):
         s.execute(f"DROP TABLE {t}")
 
 
-def test_setop_stateful_branches_union_distinct(spark):
+def test_setop_stateful_branches_union_distinct(spark, drop_forgets):
     """UNION (distinct) of two GROUPED AGGREGATES: each stateful
     branch plans as a planner-owned internal delta MV (__sbr_) and the
     distinct-union rides their published diffs — the reference's
@@ -254,8 +253,8 @@ def test_setop_stateful_branches_union_distinct(spark):
     ):
         s.execute(sql)
         assert _rows(s, "ssb_u") == _recompute(s, body), sql
-    s.execute("DROP MATERIALIZED VIEW ssb_u")
-    assert not any(n.startswith("__sbr_") for n in s._delta_mvs)
+    names = drop_forgets(s, "ssb_u", ["ssb_a", "ssb_b"])
+    assert any(n.startswith("__sbr_") for n in names)
     s.run_script("DROP TABLE ssb_a; DROP TABLE ssb_b;")
 
 
@@ -341,7 +340,7 @@ def test_groupby_no_aggregates_is_distinct(spark):
                  "DROP TABLE sgd_a; DROP TABLE sgd_b;")
 
 
-def test_setop_mixed_chain_stateful_branches(spark):
+def test_setop_mixed_chain_stateful_branches(spark, drop_forgets):
     """A mixed-operator chain whose branches are stateful: the
     pairwise __setop_ reduction composes with the __sbr_ stateful-
     branch desugar, and DROP cascades through BOTH internal layers."""
@@ -368,8 +367,8 @@ def test_setop_mixed_chain_stateful_branches(spark):
                 "DELETE FROM smc_c WHERE g = 3"):
         s.execute(sql)
         assert _rows(s, "smc_m") == _recompute(s, body), sql
-    s.execute("DROP MATERIALIZED VIEW smc_m")
-    assert not any(n.startswith(("__sbr_", "__setop_"))
-                   for n in s._delta_mvs)
+    names = drop_forgets(s, "smc_m", ["smc_a", "smc_b", "smc_c"])
+    for prefix in ("__sbr_", "__setop_"):
+        assert any(n.startswith(prefix) for n in names), prefix
     s.run_script("DROP TABLE smc_a; DROP TABLE smc_b; "
                  "DROP TABLE smc_c;")

@@ -1896,7 +1896,7 @@ def test_delta_mv_union_all_churn(spark):
     s.execute("DROP TABLE unr")
 
 
-def test_delta_mv_union_setop_capability_ladder(spark):
+def test_delta_mv_union_setop_capability_ladder(spark, drop_forgets):
     """Round 11 made UNION [DISTINCT] / EXCEPT / INTERSECT first-class
     maintained shapes; round 12 added mixed-operator chains; round 13
     added STATEFUL branches (each plans as an internal __sbr_ delta
@@ -1922,8 +1922,8 @@ def test_delta_mv_union_setop_capability_ladder(spark):
     s.execute("DELETE FROM unx WHERE k = 'b'")
     assert sorted(r.k for r in
                   s.sql("SELECT * FROM okstate").collect()) == ["a"]
-    s.execute("DROP VIEW okstate")
-    assert not any(n.startswith("__sbr_") for n in s._delta_mvs)
+    names = drop_forgets(s, "okstate", ["unx"])
+    assert any(n.startswith("__sbr_") for n in names)
     # the formerly-rejected plain UNION maintains (Distinct over
     # the diff-sum)
     s.execute("CREATE MATERIALIZED VIEW unok WITH (MAINTENANCE "
@@ -2171,7 +2171,7 @@ def test_distinct_join_projection_aliases(spark):
                  "DROP TABLE dja; DROP TABLE djd;")
 
 
-def test_window_over_join_chain(spark):
+def test_window_over_join_chain(spark, drop_forgets):
     """Window functions over a join chain: the join part plans as an
     internal delta MV (__jsub_) and the window plan stacks above —
     frameless aggregates AND ordered windows, JOIN and comma-FROM
@@ -2216,13 +2216,12 @@ def test_window_over_join_chain(spark):
                 "INSERT INTO wja VALUES (3, 7)"):
         s.execute(sql)
         recheck(sql)
-    s.run_script("DROP MATERIALIZED VIEW wj_sum; "
-                 "DROP MATERIALIZED VIEW wj_rn;")
-    assert not any(n.startswith("__jsub_") for n in s._delta_mvs)
+    names = drop_forgets(s, ["wj_sum", "wj_rn"], ["wja", "wjd"])
+    assert any(n.startswith("__jsub_") for n in names)
     s.run_script("DROP TABLE wja; DROP TABLE wjd;")
 
 
-def test_expression_projection_over_join(spark):
+def test_expression_projection_over_join(spark, drop_forgets):
     """Stateless EXPRESSION projections over a join chain (no GROUP
     BY): the join part plans as an internal delta MV and the Map
     stacks above — arithmetic and CASE over columns of BOTH sides."""
@@ -2260,6 +2259,6 @@ def test_expression_projection_over_join(spark):
                 "INSERT INTO epa VALUES (3, 21.0, 0.3)"):
         s.execute(sql)
         recheck(sql)
-    s.execute("DROP MATERIALIZED VIEW ep_m")
-    assert not any(n.startswith("__jsub_") for n in s._delta_mvs)
+    names = drop_forgets(s, "ep_m", ["epa", "epd"])
+    assert any(n.startswith("__jsub_") for n in names)
     s.run_script("DROP TABLE epa; DROP TABLE epd;")
