@@ -23,12 +23,14 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _with_confs(fn: Callable[[SparkSession, str], DataFrame]):
-    """Apply the engine's required runtime confs (parquet nanos handling,
-    UTC, AQE) to the caller's session before the query builds any plan —
-    the driver contract hands us an arbitrary SparkSession."""
+    """Apply the engine's runtime confs (parquet nanos handling, join and
+    cache tuning) and ``sf_dir``'s data-sized policy (AQE, shuffle
+    partitions, planner rules, UTC) to the caller's session before the
+    query builds any plan — the driver contract hands us an arbitrary
+    SparkSession."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from materialize_spark.catalog import ensure_session_confs
-        ensure_session_confs(spark)
+        from materialize_spark.catalog import load_tables
+        load_tables(spark, sf_dir)
         return fn(spark, sf_dir)
     return run
 

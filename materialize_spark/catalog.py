@@ -68,53 +68,53 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # lineitem cached and starved ShuffledHashJoin builds of execution memory
 # ("Can't acquire ... to build hash relation"); the decoded gate drops it
 # to the parquet path and every query completes. 0 disables caching.
-# Default 4 GiB decoded: sized against session.py's 24g local heap so the
+# 4 GiB decoded: sized against session.py's 24g local heap so the
 # protected storage region still holds the full arrangement set at
 # sf5-equivalent (measured: x50 headline total 16.1s uncached-lineitem vs
 # 8.0s cached, both stable; 2.9 GiB decoded lineitem + ~1 GiB rest).
-ARRANGE_BYTES = int(os.environ.get("SPARK_GRAFT_CACHE_BYTES", str(4 << 30)))
+ARRANGE_BYTES = 4 << 30
+
+# Rows per in-memory arrangement shard. Parquet files at small SF come out
+# as 1-3 input splits, which serializes every later scan of the cache, so
+# arrangements are sharded by ROW count from the parquet footer (free — no
+# Spark job), not on-disk bytes: snappy compresses TPC-H columns ~5-8x, so
+# byte-based sizing left a 600k-row lineitem on 3 shards and orders on 1,
+# serializing every map stage (measured: q1's scan+partial-agg drops
+# 293ms -> 139ms going 3 -> 32 shards at sf0.1). This many rows per shard
+# keeps per-task compute well above the ~1ms/task scheduling cost; the
+# count is capped at core count — the analog of the reference sharding
+# arrangements across workers.
+ROWS_PER_SHARD = 32_000
+
+# Crossover for the scan-optimal access path (LazyTables.scan): below,
+# the sharded in-memory arrangement reads faster (sf0.1 measured: q1
+# 135 ms cached vs 191 parquet); above, the vectorized parquet reader
+# wins (x10: q1 216 parquet vs 289 cached; lineitem decoded 13 MiB at
+# sf0.1, 580 MiB at x10 — 128 MiB sits between the measured points).
+SCAN_PARQUET_BYTES = 128 << 20
 
 
-def _parquet_rows(path: str) -> int:
-    """Row count from parquet footers (driver-local metadata read, no job).
-    Returns 0 when unavailable so callers fall back to 1 shard."""
+def _footer_stats(path: str) -> tuple[int, int]:
+    """``(rows, decoded bytes)`` from parquet footers — a driver-local
+    metadata read, no job. Decoded (uncompressed) bytes are what the data
+    weighs in memory and in shuffles: snappy compresses TPC-H columns
+    5-8x, so sizing by on-disk bytes under-provisions by that factor.
+    Falls back to ``(0, on-disk bytes)`` when footers are unreadable."""
     try:
         import pyarrow.parquet as pq
-        if os.path.isfile(path):
-            return pq.ParquetFile(path).metadata.num_rows
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        return total
-    except Exception:
-        return 0
-
-
-def _parquet_decoded_bytes(path: str) -> int:
-    """Uncompressed (decoded) byte size from parquet footers — what the
-    data actually weighs in memory and in shuffles. Snappy compresses
-    TPC-H columns 5-8x, so sizing parallelism by on-disk bytes
-    under-provisions by that factor. Falls back to on-disk bytes when
-    footers are unreadable."""
-    try:
-        import pyarrow.parquet as pq
-
-        def one(f: str) -> int:
+        files = [path] if os.path.isfile(path) else [
+            os.path.join(root, f)
+            for root, _dirs, fs in os.walk(path)
+            for f in fs if f.endswith(".parquet")]
+        rows = size = 0
+        for f in files:
             md = pq.ParquetFile(f).metadata
-            return sum(md.row_group(i).total_byte_size
-                       for i in range(md.num_row_groups))
-        if os.path.isfile(path):
-            return one(path)
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += one(os.path.join(root, f))
-        return total or _on_disk_bytes(path)
+            rows += md.num_rows
+            size += sum(md.row_group(i).total_byte_size
+                        for i in range(md.num_row_groups))
+        return rows, size or _on_disk_bytes(path)
     except Exception:
-        return _on_disk_bytes(path)
+        return 0, _on_disk_bytes(path)
 
 
 def _on_disk_bytes(path: str) -> int:
@@ -130,31 +130,35 @@ def _on_disk_bytes(path: str) -> int:
     return total
 
 
-# Runtime-settable SQL confs the engine depends on for CORRECTNESS. These are
-# applied to the *caller's* session on first table load: the driver harness
-# hands us its own vanilla SparkSession, which does not carry the confs our
-# session factory (session.py) sets at build time. All keys below are runtime
-# SQL confs (verified settable on a live session).
+# Runtime-settable SQL confs the engine depends on, for correctness and for
+# speed at every scale. The session factory (session.py) builds with them;
+# load_tables applies them once to any other session — the driver harness
+# hands us its own vanilla SparkSession. All keys below are runtime SQL
+# confs (verified settable on a live session). The data-sized confs are
+# not here: apply_policy owns them.
 _RUNTIME_CONFS: dict[str, str] = {
     # Driver testdata stores events.ts as parquet TIMESTAMP(NANOS), which
     # Spark's reader rejects outright; read as long nanos and convert below.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Deterministic timestamp rendering — matches the reference's
-    # UTC-everywhere model and the DuckDB oracle.
-    "spark.sql.session.timeZone": "UTC",
-    # Runtime re-plan (partition coalescing, skew splitting): harmless if
-    # already on, load-bearing at scale.
-    "spark.sql.adaptive.enabled": "true",
+    # Where AQE runs (past the policy's data gate), coalesce post-shuffle
+    # partitions to the advisory size rather than keeping
+    # cluster-parallelism many tiny tasks: fewer, right-sized tasks win
+    # both locally and at scale (AQE still splits skew).
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
     # Arrow fast path for the pipeline Pandas UDFs.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Same perf defaults session.py bakes in at build time (see rationale
-    # there): dimension joins broadcast, post-shuffle partitions coalesce
-    # to size rather than parallelism.
+    # Broadcast threshold 64 MiB: TPC-H-style dimensions (region, nation,
+    # supplier, part, customer) stay broadcastable far up the scale curve,
+    # keeping fact-table joins shuffle-free on the fact side. Default
+    # 10 MiB is tuned for small executors; at 100 TB the executors that
+    # can hold a shuffle can hold a 64 MiB broadcast.
     "spark.sql.autoBroadcastJoinThreshold": "67108864",
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-    # Hash join over sort-merge when the build side fits (reference joins
-    # are hash joins over arrangements; see session.py rationale).
+    # Prefer shuffled-hash over sort-merge when a side's per-partition
+    # build fits memory: the reference's joins are always hash joins over
+    # arrangements (never sort-based), and skipping both sorts wins
+    # consistently (~13% at sf0.1; Spark falls back to SMJ for
+    # giant-x-giant sides, and AQE skew-splitting covers SHJ too).
     "spark.sql.join.preferSortMergeJoin": "false",
     # Arrangement (persisted-table) scan speed: the reference keeps
     # arrangements as plain in-memory ordered batches, not compressed
@@ -188,7 +192,7 @@ def view_owner(spark: SparkSession) -> dict:
     return owner
 
 
-def _disable_df_debug_overhead(spark: SparkSession) -> None:
+def _disable_df_debug_overhead() -> None:
     """Turn off PySpark 4's per-call DataFrame-debugging origin capture.
 
     pyspark/errors/utils.py wraps EVERY DataFrame/Column API call with a
@@ -202,10 +206,7 @@ def _disable_df_debug_overhead(spark: SparkSession) -> None:
     driver hands us a vanilla session where it can no longer be set. The
     enablement is read once per process into a module-level cache, so for
     externally built sessions we set that cache directly — it only controls
-    error-message call-site enrichment, never a plan or a result.
-    ``SPARK_GRAFT_KEEP_DF_DEBUG=1`` keeps PySpark's default behavior."""
-    if os.environ.get("SPARK_GRAFT_KEEP_DF_DEBUG") == "1":
-        return
+    error-message call-site enrichment, never a plan or a result."""
     try:
         from pyspark.errors import utils as _perr_utils
         _perr_utils._enable_debugging_cache = False
@@ -213,22 +214,20 @@ def _disable_df_debug_overhead(spark: SparkSession) -> None:
         pass
 
 
-def ensure_session_confs(spark: SparkSession) -> None:
+def _ensure_runtime_confs(spark: SparkSession) -> None:
     """Set engine-required runtime confs on an externally built session.
 
-    Memoized per live session: each conf.set is a py4j roundtrip, and the
-    driver/bench call this through every query's entry point."""
+    Memoized per live session: each conf.set is a py4j roundtrip, and
+    every load_tables call runs this."""
     if spark in _CONFS_APPLIED:
         return
     _CONFS_APPLIED.add(spark)
-    extra = os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "")
-    extra_pairs = [kv.split("=", 1) for kv in extra.split(",") if "=" in kv]
-    for k, v in list(_RUNTIME_CONFS.items()) + extra_pairs:
+    for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # non-settable on this build: keep going, reads may still work
-    _disable_df_debug_overhead(spark)
+    _disable_df_debug_overhead()
     # Memoize PySpark's per-call JVM handle fetches (functions registry,
     # col/lit construction) — the measured top roundtrip classes in the
     # delta-MV commit path (see jvmcache module docstring).
@@ -237,108 +236,49 @@ def ensure_session_confs(spark: SparkSession) -> None:
         _jvm_install()
     except Exception:
         pass
-    try:
-        # Don't run tiny-SF shuffles over Spark's default 200 partitions when
-        # the caller never tuned it; leave any explicit setting alone.
-        if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-            cpus = os.environ.get("SPARK_GRAFT_CPUS")
-            spark.conf.set("spark.sql.shuffle.partitions", cpus or "32")
-    except Exception:
-        pass
 
 
-# Confs that mean "nobody tuned this": Spark's default, our session-factory
-# default, and the driver's SPARK_GRAFT_CPUS-derived value. Anything else is
-# an explicit caller choice and is left alone by scale_shuffle_partitions.
-def _untouched_shuffle_settings() -> set[str]:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    return {"200", "32", str(cpus)} if cpus else {"200", "32"}
-
-
-def scale_shuffle_partitions(spark: SparkSession, total_bytes: int) -> None:
-    """Size post-shuffle parallelism to the data actually attached.
-
-    Fixed per-task overhead dominates when reducers hold a few MB each, so
-    target ~32 MiB of DECODED input per post-shuffle partition, floored at 8 (keep
-    some parallelism even for toy inputs) and capped at 4096 (at that point
-    AQE coalescing — always on, see _RUNTIME_CONFS — owns the decision; the
-    reference sizes its dataflow shards the same way, by data not by a
-    constant). Only applies over default/untuned settings.
-    """
-    # Note on AQE: measured at sf0.1, disabling it below ~1 GiB saves a few
-    # percent on flat plans but costs the same on the one fact-by-fact SMJ
-    # query — inside run-to-run noise both ways. It stays always-on: the
-    # stage-barrier cost is bounded, and at 100 TB runtime re-planning
-    # (skew splits, partition coalescing) is load-bearing.
-    try:
-        if spark.conf.get("spark.sql.shuffle.partitions") \
-                not in _untouched_shuffle_settings():
-            return
-        target = max(int(os.environ.get("SPARK_GRAFT_MIN_SHUFFLE", "8")),
-                     min(total_bytes // (32 << 20), 4096))
-        spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    except Exception:
-        pass
-
-
-# Below this many attached bytes, AQE's stage-barrier replanning is pure
-# overhead: every plan decision it could revisit (broadcast vs shuffle,
-# partition counts, skew splits) is already fully determined by file-size
-# statistics at planning time, and each barrier costs a driver roundtrip +
-# re-optimize (~30-50 ms/query measured at sf0.1 — PERF.md). At or above
-# the threshold, runtime re-planning is load-bearing and stays on. 0
-# disables the policy (AQE always on).
+# -- data-sized session policy ------------------------------------------------
+# Below this many attached decoded bytes the data is "small", and three
+# things that pay only with data are switched off:
 #
-# Threshold (round 9, measured): headline suite with AQE off is 21%
-# faster at sf0.1 (0.995 vs 1.259 s) and 8% faster at x10 (1.694 vs
-# 1.846 s) — the pinned plans leave AQE nothing to improve — while at
-# x50 (~12 GiB decoded) on/off is a wash (8.33 vs 8.33 s; AQE's
-# partition coalescing starts paying for its barriers). 8 GiB puts the
-# crossover between those measured points. NB: the old 1 GiB default
-# was crossed at sf0.1 by the NON-queried tables (events/documents/
-# embeddings share the dir), so AQE was on everywhere.
-AQE_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_AQE_MIN_BYTES", str(8 << 30)))
+# - AQE. Every plan decision it could revisit (broadcast vs shuffle,
+#   partition counts, skew splits) is already fully determined by
+#   file-size statistics at planning time, and each stage barrier costs a
+#   driver roundtrip + re-optimize (~30-50 ms/query measured at sf0.1 —
+#   PERF.md). Measured (round 9): headline suite with AQE off is 21%
+#   faster at sf0.1 (0.995 vs 1.259 s) and 8% faster at x10 (1.694 vs
+#   1.846 s) — the pinned plans leave AQE nothing to improve — while at
+#   x50 (~12 GiB decoded) on/off is a wash (8.33 vs 8.33 s; AQE's
+#   partition coalescing starts paying for its barriers). 8 GiB puts the
+#   crossover between those measured points.
+# - The optimizer rules of _PLANNER_SCALE_CONFS, whose BENEFIT is
+#   data-proportional but whose planning COST is a constant per query:
+#   constraint propagation (derives redundant IsNotNull/range predicates —
+#   worthwhile when they prune terabytes at a scan, pure planner CPU when
+#   the whole input is memory-resident), dynamic partition pruning
+#   (searches for prunable partitioned scans we never have at bench
+#   scale), and runtime filter injection (Bloom/semi join reduction per
+#   guide §3.2 — load-bearing on 100 TB fact scans, unreachable below the
+#   AQE/broadcast sizes here). Measured at sf0.1 (OPTIMIZATION_r13.md):
+#   the three rules cost ~30-40% of headline plan time (0.295 -> 0.209 s
+#   for constraint propagation alone) and ~7% of end-to-end latency while
+#   changing nothing in the executed plans.
+# - Whole-stage codegen of maintenance lineage breaks (ckpt.lineage_break):
+#   the per-commit literals make each generated source novel, so the
+#   janino cache never hits and the compile is pure planning cost
+#   (measured: 6.9 s -> 3.9 s of break time on a warm
+#   sqlfront_delta_mv_q21_exists); above the gate the checkpointed state
+#   parts are big enough that compiled evaluation pays for its compile.
+SMALL_DATA_BYTES = 8 << 30
 
-# Crossover for the scan-optimal access path (LazyTables.scan): below,
-# the sharded in-memory arrangement reads faster (sf0.1 measured: q1
-# 135 ms cached vs 191 parquet); above, the vectorized parquet reader
-# wins (x10: q1 216 parquet vs 289 cached; lineitem decoded 13 MiB at
-# sf0.1, 580 MiB at x10 — 128 MiB sits between the measured points).
-SCAN_PARQUET_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_SCAN_PARQUET_BYTES", str(128 << 20)))
-
-
-def scale_adaptive_execution(spark: SparkSession, total_bytes: int) -> None:
-    """Data-sized AQE policy: runtime re-planning off for tiny inputs, on at
-    scale. Same data-not-constant principle as scale_shuffle_partitions; an
-    explicit user setting of spark.sql.adaptive.enabled=false is respected
-    (we only ever flip the default-on value)."""
-    if AQE_MIN_BYTES <= 0:
-        return
-    try:
-        enabled = total_bytes >= AQE_MIN_BYTES
-        if spark.conf.get("spark.sql.adaptive.enabled") != str(enabled).lower():
-            spark.conf.set("spark.sql.adaptive.enabled", str(enabled).lower())
-    except Exception:
-        pass
-
-
-# Optimizer rules whose BENEFIT is data-proportional but whose planning
-# COST is a constant per query: constraint propagation (derives redundant
-# IsNotNull/range predicates — worthwhile when they prune terabytes at a
-# scan, pure planner CPU when the whole input is memory-resident),
-# dynamic partition pruning (searches for prunable partitioned scans we
-# never have at bench scale), and runtime filter injection (Bloom/semi
-# join reduction per guide §3.2 — load-bearing on 100 TB fact scans,
-# unreachable below the AQE/broadcast sizes here). Measured at sf0.1
-# (OPTIMIZATION_r13.md): the three rules cost ~30-40% of headline plan
-# time (0.295 -> 0.209 s for constraint propagation alone) and ~7% of
-# end-to-end latency while changing nothing in the executed plans (all
-# joins already broadcast/SHJ-pinned, no partitioned tables, no scan
-# big enough for a runtime filter). Same gate as AQE: planner features
-# whose payoff needs data re-enable past PLANNER_MIN_BYTES.
-PLANNER_MIN_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_PLANNER_MIN_BYTES", str(AQE_MIN_BYTES)))
+# Post-shuffle parallelism is sized to the data attached: fixed per-task
+# overhead dominates when reducers hold a few MB each, so the policy
+# targets ~32 MiB of DECODED input per post-shuffle partition, floored at
+# MIN_SHUFFLE (some parallelism even for toy inputs) and capped at 4096
+# (at that point AQE coalescing owns the decision; the reference sizes its
+# dataflow shards the same way, by data not by a constant).
+MIN_SHUFFLE = 8
 
 _PLANNER_SCALE_CONFS = (
     # default-ON rules only: past the gate we restore Spark's default,
@@ -349,35 +289,55 @@ _PLANNER_SCALE_CONFS = (
 )
 
 
-def scale_planner_features(spark: SparkSession, total_bytes: int) -> None:
-    """Data-sized optimizer-rule policy (see _PLANNER_SCALE_CONFS)."""
-    if PLANNER_MIN_BYTES <= 0:
+@dataclass(frozen=True)
+class ScalePolicy:
+    """What the size of one data directory decides for the statements
+    over it (see SMALL_DATA_BYTES and MIN_SHUFFLE)."""
+
+    shuffle_partitions: int
+    small: bool
+
+
+# Per-session memo of the (policy, timezone) apply_policy last wrote.
+_APPLIED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _policy_confs(policy: ScalePolicy, timezone: str) -> dict[str, str]:
+    at_scale = str(not policy.small).lower()
+    return {
+        "spark.sql.adaptive.enabled": at_scale,
+        "spark.sql.shuffle.partitions": str(policy.shuffle_partitions),
+        **dict.fromkeys(_PLANNER_SCALE_CONFS, at_scale),
+        "spark.sql.session.timeZone": timezone,
+    }
+
+
+def apply_policy(spark: SparkSession, policy: ScalePolicy,
+                 timezone: str = "UTC") -> None:
+    """Make ``policy`` and ``timezone`` the session's: the one writer of
+    the confs they own. Called at statement start by every engine entry
+    (load_tables, each MzSession entry), so one caller's data size or
+    ``SET timezone`` never leaks into another's statements. Only the
+    keys that differ from the last applied value are written; an
+    unchanged policy costs a dict lookup and no py4j round trip."""
+    want = (policy, timezone)
+    prev = _APPLIED.get(spark)
+    if prev == want:
         return
-    below = total_bytes < PLANNER_MIN_BYTES
-    enabled = str(not below).lower()
-    for key in _PLANNER_SCALE_CONFS:
-        try:
-            if spark.conf.get(key) != enabled:
-                spark.conf.set(key, enabled)
-        except Exception:
-            pass
-    # Same gate feeds the maintenance-path codegen policy (ckpt.py): below
-    # the gate, every lineage break's whole-stage-codegen compile is pure
-    # planning cost (measured: 6.9 s -> 3.9 s of break time on a warm
-    # sqlfront_delta_mv_q21_exists — the per-commit literals make each
-    # generated source novel, so the janino cache never hits); above it the
-    # checkpointed state parts are big enough that compiled evaluation pays
-    # for its compile. Recorded per session, read by ckpt.lineage_break.
-    _LIGHT_MAINT_PLANS[spark] = below
-
-
-# Per-session flag: maintenance-plan lineage breaks skip whole-stage
-# codegen when the attached data sits below PLANNER_MIN_BYTES.
-_LIGHT_MAINT_PLANS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+    old = _policy_confs(*prev) if prev else {}
+    # a failed write leaves no memo, so the next call writes every key
+    _APPLIED.pop(spark, None)
+    for k, v in _policy_confs(policy, timezone).items():
+        if old.get(k) != v:
+            spark.conf.set(k, v)
+    _APPLIED[spark] = want
 
 
 def light_maintenance_plans(spark: SparkSession) -> bool:
-    return bool(_LIGHT_MAINT_PLANS.get(spark, False))
+    """True when the session's applied policy is for small data: then
+    maintenance lineage breaks skip whole-stage codegen (ckpt.py)."""
+    applied = _APPLIED.get(spark)
+    return applied is not None and applied[0].small
 
 
 class LazyTables(MutableMapping):
@@ -392,17 +352,18 @@ class LazyTables(MutableMapping):
         self._register = register
         self._loaded: dict[str, DataFrame] = {}
         self._available = [
-            n for n in TABLES
-            if os.path.exists(os.path.join(sf_dir, f"{n}.parquet"))
-        ]
-        ensure_session_confs(spark)
-        # Parallelism policies see DECODED bytes (what shuffles and caches
+            n for n in TABLES if os.path.exists(self._path(n))]
+        # (rows, decoded bytes) per table, read once from the footers
+        self._stats = {n: _footer_stats(self._path(n))
+                       for n in self._available}
+        # The session policy sees DECODED bytes (what shuffles and caches
         # actually carry), not the snappy-compressed on-disk size.
-        total = sum(_parquet_decoded_bytes(os.path.join(sf_dir, f"{n}.parquet"))
-                    for n in self._available)
-        scale_shuffle_partitions(spark, total)
-        scale_adaptive_execution(spark, total)
-        scale_planner_features(spark, total)
+        total = sum(size for _rows, size in self._stats.values())
+        self.policy = ScalePolicy(
+            shuffle_partitions=max(MIN_SHUFFLE,
+                                   min(total // (32 << 20), 4096)),
+            small=total < SMALL_DATA_BYTES)
+        self._cores = spark.sparkContext.defaultParallelism
         # ONE shard count for every keyed arrangement (the reference
         # arranges all collections across the same timely worker set).
         # Per-table row-proportional counts left co-joined arrangements
@@ -410,26 +371,31 @@ class LazyTables(MutableMapping):
         # sf0.1), so EnsureRequirements re-shuffled the smaller fact on
         # every orderkey join — a per-query exchange the arrangement
         # exists to eliminate. Sized by the largest under-budget keyed
-        # table so the biggest fact keeps its per-shard compute, capped
-        # at core count.
-        cores = spark.sparkContext.defaultParallelism
-        rows_per_shard = int(os.environ.get(
-            "SPARK_GRAFT_ROWS_PER_SHARD", "32000"))
-        keyed_rows = [
-            _parquet_rows(os.path.join(sf_dir, f"{n}.parquet"))
-            for n in self._available
-            if n in ARRANGE_KEYS
-            and 0 < _parquet_decoded_bytes(
-                os.path.join(sf_dir, f"{n}.parquet")) <= ARRANGE_BYTES
-        ]
-        self._keyed_shards = max(
-            1, min(max(keyed_rows, default=0) // rows_per_shard, cores))
+        # table so the biggest fact keeps its per-shard compute.
+        self._keyed_shards = self._shards(max(
+            (self._stats[n][0] for n in self._available
+             if n in ARRANGE_KEYS and self._arranged(n)), default=0))
+
+    def _path(self, name: str) -> str:
+        return os.path.join(self._sf_dir, f"{name}.parquet")
+
+    def decoded_bytes(self, name: str) -> int:
+        """Footer-decoded size of table ``name`` (0 when not a table)."""
+        return self._stats.get(name, (0, 0))[1]
+
+    def _arranged(self, name: str) -> bool:
+        """Under the in-memory arrangement budget (ARRANGE_BYTES)."""
+        return 0 < self.decoded_bytes(name) <= ARRANGE_BYTES
+
+    def _shards(self, rows: int) -> int:
+        """Arrangement shard count for ``rows`` (ROWS_PER_SHARD), capped
+        at core count."""
+        return max(1, min(rows // ROWS_PER_SHARD, self._cores))
 
     def _read_parquet(self, name: str) -> DataFrame:
         """Raw vectorized parquet read with the type normalizations every
         access path needs (no caching/arrangement)."""
-        path = os.path.join(self._sf_dir, f"{name}.parquet")
-        df = self._spark.read.parquet(path)
+        df = self._spark.read.parquet(self._path(name))
         # Parquet TIMESTAMP(NANOS) columns surface differently per Spark
         # version: <=3.x with nanosAsLong reads them as LongType nanos;
         # 4.1+ ignores that conf and reads TIMESTAMP_NTZ. Normalize both to
@@ -441,33 +407,19 @@ class LazyTables(MutableMapping):
             if name == "events" and f.name == "ts" and simple == "bigint":
                 df = df.withColumn("ts", SQLF.expr("timestamp_micros(ts div 1000)"))
             elif simple == "timestamp_ntz":
-                # session TZ is UTC (ensure_session_confs), so this cast
+                # session TZ is UTC (apply_policy's default), so this cast
                 # preserves the wall-clock value — same semantics DuckDB's
                 # naive timestamps give the oracle side.
                 df = df.withColumn(f.name, SQLF.col(f.name).cast("timestamp"))
         return df
 
     def _read(self, name: str) -> DataFrame:
-        path = os.path.join(self._sf_dir, f"{name}.parquet")
         df = self._read_parquet(name)
         # Arrange in memory when under budget (lazy: first use materializes;
-        # exact same rows, so correctness paths are unaffected). Shard the
-        # arrangement across cores: parquet files at small SF come out as
-        # 1-3 input splits, which serializes every later scan of the cache.
-        # Shard count is sized by ROW count from the parquet footer (free —
-        # no Spark job), not on-disk bytes: snappy compresses TPC-H columns
-        # ~5-8x, so byte-based sizing left a 600k-row lineitem on 3 shards
-        # and orders on 1, serializing every map stage (measured: q1's
-        # scan+partial-agg drops 293ms -> 139ms going 3 -> 32 shards at
-        # sf0.1). ~16k rows/shard keeps per-task compute well above the
-        # ~1ms/task scheduling cost, capped at core count — the analog of
-        # the reference sharding arrangements across workers.
-        size = _parquet_decoded_bytes(path)
-        if 0 < size <= ARRANGE_BYTES:
-            cores = self._spark.sparkContext.defaultParallelism
-            rows_per_shard = int(os.environ.get(
-                "SPARK_GRAFT_ROWS_PER_SHARD", "32000"))
-            shards = max(1, min(_parquet_rows(path) // rows_per_shard, cores))
+        # exact same rows, so correctness paths are unaffected), sharded
+        # across cores by row count (ROWS_PER_SHARD).
+        if self._arranged(name):
+            shards = self._shards(self._stats[name][0])
             key = ARRANGE_KEYS.get(name)
             if key is not None and key in df.columns \
                     and self._keyed_shards > 1:
@@ -506,9 +458,7 @@ class LazyTables(MutableMapping):
         if view in self._loaded:
             return self._loaded[view]
         base = self[name]
-        path = os.path.join(self._sf_dir, f"{name}.parquet")
-        if 0 < _parquet_decoded_bytes(path) <= ARRANGE_BYTES \
-                and self._keyed_shards > 1:
+        if self._arranged(name) and self._keyed_shards > 1:
             arranged = base.repartition(
                 self._keyed_shards, SQLF.col(key)).persist()
         else:
@@ -559,18 +509,13 @@ class LazyTables(MutableMapping):
                   SQLF.col("n_regionkey") == SQLF.col("r_regionkey"))
             .drop("n_nationkey", "n_regionkey", "r_regionkey")
         )
-        path = os.path.join(self._sf_dir, "supplier.parquet")
-        if 0 < _parquet_decoded_bytes(path) <= ARRANGE_BYTES:
+        if self._arranged("supplier"):
             # broadcast-side arrangement: consumers always broadcast it,
             # so co-located partitioning buys nothing — compact shards
             # instead, making each broadcast BUILD a 1-2 task scan
             # rather than one task per keyed shard.
-            cores = self._spark.sparkContext.defaultParallelism
-            rows_per_shard = int(os.environ.get(
-                "SPARK_GRAFT_ROWS_PER_SHARD", "32000"))
-            shards = max(1, min(
-                _parquet_rows(path) // rows_per_shard, cores))
-            df = df.repartition(shards).persist()
+            df = df.repartition(
+                self._shards(self._stats["supplier"][0])).persist()
         if self._register:
             df.createOrReplaceTempView(name)
             view_owner(self._spark)[name] = self._sf_dir
@@ -600,8 +545,7 @@ class LazyTables(MutableMapping):
         view = f"{name}_scan"
         if view in self._loaded:
             return self._loaded[view]
-        path = os.path.join(self._sf_dir, f"{name}.parquet")
-        if _parquet_decoded_bytes(path) > SCAN_PARQUET_BYTES:
+        if self.decoded_bytes(name) > SCAN_PARQUET_BYTES:
             df = self._read_parquet(name)
         else:
             df = self[name]  # small: the cached arrangement is faster
@@ -625,13 +569,9 @@ class LazyTables(MutableMapping):
         if view in self._loaded:
             return self._loaded[view]
         base = self[name]
-        path = os.path.join(self._sf_dir, f"{name}.parquet")
-        cores = self._spark.sparkContext.defaultParallelism
-        rows_per_shard = int(os.environ.get(
-            "SPARK_GRAFT_ROWS_PER_SHARD", "32000"))
-        shards = max(1, min(_parquet_rows(path) // rows_per_shard, cores))
-        if 0 < _parquet_decoded_bytes(path) <= ARRANGE_BYTES:
-            arranged = base.repartition(shards).persist()
+        if self._arranged(name):
+            arranged = base.repartition(
+                self._shards(self._stats[name][0])).persist()
         else:
             arranged = base
         if self._register:
@@ -721,17 +661,20 @@ def load_tables(spark: SparkSession, sf_dir: str | None = None,
                 register: bool = True) -> LazyTables:
     """Lazy mapping of driver tables in ``sf_dir`` (registers temp views on
     first access). Also installs the engine's required runtime confs on the
-    caller's session — the driver contract hands us an arbitrary session."""
+    caller's session — the driver contract hands us an arbitrary session —
+    and applies the directory's policy, on every call: the statements that
+    follow read this directory."""
     sf_dir = sf_dir or DEFAULT_SF_DIR
+    _ensure_runtime_confs(spark)
     per_session = getattr(spark, _TABLE_CACHE_ATTR, None)
     if per_session is None:
         per_session = {}
         setattr(spark, _TABLE_CACHE_ATTR, per_session)
-    cached = per_session.get(sf_dir)
-    if cached is not None:
-        return cached
-    tables = LazyTables(spark, sf_dir, register=register)
-    per_session[sf_dir] = tables
+    tables = per_session.get(sf_dir)
+    if tables is None:
+        tables = LazyTables(spark, sf_dir, register=register)
+        per_session[sf_dir] = tables
+    apply_policy(spark, tables.policy)
     return tables
 
 

@@ -24,19 +24,13 @@ fresh ``gen<N>`` directory, never overwrite a live one), and
 time-dependent expressions are resolved to literals at plan-build time
 (tick times are Python datetimes; ``current_timestamp`` is folded by the
 optimizer during the checkpoint's own physical planning).
-
-``SPARK_GRAFT_EAGER_CKPT=1`` restores the eager behavior (debugging aid:
-it localizes a failure to the commit that built the bad plan).
 """
 
 from __future__ import annotations
 
-import os
 import weakref
 
 from pyspark.sql import DataFrame
-
-EAGER: bool = os.environ.get("SPARK_GRAFT_EAGER_CKPT", "") == "1"
 
 # Per-session memo of spark.sql.codegen.wholeStage as last READ here.
 # Sound because lineage_break is the only engine site that flips the
@@ -56,7 +50,7 @@ def _codegen_conf(spark) -> str | None:
 
 
 def lineage_break(df: DataFrame) -> DataFrame:
-    """``localCheckpoint`` with the engine-wide eagerness policy.
+    """Lazy ``localCheckpoint`` (see the module docstring).
 
     The returned frame is tagged ``_mz_leaf`` so ``fresh_break`` can
     skip re-breaking a frame that IS already a
@@ -69,8 +63,8 @@ def lineage_break(df: DataFrame) -> DataFrame:
     prevents for every newly built part."""
     spark = df.sparkSession
     from materialize_spark.catalog import light_maintenance_plans
-    if light_maintenance_plans(spark):
-        # Below the planner data gate, the break's whole-stage-codegen
+    if light_maintenance_plans(spark) and _codegen_conf(spark) == "true":
+        # Below the policy's data gate, the break's whole-stage-codegen
         # compile is pure driver cost (per-commit literals make each
         # generated source novel — the janino cache never hits; measured
         # 6.9 s -> 3.9 s of break time on warm q21_exists, OPTIMIZATION_
@@ -80,22 +74,18 @@ def lineage_break(df: DataFrame) -> DataFrame:
         # keep compiled evaluation. Interpreted eval of the tiny
         # maintenance parts is execution-neutral at this scale; above
         # the gate the flag is false and nothing changes.
-        # The conf read is memoized per session (module cache below):
+        # The conf read is memoized per session (module cache above):
         # the get costs 2 py4j roundtrips and this path runs once per
         # lineage break (~111/warm churn entry); only this function
         # flips the conf, so the cached value stays true between
         # breaks and the toggle is 2 sends instead of 4.
-        prev = _codegen_conf(spark)
-        if prev == "true":
-            spark.conf.set("spark.sql.codegen.wholeStage", "false")
-            try:
-                out = df.localCheckpoint(eager=EAGER)
-            finally:
-                spark.conf.set("spark.sql.codegen.wholeStage", "true")
-        else:
-            out = df.localCheckpoint(eager=EAGER)
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        try:
+            out = df.localCheckpoint(eager=False)
+        finally:
+            spark.conf.set("spark.sql.codegen.wholeStage", "true")
     else:
-        out = df.localCheckpoint(eager=EAGER)
+        out = df.localCheckpoint(eager=False)
     out._mz_leaf = True
     return out
 

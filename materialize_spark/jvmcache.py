@@ -25,14 +25,12 @@ freely), and Catalyst copies expression trees during analysis rather
 than mutating them. Caches are keyed on the live SparkContext and die
 with it (a restarted context gets fresh handles).
 
-``SPARK_GRAFT_NO_JVMCACHE=1`` disables the install (debugging aid).
 Classic (py4j) mode only — Spark Connect never reaches these
 internals; the install is a no-op for it.
 """
 
 from __future__ import annotations
 
-import os
 import threading
 
 _installed = False
@@ -71,9 +69,9 @@ def _ctx_caches(sc):
 def install() -> None:
     """Patch the three hot PySpark internals with per-context memos.
 
-    Idempotent and thread-safe; respects SPARK_GRAFT_NO_JVMCACHE=1."""
+    Idempotent and thread-safe."""
     global _installed
-    if _installed or os.environ.get("SPARK_GRAFT_NO_JVMCACHE") == "1":
+    if _installed:
         return
     with _lock:
         if _installed:

@@ -34,7 +34,7 @@ from dataclasses import replace as _dc_replace
 
 from pyspark.sql import DataFrame, SparkSession
 
-from materialize_spark.catalog import Catalog
+from materialize_spark.catalog import Catalog, apply_policy
 from materialize_spark.ckpt import fresh_break, lineage_break
 from materialize_spark.plans import parser as ast
 from materialize_spark.plans.dialect import rewrite, set_session_user
@@ -488,6 +488,9 @@ class MzSession:
         self.spark = spark
         self.strict_errors = strict_errors
         self.catalog = Catalog(spark, sf_dir) if sf_dir else Catalog(spark)
+        # the data-sized Spark policy of this session's directory, applied
+        # with its timezone at the start of every public entry
+        self._policy = self.catalog._tables.policy
         self._matviews: dict[str, DataFrame] = {}
         self._matview_sql: dict[str, str] = {}
         # WITH (MAINTENANCE 'delta') views: updated on WRITE, never
@@ -635,6 +638,12 @@ class MzSession:
             self._delta_mvs, self._query_subs, self._exec_subs,
             self._owners)
 
+    def _apply_policy(self) -> None:
+        """Statement start: make this session's policy and ``timezone``
+        the SparkSession's. Other MzSessions over the same SparkSession
+        may have applied theirs since this session's last statement."""
+        apply_policy(self.spark, self._policy, self._vars["timezone"])
+
     def webhook(self, name: str):
         """The WebhookSource behind ``CREATE SOURCE name FROM WEBHOOK`` —
         call ``.post(body, headers)`` to deliver events."""
@@ -667,6 +676,7 @@ class MzSession:
         import time as _time
         t0 = _time.monotonic()
         try:
+            self._apply_policy()
             out = self._execute_inner(sql)
         except Exception as ex:
             self._log_activity(sql, "error", str(ex), t0)
@@ -2507,6 +2517,7 @@ class MzSession:
         tick_refreshes sibling for TIME itself. Returns the MVs that
         changed clock."""
         from datetime import datetime
+        self._apply_policy()
         ticked = []
         for name, spec in list(self._delta_mvs.items()):
             if spec.get("kind") != "temporal":
@@ -5199,6 +5210,7 @@ class MzSession:
         ingested new records. ENVELOPE NONE appends are O(batch);
         UPSERT/DEBEZIUM merge keyed against the current collection
         (O(batch ⋈ table) — the same cost class as an UPDATE)."""
+        self._apply_policy()
         advanced: list[str] = []
         for name, spec in list(getattr(self, "_sources", {}).items()):
             if spec.get("tick_error"):
@@ -6013,6 +6025,7 @@ class MzSession:
         MVs permanently wrong (the reference funnels all table writes
         through one persist append, so its dataflows see every diff)."""
         from pyspark.sql import functions as F
+        self._apply_policy()
         target = self.catalog._tables[table]
         # Align NAMES and TYPES to the table schema: VALUES literals
         # infer narrow types (INT for small ints), and a delta frame
@@ -6151,6 +6164,7 @@ class MzSession:
         overrides the monotonic clock for tests."""
         import time as _t
 
+        self._apply_policy()
         now = _t.monotonic() if now is None else now
         refreshed = []
         for name, (period, last) in list(self._refresh_every.items()):
@@ -6361,6 +6375,7 @@ class MzSession:
         reference's semantics); AS OF ... UP TO is bounded — the
         returned cursor is closed already and polls return None."""
         from pyspark.sql import functions as F
+        self._apply_policy()
         node = ast.Parser(sql).parse()
         if not isinstance(node, ast.Subscribe):
             raise ValueError("subscribe_open requires a SUBSCRIBE "
@@ -6421,6 +6436,7 @@ class MzSession:
         """Drain a subscription's queued diff frames into one shaped
         batch, or None when nothing committed since the last poll.
         O(delta): the frames ARE the commits' diffs."""
+        self._apply_policy()
         with self._commit_cond:
             sub = self._subscriptions.get(sub_id)
             if sub is None:
@@ -6438,6 +6454,7 @@ class MzSession:
         return self._shape_sub_batch(sub["node"], delta, ts)
 
     def subscribe_close(self, sub_id: int) -> None:
+        self._apply_policy()
         with self._commit_cond:
             sub = self._subscriptions.pop(sub_id, None)
         eph = ((sub or {}).get("ephemeral")
@@ -7690,6 +7707,8 @@ class MzSession:
         if node.value is None:
             self._role_vars.get(node.role, {}).pop(node.var, None)
         else:
+            if node.var == "timezone":
+                self._check_timezone(node.value)
             self._role_vars.setdefault(node.role, {})[node.var] = \
                 node.value
 
@@ -7888,10 +7907,23 @@ class MzSession:
                 f"unknown network policy {node.value!r}")
         if node.name == "cluster" and node.value not in self._clusters:
             raise KeyError(f"unknown cluster {node.value!r}")
+        if node.name == "timezone":
+            self._check_timezone(node.value)
+        # the next statement's _apply_policy hands a new timezone to Spark
         self._vars[node.name] = node.value
         self._session_set.add(node.name)
-        if node.name == "timezone":
-            self.spark.conf.set("spark.sql.session.timeZone", node.value)
+
+    def _check_timezone(self, zone: str) -> None:
+        """Refuse a zone Spark cannot resolve (the session timezone's own
+        validity check), before any session value changes."""
+        from pyspark.errors import PySparkException
+        try:
+            self.spark._jvm.org.apache.spark.sql.catalyst.util \
+                .DateTimeUtils.getZoneId(zone)
+        except PySparkException:
+            raise ValueError(
+                f"invalid value for parameter \"TimeZone\": {zone!r}"
+            ) from None
 
     def _var_default(self, name: str) -> str:
         """The value a RESET restores: the ALTER SYSTEM overlay when one
@@ -7908,9 +7940,6 @@ class MzSession:
         for n in names:
             self._session_set.discard(n)
             self._vars[n] = self._var_default(n)
-            if n == "timezone":
-                self.spark.conf.set("spark.sql.session.timeZone",
-                                    self._vars[n])
 
     def _alter_system(self, node: ast.AlterSystem, sql: str):
         # ALTER SYSTEM SET name = value | ALTER SYSTEM RESET name
@@ -7933,12 +7962,11 @@ class MzSession:
                     and node.value not in self._network_policies:
                 raise KeyError(
                     f"unknown network policy {node.value!r}")
+            if name == "timezone":
+                self._check_timezone(node.value)
             self._system_vars[name] = node.value
         if name not in self._session_set:
             self._vars[name] = self._var_default(name)
-            if name == "timezone":
-                self.spark.conf.set("spark.sql.session.timeZone",
-                                    self._vars[name])
 
     def _show_var(self, node: ast.ShowVar, sql: str):
         if node.name == "all":
@@ -8249,11 +8277,7 @@ class MzSession:
         # shard count, and decoded size (parquet-footer bytes — what the
         # uncompressed columnar cache occupies; NULL when derived plans
         # make it unknowable without running a job).
-        import os as _os
-
-        from materialize_spark.catalog import (
-            ARRANGE_KEYS, LazyTables, _parquet_decoded_bytes,
-        )
+        from materialize_spark.catalog import ARRANGE_KEYS, LazyTables
         arr_rows = []
         tabs = cat._tables
         if isinstance(tabs, LazyTables):
@@ -8266,9 +8290,8 @@ class MzSession:
                 else:
                     base, key = name, ARRANGE_KEYS.get(name, "")
                     kind = "base"
-                path = _os.path.join(tabs._sf_dir, f"{base}.parquet")
-                size = _parquet_decoded_bytes(path) or None
-                arr_rows.append((name, key or "", kind, size))
+                arr_rows.append((name, key or "", kind,
+                                 tabs.decoded_bytes(base) or None))
         for name, df in cat._indexes.items():
             arr_rows.append((name, ", ".join(cat._index_keys.get(name, [])),
                              "create_index", None))

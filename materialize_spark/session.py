@@ -1,18 +1,20 @@
-"""SparkSession factory with scale-aware defaults.
+"""SparkSession factory with the engine's defaults.
 
 The reference is a single-binary streaming engine; our execution substrate is
-Spark, so "engine configuration" means Catalyst/AQE/shuffle tuning. Defaults
-here are chosen to hold at 100 TB on a large cluster while remaining correct
-on local[32]:
+Spark, so "engine configuration" means Catalyst/shuffle tuning. Two tables
+own it:
 
-- AQE on (runtime re-plan: coalesce post-shuffle partitions, skew-join
-  splitting, dynamic broadcast conversion) — replaces the reference's
-  hand-rolled join-order choice (src/transform/src/join_implementation.rs).
-- shuffle.partitions: default 32 locally; on a real cluster set to
-  2-3x total cores (AQE coalesces down, so over-provisioning is cheap).
-- session timezone UTC: deterministic timestamp semantics, matches the
-  reference's UTC-everywhere model (src/repr/src/timestamp.rs).
-- Arrow enabled: Pandas UDF fast path for the pipeline extensions.
+- ``catalog._RUNTIME_CONFS``: runtime SQL confs that hold at any scale
+  (broadcast threshold, hash-join preference, Arrow, cache layout, parquet
+  nanos handling). The factory builds with them; ``load_tables`` applies
+  them to sessions built elsewhere.
+- ``catalog.apply_policy``: the confs that follow the size of the data a
+  statement reads — AQE, shuffle partitions, three planner rules — plus
+  the session timezone (UTC unless an MzSession SETs another). Applied at
+  statement start, never here.
+
+The build-only confs below (memory, JVM options, scratch dirs, UI, state
+store, DataFrame debugging) cannot change on a live session.
 """
 
 from __future__ import annotations
@@ -21,98 +23,65 @@ import os
 
 from pyspark.sql import SparkSession
 
+from materialize_spark.catalog import _APPLIED, _RUNTIME_CONFS
+
 
 def get_spark(
     app_name: str = "materialize-spark",
     *,
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master``/``shuffle_partitions`` default from ``SPARK_GRAFT_CPUS``
-    (driver contract) or local[*].
-    """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    ``master`` defaults from ``SPARK_GRAFT_CPUS`` (driver contract) or
+    local[*]. The session's applied policy is forgotten, so the next
+    statement writes every policy conf again."""
     if master is None:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus else 32
-
-    b = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+    confs = {
+        **_RUNTIME_CONFS,
         # Kill PySpark 4's per-call origin-capture chatter (one conf.get
-        # roundtrip + two JVM calls + a stack walk per DataFrame/Column API
-        # call); see catalog._RUNTIME_CONFS for the measured rationale.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # Pipeline UDFs ship ~10k-row Arrow batches; keeps Python workers fed
-        # without blowing memory at wide rows (embeddings, binary payloads).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Files: 128 MiB splits is the right granularity for 100 TB parquet.
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # Broadcast threshold 64 MiB: TPC-H-style dimensions (region, nation,
-        # supplier, part, customer) stay broadcastable far up the scale curve,
-        # keeping fact-table joins shuffle-free on the fact side. Default
-        # 10 MiB is tuned for small executors; at 100 TB the executors that
-        # can hold a shuffle can hold a 64 MiB broadcast.
-        .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
-        # Prefer shuffled-hash over sort-merge when a side's per-partition
-        # build fits memory: the reference's joins are always hash joins over
-        # arrangements (never sort-based), and skipping both sorts wins
-        # consistently (~13% at sf0.1; Spark falls back to SMJ for
-        # giant-x-giant sides, and AQE skew-splitting covers SHJ too).
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        # Coalesce post-shuffle partitions to the advisory size rather than
-        # keeping cluster-parallelism many tiny tasks: fewer, right-sized
-        # tasks win both locally and at scale (AQE still splits skew).
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        # Driver testdata stores events.ts as parquet TIMESTAMP(NANOS), which
-        # Spark's vectorized reader rejects; read as long and convert in the
-        # catalog (micros truncation — matches DuckDB's read of the same file).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # roundtrip + two JVM calls + a stack walk per DataFrame/Column
+        # API call); see catalog._disable_df_debug_overhead for why.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         # local[N] puts driver + all executor threads in ONE JVM: heap must
         # hold the arrangement cache (uncompressed columnar batches) AND
         # per-task execution memory (SHJ hash relations cannot spill).
         # 8g worked to sf1-equivalent but starved x50 joins; the box has
         # 128 GiB, so size like an executor, not a coordinator.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "24g"),
         # Throughput GC for the single-JVM local driver: G1's concurrent
         # cycles add 10-100 ms pauses to sub-second queries; ParallelGC with
         # a pre-sized young gen is flatter for this heap size. Overridable.
-        .config("spark.driver.extraJavaOptions",
-                os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                               "-XX:+UseParallelGC -Xmn2g"))
-        # Shuffle/spill scratch on tmpfs when available: local-mode shuffle
-        # writes otherwise pay the sandbox's slow block device (~50-80 ms per
-        # shuffle stage measured at sf0.1). Real clusters set SPARK_LOCAL_DIRS
-        # to node-local NVMe; honoring the env var keeps that contract.
-        .config("spark.local.dir",
-                os.environ.get("SPARK_LOCAL_DIRS")
-                or ("/dev/shm/spark-local"
-                    if os.access("/dev/shm", os.W_OK) else "/tmp"))
-        .config("spark.ui.enabled", "false")
+        "spark.driver.extraJavaOptions": os.environ.get(
+            "SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC -Xmn2g"),
+        # Shuffle/spill scratch on tmpfs when available: local-mode
+        # shuffle writes otherwise pay the sandbox's slow block device
+        # (~50-80 ms per shuffle stage measured at sf0.1). Real clusters
+        # set SPARK_LOCAL_DIRS to node-local NVMe; honoring the env var
+        # keeps that contract.
+        "spark.local.dir": (
+            os.environ.get("SPARK_LOCAL_DIRS")
+            or ("/dev/shm/spark-local"
+                if os.access("/dev/shm", os.W_OK) else "/tmp")),
+        "spark.ui.enabled": "false",
         # Streaming state lives in RocksDB — the same backend the
         # reference uses for ENVELOPE UPSERT state (storage/src/upsert.rs
         # RocksDB-backed keyed state): bounded heap (state off-JVM-heap in
         # native memory + spill to disk), incremental checkpointing, and
         # point-lookup performance for the keyed upsert/TopK operators.
         # The HDFS-backed provider keeps every key in executor heap — the
-        # 100 TB non-plan. SPARK_GRAFT_STATESTORE=hdfs restores it.
-        .config("spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state."
-                + ("HDFSBackedStateStoreProvider"
-                   if os.environ.get("SPARK_GRAFT_STATESTORE") == "hdfs"
-                   else "RocksDBStateStoreProvider"))
-    )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            b = b.config(k, v)
-    return b.getOrCreate()
+        # 100 TB non-plan.
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+        **(extra_conf or {}),
+    }
+    b = SparkSession.builder.appName(app_name).master(master)
+    for k, v in confs.items():
+        b = b.config(k, v)
+    spark = b.getOrCreate()
+    _APPLIED.pop(spark, None)
+    return spark

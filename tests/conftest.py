@@ -9,9 +9,13 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
+    from materialize_spark.catalog import load_tables
     from materialize_spark.session import get_spark
-    s = get_spark("tests", shuffle_partitions=4)
+    s = get_spark("tests")
     s.sparkContext.setLogLevel("ERROR")
+    # start every test file, alone or in the suite, under the fixture
+    # data's policy (the engine applies it at each load and statement)
+    load_tables(s, SF_DIR)
     yield s
 
 

@@ -72,25 +72,33 @@ def test_jaccard_verify_over_budget_shuffles(spark):
     """Scale guard (VERDICT r5 #1): past the byte budget the verification
     joins must NOT broadcast the per-doc token-array table (terabytes at
     corpus scale, over Spark's 8 GB broadcast ceiling) — they pin
-    SHUFFLE_HASH instead, and the output is identical."""
-    df = _docs(spark, [(1, "a b c d"), (2, "a b c e"), (3, "z"),
-                       (4, "p q r"), (5, "p q r s")])
-    toks = F.split(normalize_text(F.col("text")), " ")
-    with_toks = df.withColumn("tokens", toks)
-    small = jaccard_pairs(with_toks, F.col("tokens"), threshold=0.5)
-    big = jaccard_pairs(with_toks, F.col("tokens"), threshold=0.5,
-                        max_broadcast_bytes=0)
-    assert sorted(map(tuple, small.collect())) \
-        == sorted(map(tuple, big.collect()))
-    # plan shape: over budget, the verify joins carry no BroadcastExchange
-    big.collect()  # let AQE finalize
-    final = big._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" not in final
-    assert "ShuffledHashJoin" in final
-    # and under budget the broadcast fast path is still chosen
-    small.collect()
-    fast = small._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" in fast
+    SHUFFLE_HASH instead, and the output is identical. AQE is pinned
+    off: it would re-plan the tiny pinned self-join as a broadcast."""
+    aqe = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try:
+        df = _docs(spark, [(1, "a b c d"), (2, "a b c e"), (3, "z"),
+                           (4, "p q r"), (5, "p q r s")])
+        toks = F.split(normalize_text(F.col("text")), " ")
+        with_toks = df.withColumn("tokens", toks)
+        small = jaccard_pairs(with_toks, F.col("tokens"), threshold=0.5)
+        big = jaccard_pairs(with_toks, F.col("tokens"), threshold=0.5,
+                            max_broadcast_bytes=0)
+        assert sorted(map(tuple, small.collect())) \
+            == sorted(map(tuple, big.collect()))
+        # plan shape: over budget, the verify joins carry no
+        # BroadcastExchange
+        big.collect()  # let AQE finalize
+        final = big._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" not in final
+        assert "ShuffledHashJoin" in final
+        # and under budget the broadcast fast path is still chosen
+        small.collect()
+        fast = small._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" in fast
+    finally:
+        spark.conf.set(aqe, prev)
 
 
 def test_cosine_topk_self_is_top(spark):

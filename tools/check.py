@@ -59,7 +59,7 @@ def main() -> int:
     # VANILLA session, deliberately: the driver harness builds its own
     # SparkSession with no engine confs, so the local gate must exercise
     # exactly that contract — any conf a query needs has to be applied at
-    # runtime by the entry points themselves (catalog.ensure_session_confs).
+    # runtime by the entry points themselves (catalog.load_tables).
     import os
 
     from pyspark.sql import SparkSession

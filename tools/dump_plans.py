@@ -49,8 +49,8 @@ def main() -> None:
     print("  plans/audit.fact_broadcasts + tests/test_plans.py enforce it.")
     print("- Two `HashAggregate`s around one `Exchange`: map-side partial")
     print("  aggregation before the shuffle.")
-    print("- AQE is data-sized (catalog.scale_adaptive_execution): off")
-    print("  below 1 GiB decoded where every plan decision is statically")
+    print("- AQE is data-sized (catalog.apply_policy): off below")
+    print("  8 GiB decoded where every plan decision is statically")
     print("  determined (its stage barriers cost ~30-50 ms/query), on at")
     print("  scale where skew splitting / coalescing are load-bearing, so")
     print("  these sf0.1 dumps show final plans, not AdaptiveSparkPlan")
