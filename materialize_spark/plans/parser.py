@@ -110,6 +110,9 @@ class CreateView(Stmt):
     # WITH (MAINTENANCE 'delta'): incremental write-path maintenance for
     # supported shapes (grouped-sum HAVING) instead of snapshot+REFRESH
     maintenance: str | None = None
+    # a delta view's stable id, picked once when planning starts: its
+    # internal views are named after it, and it survives RENAME
+    uid: str | None = None
 
 
 @dataclass

@@ -37,6 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 from materialize_spark.catalog import Catalog, apply_policy
 from materialize_spark.ckpt import fresh_break, lineage_break
 from materialize_spark.plans import parser as ast
+from materialize_spark.plans.delta import (
+    Branch, DeltaView, Distinct, JoinFront, Reduce, SetOp, SetOpFront,
+    SingleFront, Spine, Stage, TemporalView, Threshold, TopK, UnionFront,
+    WindowAggView, WindowOrderView, WinSet, WmrView,
+)
 from materialize_spark.plans.dialect import rewrite, set_session_user
 from materialize_spark.plans.lexer import LexError, split_statements
 from materialize_spark.plans.select_ast import (
@@ -262,6 +267,16 @@ def _keys_match_group_by(keys: list[str], exprs: dict[str, str],
     return True
 
 
+def _grouped_items(q):
+    """``_classify_agg_items`` of a GROUP BY body that has an aggregate
+    and whose SELECT keys equal its GROUP BY keys, else None."""
+    parsed = _classify_agg_items(q.items)
+    if parsed is None or not parsed[1] or not _keys_match_group_by(
+            parsed[0], parsed[2], [k.strip() for k in q.group_by]):
+        return None
+    return parsed
+
+
 def _having_over_aliases(having: str, aggs: dict[str, tuple[str, str]],
                          exprs: dict[str, str] | None = None) -> str:
     """Rewrite a HAVING clause to reference the SELECT's aggregate
@@ -387,6 +402,18 @@ _DELTA_SUPPORTED = (
     "relation may itself be a delta MV (stacked views); use a plain "
     "MATERIALIZED VIEW (snapshot + REFRESH) for other shapes")
 
+# EXPLAIN MAINTENANCE labels of the subfilter stages, by the
+# SemiAntiFilterMV kind maintaining them
+_SEMI_LABELS = {"exists": "SemiJoin[EXISTS]",
+                "not_exists": "AntiJoin[NOT EXISTS]",
+                "in": "SemiJoin[IN]", "not_in": "AntiJoin[NOT IN]"}
+
+
+def _cmp_label(cmp_op: str, agg_kind: str) -> str:
+    """EXPLAIN MAINTENANCE label of a per-key aggregate comparison."""
+    return f"ScalarAggCompare[{cmp_op} {agg_kind.upper()}]"
+
+
 # the TopK outer filter: WHERE rn <= k over the ROW_NUMBER subquery —
 # a leaf pattern checked on one parsed WHERE span (never statement
 # dispatch; the tree walk happens in _plan_delta_mv over select_ast)
@@ -494,11 +521,11 @@ class MzSession:
         self._matviews: dict[str, DataFrame] = {}
         self._matview_sql: dict[str, str] = {}
         # WITH (MAINTENANCE 'delta') views: updated on WRITE, never
-        # refreshed. name -> spec; a spec's inputs are its "table",
-        # "tables" and "inner_tables" (read only by _dependents), and
-        # "internal_deps" lists the planner-owned internal views it owns
-        # (made by _internal_views, removed with it by _forget)
-        self._delta_mvs: dict[str, dict] = {}
+        # refreshed. name -> typed view (plans/delta/); a view's
+        # ``inputs`` are read only by _dependents, and its
+        # ``internal_deps`` lists the planner-owned internal views it
+        # owns (made by _internal_views, removed with it by _forget)
+        self._delta_mvs: dict[str, DeltaView] = {}
         # execute-path SUBSCRIBE: one lazily-opened internal PUSH cursor
         # per object (name -> sub_id in _subscriptions). Concurrent
         # pollers must DECLARE their own named cursors instead.
@@ -759,6 +786,8 @@ class MzSession:
             parse_set_op_branches,
         )
 
+        if node.uid is None:
+            node = _dc_replace(node, uid=self._uid(node.name))
         if _WMR_RE.match(node.body):
             self._plan_delta_wmr(node)
             return
@@ -774,11 +803,6 @@ class MzSession:
         if len(qs) > 1:
             if any(self._branch_stateful(q) for q in qs):
                 self._plan_delta_setop_stateful(node, op, is_all, qs)
-                return
-            if op == "union" and is_all:
-                self._plan_delta_union(node, qs)
-            elif op == "union":
-                self._plan_delta_union_distinct(node, qs)
             else:
                 self._plan_delta_setop(node, qs, op, is_all)
             return
@@ -824,7 +848,8 @@ class MzSession:
                 if not self._branch_stateful(q):
                     parts.append(span)
                     continue
-                internal = internal_view(f"__sbr_{node.name}_{i}", span)
+                internal = internal_view(
+                    f"__sbr_{node.uid}_{i}", span)
                 cols = list(self._matviews[internal].columns)
                 parts.append(f"SELECT {', '.join(cols)} FROM {internal}")
             glue = f" {op.upper()}{' ALL' if is_all else ''} "
@@ -1033,36 +1058,11 @@ class MzSession:
         seminaive = monotone and all(
             self._binding_seminaive(b[2], bnames)
             for b in wmr.bindings)
-        spec = {"kind": "wmr", "wmr": wmr, "tables": tuple(deps),
-                "monotone": monotone, "seminaive": seminaive,
-                "bind_state": None, "table": None}
-        self._delta_mvs[node.name] = spec
-        binds, out = self._wmr_fixpoint_seminaive(wmr) if seminaive \
-            else self._wmr_fixpoint(wmr)
-        spec["bind_state"] = binds
-        self._publish_delta_mv(node.name, fresh_break(out), initial=True)
-
-    def _feed_delta_mv_wmr(self, name: str, table: str,
-                           delta) -> None:
-        from pyspark.sql import functions as F
-
-        spec = self._delta_mvs[name]
-        seed = None
-        if spec["monotone"] and spec.get("bind_state") is not None \
-                and delta.filter(F.col("diff") < 0).isEmpty():
-            seed = spec["bind_state"]
-        if spec.get("seminaive"):
-            # differential rounds: each round joins only the FRONTIER
-            # against the bindings (semi-naive in WORK, not just in
-            # iteration count); retraction commits pass seed=None and
-            # re-run the same semi-naive loop from empty — always
-            # correct
-            binds, out = self._wmr_fixpoint_seminaive(spec["wmr"],
-                                                      seed=seed)
-        else:
-            binds, out = self._wmr_fixpoint(spec["wmr"], seed=seed)
-        spec["bind_state"] = binds
-        self._publish_delta_mv(name, fresh_break(out))
+        fixpoint = self._wmr_fixpoint_seminaive if seminaive \
+            else self._wmr_fixpoint
+        self._install(node, WmrView(
+            wmr, tuple(deps), lambda seed: fixpoint(wmr, seed=seed),
+            monotone=monotone, seminaive=seminaive))
 
     def _plan_delta_setop_mixed(self, node: ast.CreateView) -> None:
         """Mixed set-operator chains (``A UNION ALL B EXCEPT C``):
@@ -1108,7 +1108,7 @@ class MzSession:
                         continue
                     last = len(work_ops) == 1
                     name = node.name if last \
-                        else f"__setop_{node.name}_{idx}"
+                        else f"__setop_{node.uid}_{idx}"
                     idx += 1
                     merged = reduce_pair(work_items[i],
                                          work_items[i + 1],
@@ -1646,19 +1646,18 @@ class MzSession:
         transforms of t's branches over the commit's delta — no state
         probe at all. Column names resolve positionally to the FIRST
         branch's output names (SQL set-op semantics)."""
-        branches, cols = self._union_branch_specs(qs)
-        spec = {"kind": "union", "branches": branches, "cols": cols,
-                "tables": tuple({b["table"] for b in branches})}
-        self._delta_mvs[node.name] = spec
-        self._form_delta_mv_union(node.name)
+        branches, _cols = self._union_branch_specs(qs)
+        self._install(node, DeltaView(
+            UnionFront(branches, self._base_frame),
+            Spine(self._body(node.name))))
 
     def _union_branch_specs(
-            self, qs) -> tuple[list[dict], list[str]]:
+            self, qs) -> tuple[list[Branch], list[str]]:
         """Validate and normalize UNION ALL branches (stateless
         Map/Filter over one table each; names resolve positionally to
         the first branch's output names)."""
         cols: list[str] | None = None
-        branches: list[dict] = []
+        branches: list[Branch] = []
         for q in qs:
             if (q.joins or q.group_by or q.having or q.distinct
                     or q.sub is not None or q.subfilters
@@ -1700,12 +1699,10 @@ class MzSession:
                 raise ValueError(
                     "UNION ALL branches must have the same number of "
                     "columns")
-            branches.append({
-                "table": q.table,
-                "select": [f"({e}) AS {cols[i]}"
-                           for i, e in enumerate(exprs)],
-                "where": (f"coalesce(({rewrite(q.where)}), false)"
-                          if q.where else None)})
+            branches.append(Branch(
+                q.table, [f"({e}) AS {cols[i]}" for i, e in enumerate(exprs)],
+                f"coalesce(({rewrite(q.where)}), false)" if q.where
+                else None))
         return branches, cols
 
     def _plan_delta_union_agg(self, node: ast.CreateView, q) -> bool:
@@ -1718,231 +1715,67 @@ class MzSession:
             RetractionAwareAgg, RetractionAwareDistinct,
         )
 
-        branches, cols = self._union_branch_specs(q.sub_branches)
+        branches, _cols = self._union_branch_specs(q.sub_branches)
         if q.order or q.limit is not None:
             return False
-        spec = {"kind": "union", "branches": branches,
-                "union_cols": cols,
-                "tables": tuple({b["table"] for b in branches}),
-                "where": q.where}
         if q.group_by:
-            parsed = _classify_agg_items(q.items)
-            if parsed is None:
+            parsed = _grouped_items(q)
+            if parsed is None or parsed[4]:
                 return False
-            keys, aggs, exprs, out_order, mpost = parsed
-            gkeys = [k.strip() for k in q.group_by]
-            if not aggs or mpost or not _keys_match_group_by(
-                    keys, exprs, gkeys):
-                return False
+            keys, aggs, exprs, out_order, _post = parsed
             having = q.having
             if having is not None:
                 having = _having_over_aliases(having, aggs, exprs)
                 if having is None:
                     return False
-            spec.update({"agg": RetractionAwareAgg(
-                self.spark, keys=keys, aggs=aggs), "keys": keys,
-                "aggs": aggs, "exprs": exprs, "having": having,
-                "out_order": out_order})
+            terminal = Reduce(
+                RetractionAwareAgg(self.spark, keys=keys, aggs=aggs),
+                self._body(node.name), exprs=exprs, having=having,
+                out_order=out_order)
         elif q.distinct:
             if not all(it.is_column and it.alias is None
                        for it in q.items):
                 return False
             dcols = [it.expr for it in q.items]
-            spec.update({"distinct": RetractionAwareDistinct(
-                self.spark, cols=dcols), "dcols": dcols})
+            terminal = Distinct(RetractionAwareDistinct(
+                self.spark, cols=dcols), dcols, self._body(node.name))
         else:
             return False
-        self._delta_mvs[node.name] = spec
-        self._form_delta_mv_union(node.name)
+        self._install(node, DeltaView(
+            UnionFront(branches, self._base_frame, where=q.where),
+            terminal))
         return True
-
-    def _form_delta_mv_union(self, name: str) -> None:
-        """Formation: every branch's current rows are its first +1
-        batch."""
-        from pyspark.sql import functions as F
-
-        spec = self._delta_mvs[name]
-        frames = [
-            self._union_branch_delta(
-                b, self._base_frame(b["table"])
-                .withColumn("diff", F.lit(1)))
-            for b in spec["branches"]]
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        self._finish_delta_mv_union(name, out, initial=True)
-
-    def _finish_delta_mv_union(self, name: str, out,
-                               initial: bool = False) -> None:
-        """Route a union's diff-sum to its terminal: maintained reduce
-        / DISTINCT (touched-group publish) or the plain parts spine."""
-        from pyspark.sql import functions as F
-
-        spec = self._delta_mvs[name]
-        if spec.get("agg") is not None:
-            if out is None and not initial:
-                return
-            if out is not None and spec.get("where"):
-                out = out.filter(
-                    f"coalesce(({rewrite(spec['where'])}), false)")
-            touched = tkeys = None
-            if out is not None:
-                for internal, src in spec.get("exprs", {}).items():
-                    out = out.withColumn(internal, F.expr(rewrite(src)))
-                in_cols = {c for _k, c in spec["aggs"].values()}
-                if "__one" in in_cols:
-                    out = out.withColumn("__one", F.lit(1))
-                out = out.select(*spec["keys"], *sorted(in_cols),
-                                 "diff")
-                touched, tkeys = (out.select(*spec["keys"]).distinct(),
-                                  spec["keys"])
-                result = spec["agg"].on_batch(out)
-            else:
-                result = spec["agg"].result() \
-                    if spec["agg"]._acc is not None else None
-            if result is not None and spec.get("having"):
-                result = result.filter(rewrite(spec["having"]))
-            if result is None:
-                result = self.spark.sql(
-                    rewrite(self._matview_sql[name])).limit(0)
-            self._publish_delta_mv(name, result, initial,
-                                   touched=touched, keys=tkeys)
-            return
-        if spec.get("distinct") is not None:
-            if out is None and not initial:
-                return
-            touched = tkeys = None
-            if out is not None and spec.get("where"):
-                out = out.filter(
-                    f"coalesce(({rewrite(spec['where'])}), false)")
-            if out is not None:
-                keyed = out.select(*spec["dcols"], "diff")
-                touched, tkeys = (keyed.select(*spec["dcols"])
-                                  .distinct(), spec["dcols"])
-                result = spec["distinct"].on_batch(keyed)
-            else:
-                result = (spec["distinct"].result()
-                          if spec["distinct"]._result is not None
-                          else None)
-            if result is None:
-                result = self.spark.sql(
-                    rewrite(self._matview_sql[name])).limit(0)
-            self._publish_delta_mv(name, result, initial,
-                                   touched=touched, keys=tkeys)
-            return
-        self._publish_spine(name, spec, out, initial)
-
-    @staticmethod
-    def _union_branch_delta(branch: dict, delta):
-        """One branch's stateless transform of a base-table delta."""
-        if branch["where"]:
-            delta = delta.filter(branch["where"])
-        return delta.selectExpr(*branch["select"], "diff")
-
-    def _feed_delta_mv_union(self, name: str, table: str,
-                             delta) -> None:
-        """Fold one table's diffs through every branch that reads it
-        and publish the diff-sum — Union's delta rule."""
-        spec = self._delta_mvs[name]
-        frames = [self._union_branch_delta(b, delta)
-                  for b in spec["branches"] if b["table"] == table]
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        self._finish_delta_mv_union(name, out)
-
-    def _plan_delta_union_distinct(self, node: ast.CreateView,
-                                   qs) -> None:
-        """UNION [DISTINCT] delta MV: the reference plans it as a
-        Distinct reduce over the ALL-form Union
-        (src/sql/src/plan/query.rs plan_set_expr), so the maintained
-        form is the union diff-sum feeding a RetractionAwareDistinct —
-        per commit only the touched rows re-derive visibility."""
-        from materialize_spark.streaming.retraction import (
-            RetractionAwareDistinct,
-        )
-
-        branches, cols = self._union_branch_specs(qs)
-        spec = {"kind": "union", "branches": branches,
-                "union_cols": cols,
-                "tables": tuple({b["table"] for b in branches}),
-                "where": None,
-                "distinct": RetractionAwareDistinct(
-                    self.spark, cols=cols), "dcols": cols}
-        self._delta_mvs[node.name] = spec
-        self._form_delta_mv_union(node.name)
 
     def _plan_delta_setop(self, node: ast.CreateView, qs, op: str,
                           is_all: bool) -> None:
-        """EXCEPT/INTERSECT [ALL] delta MV over stateless branches:
-        the per-side multiplicity state (RetractionAwareSetOp) realizes
-        the reference's Threshold(Union(A, Negate(B))) composition
-        (src/sql/src/plan/query.rs plan_set_expr; Negate/Threshold at
-        src/expr/src/relation.rs:278-288) without materializing the
-        negated union — commits touch only their own rows' visibility."""
+        """Set-op chains of stateless branches. UNION ALL is the linear
+        union (_plan_delta_union). UNION [DISTINCT] is a Distinct
+        reduce over the ALL-form union, as the reference plans it
+        (src/sql/src/plan/query.rs plan_set_expr): per commit only the
+        touched rows re-derive visibility. EXCEPT/INTERSECT [ALL] keep
+        per-side multiplicity state (RetractionAwareSetOp), the
+        reference's Threshold(Union(A, Negate(B))) composition
+        (Negate/Threshold at src/expr/src/relation.rs:278-288) without
+        materializing the negated union."""
         from materialize_spark.streaming.retraction import (
-            RetractionAwareSetOp,
+            RetractionAwareDistinct, RetractionAwareSetOp,
         )
 
+        if op == "union" and is_all:
+            self._plan_delta_union(node, qs)
+            return
         branches, cols = self._union_branch_specs(qs)
-        spec = {"kind": "setop", "branches": branches, "cols": cols,
-                "tables": tuple({b["table"] for b in branches}),
-                "mv": RetractionAwareSetOp(
-                    self.spark, cols=cols, op=op, all=is_all,
-                    nsides=len(branches))}
-        self._delta_mvs[node.name] = spec
-        self._form_delta_mv_setop(node.name)
-
-    def _setop_frames(self, spec: dict, tagged) -> "DataFrame | None":
-        """Union the side-tagged branch transforms of (side, delta)
-        pairs into one __side-carrying diff frame."""
-        from pyspark.sql import functions as F
-
-        frames = [
-            self._union_branch_delta(b, delta)
-            .withColumn("__side", F.lit(i))
-            for i, b, delta in tagged]
-        if not frames:
-            return None
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
-
-    def _form_delta_mv_setop(self, name: str) -> None:
-        """Formation: every branch's current rows are its side's first
-        +1 batch."""
-        from pyspark.sql import functions as F
-
-        spec = self._delta_mvs[name]
-        tagged = [
-            (i, b, self._base_frame(b["table"])
-             .withColumn("diff", F.lit(1)))
-            for i, b in enumerate(spec["branches"])]
-        self._finish_delta_mv_setop(
-            name, self._setop_frames(spec, tagged), initial=True)
-
-    def _feed_delta_mv_setop(self, name: str, table: str,
-                             delta) -> None:
-        """Fold one table's diffs through every branch (side) that
-        reads it; the state operator re-derives only the touched rows'
-        visible multiplicity."""
-        spec = self._delta_mvs[name]
-        tagged = [(i, b, delta)
-                  for i, b in enumerate(spec["branches"])
-                  if b["table"] == table]
-        out = self._setop_frames(spec, tagged)
-        if out is not None:
-            self._finish_delta_mv_setop(name, out)
-
-    def _finish_delta_mv_setop(self, name: str, out,
-                               initial: bool = False) -> None:
-        spec = self._delta_mvs[name]
-        touched = out.select(*spec["cols"]).distinct()
-        result = spec["mv"].on_batch(out.select(*spec["cols"],
-                                                "__side", "diff"))
-        self._publish_delta_mv(name, result, initial,
-                               touched=touched, keys=spec["cols"])
+        if op == "union":
+            view = DeltaView(UnionFront(branches, self._base_frame),
+                             Distinct(RetractionAwareDistinct(
+                                 self.spark, cols=cols), cols,
+                                 self._body(node.name)))
+        else:
+            view = DeltaView(SetOpFront(branches, self._base_frame),
+                             SetOp(RetractionAwareSetOp(
+                                 self.spark, cols=cols, op=op, all=is_all,
+                                 nsides=len(branches)), cols))
+        self._install(node, view)
 
     def _plan_delta_join_over_from_subquery(self, node: ast.CreateView,
                                             q) -> bool:
@@ -1971,7 +1804,7 @@ class MzSession:
         body = f"SELECT {', '.join(sel)} FROM {sub.table}"
         if sub.where:
             body += f" WHERE {sub.where}"
-        internal = f"__jsub_{node.name}"
+        internal = f"__jsub_{node.uid}"
         q2 = _dc_replace(q, sub=None, sub_alias=None, table=internal)
         return self._stacked(
             node, internal, body,
@@ -2015,7 +1848,7 @@ class MzSession:
             try:
                 (plan or self._create_delta_mv)(ast.CreateView(
                     name=name, body=body, materialized=True,
-                    maintenance="delta"))
+                    maintenance="delta", uid=self._uid(name)))
             except Exception:
                 self._forget(name)
                 raise
@@ -2031,12 +1864,11 @@ class MzSession:
                 self._forget(name)
             raise
         if made:
-            spec = self._delta_mvs[owner]
-            deps = list(spec.get("internal_deps", ()))
+            view = self._delta_mvs[owner]
+            deps = list(view.internal_deps)
             for name in made:
-                deps += [name, *self._delta_mvs[name].get("internal_deps",
-                                                          ())]
-            spec["internal_deps"] = tuple(dict.fromkeys(deps))
+                deps += [name, *self._delta_mvs[name].internal_deps]
+            view.internal_deps = tuple(dict.fromkeys(deps))
 
     def _plan_delta_stacked_subquery(self, node: ast.CreateView,
                                      q) -> bool:
@@ -2055,7 +1887,7 @@ class MzSession:
         sub, raw = q.sub, q.sub_raw
         if sub is None or raw is None:
             return False
-        internal = f"__jsub_{node.name}"
+        internal = f"__jsub_{node.uid}"
         aliases = dict(getattr(q, "aliases", {}) or {})
         if q.sub_alias:
             aliases[q.sub_alias] = internal
@@ -2118,7 +1950,7 @@ class MzSession:
         if from_at is None:
             return False
         inner = f"SELECT {', '.join(cols)} {node.body[from_at:]}"
-        internal = f"__jsub_{node.name}"
+        internal = f"__jsub_{node.uid}"
         q2 = _dc_replace(q, table=internal, joins=[], where=None,
                          aliases={}, from_items=[(internal, None)])
         return self._stacked(node, internal, inner, None,
@@ -2142,7 +1974,7 @@ class MzSession:
         # one maintained reduce per DISTINCT partition key set; the
         # empty set (OVER ()) is the global total — the share-of-total
         # idiom. keyed by the lowered key tuple.
-        sets: dict[tuple, dict] = {}
+        sets: dict[tuple, tuple[list, dict]] = {}
         for it in q.items:
             wa = it.win_agg
             if wa is not None:
@@ -2161,8 +1993,7 @@ class MzSession:
                     col = f"__x{len(exprs)}"
                     exprs[col] = arg
                 sk = tuple(k.lower() for k in keys)
-                st = sets.setdefault(sk, {"keys": keys, "wins": {}})
-                st["wins"][it.alias] = (kind, col)
+                sets.setdefault(sk, (keys, {}))[1][it.alias] = (kind, col)
                 out_cols.append(it.alias)
             elif it.is_column and it.alias is None:
                 plains.append(it.expr)
@@ -2182,126 +2013,13 @@ class MzSession:
         from materialize_spark.streaming.retraction import (
             RetractionAwareAgg,
         )
-        for st in sets.values():
-            st["agg"] = RetractionAwareAgg(
-                self.spark, keys=st["keys"] or ["__g"],
-                aggs=st["wins"])
-        spec = {"kind": "winagg", "table": q.table, "where": q.where,
-                "plains": plains, "out_cols": out_cols,
-                "exprs": exprs, "sets": list(sets.values())}
-        self._install_delta_mv(node.name, spec)
+        self._install(node, WindowAggView(
+            q.table, self._base_frame, where=q.where, plains=plains,
+            out_cols=out_cols, exprs=exprs, sets=[
+                WinSet(keys, wins, RetractionAwareAgg(
+                    self.spark, keys=keys or ["__g"], aggs=wins))
+                for keys, wins in sets.values()]))
         return True
-
-    def _feed_delta_mv_winagg(self, name: str, spec: dict, delta,
-                              initial: bool) -> None:
-        """Fold one base-table diff frame into a window-aggregate MV:
-        update each partition set's reduce, then refresh ONLY the rows
-        of touched partitions from the current table (a view with a
-        global OVER () set inherently refreshes every row — its output
-        genuinely changes table-wide when the total moves)."""
-        from pyspark.sql import functions as F
-
-        from materialize_spark.streaming.retraction import (
-            _ns_attach, _ns_probe,
-        )
-        if spec["where"]:
-            delta = delta.filter(
-                f"coalesce(({rewrite(spec['where'])}), false)")
-        for internal, src in spec["exprs"].items():
-            delta = delta.withColumn(internal, F.expr(rewrite(src)))
-        has_global = any(not st["keys"] for st in spec["sets"])
-        touched_by_set = []
-        for st in spec["sets"]:
-            in_cols = {c for _k, c in st["wins"].values()}
-            d = delta
-            if "__one" in in_cols:
-                d = d.withColumn("__one", F.lit(1))
-            if not st["keys"]:
-                d = d.withColumn("__g", F.lit(0))
-            keyed = d.select(*(st["keys"] or ["__g"]),
-                             *sorted(in_cols), "diff")
-            st["res"] = st["agg"].on_batch(keyed)
-            # fresh_break the (tiny) touched-key frames: every per-set probe
-            # on BOTH sides of the later result union references them,
-            # and live same-source plans would share exprIds (Catalyst
-            # relation-dedup 'key not found')
-            touched_by_set.append(
-                None if not st["keys"]
-                else fresh_break(keyed.select(*st["keys"]).distinct()))
-        base = self._base_frame(spec["table"])
-        if spec["where"]:
-            base = base.filter(
-                f"coalesce(({rewrite(spec['where'])}), false)")
-
-        def attach(rows, sets):
-            for st in sets:
-                if st["keys"]:
-                    rows = _ns_attach(rows, st["res"], st["keys"],
-                                      list(st["wins"]))
-                else:  # global total: one-row broadcast cross join
-                    rows = rows.crossJoin(
-                        F.broadcast(st["res"].drop("__g")
-                                    .select(*st["wins"])))
-            return rows
-
-        old = self._matviews.get(name)
-        if initial or old is None or has_global:
-            # global set (or formation): every row's output may change
-            result = attach(base.select(*spec["plains"]),
-                            spec["sets"]).select(*spec["out_cols"])
-            self._publish_delta_mv(name, fresh_break(result), initial)
-            return
-        # partition the base into per-set touched slices (disjoint by
-        # sequential anti-probe) and re-derive only those rows
-        # hit part i = rows touched by set i's partitions but not by an
-        # earlier set's (disjoint without materializing remainders).
-        # Every part probes the SAME checkpointed base/old leaf, so the
-        # later unions would share exprIds and trip Catalyst's relation
-        # dedup ('key not found') — fresh_break each part; all of them are
-        # touched-rows-sized, so the per-commit materialization stays
-        # O(touched), never O(table). The untouched remainder stays ONE
-        # live plan (used exactly once, in the result union).
-        base_proj = base.select(*spec["plains"])
-        hit_parts, old_hits = [], []
-        remaining_old = old
-        for i, (st, touched) in enumerate(
-                zip(spec["sets"], touched_by_set)):
-            hit = _ns_probe(base_proj, touched, st["keys"])
-            oh = _ns_probe(old, touched, st["keys"])
-            for j in range(i):
-                pj, tj = spec["sets"][j], touched_by_set[j]
-                hit = _ns_probe(hit, tj, pj["keys"], anti=True)
-                oh = _ns_probe(oh, tj, pj["keys"], anti=True)
-            hit_parts.append(fresh_break(hit))
-            old_hits.append(fresh_break(oh))
-            remaining_old = _ns_probe(remaining_old, touched,
-                                      st["keys"], anti=True)
-        new_touched = hit_parts[0]
-        for p in hit_parts[1:]:
-            new_touched = new_touched.unionByName(p)
-        # deliberately LIVE (not fresh_break'd): a bare checkpoint leaf under
-        # a later checkpointed union trips Spark's LogicalRDD
-        # constraint rewrite ('key not found' on an interior exprId);
-        # the plan stays small — hit parts are checkpoint leaves
-        new_rows = attach(new_touched,
-                          spec["sets"]).select(*spec["out_cols"])
-        old_touched = old_hits[0]
-        for p in old_hits[1:]:
-            old_touched = old_touched.unionByName(p)
-        out_delta = (new_rows.exceptAll(old_touched)
-                     .groupBy(*spec["out_cols"])
-                     .agg(F.count("*").cast("long").alias("diff"))
-                     .unionByName(
-                         old_touched.exceptAll(new_rows)
-                         .groupBy(*spec["out_cols"])
-                         .agg((-F.count("*").cast("long"))
-                              .alias("diff")))
-                     .groupBy(*spec["out_cols"])
-                     .agg(F.sum("diff").alias("diff"))
-                     .filter(F.col("diff") != 0))
-        result = fresh_break(remaining_old.unionByName(new_rows))
-        self._publish_delta_mv(name, result, initial,
-                               out_delta=out_delta)
 
     _MZNOW_L_RE = re.compile(
         r"(?is)^\s*MZ_NOW\s*\(\s*\)\s*(?P<op><=|<|>=|>)\s*(?P<e>.+)$")
@@ -2354,10 +2072,7 @@ class MzSession:
         for it in q.items:
             if re.search(r"(?i)\bmz_now\s*\(", it.expr):
                 return False  # the clock belongs in bounds, not values
-        agg = None
-        keys: list[str] = []
-        aggs: dict = {}
-        having = None
+        reduce = None
         out_exprs: list[str] = []
         out_cols: list[str] = []
         if q.group_by:
@@ -2368,14 +2083,10 @@ class MzSession:
             from materialize_spark.streaming.retraction import (
                 RetractionAwareAgg,
             )
-            parsed_sel = _classify_agg_items(q.items)
-            if parsed_sel is None:
+            parsed = _grouped_items(q)
+            if parsed is None or parsed[4]:
                 return False
-            keys, aggs, exprs, out_order, mpost = parsed_sel
-            gkeys = [k.strip() for k in q.group_by]
-            if not aggs or mpost or not _keys_match_group_by(
-                    keys, exprs, gkeys):
-                return False
+            keys, aggs, exprs, out_order, _post = parsed
             having = q.having
             if having is not None:
                 having = _having_over_aliases(having, aggs, exprs)
@@ -2391,7 +2102,9 @@ class MzSession:
                 else:
                     out_exprs.append(c)
             out_cols = keys + in_cols
-            agg = RetractionAwareAgg(self.spark, keys=keys, aggs=aggs)
+            reduce = Reduce(
+                RetractionAwareAgg(self.spark, keys=keys, aggs=aggs),
+                self._body(node.name), having=having, out_order=out_order)
         elif q.having:
             return False
         else:
@@ -2409,105 +2122,13 @@ class MzSession:
             self._delta_check_table(q.table)
         except KeyError:
             return False
-        from datetime import datetime
-        spec = {"kind": "temporal", "table": q.table,
-                "where": None,
-                "static": " AND ".join(f"({c})" for c in static)
-                if static else None,
-                "bounds": bounds, "out_exprs": out_exprs,
-                "out_cols": out_cols, "agg": agg, "keys": keys,
-                "aggs": aggs, "having": having,
-                "out_order": out_order if keys else None,
-                "last_tick": datetime.now()}
-        self._install_delta_mv(node.name, spec)
+        self._install(node, TemporalView(
+            q.table, self._base_frame,
+            static=" AND ".join(f"({c})" for c in static)
+            if static else None,
+            bounds=bounds, out_exprs=out_exprs, out_cols=out_cols,
+            reduce=reduce))
         return True
-
-    @staticmethod
-    def _vis_sql(bounds: list[tuple[str, str]], t) -> str:
-        """Visibility predicate of a row at logical time ``t`` (SQL
-        text): AND over the extracted mz_now() bound conjuncts with
-        the clock replaced by a timestamp literal."""
-        lit = "TIMESTAMP '" + t.strftime("%Y-%m-%d %H:%M:%S.%f") + "'"
-        parts = [f"({lit} {op} ({rewrite(e)}))" for op, e in bounds]
-        return "coalesce(" + " AND ".join(parts) + ", false)"
-
-    def _feed_delta_mv_temporal(self, name: str, spec: dict, delta,
-                                initial: bool, now=None) -> None:
-        """Advance one temporal MV from its last logical time T0 to
-        ``now`` (T1) and fold an optional commit delta evaluated at
-        the same instant. The published diff is
-
-            base⋅[vis(T1) ∧ ¬vis(T0)]  −  base⋅[vis(T0) ∧ ¬vis(T1)]
-            +  Δ⋅vis(T0)
-
-        which equals (post-commit rows visible at T1) − (pre-commit
-        rows visible at T0) — bound-crossing rows appear/retract as
-        +1/−1 diffs with no commit, exactly the reference's temporal
-        filter semantics. Per tick the work is one vectorized filter
-        scan of the base (no shuffle, no state); at 100 TB the scan
-        prunes by partitioning the base on its bound columns."""
-        from datetime import datetime
-
-        from pyspark.sql import functions as F
-
-        T0 = spec["last_tick"]
-        T1 = now if now is not None else max(datetime.now(), T0)
-        spec["last_tick"] = T1
-        base = self._base_frame(spec["table"])
-        if spec["static"]:
-            st = f"coalesce(({rewrite(spec['static'])}), false)"
-            base = base.filter(st)
-            if delta is not None:
-                delta = delta.filter(st)
-        vis0 = self._vis_sql(spec["bounds"], T0)
-        vis1 = self._vis_sql(spec["bounds"], T1)
-        if initial:
-            first = base.filter(vis1).selectExpr(*spec["out_exprs"])
-            if spec.get("agg") is not None:
-                result = spec["agg"].on_batch(
-                    first.withColumn("diff", F.lit(1)))
-                if spec.get("having"):
-                    result = result.filter(rewrite(spec["having"]))
-                self._publish_delta_mv(name, result, initial=True)
-            else:
-                self._publish_delta_mv(name, fresh_break(first),
-                                       initial=True)
-            return
-        terms = []
-        if T1 != T0:
-            terms.append(base.filter(f"({vis1}) AND NOT ({vis0})")
-                         .selectExpr(*spec["out_exprs"])
-                         .withColumn("diff", F.lit(1)))
-            terms.append(base.filter(f"({vis0}) AND NOT ({vis1})")
-                         .selectExpr(*spec["out_exprs"])
-                         .withColumn("diff", F.lit(-1)))
-        if delta is not None:
-            terms.append(delta.filter(vis0)
-                         .selectExpr(*spec["out_exprs"], "diff"))
-        if not terms:
-            return
-        out = terms[0]
-        for t in terms[1:]:
-            out = out.unionByName(t)
-        if spec.get("agg") is not None:
-            # sliding-window reduce: the temporal stage's ± diffs fold
-            # into the maintained aggregate, touched groups only
-            out = fresh_break(out.select(*spec["out_cols"], "diff"))
-            touched = out.select(*spec["keys"]).distinct()
-            result = spec["agg"].on_batch(out)
-            if spec.get("having"):
-                result = result.filter(rewrite(spec["having"]))
-            self._publish_delta_mv(name, result, False,
-                                   touched=touched,
-                                   keys=spec["keys"])
-            return
-        out_delta = (out.groupBy(*spec["out_cols"])
-                     .agg(F.sum("diff").alias("diff"))
-                     .filter(F.col("diff") != 0))
-        result = fresh_break(base.filter(vis1)
-                       .selectExpr(*spec["out_exprs"]))
-        self._publish_delta_mv(name, result, False,
-                               out_delta=out_delta)
 
     def tick_time(self, now=None) -> list[str]:
         """Advance the logical clock for every temporal delta MV:
@@ -2519,14 +2140,15 @@ class MzSession:
         from datetime import datetime
         self._apply_policy()
         ticked = []
-        for name, spec in list(self._delta_mvs.items()):
-            if spec.get("kind") != "temporal":
+        for name, view in list(self._delta_mvs.items()):
+            if not isinstance(view, TemporalView):
                 continue
             t1 = now if now is not None else datetime.now()
-            if t1 <= spec["last_tick"]:
+            if t1 <= view.last_tick:
                 continue
-            self._feed_delta_mv_temporal(name, spec, None, False,
-                                         now=t1)
+            change = view.advance(None, now=t1)
+            if change is not None:
+                self._publish_delta_mv(name, **change._asdict())
             ticked.append(name)
         return ticked
 
@@ -2593,62 +2215,40 @@ class MzSession:
             self._delta_check_table(q.table)
         except KeyError:
             return False
-        spec = {"kind": "winorder", "table": q.table, "where": q.where,
-                "keys": keys, "out_exprs": out_exprs,
-                "out_cols": out_cols}
-        self._install_delta_mv(node.name, spec)
+        self._install(node, WindowOrderView(
+            q.table, self._base_frame, where=q.where, keys=keys,
+            out_exprs=out_exprs, out_cols=out_cols))
         return True
 
-    def _feed_delta_mv_winorder(self, name: str, spec: dict, delta,
-                                initial: bool) -> None:
-        """Fold one base-table diff frame into an ordered-window MV:
-        re-derive ONLY the touched partitions' rows from the current
-        table (Spark's native window execution over the slice), keep
-        every untouched partition's rows as they are, and publish the
-        touched slice's consolidated old-vs-new diff."""
-        from pyspark.sql import functions as F
+    def _install(self, node: ast.CreateView, view: DeltaView) -> None:
+        """Register the delta view ``view`` planned for ``node``, with
+        the node's stable id, and publish its first state."""
+        view.uid = node.uid
+        self._delta_mvs[node.name] = view
+        self._publish_delta_mv(node.name, **view.form()._asdict(),
+                               initial=True)
 
-        from materialize_spark.streaming.retraction import _ns_probe
-        if spec["where"]:
-            delta = delta.filter(
-                f"coalesce(({rewrite(spec['where'])}), false)")
-        base = self._base_frame(spec["table"])
-        if spec["where"]:
-            base = base.filter(
-                f"coalesce(({rewrite(spec['where'])}), false)")
-        old = self._matviews.get(name)
-        if initial or old is None:
-            result = fresh_break(base.selectExpr(*spec["out_exprs"]))
-            self._publish_delta_mv(name, result, initial)
-            return
-        keys = spec["keys"]
-        touched = fresh_break(delta.select(*keys).distinct())
-        hit = fresh_break(_ns_probe(base, touched, keys))
-        new_rows = fresh_break(hit.selectExpr(*spec["out_exprs"]))
-        old_hits = fresh_break(_ns_probe(old, touched, keys))
-        remaining_old = _ns_probe(old, touched, keys, anti=True)
-        out_delta = (new_rows.withColumn("diff", F.lit(1))
-                     .unionByName(old_hits.withColumn("diff",
-                                                      F.lit(-1)))
-                     .groupBy(*spec["out_cols"])
-                     .agg(F.sum("diff").alias("diff"))
-                     .filter(F.col("diff") != 0))
-        result = fresh_break(remaining_old.unionByName(new_rows))
-        self._publish_delta_mv(name, result, initial,
-                               out_delta=out_delta)
+    def _uid(self, name: str) -> str:
+        """The stable id for a new delta view ``name``, picked once when
+        its planning starts and carried on its CreateView node: ``name``,
+        unless a live view (one renamed away from ``name``) still holds
+        it, then ``name_2``, ``name_3``, ... A view keeps its id across
+        RENAME."""
+        held = {v.uid for v in self._delta_mvs.values()}
+        uid, n = name, 1
+        while uid in held:
+            n += 1
+            uid = f"{name}_{n}"
+        return uid
 
-    def _install_delta_mv(self, name: str, spec: dict) -> None:
-        """Register a single-table delta MV and form it: the table's
-        current rows are the first insert batch."""
-        from pyspark.sql import functions as F
-        self._delta_mvs[name] = spec
-        self._feed_delta_mv(name, self._base_frame(spec["table"])
-                            .withColumn("diff", F.lit(1)), initial=True)
+    def _body(self, name: str):
+        """Evaluates the body of view ``name`` as written: the exact
+        schema (or keyless one-row answer) of a view with no state."""
+        body = self._matview_sql.get(name)
+        return lambda: self.spark.sql(rewrite(body))
 
     def _plan_delta_single_agg(self, node: ast.CreateView, q,
-                               pre: list[str] | None = None,
-                               pre_where: str | None = None,
-                               pre_layers: list | None = None) -> bool:
+                               layers: list | None = None) -> bool:
         """Grouped aggregate over one table: SELECT keys, AGG(expr) AS
         a[, ...] FROM t [WHERE] GROUP BY keys [HAVING ...] with AGG in
         SUM/COUNT/MIN/MAX/AVG. Plan selection mirrors the reference's
@@ -2657,8 +2257,8 @@ class MzSession:
         (Accumulable + semijoin threshold); everything else uses
         RetractionAwareAgg (Accumulable for sum/count/avg, Hierarchical
         support for min/max under retractions) with HAVING as a Filter
-        over the maintained result. ``pre``/``pre_where`` carry an
-        inner stateless Map/Filter (agg-over-subquery composition)."""
+        over the maintained result. ``layers`` carry inner stateless
+        Map/Filter subqueries (agg-over-subquery composition)."""
         from materialize_spark.streaming.retraction import (
             RetractionAwareAgg,
         )
@@ -2675,25 +2275,22 @@ class MzSession:
                              "equal the GROUP BY keys (by output name "
                              "or source expression)")
         self._delta_check_table(q.table)
+        front = SingleFront(q.table, self._base_frame, where=q.where,
+                            layers=layers or ())
         having = q.having
         if having is not None:
-            thr_spec = None if mpost else self._threshold_plan(
-                node, q, keys, aggs, exprs, pre, pre_where, pre_layers)
-            if thr_spec is not None:
-                thr_spec["out_order"] = out_order
-                self._install_delta_mv(node.name, thr_spec)
+            threshold = None if mpost else self._threshold_plan(
+                q, keys, aggs, exprs, out_order)
+            if threshold is not None:
+                self._install(node, DeltaView(front, threshold))
                 return True
             having = _having_over_aliases(having, aggs, exprs)
             if having is None:
                 return False  # HAVING over unselected aggregates
-        mv = RetractionAwareAgg(self.spark, keys=keys, aggs=aggs)
-        spec = {"mv": mv, "table": q.table, "keys": keys, "aggs": aggs,
-                "where": q.where, "kind": "agg",
-                "having": having, "exprs": exprs, "pre": pre,
-                "pre_where": pre_where, "pre_layers": pre_layers or (),
-                "post": mpost,
-                "out_order": None if mpost else out_order}
-        self._install_delta_mv(node.name, spec)
+        self._install(node, DeltaView(front, Reduce(
+            RetractionAwareAgg(self.spark, keys=keys, aggs=aggs),
+            self._body(node.name), exprs=exprs, post=mpost, having=having,
+            out_order=None if mpost else out_order)))
         return True
 
     def _plan_delta_global_agg(self, node: ast.CreateView, q) -> bool:
@@ -2724,21 +2321,15 @@ class MzSession:
             if having is None:
                 return False  # references unselected aggregates
         self._delta_check_table(q.table)
-        mv = RetractionAwareAgg(self.spark, keys=["__g"], aggs=aggs)
-        spec = {"mv": mv, "table": q.table, "keys": ["__g"],
-                "aggs": aggs, "where": q.where, "kind": "agg",
-                "having": having, "exprs": exprs, "pre": None,
-                "pre_where": None, "pre_layers": (),
-                "post": mpost,
-                "global_agg": True}
-        self._install_delta_mv(node.name, spec)
+        self._install(node, DeltaView(
+            SingleFront(q.table, self._base_frame, where=q.where),
+            Reduce(RetractionAwareAgg(self.spark, keys=["__g"], aggs=aggs),
+                   self._body(node.name), exprs=exprs, post=mpost,
+                   having=having, keyless=True)))
         return True
 
-    def _threshold_plan(self, node: ast.CreateView, q,
-                        keys: list[str], aggs: dict, exprs: dict,
-                        pre: list[str] | None,
-                        pre_where: str | None,
-                        pre_layers: list | None = None) -> dict | None:
+    def _threshold_plan(self, q, keys: list[str], aggs: dict,
+                        exprs: dict, out_order) -> Threshold | None:
         """The q18 inner shape: a single SUM(col)/COUNT(*) with a strict
         > threshold HAVING — maintained by ThresholdSemijoinMV (the
         accumulable reduce + threshold semijoin fast path). None when
@@ -2780,18 +2371,14 @@ class MzSession:
         mv = ThresholdSemijoinMV(self.spark, keys=keys,
                                  val=val or "__one",
                                  having=lambda s: s > thr, enrich=enrich)
-        return {"mv": mv, "table": q.table, "keys": keys, "val": val,
-                "where": q.where, "pre": pre, "pre_where": pre_where,
-                "pre_layers": pre_layers or ()}
+        return Threshold(mv, val, out_order)
 
     def _plan_delta_distinct(self, node: ast.CreateView, q,
-                             pre: list[str] | None = None,
-                             pre_where: str | None = None,
-                             pre_layers: list | None = None) -> bool:
+                             layers: list | None = None) -> bool:
         """SELECT DISTINCT delta MV (reference reduce.rs Distinct plan):
         net row multiplicity decides visibility, so deletes of one
         duplicate keep the row and deletes of the last one retire it.
-        ``pre``/``pre_where`` carry an inner stateless Map/Filter."""
+        ``layers`` carry inner stateless Map/Filter subqueries."""
         from materialize_spark.streaming.retraction import (
             RetractionAwareDistinct,
         )
@@ -2800,11 +2387,11 @@ class MzSession:
             return False
         cols = [it.expr for it in q.items]
         self._delta_check_table(q.table)
-        mv = RetractionAwareDistinct(self.spark, cols=cols)
-        spec = {"mv": mv, "table": q.table, "cols": cols,
-                "where": q.where, "kind": "distinct", "pre": pre,
-                "pre_where": pre_where, "pre_layers": pre_layers or ()}
-        self._install_delta_mv(node.name, spec)
+        self._install(node, DeltaView(
+            SingleFront(q.table, self._base_frame, where=q.where,
+                        layers=layers or ()),
+            Distinct(RetractionAwareDistinct(self.spark, cols=cols), cols,
+                     self._body(node.name))))
         return True
 
     @staticmethod
@@ -2875,34 +2462,25 @@ class MzSession:
         if shape is None:
             return False
         cols, icols, keys, ord_col, desc, k, inner, mode, rank_col = shape
-        mv = RetractionAwareTopK(
+        topk = TopK(RetractionAwareTopK(
             self.spark, keys=keys, order_col=ord_col, limit=k,
-            descending=desc, mode=mode, rank_col=rank_col)
+            descending=desc, mode=mode, rank_col=rank_col), icols, cols,
+            self._body(node.name))
         if inner.joins:
             parsed = self._normalize_join_chain(inner)
             if parsed is None:
                 return False
             tables, norm_links, kinds, acc_cols, extras, jrenames \
-            = parsed
+                = parsed
             if not all(c in acc_cols for c in icols):
                 return False
-            chain = self._build_delta_join_chain(tables, norm_links,
-                                                 kinds, extras,
-                                                 jrenames)
-            spec = {"kind": "join", "tables": tuple(tables),
-                    "chain": chain, "links": norm_links, "kinds": kinds,
-                    "rextras": extras, "jrenames": jrenames,
-                    "agg": None, "keys": keys, "aggs": {}, "cols": cols,
-                    "where": inner.where, "table": None,
-                    "topk": {"mv": mv, "icols": icols}}
-            self._delta_mvs[node.name] = spec
-            self._form_delta_mv_join(node.name)
+            self._install(node, DeltaView(JoinFront(
+                tables, norm_links, kinds, extras, jrenames,
+                self._base_frame, where=inner.where), topk))
             return True
         self._delta_check_table(inner.table)
-        spec = {"mv": mv, "table": inner.table, "keys": keys,
-                "icols": icols, "cols": cols, "where": inner.where,
-                "kind": "topk"}
-        self._install_delta_mv(node.name, spec)
+        self._install(node, DeltaView(SingleFront(
+            inner.table, self._base_frame, where=inner.where), topk))
         return True
 
     def _plan_delta_global_topk(self, node: ast.CreateView, q) -> bool:
@@ -2931,13 +2509,13 @@ class MzSession:
             if oc not in icols:
                 icols.append(oc)
         icols.append("__g")
-        mv = RetractionAwareTopK(
-            self.spark, keys=["__g"], order_col=ord_col, limit=q.limit,
-            descending=desc, order_by=list(q.order))
-        spec = {"mv": mv, "table": q.table, "keys": ["__g"],
-                "icols": icols, "cols": cols, "where": q.where,
-                "kind": "topk", "pre": ["*", "1 AS __g"]}
-        self._install_delta_mv(node.name, spec)
+        self._install(node, DeltaView(
+            SingleFront(q.table, self._base_frame, where=q.where,
+                        pre=["*", "1 AS __g"]),
+            TopK(RetractionAwareTopK(
+                self.spark, keys=["__g"], order_col=ord_col,
+                limit=q.limit, descending=desc, order_by=list(q.order)),
+                icols, cols, self._body(node.name))))
         return True
 
     def _plan_delta_agg_over_subquery(self, node: ast.CreateView,
@@ -2984,9 +2562,9 @@ class MzSession:
                      group_by=q.group_by, having=q.having)
         if q.distinct and not q.group_by:
             return self._plan_delta_distinct(node, q2,
-                                             pre_layers=layers)
+                                             layers=layers)
         return self._plan_delta_single_agg(node, q2,
-                                           pre_layers=layers)
+                                           layers=layers)
 
     def _plan_delta_over_join_subquery(self, node: ast.CreateView,
                                        q) -> bool:
@@ -3099,10 +2677,6 @@ class MzSession:
         SemiAntiFilterMV stage on the chain's diff stream (support
         counts keyed by the correlation; flips emit ± current outer
         rows), composed in front of the usual reduce/DISTINCT/spine."""
-        from materialize_spark.streaming.retraction import (
-            RetractionAwareAgg, RetractionAwareDistinct,
-        )
-
         if (q.order or q.limit is not None or q.sub is not None
                 or getattr(q, "sub_branches", None)):
             return False
@@ -3121,81 +2695,29 @@ class MzSession:
                 for onl, onr in pairs:
                     if onl != onr:
                         renmap[onr] = onl
-        keys: list[str] = []
-        aggs: dict[str, tuple[str, str]] = {}
-        cols: list[str] = []
-        exprs: dict[str, str] = {}
-        global_agg = False
-        post = None
-        out_order = None
-        if q.distinct and q.group_by:
+        terminal = self._chain_terminal(node, q, acc_cols)
+        if terminal is None:
             return False
-        if q.group_by:
-            parsed_sel = _classify_agg_items(q.items)
-            if parsed_sel is None:
-                return False
-            keys, aggs, exprs, out_order, mpost = parsed_sel
-            gkeys = [k.strip() for k in q.group_by]
-            if not aggs or not _keys_match_group_by(keys, exprs,
-                                                    gkeys):
-                return False
-            if mpost:
-                post, out_order = mpost, None
-        elif (q.items and not q.having
-              and _classify_keyless_items(q.items) is not None):
-            # keyless (global) aggregate above the filtered chain —
-            # the reference's reduce with an empty key; items may be
-            # scalar expressions around one aggregate (sum(x)/7.0)
-            aggs, exprs, post = _classify_keyless_items(q.items)
-            keys = ["__g"]
-            global_agg = True
-        else:
-            if not all(it.is_column and it.alias is None
-                       for it in q.items):
-                return False
-            cols = [it.expr for it in q.items]
-            if not all(c in acc_cols for c in cols):
-                return False
-        having = q.having
-        if having is not None:
-            having = _having_over_aliases(having, aggs, exprs)
-            if having is None:
-                return False
         aliases = set(getattr(q, "aliases", {}) or ())
-        chain = self._build_delta_join_chain(tables, norm_links, kinds,
-                                             extras, jrenames) \
-            if norm_links else []
-        agg = RetractionAwareAgg(self.spark, keys=keys, aggs=aggs) \
-            if aggs else None
-        dmv = RetractionAwareDistinct(self.spark, cols=cols) \
-            if q.distinct else None
         src_where = _sub_ident_tokens(q.where, renmap) if q.where \
             else None
         with self._internal_views(node.name) as internal_view:
-            stages = [self._build_subfilter_stage(
-                sf, tables, acc_cols, renmap, aliases, owner=node.name,
+            stages = tuple(self._build_subfilter_stage(
+                sf, tables, acc_cols, renmap, aliases,
+                owner=node.uid,
                 idx=i, internal_view=internal_view)
-                for i, sf in enumerate(q.subfilters)]
-            self._delta_mvs[node.name] = {
-                "kind": "semijoin", "tables": tuple(tables),
-                "chain": chain, "links": norm_links, "kinds": kinds,
-                "rextras": extras, "jrenames": jrenames,
-                "agg": agg, "keys": keys, "aggs": aggs, "cols": cols,
-                "where": None, "src_where": src_where,
-                "having": having, "table": None, "topk": None,
-                "distinct": dmv, "exprs": exprs, "renames": {},
-                "global_agg": global_agg, "post": post,
-                "out_order": None if global_agg else out_order,
-                "stages": stages,
-                "inner_tables": tuple({st["table"] for st in stages})}
-            self._form_delta_mv_semijoin(node.name)
+                for i, sf in enumerate(q.subfilters))
+            self._install(node, DeltaView(JoinFront(
+                tables, norm_links, kinds, extras, jrenames,
+                self._base_frame, where=src_where, stages=stages),
+                terminal))
         return True
 
     def _build_subfilter_stage(self, sf, tables: list[str],
                                acc_cols: set, renmap: dict,
                                aliases: set | None = None,
                                owner: str = "", idx: int = 0,
-                               internal_view=None) -> dict:
+                               internal_view=None) -> Stage:
         """Classify one SubFilter's inner conjuncts against the outer
         chain's columns into (correlation pairs, <> exclusion, local
         predicate) and instantiate the maintained stage. The
@@ -3382,11 +2904,10 @@ class MzSession:
                         "MAINTENANCE 'delta': * argument is only "
                         "valid for COUNT")
                 arg = "1"  # COUNT(*): every row weighs one
-            return {"op": op, "table": sf.table, "kind": "cmpagg",
-                    "prep_where": prep_where,
-                    "prep_select": list(pairs),
-                    "prep_arg": strip.sub("", arg),
-                    "cmp": (sf.cmp_op, sf.agg_kind)}
+            return Stage(op, sf.table, _cmp_label(sf.cmp_op, sf.agg_kind),
+                         prep_where=prep_where,
+                         prep_select=list(pairs),
+                         prep_arg=strip.sub("", arg))
         if sf.kind == "in" and sf.agg_kind:
             # the q18 membership idiom: IN (SELECT k FROM t GROUP BY k
             # HAVING AGG(x) cmp thr) ⟺ per-key aggregate threshold —
@@ -3418,11 +2939,11 @@ class MzSession:
             opx = CmpAggFilterMV(
                 self.spark, keys=okeys, qual_tmpl=base,
                 agg_kind=sf.agg_kind)
-            return {"op": opx, "table": sf.table, "kind": "cmpagg",
-                    "prep_where": prep_where,
-                    "prep_select": list(pairs),
-                    "prep_arg": strip.sub("", arg),
-                    "cmp": (sf.cmp_op, sf.agg_kind)}
+            return Stage(opx, sf.table,
+                         _cmp_label(sf.cmp_op, sf.agg_kind),
+                         prep_where=prep_where,
+                         prep_select=list(pairs),
+                         prep_arg=strip.sub("", arg))
         if ineq is not None:
             # EXISTS(... AND inner.c CMP outer.e): qualification is
             # per-key extremum vs the outer column — MAX for >/>=,
@@ -3443,10 +2964,10 @@ class MzSession:
             opx = CmpAggFilterMV(
                 self.spark, keys=okeys, qual_tmpl=qual,
                 agg_kind=agg_kind)
-            return {"op": opx, "table": sf.table, "kind": "cmpagg",
-                    "prep_where": prep_where,
-                    "prep_select": list(pairs), "prep_arg": ic,
-                    "cmp": (o, agg_kind)}
+            return Stage(opx, sf.table, _cmp_label(o, agg_kind),
+                         prep_where=prep_where,
+                         prep_select=list(pairs),
+                         prep_arg=ic)
         if sf.kind == "in":
             # the IN-value pair was appended LAST; the leading pairs
             # are the `=` correlations (keys). The stage gets them
@@ -3456,9 +2977,9 @@ class MzSession:
             op = SemiAntiFilterMV(
                 self.spark, keys=[oc for _ic, oc in pairs[:-1]],
                 kind=kind, in_col=pairs[-1][1])
-            return {"op": op, "table": sf.table, "kind": kind,
-                    "prep_where": prep_where,
-                    "prep_select": list(pairs)}
+            return Stage(op, sf.table, _SEMI_LABELS[kind],
+                         prep_where=prep_where,
+                         prep_select=list(pairs))
         kind = "not_exists" if sf.negated else "exists"
         prep_select = list(pairs)
         omember = None
@@ -3467,9 +2988,9 @@ class MzSession:
             omember = member[1]
         op = SemiAntiFilterMV(
             self.spark, keys=okeys, kind=kind, member=omember)
-        return {"op": op, "table": sf.table, "kind": kind,
-                "prep_where": prep_where,
-                "prep_select": prep_select}
+        return Stage(op, sf.table, _SEMI_LABELS[kind],
+                     prep_where=prep_where,
+                     prep_select=prep_select)
 
     @staticmethod
     def _cut_clauses(body: str, kws: tuple[str, ...] = ("HAVING",
@@ -3519,7 +3040,7 @@ class MzSession:
             SelectItem, SelectQ,
         )
 
-        internal = f"__jsub_{node.name}"
+        internal = f"__jsub_{node.uid}"
         inner_sql = self._cut_clauses(node.body, kws=("ORDER",
                                                       "LIMIT"))
         inner_q = _dc_replace(q, order=[], limit=None)
@@ -3571,7 +3092,7 @@ class MzSession:
             residual = _having_over_aliases(residual, aggs, exprs)
             if residual is None:
                 return False
-        internal = f"__jsub_{node.name}"
+        internal = f"__jsub_{node.uid}"
         inner_sql = self._cut_clauses(node.body)
         inner_q = _dc_replace(q, having=None, order=[])
         with self._internal_views(node.name) as internal_view:
@@ -3674,7 +3195,7 @@ class MzSession:
                 fail("a SELECT-list scalar subquery needs at least "
                      "one equality correlation (uncorrelated scalars "
                      "belong in WHERE/HAVING)")
-            internal = f"__psub_{node.name}_{idx}"
+            internal = f"__psub_{node.uid}_{idx}"
             if sf.template.strip() != "__AGGVAL__":
                 fail("a SELECT-list scalar subquery supports a bare "
                      "aggregate only (move the surrounding expression "
@@ -3708,7 +3229,7 @@ class MzSession:
         return True
 
     def _build_scalar_stage(self, sf, internal: str, internal_view,
-                            outer_strip: set) -> dict:
+                            outer_strip: set) -> Stage:
         """Uncorrelated scalar-subquery comparison (the q11/q22
         threshold family): the subquery body — ANY dispatcher-supported
         keyless-aggregate shape, joins and comma-FROM included — plans
@@ -3745,7 +3266,8 @@ class MzSession:
             raise ValueError(
                 "MAINTENANCE 'delta': the uncorrelated comparison "
                 f"subquery is not maintainable as a scalar ({e})")
-        if not self._delta_mvs[internal].get("global_agg"):
+        scalar = self._delta_mvs[internal].terminal
+        if not (isinstance(scalar, Reduce) and scalar.keyless):
             raise ValueError(
                 "MAINTENANCE 'delta': an uncorrelated comparison "
                 "subquery must be a keyless (scalar) aggregate")
@@ -3754,13 +3276,13 @@ class MzSession:
         if sf.negated:
             qual = f"(NOT {qual})"
         op = GlobalCmpFilterMV(self.spark, qual_tmpl=qual)
-        return {"op": op, "table": internal, "kind": "cmpscalar",
-                "prep_where": None,
-                "prep_select": [], "cmp": (sf.cmp_op, "scalar")}
+        return Stage(op, internal,
+                     f"GlobalScalarCompare[{sf.cmp_op} SCALAR]",
+                     whole=True)
 
     def _build_setmember_stage(self, sf, internal: str, internal_view,
                                outer_strip: set, acc_cols: set,
-                               renmap: dict) -> dict:
+                               renmap: dict) -> Stage:
         """Uncorrelated ``expr [NOT] IN (SELECT c FROM <complex
         body>)`` — the q20 nesting: the membership SET is ANY
         dispatcher-supported body (joins, aggregates, its own nested
@@ -3812,78 +3334,8 @@ class MzSession:
         kind = "not_in" if sf.negated else "in"
         op = SemiAntiFilterMV(self.spark, keys=[], kind=kind,
                               in_col=oc)
-        return {"op": op, "table": internal, "kind": kind,
-                "prep_where": None,
-                "prep_select": [(in_col, oc)]}
-
-    def _subfilter_inner_delta(self, stage: dict, delta):
-        """Project one inner-table diff frame to the stage's support
-        columns (outer-side names), applying the inner-local filter.
-        Scalar (cmpscalar) stages instead read the internal scalar
-        MV's CURRENT one-row result — the value is total state."""
-        from pyspark.sql import functions as F
-
-        if stage.get("kind") == "cmpscalar":
-            return self._matviews[stage["table"]]
-        d = delta
-        if stage["prep_where"]:
-            d = d.filter(
-                f"coalesce(({rewrite(stage['prep_where'])}), false)")
-        sel = [f"{ic} AS {oc}" for ic, oc in stage["prep_select"]]
-        if stage.get("prep_arg"):
-            sel.append(f"({rewrite(stage['prep_arg'])}) AS __arg")
-        return d.selectExpr(*sel, "diff")
-
-    def _feed_delta_mv_semijoin(self, name: str, table: str,
-                                delta) -> None:
-        """Fold one table's diffs through the chain and the semi/anti
-        filter stages: the chain output delta rides the stages' outer
-        side, while the same commit feeds any stage whose INNER table
-        it is (both in one bilinear on_batch when the table plays both
-        roles — the q21 self-correlation)."""
-        spec = self._delta_mvs[name]
-        out = None
-        if table in spec["tables"]:
-            out = self._fold_join_chain(spec, table, delta)
-            if out is not None and spec.get("src_where"):
-                out = out.filter(
-                    f"coalesce(({rewrite(spec['src_where'])}), false)")
-        for stage in spec["stages"]:
-            ind = (self._subfilter_inner_delta(stage, delta)
-                   if stage["table"] == table else None)
-            if out is None and ind is None:
-                continue
-            out = stage["op"].on_batch(outer_delta=out,
-                                       inner_delta=ind)
-        self._finish_delta_mv_join(name, out)
-
-    def _form_delta_mv_semijoin(self, name: str) -> None:
-        """Formation: base snapshots flow through the chain and every
-        stage in one pass (each stage folds its inner snapshot first,
-        against an empty outer state, then the outer snapshot
-        qualifies against the formed support — exactly the bilinear
-        rule's initial condition)."""
-        from pyspark.sql import functions as F
-
-        spec = self._delta_mvs[name]
-        snaps = [self._base_frame(t).withColumn("diff", F.lit(1))
-                 for t in spec["tables"]]
-        out = snaps[0]
-        for i, link in enumerate(spec["chain"]):
-            r = self._align_join_delta(spec, i, snaps[i + 1])
-            out = link.on_batch(left_delta=out, right_delta=r)
-            if out is None:
-                break
-        if out is not None and spec.get("src_where"):
-            out = out.filter(
-                f"coalesce(({rewrite(spec['src_where'])}), false)")
-        for stage in spec["stages"]:
-            ind = self._subfilter_inner_delta(
-                stage, self._base_frame(stage["table"])
-                .withColumn("diff", F.lit(1)))
-            out = stage["op"].on_batch(outer_delta=out,
-                                       inner_delta=ind)
-        self._finish_delta_mv_join(name, out, initial=True)
+        return Stage(op, internal, _SEMI_LABELS[kind],
+                     prep_select=[(in_col, oc)])
 
     def _normalize_join_chain(self, q):
         """Normalize a parsed left-deep join chain (select_ast.SelectQ
@@ -3970,61 +3422,71 @@ class MzSession:
         return tables, norm_links, kinds, acc_cols, extras, \
             jrenames
 
-    def _build_delta_join_chain(self, tables: list[str],
-                                norm_links: list[tuple[str, str]],
-                                kinds: list[str],
-                                extras: list | None = None,
-                                jrenames: list | None = None) -> list:
-        """Instantiate one maintained-join view per chain link: inner
-        links use the bilinear IncrementalJoinView; LEFT/FULL links use
-        IncrementalOuterJoinView (the reference lowers outer joins to
-        inner + null-padded anti parts, src/sql/src/plan/lowering.rs —
-        the delta rule follows that decomposition)."""
-        from materialize_spark.streaming.ivm_join import (
-            IncrementalJoinView, IncrementalOuterJoinView,
+    def _chain_terminal(self, node: ast.CreateView, q, acc_cols: set):
+        """The terminal over a join chain's output (``acc_cols``): a
+        keyed Reduce (GROUP BY), a keyless Reduce (aggregates without
+        GROUP BY; items may be scalar expressions around one aggregate,
+        sum(x)/7.0), a Distinct or a projection Spine over plain
+        columns. None when the SELECT list is out of shape."""
+        from materialize_spark.streaming.retraction import (
+            RetractionAwareAgg, RetractionAwareDistinct,
         )
 
-        types: dict[str, str] = {}
-        for i, t in enumerate(tables):
-            ren = (jrenames[i - 1] or {}) if jrenames and i > 0 \
-                else {}
-            for f in self._base_frame(t).schema.fields:
-                types.setdefault(ren.get(f.name, f.name),
-                                 f.dataType.simpleString())
-        chain = []
-        acc = list(self._base_frame(tables[0]).columns)
-        for i, pairs in enumerate(norm_links):
-            right = self._base_frame(tables[i + 1])
-            ren = (jrenames[i] or {}) if jrenames else {}
-            right_cols = [ren.get(c, c) for c in right.columns]
-            kind = kinds[i]
-            on = [onl for onl, _r in pairs]
-            onrs = {onr for _l, onr in pairs}
-            # outer ON semantics: when a key pair's names differ, the
-            # right key survives as a payload column (NULL on
-            # unmatched-left rows); its joining copy onl is padded NULL
-            # on unmatched-right rows
-            kept = ({onr for onl, onr in pairs if onr != onl}
-                    if kind != "inner" else set())
-            rcols = [c for c in right_cols
-                     if c not in onrs or c in kept]
-            if kind == "inner":
-                extra = extras[i] if extras else None
-                chain.append(IncrementalJoinView(
-                    on=on, extra=rewrite(extra) if extra else None))
-            else:
-                # same-name keys (USING-style) coalesce: the key column
-                # keeps the right side's value on unmatched-right rows
-                # and is never padded; distinct names NULL the left key
-                same = {onl for onl, onr in pairs if onr == onl}
-                chain.append(IncrementalOuterJoinView(
-                    on=on,
-                    pad_right=[(c, types[c]) for c in rcols],
-                    how=kind,
-                    pad_left=[(c, types[c]) for c in acc
-                              if c not in same]))
-            acc += rcols
-        return chain
+        keys: list[str] = []
+        aggs: dict[str, tuple[str, str]] = {}
+        cols: list[str] = []
+        exprs: dict[str, str] = {}
+        global_agg = False
+        post = None
+        out_order = None
+        out_names = None
+        if q.distinct and q.group_by:
+            return None  # DISTINCT + GROUP BY: out of shape
+        if q.group_by:
+            parsed = _grouped_items(q)
+            if parsed is None:
+                return None
+            keys, aggs, exprs, out_order, mpost = parsed
+            if mpost:
+                post, out_order = mpost, None
+        elif (q.items and not q.distinct and not q.having
+              and _classify_keyless_items(q.items) is not None):
+            # keyless (global) aggregate over the chain; items may be
+            # scalar expressions around one aggregate (sum(x)/7.0)
+            aggs, exprs, post = _classify_keyless_items(q.items)
+            keys = ["__g"]
+            global_agg = True
+        else:
+            if not all(it.is_column for it in q.items):
+                return None
+            cols = [it.expr for it in q.items]
+            onames = [it.alias or it.expr for it in q.items]
+            if len(set(onames)) != len(onames):
+                return None  # duplicate output names
+            if onames != cols:
+                out_names = onames
+            if not all(c in acc_cols for c in cols):
+                return None
+        having = q.having
+        if having is not None:
+            having = _having_over_aliases(having, aggs, exprs)
+            if having is None:
+                return None  # HAVING over unselected aggregates
+        empty = self._body(node.name)
+        if q.distinct:
+            return Distinct(RetractionAwareDistinct(
+                self.spark, cols=out_names or cols), cols, empty,
+                names=out_names)
+        if aggs:
+            return Reduce(
+                RetractionAwareAgg(self.spark, keys=keys, aggs=aggs),
+                empty, exprs=exprs, post=post, having=having,
+                out_order=None if global_agg else out_order,
+                keyless=global_agg)
+        # projection: the chain's output delta IS the published diff;
+        # SELECT-list aliases rename chain columns at the output
+        # boundary (WHERE spoke the chain names)
+        return Spine(empty, cols, out_names)
 
     def _plan_delta_join(self, node: ast.CreateView, q,
                          renames: dict[str, str] | None = None) -> bool:
@@ -4037,10 +3499,6 @@ class MzSession:
         join + grouped sum' always-fresh shape). WHERE may reference
         any column of the joined output — it filters the chain's
         output delta."""
-        from materialize_spark.streaming.retraction import (
-            RetractionAwareAgg,
-        )
-
         # left-deep chain: t1 JOIN t2 ON .. [JOIN t3 ON ..]* — link i
         # joins the accumulated left side with tables[i+1] (the
         # reference's linear join plans compose the same way)
@@ -4051,428 +3509,13 @@ class MzSession:
             = parsed
         if renames:
             acc_cols = {renames.get(c, c) for c in acc_cols}
-        keys: list[str] = []
-        aggs: dict[str, tuple[str, str]] = {}
-        cols: list[str] = []
-        exprs: dict[str, str] = {}
-        global_agg = False
-        post = None
-        out_order = None
-        out_names = None
-        if q.distinct and q.group_by:
-            return False  # DISTINCT + GROUP BY: out of shape
-        if q.group_by:
-            parsed_sel = _classify_agg_items(q.items)
-            if parsed_sel is None:
-                return False
-            keys, aggs, exprs, out_order, mpost = parsed_sel
-            gkeys = [k.strip() for k in q.group_by]
-            if not aggs or not _keys_match_group_by(keys, exprs,
-                                                    gkeys):
-                return False
-            if mpost:
-                post, out_order = mpost, None
-        elif (q.items and not q.distinct and not q.having
-              and _classify_keyless_items(q.items) is not None):
-            # keyless (global) aggregate over the chain; items may be
-            # scalar expressions around one aggregate (sum(x)/7.0)
-            aggs, exprs, post = _classify_keyless_items(q.items)
-            keys = ["__g"]
-            global_agg = True
-        else:
-            if not all(it.is_column for it in q.items):
-                return False
-            cols = [it.expr for it in q.items]
-            onames = [it.alias or it.expr for it in q.items]
-            if len(set(onames)) != len(onames):
-                return False  # duplicate output names
-            if onames != cols:
-                out_names = onames
-            if not all(c in acc_cols for c in cols):
-                return False
-        having = q.having
-        if having is not None:
-            having = _having_over_aliases(having, aggs, exprs)
-            if having is None:
-                return False  # HAVING over unselected aggregates
-        chain = self._build_delta_join_chain(tables, norm_links, kinds,
-                                             extras, jrenames)
-        agg = RetractionAwareAgg(self.spark, keys=keys, aggs=aggs) \
-            if aggs else None
-        dmv = None
-        if q.distinct:
-            from materialize_spark.streaming.retraction import (
-                RetractionAwareDistinct,
-            )
-            dmv = RetractionAwareDistinct(
-                self.spark, cols=out_names or cols)
-        spec = {"kind": "join", "tables": tuple(tables), "chain": chain,
-                "links": norm_links, "kinds": kinds, "agg": agg,
-                "rextras": extras, "jrenames": jrenames,
-                "keys": keys, "aggs": aggs, "cols": cols,
-                "where": q.where, "having": having,
-                "table": None, "topk": None,
-                "distinct": dmv, "exprs": exprs,
-                "global_agg": global_agg, "post": post,
-                "out_order": None if global_agg else out_order,
-                "out_names": out_names,
-                "renames": renames or {}}
-        self._delta_mvs[node.name] = spec
-        self._form_delta_mv_join(node.name)
+        terminal = self._chain_terminal(node, q, acc_cols)
+        if terminal is None:
+            return False
+        self._install(node, DeltaView(JoinFront(
+            tables, norm_links, kinds, extras, jrenames,
+            self._base_frame, renames=renames, where=q.where), terminal))
         return True
-
-    def _form_delta_mv_join(self, name: str) -> None:
-        """Formation: all base-table snapshots in ONE pass — with both
-        deltas present, each link's ΔA⋈ΔB term produces exactly A ⋈ B
-        (and the outer links' anti terms produce the unmatched rows)."""
-        from pyspark.sql import functions as F
-
-        spec = self._delta_mvs[name]
-        snaps = [self._base_frame(t).withColumn("diff", F.lit(1))
-                 for t in spec["tables"]]
-        out = snaps[0]
-        for i, link in enumerate(spec["chain"]):
-            r = self._align_join_delta(spec, i, snaps[i + 1])
-            out = link.on_batch(left_delta=out, right_delta=r)
-            if out is None:
-                break
-        self._finish_delta_mv_join(name, out, initial=True)
-
-    @staticmethod
-    def _align_join_delta(spec: dict, i: int, delta):
-        """Align a right-side delta to link i's join columns: inner (or
-        same-name) key pairs rename the right key to the accumulated
-        side's name; outer ON pairs with distinct names COPY it instead
-        — the original right key survives as a payload column
-        (NULL-padded on unmatched-left rows, ON semantics). Pushed-down
-        right-input pre-filters (an outer link's right-only residual ON
-        conjunct) apply here — every right delta and snapshot enters
-        through this alignment."""
-        from pyspark.sql import functions as F
-
-        jrenames = spec.get("jrenames") or ()
-        if i < len(jrenames) and jrenames[i]:
-            # self-join occurrence: the right delta reads through its
-            # occurrence names
-            for orig, renamed in jrenames[i].items():
-                delta = delta.withColumnRenamed(orig, renamed)
-        rextras = spec.get("rextras") or ()
-        if i < len(rextras) and isinstance(rextras[i], tuple) \
-                and rextras[i][0] == "right":
-            delta = delta.filter(
-                f"coalesce(({rewrite(rextras[i][1])}), false)")
-        kinds = spec.get("kinds") or ["inner"] * len(spec["links"])
-        for onl, onr in spec["links"][i]:
-            if onr == onl:
-                continue
-            if kinds[i] == "inner":
-                delta = delta.withColumnRenamed(onr, onl)
-            else:
-                delta = delta.withColumn(onl, F.col(onr))
-        return delta
-
-    def _fold_join_chain(self, spec: dict, table: str, delta):
-        """Fold one base table's diffs through a spec's join chain: the
-        table's link consumes the delta, and each downstream link
-        receives the previous link's output delta as its left input.
-        A chainless (single-table) spec passes the delta through. A
-        SELF-JOINED table plays several positions: its delta folds
-        through each, sequentially (the bilinear rule composes —
-        position 2 sees position 1's already-updated states), and the
-        output deltas sum."""
-        chain = spec["chain"]
-        if not chain:
-            return delta
-        out_total = None
-        for idx, t in enumerate(spec["tables"]):
-            if t != table:
-                continue
-            if idx == 0:
-                out = chain[0].on_batch(left_delta=delta)
-                rest = chain[1:]
-            else:
-                d = self._align_join_delta(spec, idx - 1, delta)
-                out = chain[idx - 1].on_batch(right_delta=d)
-                rest = chain[idx:]
-            for link in rest:
-                if out is None:
-                    break
-                out = link.on_batch(left_delta=out)
-            if out is not None:
-                out_total = out if out_total is None \
-                    else out_total.unionByName(out)
-        return out_total
-
-    def _feed_delta_mv_join(self, name: str, table: str,
-                            delta) -> None:
-        spec = self._delta_mvs[name]
-        out = self._fold_join_chain(spec, table, delta)
-        self._finish_delta_mv_join(name, out)
-
-    def _finish_delta_mv_join(self, name: str, out,
-                              initial: bool = False) -> None:
-        """Apply WHERE / aggregate / projection to a join chain's output
-        delta and republish the maintained result."""
-        from pyspark.sql import functions as F
-
-        spec = self._delta_mvs[name]
-        if out is not None:
-            # inner plain-column aliases rename the chain output FIRST
-            # (filters below speak the renamed columns)
-            for orig, new in spec.get("renames", {}).items():
-                out = out.withColumnRenamed(orig, new)
-        if out is not None and spec["where"]:
-            out = out.filter(
-                f"coalesce(({rewrite(spec['where'])}), false)")
-        touched = tkeys = None
-        if spec.get("topk") is not None:
-            # TopK over a join chain: when the outer projection keeps
-            # the group keys, the publish diff confines to the touched
-            # groups (the maintained result replaces whole touched
-            # groups); key-dropping projections fall back to the small
-            # O(k·groups) full-result diff.
-            tk = spec["topk"]
-            if out is None and not initial:
-                return  # nothing changed
-            if out is not None:
-                keyed = out.select(*tk["icols"], "diff")
-                tkk = tk["mv"].keys
-                if all(k in spec["cols"] for k in tkk):
-                    touched, tkeys = (keyed.select(*tkk).distinct(),
-                                      list(tkk))
-                result = tk["mv"].on_batch(keyed).select(*spec["cols"])
-            else:
-                result = (tk["mv"].result().select(*spec["cols"])
-                          if tk["mv"]._result is not None else None)
-            if result is None:
-                result = self.spark.sql(
-                    rewrite(self._matview_sql[name])).limit(0)
-            self._publish_delta_mv(name, result, initial,
-                                   touched=touched, keys=tkeys)
-            return
-        if spec.get("distinct") is not None:
-            dmv = spec["distinct"]
-            if out is None and not initial:
-                return  # nothing changed
-            if out is not None:
-                onames = spec.get("out_names") or spec["cols"]
-                sel = [F.col(c).alias(n)
-                       for c, n in zip(spec["cols"], onames)]
-                keyed = out.select(*sel, "diff")
-                touched, tkeys = (keyed.select(*onames).distinct(),
-                                  onames)
-                result = dmv.on_batch(keyed)
-            else:
-                result = (dmv.result() if dmv._result is not None
-                          else None)
-            if result is None:
-                result = self.spark.sql(
-                    rewrite(self._matview_sql[name])).limit(0)
-            self._publish_delta_mv(name, result, initial,
-                                   touched=touched, keys=tkeys)
-            return
-        if spec["agg"] is not None:
-            if out is None and not initial:
-                return  # nothing changed
-            if out is not None:
-                for internal, src in spec.get("exprs", {}).items():
-                    out = out.withColumn(internal,
-                                         F.expr(rewrite(src)))
-                in_cols = {c for _k, c in spec["aggs"].values()}
-                if "__one" in in_cols:
-                    out = out.withColumn("__one", F.lit(1))
-                if spec.get("global_agg"):
-                    out = out.withColumn("__g", F.lit(0))
-                out = out.select(*spec["keys"], *sorted(in_cols),
-                                 "diff")
-                if not spec.get("global_agg"):
-                    touched, tkeys = (out.select(*spec["keys"])
-                                      .distinct(), spec["keys"])
-                result = spec["agg"].on_batch(out)
-            else:
-                result = spec["agg"].result() \
-                    if spec["agg"]._acc is not None else None
-            if result is not None and spec.get("global_agg"):
-                result = result.drop("__g")
-                if result.isEmpty():
-                    # keyless aggregates: one row on empty input
-                    # (COUNT = 0, the rest NULL), typed from the
-                    # maintained result's own schema
-                    cols_ = []
-                    for f in result.schema.fields:
-                        kind_ = spec["aggs"][f.name][0]
-                        base = F.lit(0) if kind_.startswith("count") \
-                            else F.lit(None)
-                        cols_.append(base.cast(f.dataType)
-                                     .alias(f.name))
-                    result = self.spark.range(1).select(*cols_)
-            if result is not None and spec.get("post"):
-                result = result.selectExpr(
-                    *[rewrite(e) for e in spec["post"]])
-            if result is not None and spec.get("having"):
-                result = result.filter(rewrite(spec["having"]))
-        else:
-            # Projection-shaped join MV: the chain's output delta IS
-            # the published diff; result = an append-only parts spine.
-            # SELECT-list aliases rename chain columns at the output
-            # boundary (WHERE above spoke the chain names).
-            onames = spec.get("out_names") or spec["cols"]
-            sel = [F.col(c).alias(n)
-                   for c, n in zip(spec["cols"], onames)]
-            self._publish_spine(name, spec,
-                                out.select(*sel, "diff")
-                                if out is not None else None, initial)
-            return
-        if result is None:
-            # nothing joined yet (both sides empty): evaluate the body
-            # once — an exact-schema EMPTY snapshot, except keyless
-            # aggregates whose SQL itself yields the one-row guarantee
-            df = self.spark.sql(rewrite(self._matview_sql[name]))
-            result = df if spec.get("global_agg") else df.limit(0)
-        self._publish_delta_mv(name, result, initial,
-                               touched=touched, keys=tkeys)
-
-    def _feed_delta_mv(self, name: str, delta, initial: bool = False):
-        """Fold one explicit-diff update frame of the BASE table into a
-        delta MV and republish its (always fresh) result."""
-        from pyspark.sql import functions as F
-
-        from materialize_spark.streaming.history import RetainedHistory
-        spec = self._delta_mvs[name]
-        if spec.get("kind") == "winagg":
-            self._feed_delta_mv_winagg(name, spec, delta, initial)
-            return
-        if spec.get("kind") == "winorder":
-            self._feed_delta_mv_winorder(name, spec, delta, initial)
-            return
-        if spec.get("kind") == "temporal":
-            self._feed_delta_mv_temporal(name, spec, delta, initial)
-            return
-        for lw, lsel in spec.get("pre_layers", ()):
-            # stateless subquery layers, innermost first (arbitrary
-            # nesting depth — each is a Map/Filter the reference's mfp
-            # fusion would fold into the surrounding operator): WHERE
-            # filters the previous layer's output, then the select list
-            # computes this layer's columns, per delta
-            if lw:
-                delta = delta.filter(f"coalesce(({lw}), false)")
-            if lsel:
-                delta = delta.selectExpr(*lsel, "diff")
-        if spec.get("pre_where"):
-            # inner stateless filter (agg-over-subquery composition):
-            # applied to the base delta before the inner projection
-            delta = delta.filter(
-                f"coalesce(({spec['pre_where']}), false)")
-        if spec.get("pre"):
-            # inner stateless Map/Project: rename/compute the columns
-            # the outer reduce consumes (mfp fusion per delta)
-            delta = delta.selectExpr(*spec["pre"], "diff")
-        if spec["where"]:
-            delta = delta.filter(f"coalesce(({rewrite(spec['where'])}), "
-                                 "false)")
-        touched = tkeys = None
-        if spec.get("kind") == "agg":
-            if spec.get("global_agg"):
-                delta = delta.withColumn("__g", F.lit(0))
-            for internal, src in spec.get("exprs", {}).items():
-                # expression aggregate inputs (SUM(a * (1 - b))):
-                # computed on the delta before the keyed reduce
-                delta = delta.withColumn(internal, F.expr(rewrite(src)))
-            in_cols = {c for _k, c in spec["aggs"].values()}
-            if "__one" in in_cols:  # COUNT(*): every row weighs 1
-                delta = delta.withColumn("__one", F.lit(1))
-            delta = delta.select(*spec["keys"], *sorted(in_cols), "diff")
-            touched, tkeys = (delta.select(*spec["keys"]).distinct(),
-                              spec["keys"])
-        elif spec.get("kind") == "topk":
-            delta = delta.select(*spec["icols"], "diff")
-            if all(k in spec["cols"] for k in spec["keys"]):
-                # grouped TopK whose projection KEEPS the group keys:
-                # the publish diff confines to the touched groups (the
-                # maintained result replaces whole touched groups, so
-                # the old-vs-new slice diff is exact); key-dropping
-                # projections (incl. the global __g TopK) keep the
-                # small full-result diff
-                touched, tkeys = (delta.select(*spec["keys"])
-                                  .distinct(), spec["keys"])
-        elif spec.get("kind") == "distinct":
-            delta = delta.select(*spec["cols"], "diff")
-            touched, tkeys = (delta.select(*spec["cols"]).distinct(),
-                              spec["cols"])
-        else:
-            if spec["val"] is None:  # COUNT(*): every row weighs 1
-                delta = delta.withColumn("__one", F.lit(1))
-            delta = delta.select(*spec["keys"], spec["val"] or "__one",
-                                 "diff")
-            touched, tkeys = (delta.select(*spec["keys"]).distinct(),
-                              spec["keys"])
-        result = spec["mv"].on_batch(delta)
-        if spec.get("global_agg"):
-            result = result.drop("__g")
-            if result.isEmpty():
-                # keyless aggregates return ONE row on empty input:
-                # COUNT = 0, everything else NULL (typed from the
-                # maintained result's own schema)
-                cols = []
-                for f in result.schema.fields:
-                    kind = spec["aggs"][f.name][0]
-                    base = F.lit(0) if kind == "count" else F.lit(None)
-                    cols.append(base.cast(f.dataType).alias(f.name))
-                result = self.spark.range(1).select(*cols)
-            touched = tkeys = None
-        if spec.get("kind") == "topk":  # project to the outer SELECT list
-            result = result.select(*spec["cols"])
-        if spec.get("post"):
-            # multi-aggregate expression heads (sum(a)/sum(b) AS x):
-            # the result-level projection rebuilds the SELECT list
-            # over the separately-maintained aggregates
-            result = result.selectExpr(
-                *[rewrite(e) for e in spec["post"]])
-        if spec.get("having"):
-            # HAVING = a Filter above the maintained Reduce (the result
-            # is fully maintained, so the threshold is an ordinary
-            # filter over its aggregate-alias columns)
-            result = result.filter(rewrite(spec["having"]))
-        self._publish_delta_mv(name, result, initial,
-                               touched=touched, keys=tkeys)
-
-    def _publish_spine(self, name: str, spec: dict, out,
-                       initial: bool = False) -> None:
-        """Publish one batch of a spine-maintained MV (projection-shaped
-        join MVs, UNION ALL MVs): the operator's signed output delta is
-        consolidated within the batch, appended to the MV's parts-spine
-        (streaming/state_spill.py), and published AS the diff — per
-        commit the work is O(delta), never a re-consolidation or
-        snapshot diff of the full result (reference: the MV sink reads
-        its input arrangement's deltas, src/compute/src/sink/
-        materialized_view.rs). Requires multiset-consistent feeds (a
-        row is never retracted below zero), which every engine table
-        commit guarantees."""
-        from pyspark.sql import functions as F
-
-        from materialize_spark.streaming.state_spill import (
-            SpilledPartsState,
-        )
-        out_delta = None
-        if out is not None:  # columns: the MV's output names + diff
-            spine = spec.setdefault("proj_spine", SpilledPartsState(
-                [], measures=("diff",)))
-            out_delta = spine.consolidate(out)
-            spine.append(out_delta)
-        elif not initial:
-            return  # nothing changed: no republish, no frames
-        spine = spec.get("proj_spine")
-        if spine is None:
-            result = self.spark.sql(
-                rewrite(self._matview_sql[name])).limit(0)
-        else:
-            result = (spine.consolidate(spine.probe_frame(None))
-                      .filter(F.col("diff") > 0)
-                      .withColumn("__i", F.explode(
-                          F.sequence(F.lit(1), F.col("diff"))))
-                      .drop("diff", "__i"))
-        self._publish_delta_mv(name, result, initial,
-                               out_delta=out_delta)
 
     def _publish_delta_mv(self, name: str, result,
                           initial: bool = False, out_delta=None,
@@ -4500,15 +3543,6 @@ class MzSession:
         from pyspark.sql import functions as F
 
         from materialize_spark.streaming.history import RetainedHistory
-        order = (self._delta_mvs.get(name) or {}).get("out_order")
-        if order and result is not None \
-                and list(result.columns) != list(order) \
-                and set(result.columns) == set(order):
-            # maintained reduces are keys-first; the reference keeps
-            # the SELECT-list order — restore it at the publish surface
-            result = result.select(*order)
-            if out_delta is not None:
-                out_delta = out_delta.select(*order, "diff")
         old = self._matviews.get(name)
         self._matviews[name] = result
         self.catalog.create_view(name, result)
@@ -4577,27 +3611,20 @@ class MzSession:
         self._feed_delta_mvs_for_table(name, delta)
 
     def _dependents(self, rel: str) -> list[str]:
-        """The delta views that read ``rel`` (a spec's ``table``,
-        ``tables`` or ``inner_tables``), in creation order — so a
-        planner-owned internal comes before its owner. The one commit
-        fan-out, and the dependency check of DROP and RENAME."""
-        return [n for n, sp in self._delta_mvs.items()
-                if n != rel and (sp.get("table") == rel
-                                 or rel in sp.get("tables", ())
-                                 or rel in sp.get("inner_tables", ()))]
+        """The delta views whose ``inputs`` hold ``rel``, in creation
+        order — so a planner-owned internal comes before its owner. The
+        one commit fan-out, and the dependency check of DROP and
+        RENAME."""
+        return [n for n, v in self._delta_mvs.items()
+                if n != rel and rel in v.inputs]
 
     def _feed_delta_mvs_for_table(self, table: str, delta) -> None:
-        feeds = {"union": self._feed_delta_mv_union,
-                 "setop": self._feed_delta_mv_setop,
-                 "semijoin": self._feed_delta_mv_semijoin,
-                 "wmr": self._feed_delta_mv_wmr,
-                 "join": self._feed_delta_mv_join}
+        """Fold one commit's diff frame of ``table`` into every delta
+        view that reads it and publish each change."""
         for name in self._dependents(table):
-            feed = feeds.get(self._delta_mvs[name].get("kind"))
-            if feed is None:
-                self._feed_delta_mv(name, delta)
-            else:
-                feed(name, table, delta)
+            change = self._delta_mvs[name].feed(table, delta)
+            if change is not None:
+                self._publish_delta_mv(name, **change._asdict())
 
     def _create_view(self, node: ast.CreateView, sql: str):
         # PG requires SELECT on every base relation the body references —
@@ -6001,8 +5028,8 @@ class MzSession:
         for dep in self._dependents(name) if cascade else ():
             if dep in self._delta_mvs:  # not already cascaded away
                 self._forget(dep, cascade=True)
-        internals = (self._delta_mvs.get(name) or {}).get(
-            "internal_deps", ())
+        view = self._delta_mvs.get(name)
+        internals = view.internal_deps if view is not None else ()
         for n in (name, *internals):
             self._close_exec_sub(n)
             self.catalog.drop(n, if_exists=True)
@@ -6483,16 +5510,11 @@ class MzSession:
         name = f"__subq{self._subq_n}"
         self._matview_sql[name] = body
         fake = ast.CreateView(name=name, body=body, materialized=True,
-                              maintenance="delta")
+                              maintenance="delta", uid=self._uid(name))
         try:
             op, is_all, qs = parse_set_op_branches(body)
             if len(qs) > 1:
-                if op == "union" and is_all:
-                    self._plan_delta_union(fake, qs)
-                elif op == "union":
-                    self._plan_delta_union_distinct(fake, qs)
-                else:
-                    self._plan_delta_setop(fake, qs, op, is_all)
+                self._plan_delta_setop(fake, qs, op, is_all)
             else:
                 self._plan_delta_mv(fake, qs[0])
             return name
@@ -6953,20 +5975,20 @@ class MzSession:
         reference's EXPLAIN over an installed dataflow shows its
         per-operator incremental plans the same way
         (src/compute-types/src/plan/{reduce,top_k,join}.rs)."""
-        spec = self._delta_mvs.get(node.name)
-        if spec is None:
+        view = self._delta_mvs.get(node.name)
+        if view is None:
             if node.name in self._matviews:
                 raise ValueError(
                     f"{node.name!r} is not delta-maintained (snapshot "
                     "/ REFRESH MV) — EXPLAIN MAINTENANCE applies to "
                     "WITH (MAINTENANCE 'delta') views")
             raise KeyError(f"unknown materialized view {node.name!r}")
-        lines = self._render_maintenance(spec)
+        lines = self._render_maintenance(view)
         return self.spark.createDataFrame(
             [(i, ln) for i, ln in enumerate(lines)],
             "seq int, plan string")
 
-    def _render_maintenance(self, spec: dict) -> list[str]:
+    def _render_maintenance(self, view: DeltaView) -> list[str]:
         """One indented line per maintained operator, leaves last.
         Planner-internal upstreams (FROM-subquery desugar) inline their
         own subtree; user-created upstream MVs render as Imports."""
@@ -6980,178 +6002,7 @@ class MzSession:
             return f"Import {t} (upstream delta MV)" \
                 if t in self._delta_mvs else f"Scan {t}"
 
-        def branch_lines(branches, pad="  "):
-            out = []
-            for b in branches:
-                mfp = f"{pad}MapFilterProject"
-                if b.get("where"):
-                    mfp += f" [filter: {b['where']}]"
-                out.append(mfp)
-                out.append(f"{pad}  {rel(b['table'])}")
-            return out
-
-        kind = spec.get("kind")
-        lines: list[str] = []
-        if kind == "union":
-            if spec.get("agg") is not None:
-                a = spec["agg"]
-                lines.append(
-                    f"Reduce keys={a.keys} aggs={list(a.aggs)}"
-                    + (f" having=[{spec['having']}]"
-                       if spec.get("having") else ""))
-            elif spec.get("distinct") is not None:
-                lines.append(f"Distinct cols={spec['dcols']}")
-            lines.append("Union (diff-sum, linear)")
-            lines += branch_lines(spec["branches"])
-        elif kind == "setop":
-            mv = spec["mv"]
-            op = ("ExceptAll" if mv.op == "except" and mv.all else
-                  "Except" if mv.op == "except" else
-                  "IntersectAll" if mv.all else "Intersect")
-            lines.append(
-                f"Threshold[{op}] sides={mv.nsides} "
-                f"(per-side multiplicity state)")
-            lines += branch_lines(spec["branches"])
-        elif kind == "join":
-            if spec.get("agg") is not None:
-                lines.append(
-                    f"Reduce keys={spec['keys']} "
-                    f"aggs={list(spec['aggs'])}"
-                    + (f" having=[{spec['having']}]"
-                       if spec.get("having") else ""))
-            if spec.get("topk") is not None:
-                tk = spec["topk"]["mv"]
-                lines.append(
-                    f"TopK mode={tk.mode} keys={tk.keys} "
-                    f"order={tk.order_col} limit={tk.limit}")
-            if spec.get("distinct") is not None:
-                lines.append("Distinct")
-            if spec.get("where"):
-                lines.append(f"Filter [{spec['where']}]")
-            lines.append(
-                "DeltaJoin (bilinear: dA*B + A*dB + dA*dB, "
-                "spill-tiered state)")
-            lines.append(f"  {rel(spec['tables'][0])}")
-            for i, t in enumerate(spec["tables"][1:]):
-                k = spec["kinds"][i]
-                on = spec["links"][i]
-                lines.append(f"  {k.upper()} JOIN {rel(t)} on={on}")
-        elif kind == "semijoin":
-            if spec.get("agg") is not None:
-                lines.append(
-                    f"Reduce keys={spec['keys']} "
-                    f"aggs={list(spec['aggs'])}"
-                    + (f" having=[{spec['having']}]"
-                       if spec.get("having") else ""))
-            if spec.get("distinct") is not None:
-                lines.append("Distinct")
-            for st in reversed(spec["stages"]):
-                op = st["op"]
-                label = {"exists": "SemiJoin[EXISTS]",
-                         "not_exists": "AntiJoin[NOT EXISTS]",
-                         "in": "SemiJoin[IN]",
-                         "not_in": "AntiJoin[NOT IN]",
-                         "cmpagg": "ScalarAggCompare",
-                         "cmpscalar": "GlobalScalarCompare"}[
-                             st["kind"]]
-                if st["kind"] in ("cmpagg", "cmpscalar"):
-                    cop, ckind = st["cmp"]
-                    label += f"[{cop} {ckind.upper()}]"
-                extra = (f" exclude-member={op.member}"
-                         if getattr(op, "member", None) else "")
-                lines.append(
-                    f"{label} keys={getattr(op, 'keys', [])}{extra} "
-                    "(support counts, flip retractions)")
-                lines.append(f"  {rel(st['table'])} (inner)"
-                             + (f" [filter: {st['prep_where']}]"
-                                if st.get("prep_where") else ""))
-            if spec.get("src_where"):
-                lines.append(f"Filter [{spec['src_where']}]")
-            if spec["chain"]:
-                lines.append(
-                    "DeltaJoin (bilinear: dA*B + A*dB + dA*dB, "
-                    "spill-tiered state)")
-                lines.append(f"  {rel(spec['tables'][0])}")
-                for i, t in enumerate(spec["tables"][1:]):
-                    k = spec["kinds"][i]
-                    on = spec["links"][i]
-                    lines.append(f"  {k.upper()} JOIN {rel(t)} on={on}")
-            else:
-                lines.append(f"{rel(spec['tables'][0])}")
-        elif kind == "winagg":
-            for st in spec["sets"]:
-                part = st["keys"] if st["keys"] else "[] (global)"
-                lines.append(
-                    f"WindowAggregate partition={part} "
-                    f"aggs={list(st['wins'])} "
-                    "(Reduce + touched-partition row refresh)")
-            if spec.get("where"):
-                lines.append(f"  Filter [{spec['where']}]")
-            lines.append(f"  {rel(spec['table'])}")
-        elif kind == "wmr":
-            wm = spec["wmr"]
-            mode = "warm-start fixpoint (monotone, insert-only)" \
-                if spec.get("monotone") else "cold fixpoint per commit"
-            lines.append(
-                f"LetRec bindings={[b[0] for b in wm.bindings]} "
-                f"[{mode}]")
-            for t in spec["tables"]:
-                lines.append(f"  {rel(t)}")
-        elif kind == "temporal":
-            lines.append(
-                f"TemporalFilter bounds={spec['bounds']} "
-                "(rows appear/retract as tick_time passes the bounds)")
-            if spec.get("static"):
-                lines.append(f"  Filter [{spec['static']}]")
-            lines.append(f"  {rel(spec['table'])}")
-        elif kind == "winorder":
-            lines.append(
-                f"WindowOrdered partition={spec['keys']} "
-                f"exprs={spec['out_cols']} "
-                "(touched-partition recompute via native windows)")
-            if spec.get("where"):
-                lines.append(f"  Filter [{spec['where']}]")
-            lines.append(f"  {rel(spec['table'])}")
-        elif kind == "topk":
-            tk = spec["mv"]
-            lines.append(
-                f"TopK mode={tk.mode} keys={tk.keys} "
-                f"order={tk.order_col} limit={tk.limit} "
-                "(compacted support survives deletes)")
-            if spec.get("where"):
-                lines.append(f"  Filter [{spec['where']}]")
-            lines.append(f"  {rel(spec['table'])}")
-        elif kind == "distinct":
-            lines.append(f"Distinct cols={spec['cols']} "
-                         "(net-multiplicity state)")
-            if spec.get("where"):
-                lines.append(f"  Filter [{spec['where']}]")
-            lines.append(f"  {rel(spec['table'])}")
-        elif kind == "agg":
-            a = spec["mv"]
-            strategies = {
-                out: ("accumulable" if k[0] in ("sum", "count", "avg")
-                      else "hierarchical")
-                for out, k in spec["aggs"].items()}
-            head = ("Reduce keys=[] (global, one-row guarantee)"
-                    if spec.get("global_agg")
-                    else f"Reduce keys={spec['keys']}")
-            lines.append(f"{head} aggs={strategies}"
-                         + (f" having=[{spec['having']}]"
-                            if spec.get("having") else ""))
-            for lw, lsel in spec.get("pre_layers", ()):
-                lines.append("  MapFilterProject (subquery layer)"
-                             + (f" [filter: {lw}]" if lw else ""))
-            if spec.get("where"):
-                lines.append(f"  Filter [{spec['where']}]")
-            lines.append(f"  {rel(spec['table'])}")
-        else:
-            # threshold-semijoin and any other single-table form
-            lines.append(f"{type(spec['mv']).__name__} "
-                         f"keys={spec.get('keys')}")
-            if spec.get("where"):
-                lines.append(f"  Filter [{spec['where']}]")
-            lines.append(f"  {rel(spec['table'])}")
+        lines = view.explain(rel)
         out: list[str] = []
         for ln in lines:  # flatten inlined subplans, keeping indent
             if "\n" in ln:

@@ -41,11 +41,6 @@ def held(s, name):
             + [name] * (name in s.catalog._views))
 
 
-_FEEDS = ("_feed_delta_mv", "_feed_delta_mv_union", "_feed_delta_mv_setop",
-          "_feed_delta_mv_semijoin", "_feed_delta_mv_wmr",
-          "_feed_delta_mv_join")
-
-
 @pytest.fixture
 def drop_forgets(monkeypatch):
     """``drop_forgets(s, views, tables)`` drops the delta views
@@ -57,14 +52,16 @@ def drop_forgets(monkeypatch):
     def check(s, views, tables):
         names = []
         for view in [views] if isinstance(views, str) else views:
-            names += [view, *s._delta_mvs[view].get("internal_deps", ())]
+            names += [view, *s._delta_mvs[view].internal_deps]
             s.execute(f"DROP MATERIALIZED VIEW {view}")
         fed = []
-        for attr in _FEEDS:
-            def spy(name, *args, _orig=getattr(s, attr)):
-                fed.append(name)
-                return _orig(name, *args)
-            monkeypatch.setattr(s, attr, spy)
+
+        def spy(rel, _orig=s._dependents):
+            # the one commit fan-out: the views a commit feeds
+            deps = _orig(rel)
+            fed.extend(deps)
+            return deps
+        monkeypatch.setattr(s, "_dependents", spy)
         for t in tables:
             s.execute(f"INSERT INTO {t} SELECT * FROM {t} WHERE false")
         assert fed == []

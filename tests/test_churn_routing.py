@@ -10,6 +10,7 @@ import re
 
 from perfbench.churn import VIEWS
 
+from materialize_spark.plans.delta import SingleFront, Spine, TopK
 from materialize_spark.plans.sqlfront import MzSession
 from tests.conftest import SF_DIR
 
@@ -47,7 +48,9 @@ def test_churn_views_plan_to_keyed_operators(spark):
             kw.get("keys"))
         return orig(name, result, initial, **kw)
     try:
-        assert s._delta_mvs["v_top3_price"]["kind"] == "topk"
+        top3 = s._delta_mvs["v_top3_price"]
+        assert isinstance(top3.front, SingleFront) \
+            and isinstance(top3.terminal, TopK)
         s._publish_delta_mv = spy
         for commit in (
                 "INSERT INTO rt_lineitem VALUES (2, 11, 70, 80, 0.0)",
@@ -59,7 +62,8 @@ def test_churn_views_plan_to_keyed_operators(spark):
             # every view publishes a diff confined to its touched keys
             assert published == {n: True for n in VIEWS}, commit
             for name, body in VIEWS.items():
-                assert "proj_spine" not in s._delta_mvs[name], name
+                assert not isinstance(s._delta_mvs[name].terminal, Spine), \
+                    name
                 assert _norm(s.sql(f"SELECT * FROM {name}")) == \
                     _norm(s.spark.sql(_local(body))), f"{name} after {commit}"
     finally:

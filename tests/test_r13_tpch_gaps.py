@@ -699,7 +699,7 @@ def test_seminaive_mutual_recursion(spark):
             SELECT e.b AS n FROM evenr v JOIN mr_e e ON v.n = e.a)
         SELECT n FROM evenr;
     """)
-    assert s._delta_mvs["mr"]["seminaive"] is True
+    assert s._delta_mvs["mr"].seminaive is True
     assert _vrows(s, "SELECT * FROM mr") == [(1,), (3,)]
     s.execute("INSERT INTO mr_e VALUES (3, 4), (4, 5)")
     assert _vrows(s, "SELECT * FROM mr") == [(1,), (3,), (5,)]

@@ -1973,8 +1973,7 @@ def test_delta_mv_nested_stateless_subqueries(spark):
         " (SELECT k AS k2, v + 1 AS v2 FROM nst_t WHERE v > 0) "
         " WHERE v2 < 100) "
         "GROUP BY grp")
-    spec = s._delta_mvs["nst"]
-    assert len(spec["pre_layers"]) == 2  # both layers flattened
+    assert len(s._delta_mvs["nst"].front.layers) == 2  # both flattened
     rows = {(r.grp, r.total) for r in s.sql("SELECT * FROM nst").collect()}
     # a: (1+1)*2 + (2+1)*2 = 10 ; b: (3+1)*2 = 8 (v=-5 filtered)
     assert rows == {("a", 10), ("b", 8)}

@@ -15,6 +15,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from materialize_spark.plans.delta import SingleFront, TopK
 from materialize_spark.streaming import state_spill
 from materialize_spark.streaming.state_spill import SpilledPartsState
 
@@ -177,7 +178,7 @@ _VIEWS = {
                 "AS rn FROM fl) t WHERE rn <= 3"),
     "fv_exists": ("SELECT o_orderkey, o_orderpriority FROM fo WHERE EXISTS "
                   "(SELECT 1 FROM fl WHERE fl.l_orderkey = fo.o_orderkey)"),
-    # projection-shaped join: published through _publish_spine
+    # projection-shaped join: published through the Spine terminal
     "fv_proj": ("SELECT o_orderkey, l_suppkey, l_quantity "
                 "FROM fo JOIN fl ON o_orderkey = l_orderkey"),
 }
@@ -199,8 +200,14 @@ def _norm(df):
                         for x in r) for r in df.collect())
 
 
+def _parts(view):
+    """A delta view and the front and terminal it is made of."""
+    return [p for p in (view, getattr(view, "front", None), view.terminal)
+            if p is not None]
+
+
 def _spines(obj, seen):
-    """Every SpilledPartsState reachable from a view's spec."""
+    """Every SpilledPartsState reachable from a delta view."""
     if id(obj) in seen:
         return
     seen.add(id(obj))
@@ -212,7 +219,8 @@ def _spines(obj, seen):
     elif isinstance(obj, (list, tuple)):
         for v in obj:
             yield from _spines(v, seen)
-    elif dataclasses.is_dataclass(obj):
+    elif dataclasses.is_dataclass(obj) or type(obj).__module__.startswith(
+            "materialize_spark.plans.delta"):
         for v in vars(obj).values():
             yield from _spines(v, seen)
 
@@ -254,19 +262,22 @@ def test_sql_views_stay_exact_across_folds(spark, spine, monkeypatch):
                 assert _norm(s.sql(f"SELECT * FROM {name}")) == \
                     _norm(s.sql(body)), f"{name} after commit {i}: {commit}"
         for name in _VIEWS:
-            spec = s._delta_mvs[name]
-            for v in spec.values():   # no parts list beside the spines
-                assert not (isinstance(v, (list, tuple)) and any(
-                    isinstance(x, DataFrame) for x in v)), name
-            spines = list(_spines(spec, set()))
+            view = s._delta_mvs[name]
+            for part in _parts(view):   # no parts list beside the spines
+                for v in vars(part).values():
+                    assert not (isinstance(v, (list, tuple)) and any(
+                        isinstance(x, DataFrame) for x in v)), name
+            spines = list(_spines(view, set()))
             assert spines, name
             assert any(id(st) in folded for st in spines), name
             for st in spines:
                 if appends.get(id(st), 0) >= 2:
                     assert id(st) in folded, name
         top3 = s._delta_mvs["fv_top3"]
-        assert top3["kind"] == "topk" and id(top3["mv"]._state) in folded
-        assert id(s._delta_mvs["fv_proj"]["proj_spine"]) in folded
+        assert isinstance(top3.front, SingleFront) \
+            and isinstance(top3.terminal, TopK)
+        assert id(top3.terminal.op._state) in folded
+        assert id(s._delta_mvs["fv_proj"].terminal.spine) in folded
     finally:
         s.run_script("".join(f"DROP MATERIALIZED VIEW {n};"
                              for n in _VIEWS)

@@ -467,6 +467,7 @@ def test_subscribe_query_union_all_delta_maintained(spark):
     """SUBSCRIBE (SELECT ... UNION ALL SELECT ...) routes through the
     UNION ALL delta planner — pushed frames are the branches' diff-sum,
     not a recompute."""
+    from materialize_spark.plans.delta import Spine, UnionFront
     from materialize_spark.plans.sqlfront import MzSession
     sess = MzSession(spark, "/root/testdata/sf0.001")
     sess.execute("CREATE TABLE squ_l (k STRING, v BIGINT)")
@@ -477,7 +478,9 @@ def test_subscribe_query_union_all_delta_maintained(spark):
         "SUBSCRIBE (SELECT k, v FROM squ_l UNION ALL "
         "SELECT k, v FROM squ_r)")
     assert node.name in sess._delta_mvs  # maintained, not recompute
-    assert sess._delta_mvs[node.name]["kind"] == "union"
+    view = sess._delta_mvs[node.name]
+    assert isinstance(view.front, UnionFront)
+    assert isinstance(view.terminal, Spine)
     assert {(r.k, r.v) for r in first.collect()} == {("a", 1), ("b", 2)}
     sess.execute("INSERT INTO squ_r VALUES ('c', 3)")
     out = sess.subscribe_poll(sid)

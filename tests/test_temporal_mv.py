@@ -137,7 +137,7 @@ def test_wmr_delta_maintained(spark):
         return sorted((r.src, r.dst)
                       for r in s.sql("SELECT * FROM wmr_mv").collect())
     assert ks() == [(1, 2)]
-    assert s._delta_mvs["wmr_mv"]["monotone"] is True
+    assert s._delta_mvs["wmr_mv"].monotone is True
     # warm-start path: a long chain appended edge by edge
     s.execute("INSERT INTO wme VALUES (2, 3)")
     s.execute("INSERT INTO wme VALUES (3, 4)")
@@ -310,7 +310,7 @@ def test_wmr_monotonicity_is_structural(spark):
         SELECT src, dst FROM reach
     """)
     # the literal 'left not group' no longer scares the detector
-    assert s._delta_mvs["wmm_mono"]["monotone"] is True
+    assert s._delta_mvs["wmm_mono"].monotone is True
     s.execute("DROP MATERIALIZED VIEW wmm_mono")
     for tag, binding in (
         ("except", "SELECT src, dst FROM wmm EXCEPT "
@@ -325,7 +325,7 @@ def test_wmr_monotonicity_is_structural(spark):
               reach (src int8, dst int8) AS ({binding})
             SELECT src, dst FROM reach
         """)
-        assert s._delta_mvs[f"wmm_{tag}"]["monotone"] is False, tag
+        assert s._delta_mvs[f"wmm_{tag}"].monotone is False, tag
         s.execute(f"DROP MATERIALIZED VIEW wmm_{tag}")
     s.execute("DROP TABLE wmm")
 
@@ -350,8 +350,7 @@ def test_wmr_seminaive_differential_rounds(spark):
             JOIN sne e ON r.dst = e.src)
         SELECT src, dst FROM reach;
     """)
-    spec = s._delta_mvs["sn_mv"]
-    assert spec["seminaive"] is True
+    assert s._delta_mvs["sn_mv"].seminaive is True
     n = lambda: s.sql("SELECT count(*) AS c FROM sn_mv")\
         .collect()[0].c  # noqa: E731
     assert n() == 6      # closure of a 4-node chain: C(4,2)
@@ -374,6 +373,6 @@ def test_wmr_seminaive_differential_rounds(spark):
             JOIN sne e ON h.dst = e.src)
         SELECT src, dst FROM hops
     """)
-    assert s._delta_mvs["sn_ma"]["seminaive"] is False
+    assert s._delta_mvs["sn_ma"].seminaive is False
     s.run_script("DROP MATERIALIZED VIEW sn_mv;"
                  "DROP MATERIALIZED VIEW sn_ma; DROP TABLE sne;")

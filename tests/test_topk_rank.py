@@ -10,6 +10,7 @@ ties unspecified."""
 
 import pytest
 
+from materialize_spark.plans.delta import JoinFront, SingleFront, Spine, TopK
 from materialize_spark.plans.sqlfront import MzSession
 from materialize_spark.streaming.retraction import RetractionAwareTopK
 from materialize_spark.streaming.state_spill import SpilledPartsState
@@ -44,13 +45,12 @@ def _bodies(src):
     }
 
 
-def _topk_op(spec):
-    """The TopK operator maintaining a view: the spec's own operator
-    (one table) or the one stacked over the join chain."""
-    if spec["kind"] == "topk":
-        return spec["mv"]
-    assert spec["kind"] == "join" and spec["topk"] is not None
-    return spec["topk"]["mv"]
+def _topk_op(view):
+    """The TopK operator maintaining a view: over one table or
+    stacked over the join chain."""
+    assert isinstance(view.terminal, TopK)
+    assert isinstance(view.front, (SingleFront, JoinFront))
+    return view.terminal.op
 
 
 _SETUP = """
@@ -98,11 +98,14 @@ def test_rank_projecting_topk_tracks_select(spark, src):
                   f"(MAINTENANCE 'delta') AS {body}")
     try:
         for name in bodies:
-            spec = s._delta_mvs[name]
-            assert "proj_spine" not in spec, name
-            assert isinstance(_topk_op(spec), RetractionAwareTopK), name
+            view = s._delta_mvs[name]
+            assert not isinstance(view.terminal, Spine), name
+            assert isinstance(_topk_op(view), RetractionAwareTopK), name
             if "JOIN" not in src:
-                assert spec["kind"] == "topk", name
+                assert isinstance(view.front, SingleFront), name
+            else:
+                assert isinstance(view.front, JoinFront) \
+                    and not view.front.stages, name
         commits = _COMMITS + (_JOIN_COMMITS if "JOIN" in src else [])
         for i, commit in enumerate(["-- formed"] + commits):
             if i:

@@ -32,7 +32,7 @@ def test_renamed_delta_view_keeps_updating(spark, shape):
         INSERT INTO rn_t VALUES (1, 10), (1, 5), (2, 7);
         CREATE MATERIALIZED VIEW rn_v WITH (MAINTENANCE 'delta') AS {body};
     """)
-    internals = s._delta_mvs["rn_v"].get("internal_deps", ())
+    internals = s._delta_mvs["rn_v"].internal_deps
     assert (shape == "stacked") == ("__jsub_rn_v" in internals)
     s.execute("ALTER MATERIALIZED VIEW rn_v RENAME TO rn_w")
     for sql in ("INSERT INTO rn_t VALUES (3, 4), (1, 1)",
@@ -46,6 +46,30 @@ def test_renamed_delta_view_keeps_updating(spark, shape):
     s.run_script("DROP MATERIALIZED VIEW rn_w; DROP TABLE rn_t;")
     for n in internals:
         assert held(s, n) == []
+
+
+def test_rename_then_recreate_a_stacked_view(spark):
+    """A renamed view keeps the internal views it owns, and a new view
+    under the old name makes its own instead of colliding with them."""
+    body = RENAMED["stacked"].replace("rn_t", "rc_t")
+    s = MzSession(spark, SF_DIR)
+    s.run_script(f"""
+        CREATE TABLE rc_t (k BIGINT, v BIGINT);
+        INSERT INTO rc_t VALUES (1, 10), (1, 5), (2, 7);
+        CREATE MATERIALIZED VIEW d9 WITH (MAINTENANCE 'delta') AS {body};
+        ALTER MATERIALIZED VIEW d9 RENAME TO d9_old;
+        CREATE MATERIALIZED VIEW d9 WITH (MAINTENANCE 'delta') AS {body};
+        INSERT INTO rc_t VALUES (3, 4), (1, 1);
+    """)
+    for view in ("d9", "d9_old"):
+        assert _rows(s, f"SELECT * FROM {view}") == _rows(s, body), view
+    old = set(s._delta_mvs["d9_old"].internal_deps)
+    new = set(s._delta_mvs["d9"].internal_deps)
+    assert old and new and not old & new
+    s.run_script("DROP MATERIALIZED VIEW d9; "
+                 "DROP MATERIALIZED VIEW d9_old; DROP TABLE rc_t;")
+    for n in old | new:
+        assert held(s, n) == [], n
 
 
 def test_swap_two_delta_views(spark):
@@ -195,7 +219,7 @@ def test_drop_forgets_every_stacking_shape(spark, drop_forgets, shape):
     """)
     s.execute("INSERT INTO lc_o VALUES (5, 2, 25), (6, 4, 45)")
     assert _rows(s, "SELECT * FROM lc_v") == _rows(s, body)
-    internals = s._delta_mvs["lc_v"].get("internal_deps", ())
+    internals = s._delta_mvs["lc_v"].internal_deps
     for p in prefixes:
         assert any(n.startswith(p) for n in internals), (p, internals)
     names = drop_forgets(s, "lc_v", ["lc_o", "lc_c"])
