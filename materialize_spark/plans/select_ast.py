@@ -244,6 +244,29 @@ def _parse_on_pairs(
     return pairs, extra
 
 
+def _using_seg(p: Parser, kind: str, table: str,
+               alias: str | None) -> JoinSeg:
+    """``USING (k, ...)`` after a joined table: the equi pairs (k, k).
+    The chain keeps one ``k``, the left input's — USING's merged column
+    for INNER and LEFT joins. A RIGHT or FULL join's merged column is
+    COALESCE(left.k, right.k), which the chain does not model."""
+    at = p.peek()
+    p.expect_kw("USING")
+    if kind in ("right", "full"):
+        raise ParseError(
+            f"{kind.upper()} JOIN ... USING is not delta-maintainable "
+            "(its USING column merges both inputs' keys); write the "
+            "join with ON", at)
+    inner = Parser(p.paren_span())
+    cols = [inner.ident()]
+    while inner.peek().kind == "COMMA":
+        inner.next()
+        cols.append(inner.ident())
+    inner.expect_end()
+    return JoinSeg(kind=kind, table=table, pairs=[(c, c) for c in cols],
+                   raw_on=f"USING ({', '.join(cols)})", alias=alias)
+
+
 _OVER_PART_RE = re.compile(
     r"^\s*PARTITION\s+BY\s+(?P<keys>.+?)"
     r"(?:\s+ORDER\s+BY\s+(?P<ord>.+?))?\s*$", re.I | re.S)
@@ -783,11 +806,14 @@ def _parse_query(p: Parser, top: bool = False) -> SelectQ:
         if p.take_kw("AS"):
             al = p.ident()
         elif p.peek().kind in ("WORD", "QIDENT") \
-                and p.peek().upper != "ON" \
+                and p.peek().upper not in ("ON", "USING") \
                 and p.peek().upper not in _TAIL_STOPS:
             al = p.ident()
         if al:
             q.aliases[al] = t
+        if p.at_kw("USING"):
+            q.joins.append(_using_seg(p, kind, t, al))
+            continue
         p.expect_kw("ON")
         cond = p.span_until_kw(*_TAIL_STOPS)
         parsed = _parse_on_pairs(cond)

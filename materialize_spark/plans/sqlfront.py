@@ -471,6 +471,35 @@ def _pg_coldefs(coldefs: str, custom_types: dict[str, str] | None = None
     return ", ".join(cols)
 
 
+def _net_diff(new: DataFrame, old: DataFrame) -> DataFrame:
+    """``new - old`` as explicit-diff rows (one +1 or -1 row per unit of
+    net multiplicity): both states through one aggregate. The history
+    of a delta view records this rather than the touched-group diff
+    the commit publishes. The rows are the same (untouched groups are
+    equal in both states), and the plan holds no join:
+
+    - A history break serializes every plan it holds: 32 touched-group
+      exceptAll pairs took about 5 s to break on 4 vCPU.
+    - A touched-group probe against a small batch plans as a broadcast
+      join. The lazy break builds its broadcast at once and keeps it
+      while the break is unread: with ``_net_diff(new_t, old_t)``, the
+      heap after a forced GC was 2.1 GB 8 ticks after the first break
+      of 40 UPSERT source ticks (0.13 GB with this form).
+
+    The aggregate scans both full states, but only when the history is
+    read; an unread break plans it and runs nothing."""
+    from pyspark.sql import functions as F
+    cols = list(new.columns)
+    net = (new.withColumn("__n", F.lit(1))
+           .unionByName(old.withColumn("__n", F.lit(-1)))
+           .groupBy(*cols).agg(F.sum("__n").alias("__n"))
+           .filter(F.col("__n") != 0))
+    return (net.withColumn("__i", F.explode(
+                F.sequence(F.lit(1), F.abs(F.col("__n")))))
+            .select(*cols, F.when(F.col("__n") > 0, F.lit(1))
+                    .otherwise(F.lit(-1)).alias("diff")))
+
+
 class MzSession:
     """SQL surface bound to a SparkSession + Catalog.
 
@@ -3580,10 +3609,7 @@ class MzSession:
             rets = old.exceptAll(result)
         hist = self._histories.get(name)
         if hist is not None:
-            hist.append(
-                adds.withColumn("diff", F.lit(1)).unionByName(
-                    rets.withColumn("diff", F.lit(-1))),
-                hist.upper)
+            hist.append(_net_diff(result, old), hist.upper)
         self._publish_commit(name, adds, rets)
         self._feed_downstream(name, adds, rets)
 
@@ -3987,19 +4013,20 @@ class MzSession:
             self._source_stat(node.name, "kafka", status="stalled",
                               error=str(ex), snapshot=False)
             raise
-        # the registered collection is checkpointed: counting it is an
-        # in-memory scan, no re-fetch
+        # the snapshot poll's raw record count, tombstones and replaced
+        # values included (not the collection's row count)
         self._source_stat(node.name, "kafka",
-                          messages=self.catalog.table(node.name).count())
+                          messages=self._sources[node.name]["stream"].polled)
 
     def _create_source_kafka_impl(self, node: ast.CreateSourceKafka,
                                   sql: str):
         """CREATE SOURCE ... FROM KAFKA CONNECTION c (TOPIC 't') — the
         reference's primary source (sources.rs KafkaSourceConnection):
-        drains the topic over the wire protocol (one Spark task per
-        partition), decodes per FORMAT, applies ENVELOPE, and registers
-        the collection. The connection's SSL/SASL options ride into the
-        fetch tasks (connections.rs TLS + SASL surface)."""
+        drains the topic over the wire protocol (KafkaWireStream.poll:
+        in the driver, or one Spark task per partition for a large
+        topic), decodes per FORMAT, applies ENVELOPE, and registers the
+        collection. The connection's SSL/SASL options ride into every
+        fetch (connections.rs TLS + SASL surface)."""
         from materialize_spark.sources.tlsconf import connection_ssl_conf
 
         conn = self._connections.get(node.connection)
@@ -4027,7 +4054,7 @@ class MzSession:
                                  ssl_conf=connection_ssl_conf(conn),
                                  sasl=sasl,
                                  include_headers=want_headers)
-        frame = stream.poll()
+        frame = stream.poll(compact=node.envelope == "upsert")
         stream.commit()
         df, data_cols = self._kafka_decode_frame(node, frame)
         df = self._kafka_apply_envelope(node, df, data_cols)
@@ -4115,25 +4142,12 @@ class MzSession:
 
     def _kafka_apply_envelope(self, node: ast.CreateSourceKafka, df,
                               data_cols: list[str]):
-        """ENVELOPE applied over a FULL decoded topic history (the
-        snapshot form — tick batches use the incremental merges in
-        tick_sources instead)."""
+        """ENVELOPE applied over a decoded topic snapshot (tick
+        batches use the incremental merges of _apply_source_batch
+        instead). An UPSERT snapshot arrives compacted by the poll."""
         from pyspark.sql import functions as F
         if node.envelope == "upsert":
-            from functools import reduce as _reduce
-
-            from materialize_spark.streaming.upsert import upsert_latest
-            # per-key latest wins; Kafka orders within a partition and a
-            # consistent partitioner keeps one key on one partition, so
-            # (partition, offset) is the envelope's update order. A
-            # tombstone (NULL value → every decoded column NULL) deletes.
-            df = upsert_latest(
-                df, ["key"],
-                [F.col("partition").desc(), F.col("offset").desc()],
-                value_cols=data_cols,
-                delete_when=_reduce(lambda a, b: a & b,
-                                    [F.col(c).isNull()
-                                     for c in data_cols]))
+            df = self._upsert_live(df, data_cols)
         elif node.envelope == "debezium" and node.fmt == "avro" \
                 and {"before", "after"} <= set(data_cols):
             # Debezium-enveloped AVRO: the CSR decode already produced
@@ -4178,6 +4192,18 @@ class MzSession:
             raise ValueError(f"unsupported ENVELOPE {node.envelope!r} "
                              "(none | upsert | debezium)")
         return df
+
+    @staticmethod
+    def _upsert_live(df, data_cols: list[str]):
+        """The live (key, data) rows of a batch compacted to one newest
+        record per key: a tombstone (NULL value, so every decoded column
+        NULL) deletes its key."""
+        from functools import reduce
+
+        from pyspark.sql import functions as F
+        tomb = reduce(lambda a, b: a & b,
+                      [F.col(c).isNull() for c in data_cols])
+        return df.filter(~tomb).select("key", *data_cols)
 
     def _kafka_apply_include(self, node: ast.CreateSourceKafka, df):
         from pyspark.sql import functions as F
@@ -4234,9 +4260,15 @@ class MzSession:
         reference's source dataflows run continuously; kafka.rs
         consume → emit → advance the offset frontier — the batch
         analog is repeated bounded reads). Returns the names that
-        ingested new records. ENVELOPE NONE appends are O(batch);
-        UPSERT/DEBEZIUM merge keyed against the current collection
-        (O(batch ⋈ table) — the same cost class as an UPDATE)."""
+        ingested new records.
+
+        A steady tick's poll fetches, counts and (under UPSERT)
+        compacts its records in the driver, so emptiness and the
+        ``messages`` counter come from ``stream.polled`` without a
+        Spark job. ENVELOPE NONE appends the batch; UPSERT replaces
+        the batch's keys, one job writing the new collection and its
+        retractions; DEBEZIUM folds the batch's diffs into the
+        collection's multiset."""
         self._apply_policy()
         advanced: list[str] = []
         for name, spec in list(getattr(self, "_sources", {}).items()):
@@ -4258,17 +4290,17 @@ class MzSession:
             stream = spec.get("stream")
             if stream is None:
                 continue
-            batch = stream.poll()
-            if batch.isEmpty():
+            node = spec["node"]
+            batch = stream.poll(compact=node.envelope == "upsert")
+            if not stream.polled:
                 stream.commit()
                 continue
-            node = spec["node"]
             df, data_cols = self._kafka_decode_frame(node, batch)
             self._apply_source_batch(name, node, df, data_cols)
             stream.commit()
             stat = self._source_stats.get(name)
             if stat is not None and stat.get("messages") is not None:
-                stat["messages"] += batch.count()
+                stat["messages"] += stream.polled
             advanced.append(name)
         return advanced
 
@@ -4282,7 +4314,7 @@ class MzSession:
         from pyspark.sql import functions as F
 
         from materialize_spark.sources.pgoutput import (
-            apply_cdc, decode_pgoutput_stream, pgoutput_to_diff,
+            decode_pgoutput_stream, pgoutput_to_diff,
         )
         conn = spec["conn"]
         if "host" in conn:
@@ -4318,19 +4350,8 @@ class MzSession:
             diff = pgoutput_to_diff(env, rel)
             if diff.isEmpty():
                 continue
-            keys = spec["keys"][tname]
-            sub = f"{name}_{tname}"
-            cur = self.catalog._tables[sub]
-            new = apply_cdc(cur, diff, keys).localCheckpoint(eager=True)
-            touched = diff.select(*keys).distinct()
-            rets = cur.join(touched, on=keys, how="left_semi")
-            adds = new.join(touched, on=keys, how="left_semi")
-            self.catalog.register_table(sub, new)
-            self._feed_delta_mvs_for_table(
-                sub,
-                adds.withColumn("diff", F.lit(1)).unionByName(
-                    rets.withColumn("diff", F.lit(-1))))
-            self._publish_commit(sub, adds, rets)
+            self._apply_cdc_tick_diff(name, tname, diff,
+                                      spec["keys"][tname])
             moved = True
         spec["applied"] = hi
         return moved
@@ -4452,25 +4473,26 @@ class MzSession:
             self.append_rows(name, rows)
             return
         if node.envelope == "upsert":
-            from functools import reduce as _reduce
-
-            from materialize_spark.streaming.upsert import upsert_latest
             if "key" not in old.columns:
                 raise ValueError(
                     f"source {name!r}: incremental UPSERT merge needs "
                     "the key column in the collection")
-            latest = upsert_latest(
-                df, ["key"],
-                [F.col("partition").desc(), F.col("offset").desc()],
-                value_cols=data_cols,
-                delete_when=_reduce(lambda a, b: a & b,
-                                    [F.col(c).isNull()
-                                     for c in data_cols]))
-            keys = df.select("key").distinct()
-            rets = old.join(keys, on="key", how="left_semi")
-            adds = latest.select(*old.columns)
+            # The poll compacted the batch to one newest record per key.
+            # shuffle_hash: never a broadcast, whose hashed relation
+            # outlived the tick; a task's is freed with the task. The
+            # retractions are checkpointed with the new collection, one
+            # job for both: a retraction join left lazy would sit in
+            # each delta view's lazy maintenance chain, and the read
+            # that finally runs the chain built one hashed relation
+            # (32 MB pages) per tick in a single task, out of memory
+            # after ~30 ticks on a 4 GB heap.
+            keys = df.select("key").hint("shuffle_hash")
+            rets = old.join(keys, on="key", how="left_semi") \
+                .localCheckpoint(eager=False)
+            adds = self._upsert_live(df, data_cols).select(*old.columns)
             new = (old.join(keys, on="key", how="left_anti")
-                   .unionByName(adds).localCheckpoint(eager=True))
+                   .unionByName(adds).localCheckpoint(eager=False))
+            new.unionByName(rets).count()
         elif node.envelope == "debezium":
             if node.fmt == "avro" \
                     and {"before", "after"} <= set(data_cols):

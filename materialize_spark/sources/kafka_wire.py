@@ -13,19 +13,23 @@ v0, Metadata v0, Produce v2, Fetch v2 with message-set v1) from scratch:
 - ``KafkaWireClient``: a minimal TCP client (metadata / produce / fetch).
 - ``MiniBroker``: an in-process loopback broker speaking the same APIs —
   the test/emulation peer, like the CDC encoders.
-- ``read_kafka_wire``: the Spark source. The driver fetches METADATA
-  (K partitions — metadata-scale), then each Spark task fetches ITS
-  partitions over its own connection inside Arrow-batched mapInPandas —
-  one consumer per partition, the exact parallel shape of the
-  reference's source (and of the real spark-kafka connector). Records
-  surface as (topic, partition, offset, key, value, timestamp), feeding
-  the shared envelope decoders (envelopes.debezium_decode,
-  streaming.upsert) unchanged.
+- ``KafkaWireStream``: the continual source. Each poll fetches the
+  records past the committed per-partition offsets; a batch up to
+  ``DRIVER_FETCH_BYTES`` of records is fetched over one driver
+  connection and handed to Spark as a one-partition local frame, so a
+  steady tick runs no Spark job to fetch, count or (for ENVELOPE
+  UPSERT) compact its records.
+- ``read_kafka_wire``: the parallel fetch for larger backlogs (a big
+  CREATE SOURCE snapshot, the catch-up after a stall). The driver
+  fetches METADATA only, then each Spark task fetches ITS partition
+  over its own connection inside Arrow-batched mapInPandas — one
+  consumer per partition, the parallel shape of the reference's source
+  (and of the real spark-kafka connector).
 
-Scale: fetch parallelism = partition count (the Kafka contract); offsets
-are per-partition monotonic so resume/rewind is an offset per partition,
-matching the reference's progress tracking. No driver-side record
-collection — only topic metadata touches the driver.
+Records surface as (topic, partition, offset, key, value, timestamp),
+feeding the shared envelope decoders unchanged. Offsets are
+per-partition monotonic, so resume/rewind is an offset per partition,
+matching the reference's progress tracking.
 """
 
 from __future__ import annotations
@@ -817,6 +821,16 @@ class MiniBroker:
 
 # --------------------------------------------------------------------------
 # Spark source
+def _partition_ids(c: KafkaWireClient, topic: str) -> list[int]:
+    """The topic's partition ids, from one Metadata round trip."""
+    meta = c.metadata([topic])["topics"].get(topic)
+    if meta is None:
+        return []
+    if meta["error"]:
+        raise ValueError(f"metadata error {meta['error']} for {topic!r}")
+    return sorted(p["partition"] for p in meta["partitions"])
+
+
 def kafka_partitions(bootstrap: str, topic: str,
                      ssl_conf: dict | None = None,
                      sasl: tuple[str, str, str] | None = None) -> list[int]:
@@ -826,30 +840,7 @@ def kafka_partitions(bootstrap: str, topic: str,
     with KafkaWireClient(host, int(port),
                          ssl_context=client_context(ssl_conf),
                          sasl=sasl) as c:
-        # raw metadata parse (the structured .metadata() helper above is
-        # for brokers; here only the partition ids are needed)
-        body = _arr([_str(topic)])
-        r = c._roundtrip(API_METADATA, 0, body)
-        for _ in range(r.take("i")):  # brokers
-            r.take("i"), r.string(), r.take("i")
-        parts: list[int] = []
-        for _ in range(r.take("i")):
-            terr = r.take("h")
-            tname = r.string()
-            n = r.take("i")
-            for _ in range(n):
-                r.take("h")  # error
-                pid = r.take("i")
-                r.take("i")  # leader
-                for _ in range(r.take("i")):
-                    r.take("i")  # replicas
-                for _ in range(r.take("i")):
-                    r.take("i")  # isr
-                if tname == topic:
-                    parts.append(pid)
-            if tname == topic and terr:
-                raise ValueError(f"metadata error {terr} for {topic!r}")
-        return sorted(parts)
+        return _partition_ids(c, topic)
 
 
 KAFKA_SCHEMA = ("topic string, partition int, offset long, "
@@ -861,21 +852,50 @@ KAFKA_SCHEMA_H = (KAFKA_SCHEMA
                   + ", headers array<struct<key: string, value: binary>>")
 
 
+def _record_columns(topic: str, recs: list[tuple[int, tuple]],
+                    include_headers: bool) -> dict[str, list]:
+    """(partition, record) pairs → the KAFKA_SCHEMA[_H] columns, with
+    timestamps as epoch ms (None where the record carries none)."""
+    cols = {"topic": [topic] * len(recs),
+            "partition": [p for p, _r in recs],
+            "offset": [r[0] for _p, r in recs],
+            "key": [r[1] for _p, r in recs],
+            "value": [r[2] for _p, r in recs],
+            "timestamp": [r[3] if r[3] >= 0 else None for _p, r in recs]}
+    if include_headers:
+        cols["headers"] = [[{"key": hk, "value": hv} for hk, hv in r[4]]
+                           for _p, r in recs]
+    return cols
+
+
+def newest_per_key(recs: list[tuple[int, tuple]]) -> list[tuple[int, tuple]]:
+    """The newest of the (partition, record) pairs per raw record key:
+    highest (partition, offset) wins, the order ENVELOPE UPSERT ranks
+    by (``upsert_latest`` over (partition, offset) DESC). Tombstones
+    are kept — the newest record of a key may delete it."""
+    latest: dict[bytes | None, tuple[int, tuple]] = {}
+    for pr in recs:
+        cur = latest.get(pr[1][1])
+        if cur is None or (pr[0], pr[1][0]) > (cur[0], cur[1][0]):
+            latest[pr[1][1]] = pr
+    return list(latest.values())
+
+
 def read_kafka_wire(spark, bootstrap: str, topic: str, *,
                     starting_offsets: dict[int, int] | None = None,
                     ssl_conf: dict | None = None,
                     sasl: tuple[str, str, str] | None = None,
                     include_headers: bool = False):
     """Kafka topic → DataFrame(topic, partition, offset, key, value,
-    timestamp[, headers]) via the wire client — the same output
+    timestamp[, headers]) fetched by Spark tasks — the same output
     contract as the spark-sql-kafka connector's batch read (its
     includeHeaders option maps to ``include_headers``).
 
-    Parallel shape: the driver reads ONLY metadata; each Spark task opens
-    its own connection and drains its assigned partitions (one consumer
-    per partition — kafka.rs's partition consumer model). At 100 TB the
-    fetch parallelism is the topic's partition count, exactly like the
-    real connector."""
+    The driver reads only metadata; each task opens its own connection
+    and drains its assigned partition from ``starting_offsets``, so the
+    fetch parallelism is the topic's partition count (kafka.rs's
+    partition consumer model). ``KafkaWireStream.poll`` takes this path
+    only for backlogs above ``DRIVER_FETCH_BYTES``."""
     import pandas as pd
 
     parts = kafka_partitions(bootstrap, topic, ssl_conf, sasl)
@@ -887,38 +907,23 @@ def read_kafka_wire(spark, bootstrap: str, topic: str, *,
     ).repartition(max(len(parts), 1), "partition")
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from materialize_spark.sources.tlsconf import client_context
+        ctx = client_context(ssl_conf)  # built per task: an
+        # SSLContext cannot ride a pickled closure; the conf dict can
         for pdf in batches:
-            cols = ["topic", "partition", "offset", "key",
-                    "value", "timestamp"]
-            if include_headers:
-                cols.append("headers")
-            rows = {k: [] for k in cols}
-            from materialize_spark.sources.tlsconf import client_context
-            ctx = client_context(ssl_conf)  # built per task: an
-            # SSLContext cannot ride a pickled closure; the conf dict can
+            recs = []
             for pid in pdf["partition"]:
                 pid = int(pid)
                 with KafkaWireClient(host, port_i, ssl_context=ctx,
                                      sasl=sasl) as c:
-                    recs = c.fetch_all(topic, pid, starts.get(pid, 0),
-                                       with_headers=include_headers)
-                for rec in recs:
-                    off, key, value, ts = rec[:4]
-                    rows["topic"].append(topic)
-                    rows["partition"].append(pid)
-                    rows["offset"].append(off)
-                    rows["key"].append(key)
-                    rows["value"].append(value)
-                    rows["timestamp"].append(
-                        pd.Timestamp(ts, unit="ms") if ts >= 0 else None)
-                    if include_headers:
-                        rows["headers"].append(
-                            [{"key": hk, "value": hv}
-                             for hk, hv in rec[4]])
-            out = pd.DataFrame(rows)
-            # empty batches infer float64 for the timestamp column, which
-            # Arrow cannot cast to timestamp — pin the dtype explicitly
-            out["timestamp"] = pd.to_datetime(out["timestamp"])
+                    recs += [(pid, r) for r in c.fetch_all(
+                        topic, pid, starts.get(pid, 0),
+                        with_headers=include_headers)]
+            out = pd.DataFrame(_record_columns(topic, recs,
+                                               include_headers))
+            # pinned dtype: an empty batch would infer float64, which
+            # Arrow cannot cast to timestamp
+            out["timestamp"] = pd.to_datetime(out["timestamp"], unit="ms")
             yield out
 
     return assign.mapInPandas(
@@ -926,18 +931,50 @@ def read_kafka_wire(spark, bootstrap: str, topic: str, *,
         schema=KAFKA_SCHEMA_H if include_headers else KAFKA_SCHEMA)
 
 
+# The most record bytes a poll holds in the driver: one default fetch
+# window (KafkaWireClient.fetch max_bytes). A poll whose records past
+# the committed offsets fit is fetched, counted and compacted in the
+# driver and costs no Spark job; the driver stops fetching as soon as
+# the bytes it has seen exceed this, and the poll is fetched by Spark
+# tasks (read_kafka_wire) instead. A record counts its key, its value
+# and the 34 bytes a v1 message set spends on each record, so neither
+# large values nor many tiny records pile up in the driver.
+DRIVER_FETCH_BYTES = 1 << 22
+_RECORD_OVERHEAD = 34
+
+
+def _local_frame(spark, cols: dict[str, list], include_headers: bool):
+    """One-partition driver-local frame of KAFKA_SCHEMA[_H] columns."""
+    import pyarrow as pa
+    fields = [("topic", pa.string()), ("partition", pa.int32()),
+              ("offset", pa.int64()), ("key", pa.binary()),
+              ("value", pa.binary()), ("timestamp", pa.timestamp("ms"))]
+    if include_headers:
+        fields.append(("headers", pa.list_(pa.struct(
+            [("key", pa.string()), ("value", pa.binary())]))))
+    table = pa.Table.from_pydict(cols, schema=pa.schema(fields))
+    df = spark.createDataFrame(
+        table, KAFKA_SCHEMA_H if include_headers else KAFKA_SCHEMA)
+    # a local relation scans as up to defaultParallelism slices; one
+    # partition keeps a collection it is unioned into from growing
+    return df.coalesce(1)
+
+
 class KafkaWireStream:
     """Continual ingestion over the wire: micro-batch pulls with durable
     per-partition offsets — the reference's Kafka source loop (kafka.rs:
     consume, emit, advance the offset frontier) expressed as repeated
-    bounded reads feeding foreachBatch-style consumers (streaming/ivm.py
-    MaterializedView.on_batch, envelope decoders, upsert merges).
+    bounded reads feeding the envelope merges of ``tick_sources``.
 
     ``poll()`` returns the next micro-batch DataFrame (possibly empty)
-    and advances the committed offsets only AFTER the caller's consumer
-    ran — call ``commit()`` when the batch is applied, so a failed batch
-    is re-polled from the same offsets (at-least-once, like the
-    reference before persist dedupes)."""
+    and sets ``polled`` to its raw record count. A batch whose records
+    fit in ``DRIVER_FETCH_BYTES`` is fetched over one driver
+    connection and returned as a one-partition local frame, so polling,
+    counting and compacting it run no Spark job; a larger backlog is
+    fetched by one Spark task per partition. The committed offsets advance only
+    when the caller's consumer ran — call ``commit()`` when the batch
+    is applied, so a failed batch is re-polled from the same offsets
+    (at-least-once, like the reference before persist dedupes)."""
 
     def __init__(self, spark, bootstrap: str, topic: str, *,
                  starting_offsets: dict[int, int] | None = None,
@@ -952,22 +989,79 @@ class KafkaWireStream:
         self.include_headers = include_headers
         self.offsets: dict[int, int] = dict(starting_offsets or {})
         self._pending: dict[int, int] | None = None
+        self.polled = 0
 
-    def poll(self):
+    def poll(self, compact: bool = False):
         """Fetch everything new past the committed offsets as one batch
-        frame; remembers the batch's end offsets for commit()."""
-        df = read_kafka_wire(self.spark, self.bootstrap, self.topic,
-                             starting_offsets=self.offsets,
-                             ssl_conf=self.ssl_conf, sasl=self.sasl,
-                             include_headers=self.include_headers)
-        batch = df.localCheckpoint(eager=True)
-        from pyspark.sql import functions as F
-        ends = {r.partition: r.mx + 1 for r in batch.groupBy("partition")
-                .agg(F.max("offset").alias("mx")).collect()}
-        nxt = dict(self.offsets)
-        nxt.update(ends)
-        self._pending = nxt
+        frame; remembers the batch's end offsets for commit() and its
+        raw record count in ``polled``. ``compact`` keeps only the
+        newest record per raw key (tombstones included), the input
+        ENVELOPE UPSERT needs."""
+        from materialize_spark.sources.tlsconf import client_context
+        host, port = self.bootstrap.rsplit(":", 1)
+        with KafkaWireClient(host, int(port),
+                             ssl_context=client_context(self.ssl_conf),
+                             sasl=self.sasl) as c:
+            recs = self._fetch(c)
+        if recs is None:
+            batch, ends, self.polled = self._poll_in_tasks(compact)
+        else:
+            ends = {p: r[0] + 1 for p, r in recs}
+            self.polled = len(recs)
+            if compact:
+                recs = newest_per_key(recs)
+            batch = _local_frame(
+                self.spark,
+                _record_columns(self.topic, recs, self.include_headers),
+                self.include_headers)
+        self._pending = {**self.offsets, **ends}
         return batch
+
+    def _fetch(self, c: KafkaWireClient) -> list[tuple[int, tuple]] | None:
+        """Every record past the committed offsets as (partition,
+        record) pairs in (partition, offset) order; None as soon as
+        their bytes exceed DRIVER_FETCH_BYTES (a record larger than
+        one fetch window included: its fetch returns no whole
+        record)."""
+        out: list[tuple[int, tuple]] = []
+        size = 0
+        for p in _partition_ids(c, self.topic):
+            off = self.offsets.get(p, 0)
+            while True:
+                hw, recs = c.fetch(self.topic, p, off,
+                                   with_headers=self.include_headers)
+                if off < hw and not recs:
+                    return None
+                size += sum(_RECORD_OVERHEAD + len(r[1] or b"")
+                            + len(r[2] or b"") for r in recs)
+                if size > DRIVER_FETCH_BYTES:
+                    return None
+                out += [(p, r) for r in recs]
+                if not recs or recs[-1][0] + 1 >= hw:
+                    break
+                off = recs[-1][0] + 1
+        return out
+
+    def _poll_in_tasks(self, compact: bool):
+        """(batch, end offsets, record count) of a large backlog,
+        fetched by Spark tasks and checkpointed so it is fetched once."""
+        from pyspark.sql import functions as F
+
+        from materialize_spark.operators.topk import distinct_on
+        batch = read_kafka_wire(
+            self.spark, self.bootstrap, self.topic,
+            starting_offsets=self.offsets, ssl_conf=self.ssl_conf,
+            sasl=self.sasl, include_headers=self.include_headers,
+        ).localCheckpoint(eager=True)
+        got = (batch.groupBy("partition")
+               .agg(F.max("offset").alias("mx"), F.count("*").alias("n"))
+               .collect())
+        if compact:
+            batch = distinct_on(
+                batch, ["key"],
+                [F.col("partition").desc(), F.col("offset").desc()])
+        return (batch, {r.partition: r.mx + 1 for r in got},
+                sum(r.n for r in got))
 
     def commit(self) -> dict[int, int]:
         """Advance the offset frontier past the last polled batch."""
