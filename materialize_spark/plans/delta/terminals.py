@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from materialize_spark.operators.setops import expand
 from materialize_spark.plans.delta.view import Change
 from materialize_spark.plans.dialect import rewrite
 
@@ -253,11 +254,9 @@ class Spine:
         if self.spine is None:
             result = self.empty().limit(0)
         else:
-            result = (self.spine.consolidate(self.spine.probe_frame(None))
-                      .filter(F.col("diff") > 0)
-                      .withColumn("__i", F.explode(
-                          F.sequence(F.lit(1), F.col("diff"))))
-                      .drop("diff", "__i"))
+            result = expand(self.spine.consolidate(
+                self.spine.probe_frame(None)).filter(F.col("diff") > 0)
+            ).drop("diff")
         return Change(result, out_delta=out_delta)
 
     def explain(self, style: str) -> list[str]:

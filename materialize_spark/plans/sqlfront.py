@@ -36,6 +36,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from materialize_spark.catalog import Catalog, apply_policy
 from materialize_spark.ckpt import fresh_break, lineage_break
+from materialize_spark.operators.setops import (
+    expand, net_diff, signed, threshold,
+)
 from materialize_spark.plans import parser as ast
 from materialize_spark.plans.delta import (
     Branch, DeltaView, Distinct, JoinFront, Reduce, SetOp, SetOpFront,
@@ -153,8 +156,8 @@ def _classify_agg_items(items):
     result. Returns (keys, aggs, exprs, order, post) or None when out
     of shape; ``exprs`` maps internal name -> source SQL, ``order`` is
     the SELECT-list output column order (the reference preserves it in
-    the result, while the maintained reduce is keys-first —
-    _publish_delta_mv restores it), and ``post`` (when set) is the
+    the result, while the maintained reduce is keys-first — the
+    view's terminal restores it), and ``post`` (when set) is the
     result-level projection in SELECT order."""
     from materialize_spark.plans.select_ast import (
         _parse_multi_agg_item,
@@ -471,35 +474,6 @@ def _pg_coldefs(coldefs: str, custom_types: dict[str, str] | None = None
     return ", ".join(cols)
 
 
-def _net_diff(new: DataFrame, old: DataFrame) -> DataFrame:
-    """``new - old`` as explicit-diff rows (one +1 or -1 row per unit of
-    net multiplicity): both states through one aggregate. The history
-    of a delta view records this rather than the touched-group diff
-    the commit publishes. The rows are the same (untouched groups are
-    equal in both states), and the plan holds no join:
-
-    - A history break serializes every plan it holds: 32 touched-group
-      exceptAll pairs took about 5 s to break on 4 vCPU.
-    - A touched-group probe against a small batch plans as a broadcast
-      join. The lazy break builds its broadcast at once and keeps it
-      while the break is unread: with ``_net_diff(new_t, old_t)``, the
-      heap after a forced GC was 2.1 GB 8 ticks after the first break
-      of 40 UPSERT source ticks (0.13 GB with this form).
-
-    The aggregate scans both full states, but only when the history is
-    read; an unread break plans it and runs nothing."""
-    from pyspark.sql import functions as F
-    cols = list(new.columns)
-    net = (new.withColumn("__n", F.lit(1))
-           .unionByName(old.withColumn("__n", F.lit(-1)))
-           .groupBy(*cols).agg(F.sum("__n").alias("__n"))
-           .filter(F.col("__n") != 0))
-    return (net.withColumn("__i", F.explode(
-                F.sequence(F.lit(1), F.abs(F.col("__n")))))
-            .select(*cols, F.when(F.col("__n") > 0, F.lit(1))
-                    .otherwise(F.lit(-1)).alias("diff")))
-
-
 class MzSession:
     """SQL surface bound to a SparkSession + Catalog.
 
@@ -582,9 +556,9 @@ class MzSession:
         # MV name → (period_s, last_refresh monotonic) for REFRESH EVERY
         self._refresh_every: dict[str, tuple[float, float]] = {}
         self._comments: dict[tuple[str, str], str] = {}  # COMMENT ON
-        # RETAIN HISTORY: per-MV changelog of refresh deltas, readable via
+        # RETAIN HISTORY: per-MV changelog of commit deltas, readable via
         # SELECT ... AS OF <epoch> (streaming.history.RetainedHistory);
-        # retention window counted in refresh epochs.
+        # retention window counted in commit epochs (_compact_history).
         self._histories: dict[str, object] = {}
         self._retain: dict[str, int] = {}
         self._view_sql: dict[str, str] = {}
@@ -1906,8 +1880,8 @@ class MzSession:
         (aggregate, DISTINCT, join chain, semijoin stages, nested
         FROM-subqueries): it is planned as a planner-owned internal
         delta MV, and the outer body re-plans with the internal view as
-        its base relation, fed by the internal's published diffs
-        (_feed_downstream) — the reference renders such bodies as a Let
+        its base relation, fed by the internal's committed diffs
+        (_commit) — the reference renders such bodies as a Let
         binding whose arrangement the outer dataflow imports
         (src/compute/src/render.rs). This is what lets the verbatim
         TPC-H q13 two-level aggregate (LEFT OUTER JOIN + GROUP BY under
@@ -2177,7 +2151,7 @@ class MzSession:
                 continue
             change = view.advance(None, now=t1)
             if change is not None:
-                self._publish_delta_mv(name, **change._asdict())
+                self._commit_change(name, change)
             ticked.append(name)
         return ticked
 
@@ -2254,8 +2228,7 @@ class MzSession:
         the node's stable id, and publish its first state."""
         view.uid = node.uid
         self._delta_mvs[node.name] = view
-        self._publish_delta_mv(node.name, **view.form()._asdict(),
-                               initial=True)
+        self._commit_change(node.name, view.form())
 
     def _uid(self, name: str) -> str:
         """The stable id for a new delta view ``name``, picked once when
@@ -3546,95 +3519,134 @@ class MzSession:
             self._base_frame, renames=renames, where=q.where), terminal))
         return True
 
-    def _publish_delta_mv(self, name: str, result,
-                          initial: bool = False, out_delta=None,
-                          touched=None, keys=None) -> None:
-        """Republish a delta MV's maintained result and append the
-        change to its SUBSCRIBE history.
+    def _commit(self, rel: str, delta: DataFrame | None, *,
+                state: DataFrame | None = None,
+                history: DataFrame | None = None) -> None:
+        """The one commit path: every table write, source tick, REFRESH
+        and delta-view publish hands ``rel``'s change here as one
+        signed frame ``delta`` ``(cols..., diff)``, any nonzero diff,
+        or ``None`` when no consumer wants it (``_wants_diffs``). In
+        order:
 
-        The published diff is derived at the cheapest level available:
+        1. swap in ``state``: a table's new version, or a view's new
+           result;
+        2. append ``history`` (else ``delta``) to a view's RETAIN
+           HISTORY log at its upper, creating the log on the view's
+           first commit, and apply the view's window;
+        3. feed ``delta`` to each of ``_dependents(rel)`` and commit
+           the Change each returns (``_commit_change``) — stacked
+           views compose as the reference imports an upstream
+           arrangement into a dependent dataflow
+           (src/compute/src/render.rs);
+        4. recompute the query subscriptions over ``rel`` that no
+           delta plan maintains, hand the commit's unit rows to its
+           Kafka sinks and subscriptions, and advance the commit clock
+           (waking blocked stream loops).
 
-        - ``out_delta`` — the operator's OWN consolidated output delta
-          (projection-shaped join MVs hand the chain's signed frame
-          straight through): O(delta), no snapshot diffing of any kind
-          (the reference's MV sink reads its input arrangement's
-          deltas, src/compute/src/sink/materialized_view.rs).
-        - ``touched``+``keys`` — keyed operators (reduce/DISTINCT)
-          confine the old-vs-new diff to the groups the batch touched
-          (a null-safe semi-probe + exceptAll over those rows only):
-          O(touched groups), never a full-result anti-join.
-        - neither — full ``result.exceptAll(old)``: ONLY the REFRESH
-          recompute path and TopK projections that DROP the group keys
-          (incl. the global TopK; the result is k rows per group, so
-          this stays small). Key-keeping TopK projections ride the
-          touched path.
+        The reference funnels every table write through one persist
+        append, and its sinks read their input's deltas
+        (src/storage/src/render): O(delta), never a snapshot diff."""
+        from pyspark.sql import functions as F
+
+        from materialize_spark.streaming.history import (
+            TS_COL, RetainedHistory,
+        )
+        if state is not None:
+            if rel in self._delta_mvs or rel in self._matview_sql:
+                self._matviews[rel] = state
+                self.catalog.create_view(rel, state)
+                hist = self._histories.get(rel)
+                if hist is None:
+                    hist = self._histories[rel] = RetainedHistory()
+                hist.append(delta if history is None else history,
+                            hist.upper)
+                self._compact_history(rel)
+            else:
+                self.catalog.register_table(rel, state)
+        for name in self._dependents(rel):
+            change = self._delta_mvs[name].feed(rel, delta)
+            if change is not None:
+                self._commit_change(name, change)
+        for qname, qspec in list(self._query_subs.items()):
+            if rel in qspec["deps"] and not qspec.get("busy"):
+                qspec["busy"] = True  # a query sub never feeds itself
+                try:
+                    self._refresh_mv(ast.RefreshMV(qname), "")
+                finally:
+                    qspec["busy"] = False
+        subs = [s for s in self._subscriptions.values()
+                if s["node"].name == rel]
+        sinks = [sp for sp in self._sinks.values()
+                 if sp.get("kafka") and sp["from"] == rel]
+        # no consumer: no Spark action — isEmpty() costs a job, and
+        # this is the per-commit hot path of every write
+        if delta is not None and (subs or sinks) \
+                and not delta.isEmpty():
+            units = lineage_break(expand(delta))
+            if sinks:
+                self._emit_kafka_sinks(sinks, units)
+            stamped = None  # built lazily: only AS OF streams need it
+            with self._commit_cond:
+                for sub in subs:
+                    if sub.get("stamp_ts"):
+                        if stamped is None:
+                            hist = self._histories.get(rel)
+                            ts = (hist.upper - 1 if hist is not None
+                                  and hist.upper > 0
+                                  else self._commit_seq + 1)
+                            stamped = units.withColumn(
+                                TS_COL, F.lit(ts).cast("long"))
+                        sub["queue"].append(stamped)
+                    else:
+                        sub["queue"].append(units)
+        with self._commit_cond:
+            self._commit_seq += 1
+            self._commit_cond.notify_all()
+
+    def _commit_change(self, name: str, change) -> None:
+        """Commit the Change a delta view returns, through the one
+        Change → frame conversion:
+
+        - the view's first commit: its whole result at +1;
+        - ``out_delta``: the operator's own consolidated delta, as is
+          (projection-shaped join views hand the chain's signed frame
+          straight through; the reference's MV sink reads its input
+          arrangement's deltas, src/compute/src/sink/
+          materialized_view.rs);
+        - ``touched``+``keys``: consumers read the diff of the touched
+          groups' rows, a null-safe probe of both states, O(touched
+          groups), built only when a consumer wants it; the history
+          keeps ``net_diff(result, old)`` (its docstring says why);
+        - neither: ``net_diff(result, old)`` for both — the TopK
+          projections that drop the group keys (k rows per group, so
+          the result is small).
         """
         from pyspark.sql import functions as F
-
-        from materialize_spark.streaming.history import RetainedHistory
-        old = self._matviews.get(name)
-        self._matviews[name] = result
-        self.catalog.create_view(name, result)
-        if initial:
-            hist = RetainedHistory()
-            hist.append(result.withColumn("diff", F.lit(1)), 0)
-            self._histories[name] = hist
-            self._publish_commit(name, adds=result)
-            return
-        if out_delta is not None:
-            adds = (out_delta.filter(F.col("diff") > 0)
-                    .withColumn("__i", F.explode(
-                        F.sequence(F.lit(1), F.col("diff"))))
-                    .drop("diff", "__i"))
-            rets = (out_delta.filter(F.col("diff") < 0)
-                    .withColumn("diff", -F.col("diff"))
-                    .withColumn("__i", F.explode(
-                        F.sequence(F.lit(1), F.col("diff"))))
-                    .drop("diff", "__i"))
-            hist = self._histories.get(name)
-            if hist is not None:
-                hist.append(out_delta, hist.upper)
-            self._publish_commit(name, adds, rets)
-            self._feed_downstream(name, adds, rets)
-            return
-        if touched is not None and keys:
+        result, old = change.result, self._matviews.get(name)
+        history = None
+        if old is None:
+            delta = result.withColumn("diff", F.lit(1))
+        elif change.out_delta is not None:
+            delta = change.out_delta
+        elif change.touched is not None and change.keys:
             from materialize_spark.streaming.retraction import _ns_probe
-            old_t = _ns_probe(old, touched, keys)
-            new_t = _ns_probe(result, touched, keys)
-            adds = new_t.exceptAll(old_t)
-            rets = old_t.exceptAll(new_t)
+            history, delta = net_diff(result, old), None
+            if self._wants_diffs(name):
+                delta = net_diff(
+                    _ns_probe(result, change.touched, change.keys),
+                    _ns_probe(old, change.touched, change.keys))
         else:
-            # REFRESH recompute / TopK: diff the (small) full result
-            adds = result.exceptAll(old)
-            rets = old.exceptAll(result)
-        hist = self._histories.get(name)
-        if hist is not None:
-            hist.append(_net_diff(result, old), hist.upper)
-        self._publish_commit(name, adds, rets)
-        self._feed_downstream(name, adds, rets)
+            delta = net_diff(result, old)
+        self._commit(name, delta, state=result, history=history)
 
-    def _feed_downstream(self, name: str, adds, rets) -> None:
-        """Stacked dataflows: a delta MV's published diff IS a commit
-        for any delta MV that reads it as a base relation (the
-        reference composes maintained views by importing the upstream
-        arrangement into the dependent dataflow,
-        src/compute/src/render.rs). Zero cost when nothing depends on
-        this MV."""
-        from pyspark.sql import functions as F
-
-        if not self._dependents(name):
-            return
-        frames = []
-        if adds is not None:
-            frames.append(adds.withColumn("diff", F.lit(1)))
-        if rets is not None:
-            frames.append(rets.withColumn("diff", F.lit(-1)))
-        if not frames:
-            return
-        delta = frames[0]
-        for f in frames[1:]:
-            delta = delta.unionByName(f)
-        self._feed_delta_mvs_for_table(name, delta)
+    def _compact_history(self, name: str) -> None:
+        """RETAIN HISTORY FOR n: keep the last n commit epochs of
+        ``name`` readable via AS OF; older epochs are compacted into
+        one snapshot (reference AlterRetainHistoryStatement — the
+        duration maps to commit epochs under this logical clock)."""
+        hist, window = self._histories[name], self._retain.get(name)
+        if window is not None and hist.upper - 1 - window > hist.since:
+            hist.compact(hist.upper - 1 - window)
 
     def _dependents(self, rel: str) -> list[str]:
         """The delta views whose ``inputs`` hold ``rel``, in creation
@@ -3643,14 +3655,6 @@ class MzSession:
         RENAME."""
         return [n for n, v in self._delta_mvs.items()
                 if n != rel and rel in v.inputs]
-
-    def _feed_delta_mvs_for_table(self, table: str, delta) -> None:
-        """Fold one commit's diff frame of ``table`` into every delta
-        view that reads it and publish each change."""
-        for name in self._dependents(table):
-            change = self._delta_mvs[name].feed(table, delta)
-            if change is not None:
-                self._publish_delta_mv(name, **change._asdict())
 
     def _create_view(self, node: ast.CreateView, sql: str):
         # PG requires SELECT on every base relation the body references —
@@ -3698,20 +3702,15 @@ class MzSession:
             # Batch MV: eagerly refreshed snapshot (REFRESH ON COMMIT
             # analog); the streaming maintenance path is
             # streaming.ivm.MaterializedView.
+            from pyspark.sql import functions as F
             snap = lineage_break(df)
-            self._matviews[node.name] = snap
             # WMR bodies stay raw: _eval_view_body re-routes them through
             # the fixpoint evaluator (which rewrites each binding itself)
             self._matview_sql[node.name] = (
                 node.body if _WMR_RE.match(node.body)
                 else rewrite(node.body))
-            self.catalog.create_view(node.name, snap)
-            from pyspark.sql import functions as F
-
-            from materialize_spark.streaming.history import RetainedHistory
-            hist = RetainedHistory()
-            hist.append(snap.withColumn("diff", F.lit(1)), 0)
-            self._histories[node.name] = hist
+            self._commit(node.name, snap.withColumn("diff", F.lit(1)),
+                         state=snap)
             if node.refresh_every_s is not None:
                 # WITH (REFRESH EVERY ...) — reference RefreshSchedule
                 # (refresh_schedule.rs + compute/src/sink/refresh.rs):
@@ -3823,7 +3822,7 @@ class MzSession:
             spec.update({"schema_json": schema_json, "schema_id": sid,
                          "stringified": stringified})
         # snapshot emission at CREATE; afterwards every commit routes
-        # its own diff frames here via _publish_commit — the sink never
+        # its own diff rows here via _commit — the sink never
         # holds (or re-diffs against) a table snapshot again
         snap = lineage_break(df)
         for frame in self._kafka_sink_frames(spec, snap, None):
@@ -3887,22 +3886,19 @@ class MzSession:
             key_col="__key"))
         return frames
 
-    def _emit_kafka_sinks(self, obj: str, adds: DataFrame | None,
-                          rets: DataFrame | None) -> None:
-        """Continuous emission: after a commit changes ``obj``, every
-        Kafka sink reading it produces the commit's OWN diff frames,
+    def _emit_kafka_sinks(self, sinks: list[dict],
+                          units: DataFrame) -> None:
+        """Continuous emission: after a commit changes an object, every
+        Kafka sink reading it produces the commit's OWN unit rows,
         envelope-framed. O(delta) — the Spark analog of the reference
         reading its sink's input arrangement deltas (src/storage/src/
-        render); the old full-table exceptAll-vs-last-snapshot diff is
-        gone, so a sink on a huge object costs each commit only its
+        render); a sink on a huge object costs each commit only its
         change batch."""
+        from pyspark.sql import functions as F
+
         from materialize_spark.sinks.writers import write_kafka_wire
-        sinks = [sp for sp in self._sinks.values()
-                 if sp.get("kafka") and sp["from"] == obj]
-        if not sinks:
-            return
-        if adds is None:
-            adds = self.catalog.table(obj).limit(0)
+        adds = units.filter(F.col("diff") > 0).drop("diff")
+        rets = units.filter(F.col("diff") < 0).drop("diff")
         for spec in sinks:
             for frame in self._kafka_sink_frames(spec, adds, rets):
                 spec["rows"] += write_kafka_wire(
@@ -3978,20 +3974,18 @@ class MzSession:
             body_format=node.body_format)
         def _on_post(rec, n=name, s=src):
             from pyspark.sql import functions as F
-            self.catalog.register_table(n, s.df())
-            # the delivery IS the commit's diff frame: route it through
-            # the diff bus so delta MVs, sinks, and subscriptions over
-            # the webhook source update on every POST (reference
-            # webhook.rs appends land in persist like any table write)
+            # the delivery IS the commit's diff frame, so delta MVs,
+            # sinks, and subscriptions over the webhook source update on
+            # every POST (reference webhook.rs appends land in persist
+            # like any table write)
             row = (self.spark.createDataFrame(
                 [(rec["body"], rec["headers"], rec["received_at"])],
                 "body string, headers map<string,string>, "
                 "received_at string")
                 .withColumn("received_at",
                             F.col("received_at").cast("timestamp")))
-            self._feed_delta_mvs_for_table(
-                n, row.withColumn("diff", F.lit(1)))
-            self._publish_commit(n, adds=row)
+            self._commit(n, row.withColumn("diff", F.lit(1)),
+                         state=s.df())
             # received-message counter: one request = one message, an
             # O(1) increment (no per-POST scan of the spool)
             st = self._source_stats.get(n)
@@ -4359,9 +4353,7 @@ class MzSession:
     def _apply_cdc_tick_diff(self, name: str, tname: str, diff,
                              keys: list[str]) -> None:
         """Fold one table's new replication diffs into its subsource
-        and publish the commit (shared by all three CDC tick flavors)."""
-        from pyspark.sql import functions as F
-
+        and commit (shared by all three CDC tick flavors)."""
         from materialize_spark.sources.pgoutput import apply_cdc
         sub = f"{name}_{tname}"
         cur = self.catalog._tables[sub]
@@ -4369,12 +4361,7 @@ class MzSession:
         touched = diff.select(*keys).distinct()
         rets = cur.join(touched, on=keys, how="left_semi")
         adds = new.join(touched, on=keys, how="left_semi")
-        self.catalog.register_table(sub, new)
-        self._feed_delta_mvs_for_table(
-            sub,
-            adds.withColumn("diff", F.lit(1)).unionByName(
-                rets.withColumn("diff", F.lit(-1))))
-        self._publish_commit(sub, adds, rets)
+        self._commit(sub, signed(adds, rets), state=new)
 
     def _tick_cdc_mysql(self, name: str, spec: dict) -> bool:
         """Continuous binlog replication: decode only events past the
@@ -4465,7 +4452,7 @@ class MzSession:
                             node: ast.CreateSourceKafka, df,
                             data_cols: list[str]) -> None:
         """Merge one decoded tick batch into a source's collection per
-        its ENVELOPE and publish the commit's diff frames."""
+        its ENVELOPE and commit its diff."""
         from pyspark.sql import functions as F
         old = self.catalog._tables[name]
         if node.envelope == "none":
@@ -4477,8 +4464,9 @@ class MzSession:
                 raise ValueError(
                     f"source {name!r}: incremental UPSERT merge needs "
                     "the key column in the collection")
-            # The poll compacted the batch to one newest record per key.
-            # shuffle_hash: never a broadcast, whose hashed relation
+            # The poll compacted the batch to one newest record per key;
+            # keys match null-safely, so a NULL key is one key that a
+            # later record replaces like any other. shuffle_hash: never a broadcast, whose hashed relation
             # outlived the tick; a task's is freed with the task. The
             # retractions are checkpointed with the new collection, one
             # job for both: a retraction join left lazy would sit in
@@ -4486,11 +4474,13 @@ class MzSession:
             # that finally runs the chain built one hashed relation
             # (32 MB pages) per tick in a single task, out of memory
             # after ~30 ticks on a 4 GB heap.
-            keys = df.select("key").hint("shuffle_hash")
-            rets = old.join(keys, on="key", how="left_semi") \
+            keys = df.select(F.col("key").alias("__k")) \
+                .hint("shuffle_hash")
+            hit = old["key"].eqNullSafe(keys["__k"])
+            rets = old.join(keys, hit, "left_semi") \
                 .localCheckpoint(eager=False)
             adds = self._upsert_live(df, data_cols).select(*old.columns)
-            new = (old.join(keys, on="key", how="left_anti")
+            new = (old.join(keys, hit, "left_anti")
                    .unionByName(adds).localCheckpoint(eager=False))
             new.unionByName(rets).count()
         elif node.envelope == "debezium":
@@ -4515,24 +4505,13 @@ class MzSession:
             adds = adds.select(*old.columns)
             rets = rets.select(*old.columns)
             # multiset merge: net multiplicities decide survival
-            merged = (old.withColumn("__d", F.lit(1))
-                      .unionByName(adds.withColumn("__d", F.lit(1)))
-                      .unionByName(rets.withColumn("__d", F.lit(-1))))
-            new = (merged.groupBy(*old.columns)
-                   .agg(F.sum("__d").alias("__n"))
-                   .filter(F.col("__n") > 0)
-                   .withColumn("__i", F.explode(
-                       F.sequence(F.lit(1), F.col("__n"))))
-                   .drop("__n", "__i").localCheckpoint(eager=True))
+            new = (expand(threshold(old.withColumn("diff", F.lit(1))
+                                    .unionByName(signed(adds, rets))))
+                   .drop("diff").localCheckpoint(eager=True))
         else:
             raise ValueError(
                 f"unsupported ENVELOPE {node.envelope!r} for ticks")
-        self.catalog.register_table(name, new)
-        self._feed_delta_mvs_for_table(
-            name,
-            adds.withColumn("diff", F.lit(1)).unionByName(
-                rets.withColumn("diff", F.lit(-1))))
-        self._publish_commit(name, adds, rets)
+        self._commit(name, signed(adds, rets), state=new)
 
     def _decode_csr_format(self, node: ast.CreateSourceKafka, frame):
         """FORMAT AVRO | PROTOBUF USING CONFLUENT SCHEMA REGISTRY
@@ -5067,8 +5046,8 @@ class MzSession:
 
     def append_rows(self, table: str, rows) -> None:
         """Append ``rows`` (schema-aligned to ``table``) to a base table
-        and feed the insertion as a +1 diff to every delta-maintained MV
-        over it. Every append path — INSERT, COPY ... FROM '<path>', and
+        and commit the insertion as a +1 diff (``_commit``), which every
+        delta-maintained MV over it folds in. Every append path — INSERT, COPY ... FROM '<path>', and
         the pgwire COPY ... FROM STDIN sub-protocol — must come through
         here: a write that bypasses the delta feed leaves always-fresh
         MVs permanently wrong (the reference funnels all table writes
@@ -5087,12 +5066,8 @@ class MzSession:
               for f in target.schema.fields])
         # Tables are append-only multisets (reference INSERT semantics);
         # checkpoint so repeated inserts don't grow the plan.
-        self.catalog.register_table(
-            table,
-            lineage_break(target.unionByName(aligned)))
-        self._feed_delta_mvs_for_table(
-            table, aligned.withColumn("diff", F.lit(1)))
-        self._publish_commit(table, adds=aligned)
+        self._commit(table, aligned.withColumn("diff", F.lit(1)),
+                     state=lineage_break(target.unionByName(aligned)))
 
     def _insert(self, node: ast.Insert, sql: str):
         self._check_priv("insert", node.table)
@@ -5128,10 +5103,9 @@ class MzSession:
                 exprs.append(f"CASE WHEN {pred} THEN CAST(({a}) AS "
                              f"{types[c.lower()]}) ELSE {c} END AS {c}")
         new_target = lineage_break(target.selectExpr(*exprs))
-        self.catalog.register_table(node.table, new_target)
+        delta = None
         if self._wants_diffs(node.table):
-            from pyspark.sql import functions as F
-            # The commit's diff frames derive from the PREDICATE, not a
+            # The commit's diff derives from the PREDICATE, not a
             # table-wide anti-join: only matched rows change, so the
             # retractions are exactly `target WHERE pred` and the
             # insertions are those same rows with the assignments
@@ -5145,14 +5119,8 @@ class MzSession:
                 upd_exprs.append(
                     c if a is None
                     else f"CAST(({a}) AS {types[c.lower()]}) AS {c}")
-            adds = rets.selectExpr(*upd_exprs)
-            self._feed_delta_mvs_for_table(
-                node.table,
-                adds.withColumn("diff", F.lit(1)).unionByName(
-                    rets.withColumn("diff", F.lit(-1))))
-            self._publish_commit(node.table, adds, rets)
-        else:
-            self._publish_commit(node.table)
+            delta = signed(rets.selectExpr(*upd_exprs), rets)
+        self._commit(node.table, delta, state=new_target)
 
     def _delete(self, node: ast.Delete, sql: str):
         # DELETE FROM t [WHERE p] (reference DeleteStatement :558):
@@ -5161,8 +5129,7 @@ class MzSession:
         target = self.catalog._tables[node.table]
         kept = (target.limit(0) if node.where is None else
                 target.filter(f"NOT coalesce(({rewrite(node.where)}), false)"))
-        kept = lineage_break(kept)
-        self.catalog.register_table(node.table, kept)
+        delta = None
         if self._wants_diffs(node.table):
             from pyspark.sql import functions as F
             # gone is by construction the predicate's complement of
@@ -5170,38 +5137,22 @@ class MzSession:
             # (a table-wide hash anti-join per watched DELETE)
             gone = (target if node.where is None else target.filter(
                 f"coalesce(({rewrite(node.where)}), false)"))
-            self._feed_delta_mvs_for_table(
-                node.table, gone.withColumn("diff", F.lit(-1)))
-            self._publish_commit(node.table, rets=gone)
-        else:
-            self._publish_commit(node.table)
+            delta = gone.withColumn("diff", F.lit(-1))
+        self._commit(node.table, delta, state=lineage_break(kept))
 
     # -- REFRESH / ALTER ----------------------------------------------------
     def _refresh_mv(self, node: ast.RefreshMV, sql: str):
-        from pyspark.sql import functions as F
-
+        """REFRESH: re-evaluate a batch MV's body and commit the
+        snapshot diff. Also the recompute-on-commit of a SUBSCRIBE
+        query whose shape no delta plan maintains — the declared
+        fallback cost class."""
         name = node.name
         if name in self._delta_mvs:
             return  # delta-maintained: always fresh, REFRESH is a no-op
         old = self._matviews[name]
         snap = lineage_break(self._eval_view_body(
             self._matview_sql[name]))
-        self._matviews[name] = snap
-        self.catalog.create_view(name, snap)
-        # REFRESH is a recompute by definition; the snapshot diff is the
-        # refresh's commit frame for history, sinks and subscriptions
-        adds = snap.exceptAll(old)
-        rets = old.exceptAll(snap)
-        hist = self._histories.get(name)
-        if hist is not None:
-            hist.append(
-                adds.withColumn("diff", F.lit(1)).unionByName(
-                    rets.withColumn("diff", F.lit(-1))),
-                hist.upper)
-            window = self._retain.get(name)
-            if window is not None and hist.upper - 1 - window > hist.since:
-                hist.compact(hist.upper - 1 - window)
-        self._publish_commit(name, adds, rets)
+        self._commit(name, net_diff(snap, old), state=snap)
 
     def tick_refreshes(self, now: float | None = None) -> list[str]:
         """Drive the REFRESH EVERY schedules: refresh every MV whose
@@ -5246,14 +5197,9 @@ class MzSession:
             self._comments[key] = node.text
 
     def _alter_retain(self, node: ast.AlterRetain, sql: str):
-        # ALTER MATERIALIZED VIEW v SET (RETAIN HISTORY FOR n): keep the
-        # last n refresh epochs readable via AS OF; older epochs are
-        # compacted away (reference AlterRetainHistoryStatement — the
-        # duration maps to refresh epochs under our logical clock).
+        # ALTER MATERIALIZED VIEW v SET (RETAIN HISTORY FOR n)
         self._retain[node.name] = node.window
-        hist = self._histories[node.name]
-        if hist.upper - 1 - node.window > hist.since:
-            hist.compact(hist.upper - 1 - node.window)
+        self._compact_history(node.name)
 
     def _alter_rename(self, node: ast.AlterRename, sql: str):
         old, new = node.name, node.new_name
@@ -5320,7 +5266,7 @@ class MzSession:
             return out
         # Diff stream: first call emits the snapshot (+1 rows); later
         # calls DRAIN the object's internal push cursor — each commit's
-        # own diff frames, queued by _publish_commit, never an
+        # own diff rows, queued by _commit, never an
         # exceptAll poll of the table (reference SUBSCRIBE = snapshot
         # then updates as frontiers advance). This is the single-poller
         # convenience path: all execute-path callers of one object
@@ -5526,7 +5472,6 @@ class MzSession:
         from materialize_spark.plans.select_ast import (
             parse_set_op_branches,
         )
-        from materialize_spark.streaming.history import RetainedHistory
         self._check_select_refs(body)
         self._subq_n += 1
         name = f"__subq{self._subq_n}"
@@ -5543,11 +5488,7 @@ class MzSession:
         except (ValueError, KeyError, ast.ParseError, LexError):
             pass  # shape not delta-maintainable: recompute on commit
         snap = lineage_break(self._eval_view_body(body))
-        self._matviews[name] = snap
-        self.catalog.create_view(name, snap)
-        hist = RetainedHistory()
-        hist.append(snap.withColumn("diff", F.lit(1)), 0)
-        self._histories[name] = hist
+        self._commit(name, snap.withColumn("diff", F.lit(1)), state=snap)
         self._query_subs[name] = {"deps": self._table_deps(body)}
         return name
 
@@ -5577,29 +5518,6 @@ class MzSession:
                 if n in self._view_sql:
                     frontier.append(self._view_sql[n])
         return out
-
-    def _recompute_query_sub(self, name: str) -> None:
-        """Recompute-on-commit for a non-delta-maintainable query
-        subscription: re-evaluate the body and publish the snapshot
-        diff — the declared fallback cost class (the delta dispatcher
-        handles every supported shape without this)."""
-        from pyspark.sql import functions as F
-        body = self._matview_sql.get(name)
-        old = self._matviews.get(name)
-        if body is None or old is None:
-            return
-        snap = lineage_break(self._eval_view_body(body))
-        self._matviews[name] = snap
-        self.catalog.create_view(name, snap)
-        adds = snap.exceptAll(old)
-        rets = old.exceptAll(snap)
-        hist = self._histories.get(name)
-        if hist is not None:
-            hist.append(
-                adds.withColumn("diff", F.lit(1)).unionByName(
-                    rets.withColumn("diff", F.lit(-1))),
-                hist.upper)
-        self._publish_commit(name, adds, rets)
 
     def _close_exec_sub(self, name: str) -> None:
         """Tear down an object's internal execute-path push cursor
@@ -5639,74 +5557,6 @@ class MzSession:
                        for sp in self._sinks.values())
                 or any(s["node"].name == obj
                        for s in self._subscriptions.values()))
-
-    def _publish_commit(self, obj: str, adds: DataFrame | None = None,
-                        rets: DataFrame | None = None) -> None:
-        """Route one commit's explicit diff frames to every Kafka sink
-        and open subscription on ``obj``, then advance the commit clock
-        (waking blocked stream loops). O(delta) by construction: the
-        frames are the commit's own changes — no snapshot diffing
-        anywhere on this path (the reference's sinks read their input
-        arrangement's deltas the same way, src/storage/src/render)."""
-        from pyspark.sql import functions as F
-        # recompute-on-commit query subscriptions that depend on this
-        # object re-derive and publish under their OWN names first
-        # (guarded against re-entrancy; delta-maintained query subs are
-        # fed by the ordinary _feed_delta_mvs_for_table path instead)
-        for qname, qspec in list(self._query_subs.items()):
-            if obj in qspec["deps"] and not qspec.get("busy"):
-                qspec["busy"] = True
-                try:
-                    self._recompute_query_sub(qname)
-                finally:
-                    qspec["busy"] = False
-        has_subs = any(s["node"].name == obj
-                       for s in self._subscriptions.values())
-        has_sinks = any(sp.get("kafka") and sp["from"] == obj
-                        for sp in self._sinks.values())
-        if not has_subs and not has_sinks:
-            # no consumer: bump the commit clock and return before any
-            # Spark action — isEmpty() costs a job, and this is the
-            # per-commit hot path for every INSERT/UPDATE/DELETE
-            with self._commit_cond:
-                self._commit_seq += 1
-                self._commit_cond.notify_all()
-            return
-        empty_a = adds is None or adds.isEmpty()
-        empty_r = rets is None or rets.isEmpty()
-        if has_sinks and not (empty_a and empty_r):
-            self._emit_kafka_sinks(obj, adds, rets)
-        if has_subs and not (empty_a and empty_r):
-            frames = []
-            if not empty_a:
-                frames.append(adds.withColumn("diff", F.lit(1)))
-            if not empty_r:
-                frames.append(rets.withColumn("diff", F.lit(-1)))
-            frame = frames[0]
-            for f in frames[1:]:
-                frame = frame.unionByName(f)
-            frame = lineage_break(frame)
-            stamped = None  # built lazily: only AS OF streams need it
-            with self._commit_cond:
-                for sub in self._subscriptions.values():
-                    if sub["node"].name != obj:
-                        continue
-                    if sub.get("stamp_ts"):
-                        if stamped is None:
-                            from materialize_spark.streaming.history \
-                                import TS_COL
-                            hist = self._histories.get(obj)
-                            ts = (hist.upper - 1 if hist is not None
-                                  and hist.upper > 0
-                                  else self._commit_seq + 1)
-                            stamped = frame.withColumn(
-                                TS_COL, F.lit(ts).cast("long"))
-                        sub["queue"].append(stamped)
-                    else:
-                        sub["queue"].append(frame)
-        with self._commit_cond:
-            self._commit_seq += 1
-            self._commit_cond.notify_all()
 
     # -- COPY ---------------------------------------------------------------
     def _copy_to(self, node: ast.CopyTo, sql: str):
@@ -6234,7 +6084,7 @@ class MzSession:
                          self.catalog._tables)
         self._txn_snapshot = dict(loaded)
 
-    def _commit(self, node: ast.Commit, sql: str):
+    def _commit_txn(self, node: ast.Commit, sql: str):
         if self._txn_snapshot is None:
             raise ValueError("no transaction in progress")
         self._txn_snapshot = None
@@ -7017,7 +6867,7 @@ class MzSession:
         ast.Fetch: _fetch,
         ast.Close: _close,
         ast.Begin: _begin,
-        ast.Commit: _commit,
+        ast.Commit: _commit_txn,
         ast.Rollback: _rollback,
         ast.SelectAsOf: _select_as_of,
         ast.TableStmt: _table_stmt,

@@ -34,7 +34,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from materialize_spark.ckpt import lineage_break
-from materialize_spark.operators.setops import DIFF_COL, threshold
+from materialize_spark.operators.setops import (
+    DIFF_COL, expand, threshold,
+)
 
 TS_COL = "mz_timestamp"
 
@@ -129,12 +131,8 @@ class RetainedHistory:
         log = self._consolidated()
         if log is None:
             raise ValueError("empty history: nothing has been appended")
-        net = threshold(log.filter(F.col(TS_COL) <= ts).drop(TS_COL))
-        return (
-            net.withColumn(
-                "__m", F.explode(F.sequence(F.lit(1), F.col(DIFF_COL))))
-            .drop(DIFF_COL, "__m")
-        )
+        return expand(threshold(
+            log.filter(F.col(TS_COL) <= ts).drop(TS_COL))).drop(DIFF_COL)
 
     def subscribe_since(self, ts: int) -> DataFrame:
         """Updates strictly after ts — `SUBSCRIBE ... AS OF <ts>`'s ongoing

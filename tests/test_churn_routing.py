@@ -41,17 +41,22 @@ def test_churn_views_plan_to_keyed_operators(spark):
         s.execute(f"CREATE MATERIALIZED VIEW {name} WITH "
                   f"(MAINTENANCE 'delta') AS {_local(body)}")
     published = {}
-    orig = s._publish_delta_mv
 
-    def spy(name, result, initial=False, **kw):
-        published[name] = kw.get("touched") is not None and bool(
-            kw.get("keys"))
-        return orig(name, result, initial, **kw)
+    def spy(name, view):
+        orig = view.feed
+
+        def feed(rel, delta):
+            change = orig(rel, delta)
+            published[name] = change is not None \
+                and change.touched is not None and bool(change.keys)
+            return change
+        view.feed = feed
     try:
         top3 = s._delta_mvs["v_top3_price"]
         assert isinstance(top3.front, SingleFront) \
             and isinstance(top3.terminal, TopK)
-        s._publish_delta_mv = spy
+        for name in VIEWS:
+            spy(name, s._delta_mvs[name])
         for commit in (
                 "INSERT INTO rt_lineitem VALUES (2, 11, 70, 80, 0.0)",
                 "UPDATE rt_lineitem SET l_extendedprice = l_extendedprice "
@@ -67,6 +72,5 @@ def test_churn_views_plan_to_keyed_operators(spark):
                 assert _norm(s.sql(f"SELECT * FROM {name}")) == \
                     _norm(s.spark.sql(_local(body))), f"{name} after {commit}"
     finally:
-        s._publish_delta_mv = orig
         s.run_script("".join(f"DROP MATERIALIZED VIEW {n};" for n in VIEWS)
                      + "DROP TABLE rt_lineitem; DROP TABLE rt_orders;")

@@ -69,3 +69,31 @@ def test_using_outer_join_refused_by_name(spark, kind):
                   "USING (k)")
     s.execute("DROP TABLE ju_c")
     s.execute("DROP TABLE ju_d")
+
+
+@pytest.mark.parametrize("col, join", [("ju_e.k", "ON ju_e.k = ju_f.k"),
+                                       ("k", "USING (k)")])
+def test_join_topk_dropping_order_column(spark, col, join):
+    """A join-chain top-k view whose outer SELECT drops the ORDER BY
+    column ``v`` equals its body after every write."""
+    body = (f"SELECT k, w FROM (SELECT {col}, v, w, ROW_NUMBER() OVER ("
+            f"PARTITION BY w ORDER BY v DESC) AS rn FROM ju_e JOIN ju_f "
+            f"{join}) t WHERE rn <= 1")
+    s = MzSession(spark, SF_DIR)
+    s.execute("CREATE TABLE ju_e (k BIGINT, v BIGINT)")
+    s.execute("CREATE TABLE ju_f (k BIGINT, w STRING)")
+    s.execute("INSERT INTO ju_e VALUES (1, 10), (2, 20), (3, 30)")
+    s.execute("INSERT INTO ju_f VALUES (1, 'x'), (2, 'x'), (3, 'y')")
+    s.execute(f"CREATE MATERIALIZED VIEW ju_topv WITH (MAINTENANCE "
+              f"'delta') AS {body}")
+    for stmt in ("INSERT INTO ju_e VALUES (4, 40)",
+                 "INSERT INTO ju_f VALUES (4, 'x')",
+                 "UPDATE ju_e SET v = 5 WHERE k = 4",
+                 "DELETE FROM ju_e WHERE k = 2",
+                 "DELETE FROM ju_f WHERE k = 3"):
+        s.execute(stmt)
+        assert _rows(s.sql("SELECT * FROM ju_topv")) \
+            == _rows(spark.sql(body)), stmt
+    s.execute("DROP MATERIALIZED VIEW ju_topv")
+    s.execute("DROP TABLE ju_e")
+    s.execute("DROP TABLE ju_f")

@@ -117,6 +117,27 @@ def test_collection_partition_count_stays_constant(spark):
         assert got == _fold(sent)
 
 
+def test_upsert_tick_replaces_null_key(spark):
+    """A NULL key is one key: each tick's NULL-key record replaces the
+    collection's, as the snapshot keeps only the newest."""
+    with MiniBroker() as broker:
+        broker.create_topic("kt_null", partitions=1)
+        sent = [(None, _value("a", 0)), (b"k1", _value("b", 0))]
+        _produce(broker, "kt_null", sent)  # the source's snapshot
+        s = _upsert_source(spark, broker, "kt_null")
+        for i, g in enumerate("bcd"):
+            batch = [(None, _value(g, i))]
+            _produce(broker, "kt_null", batch)
+            sent += batch
+            assert s.tick_sources() == ["kt_null"]
+        nulls = s.sql("SELECT data ->> 'g' AS g FROM kt_null "
+                      "WHERE key IS NULL").collect()
+        assert [r.g for r in nulls] == ["d"]
+        got = {r.g: r.n for r in s.sql("SELECT * FROM kt_null_by_g")
+               .collect()}
+        assert got == _fold(sent) == {"b": 1, "d": 1}
+
+
 def _records(seed):
     """Seeded (partition, record) pairs over 2 partitions in fetch
     order: duplicate keys, a tombstone then a re-insert of one key in

@@ -2083,10 +2083,10 @@ def test_delta_mv_agg_over_union_all(spark):
 
 def test_topk_publish_confined_to_touched_groups(spark):
     """A grouped-TopK MV whose projection keeps the group keys
-    publishes touched-group-confined diffs: _publish_delta_mv receives
-    touched+keys (the old-vs-new diff runs over the touched groups'
-    slice, never the full leaderboard — O(k·touched), not O(k·groups)
-    per commit)."""
+    publishes touched-group-confined diffs: the Change its feed
+    returns carries touched+keys (the old-vs-new diff runs over the
+    touched groups' slice, never the full leaderboard — O(k·touched),
+    not O(k·groups) per commit)."""
     from materialize_spark.plans.sqlfront import MzSession
     s = MzSession(spark, SF_DIR)
     s.execute("CREATE TABLE tkp_t (g STRING, item STRING, sc BIGINT)")
@@ -2098,17 +2098,18 @@ def test_topk_publish_confined_to_touched_groups(spark):
         "OVER (PARTITION BY g ORDER BY sc DESC) AS rn FROM tkp_t) "
         "WHERE rn <= 2")
     seen = []
-    orig = s._publish_delta_mv
+    view = s._delta_mvs["tkp"]
+    orig = view.feed
 
-    def spy(name, result, initial=False, **kw):
-        seen.append((name, initial, kw.get("touched") is not None,
-                     kw.get("keys")))
-        return orig(name, result, initial, **kw)
+    def spy(rel, delta):
+        change = orig(rel, delta)
+        seen.append((rel, change.touched is not None, change.keys))
+        return change
 
-    s._publish_delta_mv = spy
+    view.feed = spy
     s.execute("INSERT INTO tkp_t VALUES ('a', 'w', 7)")
-    s._publish_delta_mv = orig
-    assert seen == [("tkp", False, True, ["g"])]
+    view.feed = orig
+    assert seen == [("tkp_t", True, ["g"])]
     got = sorted((r.g, r.item, r.sc)
                  for r in s.execute("SELECT * FROM tkp").collect())
     assert got == [("a", "w", 7), ("a", "y", 9), ("b", "p", 3)]
